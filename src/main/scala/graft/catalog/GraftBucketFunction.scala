@@ -36,7 +36,7 @@ object GraftBucketFunction extends UnboundFunction {
 
   /** THE bucket-id definition — one shared implementation for the
     * function's evaluation paths AND the scan side's bucket pruning
-    * (GraftBucketedFileScan.allowedBuckets), so the routing math can
+    * (GraftSqlBridge.bucketSetFromFilters), so the routing math can
     * never desynchronize across call sites. NULL hashes to the seed
     * (matching HashExpression's null-skip). */
   def bucketId(value: Any, dt: DataType, numBuckets: Int): Int = {

@@ -995,7 +995,7 @@ object GraftCatalog {
 
   /** Is a table's bucket declaration one the engine WRITES (hash-routed
     * per-bucket files, SPJ-reportable layout — see GraftWrite /
-    * GraftBucketedFileScan)? True for any SINGLE-column bucket spec —
+    * RuntimePruning)? True for any SINGLE-column bucket spec —
     * unpartitioned (q100) or combined with identity partitions (q103,
     * the standard 100 TB fact layout: `PARTITIONED BY (date) CLUSTERED
     * BY (key) INTO n BUCKETS`, time pruning + key SPJ from one table).
@@ -1373,7 +1373,7 @@ object GraftCatalog {
     * single-char line-comment marker) would break every read of the
     * table. */
   /** Opt-in storage-partitioned-join reporting (scan-side only; see
-    * `GraftSpjFileScan`). Inert on unpartitioned tables. */
+    * `RuntimePruning`). Inert on unpartitioned tables. */
   val SpjProp: String = "graft.spj"
 
   val NonOptionProps: Set[String] = Set("comment", "owner",

@@ -298,14 +298,16 @@ class GraftTable(
       case "orc" => org.apache.spark.sql.execution.datasources.v2.orc.OrcScanBuilder(
         spark, index, meta.schema, meta.dataSchema, opts)
       // avro ships with NO DSv2 scan (V1 AvroFileFormat only) — it reads
-      // through the generic FileFormat-backed scan: column pruning +
-      // static partition pruning, no DPP/runtime filters (the R12
-      // any-SerDe delegation, HiveFilePartitionReaderFactory.scala:43-154).
+      // through the generic FileFormat-backed scan: column pruning,
+      // static partition pruning and the same runtime filtering as the
+      // columnar providers (DPP, runtime bucket pruning, runtime file
+      // skipping — see RuntimePruning; the R12 any-SerDe delegation,
+      // HiveFilePartitionReaderFactory.scala:43-154).
       // A BUCKETED avro table gets the same read-side fast paths as the
       // columnar providers: the writable bucket spec rides into the
       // generic scan, which recovers ids from file names for bucket
       // pruning and (composite-)keyed SPJ reporting — see
-      // GraftFormatScan's bucket surface.
+      // RuntimePruning's keyed layouts.
       case "avro" => return new org.apache.spark.sql.graft.GraftFormatScanBuilder(
         spark, org.apache.spark.sql.graft.GraftSqlBridge.avroFileFormat(),
         index, meta.schema,
@@ -329,7 +331,7 @@ class GraftTable(
     // `graft.spj` additionally reports the partition layout as a DSv2
     // KeyGroupedPartitioning (one split per partition value) so
     // co-partitioned joins and partition-keyed aggregates run
-    // shuffle-free — see GraftSpjFileScan's scaladoc for why opt-in.
+    // shuffle-free — see RuntimePruning's scaladoc for why opt-in.
     val spjProp =
       meta.properties.get(GraftCatalog.SpjProp).exists(_.equalsIgnoreCase("true"))
     // writable bucketed tables ALWAYS scan through the bucket-aware
@@ -340,7 +342,7 @@ class GraftTable(
     // KeyGroupedPartitioning(bucket(n, col)) — prefixed with the
     // identity transforms when the table is ALSO partitioned (q103's
     // composite layout) — for zero-exchange co-laid-out joins; see
-    // GraftBucketedFileScan. Default-conf un-narrowed scans keep the
+    // RuntimePruning. Default-conf un-narrowed scans keep the
     // stock planning unchanged. The bucket wrapper subsumes graft.spj
     // (its keys carry the partition values too), so `bucket` wins when
     // both are declared.
@@ -381,7 +383,7 @@ class GraftTable(
         val nonKeySkip = skipCols.filterNot(c =>
           spark.sessionState.conf.resolver(c, col))
         new org.apache.spark.sql.graft.GraftScanBuilder(builder,
-          meta.partitionColumns, bucket = Some((n, col)), tableStats = v2Stats,
+          bucket = Some((n, col)), tableStats = v2Stats,
           sortedBy = trustedSortCols,
           skippingCols = nonKeySkip,
           skipMeta =
@@ -389,10 +391,10 @@ class GraftTable(
             else None)
       case _ if meta.isPartitioned =>
         new org.apache.spark.sql.graft.GraftScanBuilder(builder,
-          meta.partitionColumns, spj = spjProp, tableStats = v2Stats,
+          spj = spjProp, tableStats = v2Stats,
           skippingCols = if (spjProp) Nil else skipCols)
       case _ if v2Stats.isDefined || skipCols.nonEmpty =>
-        new org.apache.spark.sql.graft.GraftScanBuilder(builder, Nil,
+        new org.apache.spark.sql.graft.GraftScanBuilder(builder,
           tableStats = v2Stats, skippingCols = skipCols)
       case _ => builder
     }

@@ -408,7 +408,7 @@ object EngineQueries {
     * unimplemented in both engines): two catalog tables partitioned on
     * the same column and opted in with `graft.spj=true` report their
     * partition layout as a DSv2 `KeyGroupedPartitioning`
-    * ([[org.apache.spark.sql.graft.GraftSpjFileScan]]), so a join
+    * ([[org.apache.spark.sql.graft.RuntimePruning]]), so a join
     * carrying the partition column in its keys aligns partition-to-
     * partition with NO exchange on either side, and the downstream
     * partition-keyed aggregate completes in the same task — at 100 TB
@@ -459,7 +459,7 @@ object EngineQueries {
     * ([[graft.catalog.write.GraftWrite.requiredDistribution]]), the
     * scans report `KeyGroupedPartitioning(bucket(8, key))` with bucket
     * ids recovered from file names
-    * ([[org.apache.spark.sql.graft.GraftBucketedFileScan]]), and the
+    * ([[org.apache.spark.sql.graft.RuntimePruning]]), and the
     * planner resolves the transform through the catalog's `bucket`
     * function ([[graft.catalog.GraftBucketFunction]] — the function the
     * reference parses a BucketSpec for and then refuses to honor,
@@ -513,7 +513,7 @@ object EngineQueries {
     * `l_returnflag=X/` directory carries its bucket id. The scan
     * reports `KeyGroupedPartitioning(identity(flag), bucket(8, key))`
     * from per-file `(partition values, bucket id)` keys
-    * ([[org.apache.spark.sql.graft.GraftBucketedFileScan]]), so a join
+    * ([[org.apache.spark.sql.graft.RuntimePruning]]), so a join
     * on (flag, key) between two co-laid-out tables aligns
     * group-to-group with NO exchange on either side, while a filter on
     * the flag prunes directories and a point predicate on the key

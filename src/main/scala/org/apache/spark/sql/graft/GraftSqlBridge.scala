@@ -7,12 +7,12 @@ import org.apache.spark.sql.connector.catalog.{CatalogV2Util, TableChange}
 import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types.{StructField, StructType}
 
-/** The one private-API bridge file (SURVEY §7.3 / R21): re-exports the
-  * `private[sql]` `CatalogV2Util` helpers for ALTER TABLE semantics —
-  * the same technique as the reference's `InternalSqlBridge`
-  * (/root/reference/spark-dsv2-common-base/.../InternalSqlBridge.scala:19-77),
-  * kept to the minimal surface actually needed.
-  */
+// The one private-API bridge file (SURVEY §7.3 / R21): re-exports the
+// `private[sql]` `CatalogV2Util` helpers for ALTER TABLE semantics —
+// the same technique as the reference's `InternalSqlBridge`
+// (spark-dsv2-common-base/.../InternalSqlBridge.scala:19-77),
+// kept to the minimal surface actually needed.
+
 /** Optimizer rule: re-resolves `V2TableReference` leaves that survive
   * analysis. Spark 4.1 stores a temp view created over a DSv2 relation
   * as a re-resolvable reference (`ViewHelper.prepareTemporaryViewPlan`),
@@ -62,22 +62,16 @@ trait StreamingV1FallbackTable
   * partition. At 100 TB that is the difference between reading one
   * partition and reading the table, so this wrapper restores the
   * surface: it forwards every pushdown to the stock builder and wraps
-  * the built [[FileScan]] in a scan that accepts the planner's runtime
-  * `IN`/`=` predicates on partition columns, rebuilding the inner scan
-  * with the extra partition filters (which [[graft.catalog
-  * .GraftFileIndex]] then prunes against the catalog partition list
-  * before any file listing).
+  * the built [[FileScan]] in a [[GraftFileScan]] that accepts the
+  * planner's runtime `IN`/`=` predicates (see [[RuntimePruning]]).
   *
-  * Unknown predicate shapes are IGNORED, never mistranslated — runtime
-  * filters are an optimization; dropping one costs I/O, not rows. The
-  * one pushdown NOT forwarded is parquet variant extraction
+  * The one pushdown NOT forwarded is parquet variant extraction
   * (`SupportsPushDownVariantExtractions` is sealed inside the parquet
   * builder): a variant-typed column on a PARTITIONED graft table reads
   * whole values instead of pushed paths — no inventory query uses
   * variant, and correctness is unaffected. */
 class GraftScanBuilder(
     inner: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder,
-    partitionCols: Seq[String],
     spj: Boolean = false,
     bucket: Option[(Int, String)] = None,
     tableStats: Option[(java.util.OptionalLong,
@@ -113,46 +107,76 @@ class GraftScanBuilder(
       case _ => false
     }
   override def build(): Scan = {
-    val scan = bucket match {
-      case Some((n, col)) =>
-        new GraftBucketedFileScan(inner.build().asInstanceOf[FileScan], n, col,
-          partitionCols, sortedBy, skippingCols, skipMeta)
-      case None if spj =>
-        new GraftSpjFileScan(inner.build().asInstanceOf[FileScan], partitionCols)
-      case None =>
-        // dynamic file pruning rides only the plain scan: the SPJ and
-        // bucketed wrappers latch a keyed group snapshot whose FILE
-        // LISTS runtime narrowing may rebuild, and their own key-based
-        // pruning already serves the join-key case
-        new GraftFileScan(inner.build().asInstanceOf[FileScan], partitionCols,
-          skippingCols)
-    }
+    val scan = new GraftFileScan(inner.build().asInstanceOf[FileScan], spj, bucket,
+      sortedBy, skippingCols, skipMeta)
     tableStats.foreach { case (rows, cols) => scan.withTableStats(rows, cols) }
     scan
   }
 }
 
+/** The delegated file scan behind every graft parquet/csv/json/orc
+  * table that needs more than the stock scan: runtime filtering,
+  * ANALYZE statistics, and the keyed layouts of [[RuntimePruning]] —
+  * identity partitions under `graft.spj`, buckets, or both.
+  *
+  * Runtime filters that arrive before the keyed layout latched (always,
+  * for a scan with no keyed layout) rebuild the inner scan with extra
+  * partition filters, which [[graft.catalog.GraftFileIndex]] prunes
+  * against the catalog partition list before any file listing, and
+  * extra skip-stats data filters, which the same index evaluates
+  * against the per-directory shards (DYNAMIC FILE PRUNING: a selective
+  * join on a `graft.skipping.by` column prunes FILES by recorded
+  * min/max range with no partition or bucket on the key). */
 class GraftFileScan(
     initial: org.apache.spark.sql.execution.datasources.v2.FileScan,
-    partitionCols: Seq[String],
-    skippingCols: Seq[String] = Nil)
+    spj: Boolean = false,
+    bucket: Option[(Int, String)] = None,
+    sortedBy: Seq[String] = Nil,
+    skippingCols: Seq[String] = Nil,
+    skipMeta: Option[(StructType, Map[String, String])] = None)
   extends org.apache.spark.sql.connector.read.SupportsReportStatistics
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
+  with org.apache.spark.sql.connector.read.SupportsReportPartitioning
+  with org.apache.spark.sql.connector.read.SupportsReportOrdering
   with org.apache.spark.sql.internal.connector.SupportsMetadata {
-  import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, In, Literal}
-  import org.apache.spark.sql.connector.expressions.{FieldReference, LiteralValue, NamedReference}
+  import org.apache.spark.sql.connector.expressions.{NamedReference, SortOrder}
   import org.apache.spark.sql.connector.expressions.filter.Predicate
-  import org.apache.spark.sql.connector.read.{Batch, Statistics}
+  import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory, Statistics}
+  import org.apache.spark.sql.connector.read.partitioning.Partitioning
   import org.apache.spark.sql.execution.datasources.v2.FileScan
 
   // the planner calls filter() once before toBatch; rebuilt-on-filter so
   // FileScan.partitions (a lazy listing) is computed on the final filters
   @volatile private var current: FileScan = initial
-  /** The post-runtime-filter scan, for the SPJ subclass. */
-  protected def currentScan: FileScan = current
+
+  // the read schema and the pushed data filters never change across
+  // runtime-filter rebuilds (those add skip-stats filters only, never
+  // on the bucket column), so the initial scan's serve the whole life
+  private val pruning = new RuntimePruning(initial.fileIndex.partitionSchema,
+    initial.readSchema(), bucket, spj, sortedBy, skippingCols, skipMeta,
+    initial.dataFilters, () => {
+      val s = current
+      s.fileIndex.listFiles(s.partitionFilters, s.dataFilters)
+    })
 
   override def readSchema(): StructType = current.readSchema()
-  override def toBatch: Batch = current.toBatch
+
+  override def toBatch: Batch =
+    if (pruning.keyed) batchOf(pruning.keyedSplits())
+    // bucket pruning pays WITHOUT the SPJ confs too: a narrowed bucket
+    // set plans splits over only the allowed buckets' files (the stock
+    // path would read every file), re-split on the format's own terms.
+    // Un-narrowed scans keep the stock planning entirely. (A narrowed
+    // layout is a trusted one, so liveDirs never needs its fallback.)
+    else if (pruning.narrowsBuckets)
+      batchOf(pruning.stockSplits(pruning.liveDirs(Nil), current.isSplitable))
+    else current.toBatch
+
+  private def batchOf(splits: => Array[InputPartition]): Batch = new Batch {
+    override def planInputPartitions(): Array[InputPartition] = splits
+    override def createReaderFactory(): PartitionReaderFactory =
+      current.createReaderFactory()
+  }
 
   /** Decide columnar support WITHOUT enumerating partitions. The
     * inherited PARTITION_DEFINED makes the planner's
@@ -300,120 +324,42 @@ class GraftFileScan(
     }
   }
 
-  /** Only partition columns present in the scan's OUTPUT are offered
-    * for runtime filtering: `PartitionPruning.getFilterableTableScan`
-    * resolves these refs against the scan output with a THROWING
-    * resolver, so advertising a pruned-away partition column crashes
-    * any join whose projection dropped it (e.g. a bucket-key join that
-    * never reads the date column). A column not in the output can't be
-    * a join key, so nothing is lost by omitting it.
-    *
-    * DYNAMIC FILE PRUNING: `graft.skipping.by` columns are offered too
-    * — a dim-driven runtime filter on one becomes an extra DATA filter
-    * on the rebuilt scan, which the catalog file index evaluates
-    * against the per-directory skip-stats shards, so a selective join
-    * prunes FILES by recorded min/max range with no partition or bucket
-    * on the key at all (range-clustered and Z-ordered layouts make the
-    * ranges tight). Same advisory contract as static skipping: no
-    * manifest entry ⇒ read, the join re-applies residually — dropping
-    * a filter costs I/O, never rows. */
-  override def filterAttributes(): Array[NamedReference] = {
-    val out = readSchema().fieldNames
-    def present(c: String) = out.exists(SQLConf.get.resolver(_, c))
-    val offered = (partitionCols ++ skippingCols.filterNot(s =>
-      partitionCols.exists(SQLConf.get.resolver(_, s)))).filter(present)
-    offered.map(FieldReference(_)).toArray
-  }
+  override def filterAttributes(): Array[NamedReference] = pruning.filterAttributes()
 
   override def filter(predicates: Array[Predicate]): Unit = {
-    val exprs = predicates.toSeq.flatMap(toPartitionFilter)
-    if (exprs.nonEmpty) current = withPartitionFilters(current, exprs)
-    val dataExprs = predicates.toSeq.flatMap(toSkippingFilter)
-    if (dataExprs.nonEmpty) current = withDataFilters(current, dataExprs)
+    val (partitionFilters, skipFilters) = pruning.filter(predicates)
+    if (partitionFilters.nonEmpty || skipFilters.nonEmpty)
+      current = rebuild(current, partitionFilters, skipFilters)
   }
 
-  private def partitionField(ref: NamedReference) : Option[StructField] =
-    ref.fieldNames match {
-      case Array(n) => initial.fileIndex.partitionSchema.fields
-        .find(f => SQLConf.get.resolver(f.name, n))
-      case _ => None
-    }
-
-  /** The planner's runtime filters arrive as `IN`/`=` over LiteralValues
-    * (`DataSourceV2Strategy.translateRuntimeFilterV2`); values are
-    * catalyst-internal, so `Literal(v, dt)` is the exact inverse. */
-  protected def toPartitionFilter(
-      p: Predicate): Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    def attr(f: StructField) = AttributeReference(f.name, f.dataType)()
-    (p.name, p.children) match {
-      case ("IN", Array(r: NamedReference, vs @ _*))
-          if vs.forall(_.isInstanceOf[LiteralValue[_]]) =>
-        partitionField(r).map(f => In(attr(f),
-          vs.map { case lv: LiteralValue[_] => Literal(lv.value, lv.dataType) }))
-      case ("=", Array(r: NamedReference, lv: LiteralValue[_])) =>
-        partitionField(r).map(f => EqualTo(attr(f), Literal(lv.value, lv.dataType)))
-      case _ => None
-    }
-  }
-
-  /** Runtime `IN`/`=` over a skipping (data) column → a catalyst data
-    * filter for the rebuilt scan's LISTING. Partition columns take the
-    * partition-filter path instead (never both). Protected: the bucketed
-    * subclass routes the same translations through its post-latch
-    * emptied-group mechanism instead of a listing rebuild. */
-  protected def toSkippingFilter(
-      p: Predicate): Option[org.apache.spark.sql.catalyst.expressions.Expression] = {
-    def skipField(ref: NamedReference): Option[StructField] = ref.fieldNames match {
-      case Array(n) if skippingCols.exists(SQLConf.get.resolver(_, n)) &&
-          !partitionCols.exists(SQLConf.get.resolver(_, n)) =>
-        readSchema().fields.find(f => SQLConf.get.resolver(f.name, n))
-      case _ => None
-    }
-    def attr(f: StructField) = AttributeReference(f.name, f.dataType)()
-    (p.name, p.children) match {
-      case ("IN", Array(r: NamedReference, vs @ _*))
-          if vs.forall(_.isInstanceOf[LiteralValue[_]]) =>
-        skipField(r).map(f => In(attr(f),
-          vs.map { case lv: LiteralValue[_] => Literal(lv.value, lv.dataType) }))
-      case ("=", Array(r: NamedReference, lv: LiteralValue[_])) =>
-        skipField(r).map(f => EqualTo(attr(f), Literal(lv.value, lv.dataType)))
-      case _ => None
-    }
-  }
-
-  private def withPartitionFilters(
+  /** `s` with extra partition filters (they prune the catalog listing)
+    * and extra DATA filters, which drive only the listing's skip-stats
+    * evaluation: the reader's pushed filters are untouched — the join
+    * itself re-applies the predicate, so an unevaluated filter costs
+    * I/O, never rows. An unknown format skips pruning and stays
+    * correct. */
+  private def rebuild(
       s: FileScan,
-      extra: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): FileScan =
+      partitionFilters: Seq[Expression],
+      dataFilters: Seq[Expression]): FileScan =
     s match {
       case p: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan =>
-        p.copy(partitionFilters = p.partitionFilters ++ extra)
+        p.copy(partitionFilters = p.partitionFilters ++ partitionFilters,
+          dataFilters = p.dataFilters ++ dataFilters)
       case c: org.apache.spark.sql.execution.datasources.v2.csv.CSVScan =>
-        c.copy(partitionFilters = c.partitionFilters ++ extra)
+        c.copy(partitionFilters = c.partitionFilters ++ partitionFilters,
+          dataFilters = c.dataFilters ++ dataFilters)
       case j: org.apache.spark.sql.execution.datasources.v2.json.JsonScan =>
-        j.copy(partitionFilters = j.partitionFilters ++ extra)
+        j.copy(partitionFilters = j.partitionFilters ++ partitionFilters,
+          dataFilters = j.dataFilters ++ dataFilters)
       case o: org.apache.spark.sql.execution.datasources.v2.orc.OrcScan =>
-        o.copy(partitionFilters = o.partitionFilters ++ extra)
-      case other => other // unknown format: skip pruning, stay correct
+        o.copy(partitionFilters = o.partitionFilters ++ partitionFilters,
+          dataFilters = o.dataFilters ++ dataFilters)
+      case other => other
     }
 
-  /** Extra DATA filters drive only the listing (the catalog index's
-    * skip-stats evaluation); the reader's pushed filters are untouched
-    * — the join itself re-applies the predicate, so an unevaluated
-    * filter costs I/O, never rows. */
-  private def withDataFilters(
-      s: FileScan,
-      extra: Seq[org.apache.spark.sql.catalyst.expressions.Expression]): FileScan =
-    s match {
-      case p: org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan =>
-        p.copy(dataFilters = p.dataFilters ++ extra)
-      case c: org.apache.spark.sql.execution.datasources.v2.csv.CSVScan =>
-        c.copy(dataFilters = c.dataFilters ++ extra)
-      case j: org.apache.spark.sql.execution.datasources.v2.json.JsonScan =>
-        j.copy(dataFilters = j.dataFilters ++ extra)
-      case o: org.apache.spark.sql.execution.datasources.v2.orc.OrcScan =>
-        o.copy(dataFilters = o.dataFilters ++ extra)
-      case other => other // unknown format: skip pruning, stay correct
-    }
+  override def outputPartitioning(): Partitioning = pruning.outputPartitioning()
+  override def outputOrdering(): Array[SortOrder] = pruning.outputOrdering()
 
   // scan equality drives exchange/scan reuse; delegate to the wrapped scan
   override def equals(other: Any): Boolean = other match {
@@ -423,474 +369,288 @@ class GraftFileScan(
   override def hashCode(): Int = current.hashCode()
 }
 
-/** STORAGE-PARTITIONED JOIN surface (the bucketed-read fast path both
-  * this engine and the reference previously lacked — round-14 verdict,
-  * "What's missing" #5): a table opted in with
-  * `TBLPROPERTIES('graft.spj'='true')` reports its Hive-layout
-  * partitioning to the planner as a DSv2 `KeyGroupedPartitioning` over
-  * the identity transforms of its partition columns, and plans ONE
-  * input split per live partition value, each carrying its key
-  * ([[GraftKeyedFilePartition]], the `HasPartitionKey` contract). Under
+/** The runtime-filter decision and the keyed layout, shared by both
+  * graft DSv2 scans ([[GraftFileScan]] and [[GraftFormatScan]]): which
+  * columns accept runtime filters, how the planner's `IN`/`=` predicates
+  * become partition, bucket-id and skip-stats filters, which files
+  * survive filters that arrive after the layout latched, and the
+  * `KeyGroupedPartitioning` / output ordering / split planning of the
+  * keyed layout. Unknown predicate shapes are IGNORED, never
+  * mistranslated — runtime filters are an optimization; dropping one
+  * costs I/O, not rows.
+  *
+  * KEYED LAYOUTS (storage-partitioned joins). Each reports its layout
+  * as a DSv2 `KeyGroupedPartitioning` and plans one WHOLE-file split per
+  * data file, each carrying its key ([[GraftKeyedFilePartition]], the
+  * `HasPartitionKey` contract). Under
   * `spark.sql.sources.v2.bucketing.enabled` Spark's storage-partitioned
-  * join then aligns two co-partitioned scans WITHOUT a shuffle on
-  * either side — at 100 TB the difference between exchanging both fact
-  * tables and exchanging nothing — and a `GROUP BY` on the partition
-  * columns rides the same partitioning shuffle-free.
-  *
-  * Deliberate trade-offs, why opt-IN per table:
-  *  - parallelism is one task per partition value (no bin-packing
-  *    across values, no intra-file splits) — right for tables whose
-  *    partition count ≥ cores, wrong for a 3-partition table;
-  *  - the partition-group snapshot is taken ONCE at first planning use
-  *    (planning's `outputPartitioning` and execution's
-  *    `planInputPartitions` must agree on the group count), so runtime
-  *    DPP narrowing arriving later is ignored on SPJ tables — scanning
-  *    an extra partition is correct, a planning/execution mismatch is
-  *    not. Co-partitioned joins don't generate DPP filters anyway (both
-  *    sides are fact-sized); a table wanting dim-driven DPP should
-  *    simply not opt in.
-  * Empty registered partitions list no files and survive as empty
-  * groups, keeping both sides' partition-value sets aligned. */
-class GraftSpjFileScan(
-    initial0: org.apache.spark.sql.execution.datasources.v2.FileScan,
-    partitionCols0: Seq[String])
-  extends GraftFileScan(initial0, partitionCols0)
-  with org.apache.spark.sql.connector.read.SupportsReportPartitioning {
+  * join then aligns two co-laid-out scans WITHOUT a shuffle on either
+  * side. `BatchScanExec` groups key-equal splits itself, and per-file
+  * splits let `partiallyClusteredDistribution.enabled` spread a SKEWED
+  * key over several tasks instead of one monster task.
+  *  - IDENTITY (`TBLPROPERTIES('graft.spj'='true')`, bucket-less): the
+  *    key is the partition values. Opt-IN per table, because
+  *    parallelism is one task per partition value — right for tables
+  *    whose partition count ≥ cores, wrong for a 3-partition table.
+  *    Empty registered partitions list no files and survive as one
+  *    zero-file split each, keeping both sides' value sets aligned.
+  *  - BUCKETED (`CLUSTERED BY (col) INTO n BUCKETS` — the declaration
+  *    itself is the opt-in: the user chose n as the parallelism knob):
+  *    the key is `(partition values…, bucket id)`, reported as
+  *    `KeyGroupedPartitioning(identity(p)…, bucket(n, col))` — the
+  *    high-cardinality complement of the identity layout, and on a
+  *    partitioned table the composite 100 TB fact layout (q103). The
+  *    bucket id is recovered from the FILE NAME: the bucketed write
+  *    path shuffles rows with `HashPartitioning(col, n)` (see
+  *    [[graft.catalog.write.GraftWrite.requiredDistribution]]) and the
+  *    committer names each task's files `part-<shufflePartitionId>-…`,
+  *    so the name prefix IS the bucket id — no per-file metadata, no
+  *    footer reads. Every write path preserves the invariant. Safety
+  *    valve: if ANY live file's name doesn't parse as a bucket id below
+  *    `n` (e.g. an EXTERNAL location carrying foreign files), the scan
+  *    reports no partitioning, prunes no bucket, and plans the stock
+  *    splits — a wrongly TRUSTED bucket id would silently drop rows,
+  *    whereas falling back only costs I/O.
+  * Keyed planning engages only when the session runs
+  * storage-partitioned joins (without the conf the planner ignores the
+  * reported partitioning, and whole-file splits would cost scan
+  * parallelism for nothing), latched at first use so planning's
+  * `outputPartitioning` and execution's `planInputPartitions` can never
+  * disagree if the conf flips mid-query. */
+private[graft] final class RuntimePruning(
+    partSchema: StructType,
+    readSchema: StructType,
+    bucket: Option[(Int, String)],
+    identityKeyed: Boolean,
+    sortedBy: Seq[String],
+    skippingCols: Seq[String],
+    skipMeta: Option[(StructType, Map[String, String])],
+    staticFilters: Seq[Expression],
+    listing: () => Seq[org.apache.spark.sql.execution.datasources.PartitionDirectory]) {
   import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.expressions.Expressions
-  import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory}
-  import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning}
-  import org.apache.spark.sql.execution.PartitionedFileUtil
-  import org.apache.spark.sql.execution.datasources.PartitionedFile
-
-  /** Key-grouped planning engages only when the session actually runs
-    * storage-partitioned joins (`spark.sql.sources.v2.bucketing
-    * .enabled`): without it the planner ignores the reported
-    * partitioning, and one-task-per-partition-value splits would cost
-    * scan parallelism for nothing — so a default-conf session reads an
-    * opted-in table exactly like a plain one. Latched at first use so
-    * planning's `outputPartitioning` and execution's
-    * `planInputPartitions` can never disagree if the conf flips
-    * mid-query. */
-  private lazy val spjActive: Boolean = SQLConf.get.v2BucketingEnabled
-
-  private lazy val grouped: Seq[(InternalRow, Array[PartitionedFile])] = {
-    val scan = currentScan
-    scan.fileIndex.listFiles(scan.partitionFilters, scan.dataFilters).map { dir =>
-      val files = dir.files.flatMap(f =>
-        PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable = false,
-          maxSplitBytes = Long.MaxValue, partitionValues = dir.values)).toArray
-      (dir.values, files)
-    }
-  }
-
-  override def outputPartitioning(): Partitioning =
-    if (!spjActive)
-      new org.apache.spark.sql.connector.read.partitioning.UnknownPartitioning(0)
-    else new KeyGroupedPartitioning(
-      initial0.fileIndex.partitionSchema.fields
-        .map(f => Expressions.identity(f.name))
-        .toArray[org.apache.spark.sql.connector.expressions.Expression],
-      grouped.size)
-
-  override def toBatch: Batch =
-    if (!spjActive) super.toBatch
-    else new Batch {
-      /** One split per FILE (not per value): `BatchScanExec` groups
-        * key-equal splits itself under `v2BucketingEnabled`, so the
-        * default plan is identical to pre-grouped emission — but
-        * per-file splits are what let
-        * `partiallyClusteredDistribution.enabled` keep a SKEWED
-        * partition value un-grouped (several tasks over its files,
-        * the other side's matching group replicated) instead of
-        * forcing one monster task per hot value. Empty registered
-        * partitions still emit one zero-file split so both sides'
-        * value sets stay aligned even without pushPartValues. */
-      override def planInputPartitions(): Array[InputPartition] = {
-        val splits = grouped.flatMap { case (key, files) =>
-          if (files.isEmpty) Seq((key, Array.empty[PartitionedFile]))
-          else files.map(f => (key, Array(f)))
-        }
-        splits.zipWithIndex.map { case ((key, files), i) =>
-          new GraftKeyedFilePartition(i, files, key): InputPartition
-        }.toArray
-      }
-      override def createReaderFactory(): PartitionReaderFactory =
-        currentScan.createReaderFactory()
-    }
-}
-
-/** BUCKETED storage-partitioned-join surface — the high-cardinality
-  * complement of [[GraftSpjFileScan]] (whose one-task-per-partition-VALUE
-  * planning is unusable when the join key is an order/document id): a
-  * single-column bucketed table (`CLUSTERED BY (col) INTO n BUCKETS` —
-  * the declaration itself is the opt-in: the user chose n as the
-  * parallelism knob, and `graft.spj` is NOT consulted here) reports its
-  * layout as `KeyGroupedPartitioning(bucket(n, col))` with one split
-  * per data FILE, each carrying its bucket id as the partition key.
-  *
-  * COMPOSITE layout (q103): when the table is ALSO identity-partitioned
-  * (`PARTITIONED BY (p) CLUSTERED BY (col) INTO n BUCKETS` — the
-  * standard 100 TB fact layout), `partitionCols` is non-empty and every
-  * file's key becomes `(partition values…, bucket id)`, reported as
-  * `KeyGroupedPartitioning(identity(p)…, bucket(n, col))`. Partition
-  * pruning (static AND runtime DPP, via the inherited
-  * SupportsRuntimeV2Filtering surface) narrows the listing before
-  * bucket parsing; bucket pruning narrows within it; a co-laid-out join
-  * on (p…, col) aligns group-to-group with no exchange on either side.
-  *
-  * The bucket id is recovered from the FILE NAME: the bucketed write
-  * path shuffles rows with `HashPartitioning(col, n)` (see
-  * [[graft.catalog.write.GraftWrite.requiredDistribution]]) and the
-  * committer names each task's files `part-<shufflePartitionId>-…`, so
-  * the name prefix IS the bucket id — no per-file metadata, no footer
-  * reads. Every write path preserves the invariant (append, overwrite,
-  * compaction and COW rewrites all route through the same required
-  * distribution), and the reference implements nothing comparable (it
-  * refuses bucketed writes outright,
-  * /root/reference/.../HiveFileFormatWriteBuilder.scala:124-136).
-  *
-  * BUCKET PRUNING rides the same machinery in EVERY session (no conf
-  * needed): equality/IN predicates on the bucket key narrow the file
-  * set to the matching buckets before planning — a point lookup reads
-  * 1/n of the table (see [[allowedBuckets]]), the win V1 bucketed
-  * tables get from `BucketingUtils.getBucketIdFromValue`.
-  *
-  * Safety valve: if ANY live file's name doesn't parse as a bucket id
-  * below `n` (e.g. an EXTERNAL location carrying foreign files), the
-  * scan reports no partitioning, prunes nothing, and plans the stock
-  * splits — a wrongly TRUSTED bucket id would silently drop rows,
-  * whereas falling back only costs I/O. Same conf latch as the
-  * identity SPJ scan: without `spark.sql.sources.v2.bucketing.enabled`
-  * the stock (bin-packed, intra-bucket-parallel) planning is used,
-  * except when pruning narrows the set (then bin-packed splits over
-  * only the allowed buckets' files). */
-class GraftBucketedFileScan(
-    initial0: org.apache.spark.sql.execution.datasources.v2.FileScan,
-    numBuckets: Int,
-    bucketCol: String,
-    partitionCols: Seq[String] = Nil,
-    sortedBy: Seq[String] = Nil,
-    // RUNTIME FILE/BLOOM SKIPPING on non-key columns (q117): the
-    // skipping columns join the runtime-filter surface (inherited
-    // filterAttributes); pre-latch arrivals narrow the listing through
-    // the inherited dataFilters rebuild, post-latch arrivals evaluate
-    // against the skip-stats shards and EMPTY excluded files (the
-    // late-DPP mechanism) so the keyed group count stays contractual.
-    skippingCols: Seq[String] = Nil,
-    skipMeta: Option[(StructType, Map[String, String])] = None)
-  extends GraftFileScan(initial0, partitionCols, skippingCols)
-  with org.apache.spark.sql.connector.read.SupportsReportPartitioning
-  with org.apache.spark.sql.connector.read.SupportsReportOrdering {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.expressions.{Expressions, LiteralValue, NamedReference}
-  import org.apache.spark.sql.connector.read.{Batch, InputPartition, PartitionReaderFactory}
+  import org.apache.spark.sql.connector.expressions.{Expressions, FieldReference, NamedReference, SortDirection, SortOrder, Transform}
+  import org.apache.spark.sql.connector.expressions.filter.Predicate
+  import org.apache.spark.sql.connector.read.InputPartition
   import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
   import org.apache.spark.sql.execution.PartitionedFileUtil
-  import org.apache.spark.sql.execution.datasources.PartitionedFile
+  import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionDirectory}
 
-  private lazy val spjActive: Boolean = SQLConf.get.v2BucketingEnabled
+  private def resolves(names: Seq[String], c: String): Boolean =
+    names.exists(SQLConf.get.resolver(_, c))
 
-  private val BucketName = "^part-(\\d+)-".r
+  /** The skip-stats targets: declared skipping columns in the output
+    * that are neither partition nor bucket keys (those have their own
+    * pruning surfaces). */
+  private lazy val skipSchema = StructType(readSchema.fields.filter(f =>
+    resolves(skippingCols, f.name) && !resolves(partSchema.fieldNames, f.name) &&
+      !bucket.exists(b => SQLConf.get.resolver(b._2, f.name))))
 
-  /** BUCKET PRUNING: equality/IN predicates on the bucket column narrow
-    * the readable bucket set — a point lookup reads 1/n of the table's
-    * files, the I/O win V1 bucketed tables get from
-    * `BucketingUtils.getBucketIdFromValue`. Sound because the write
-    * invariant puts every row with key v in bucket pmod(murmur3(v), n)
-    * (same hash as [[GraftBucketBound]]); a `key = NULL` literal prunes
-    * to zero files, which matches its empty SQL semantics. Conjuncts
-    * that are not a bare attribute vs literal (casts, expressions) are
-    * ignored — pruning is an optimization, never a row filter (the
-    * pushed data filters still run in the reader). None = no narrowing. */
-  private def allowedBuckets: Option[Set[Int]] =
-    GraftSqlBridge.bucketSetFromFilters(
-      currentScan.dataFilters, bucketCol, numBuckets)
+  /** Partition columns, the bucket column and the skipping columns —
+    * each only when present in the scan's OUTPUT:
+    * `PartitionPruning.getFilterableTableScan` resolves these refs
+    * against the output with a THROWING resolver, so advertising a
+    * pruned-away column crashes any join whose projection dropped it
+    * (e.g. a bucket-key join that never reads the date column). A
+    * column not in the output can't be a join key, so nothing is lost. */
+  def filterAttributes(): Array[NamedReference] =
+    (partSchema.fieldNames.toSeq ++ bucket.map(_._2) ++ skipSchema.fieldNames)
+      .filter(resolves(readSchema.fieldNames, _))
+      .map(FieldReference(_): NamedReference).toArray
 
-  /** (bucketId, file status, partition values) per live data file, or
-    * None when any file name fails to parse (foreign layout — never
-    * trust, always fall back). Statuses (not pre-built splits) so each
-    * batch branch below can split on its own terms: whole-file for the
-    * keyed SPJ path, format-splittable for the pruning-only path.
-    * Latched with the post-pushdown listing, like the SPJ snapshot. */
-  private lazy val parsed: Option[Seq[(Int,
-      org.apache.spark.sql.execution.datasources.FileStatusWithMetadata,
-      InternalRow)]] = {
-    val scan = currentScan
-    val files = scan.fileIndex.listFiles(scan.partitionFilters, scan.dataFilters)
-      .flatMap(dir => dir.files.map(f => (f, dir.values)))
-    val tagged = files.map { case (f, pv) =>
-      BucketName.findFirstMatchIn(f.getPath.getName)
-        .map(_.group(1).toInt).filter(_ < numBuckets).map(b => (b, f, pv))
-    }
-    if (tagged.forall(_.isDefined)) Some(tagged.map(_.get)) else None
-  }
+  /** Runtime partition-value predicates recorded for the post-latch
+    * survivor test. Once a keyed layout latched, the planner read
+    * `outputPartitioning` during EnsureRequirements, so the GROUP COUNT
+    * is contractual — `BatchScanExec.filteredPartitions` verifies the
+    * distinct key set survives runtime filtering. Late predicates
+    * therefore EMPTY the pruned-out groups' file lists instead: every
+    * key survives, the excluded directories are never read. At 100 TB
+    * this is the composite fact⋈dim case: date-partitioned +
+    * key-bucketed fact joined to a filtered date dim skips whole
+    * directories while still reporting bucket alignment. */
+  @volatile private var lateFilters: Seq[Expression] = Nil
 
-  /** The live (bucket-pruned) file set: [[allowedBuckets]] applied to
-    * the parsed listing. Both `outputPartitioning` and the batches
-    * below derive from this one value, so the planner's group count and
-    * execution's splits can never disagree. */
-  private lazy val pruned: Option[Seq[(Int,
-      org.apache.spark.sql.execution.datasources.FileStatusWithMetadata,
-      InternalRow)]] =
-    parsed.map { fs =>
-      allowedBuckets match {
-        case Some(allowed) => fs.filter { case (b, _, _) => allowed.contains(b) }
-        case None => fs
-      }
-    // an EMPTY keyed set (empty table, or contradictory conjuncts whose
-    // allowed buckets intersect to nothing) falls back to the stock
-    // planning: a KeyGroupedPartitioning with zero partition values is
-    // an edge Spark's SPJ path has no contract for, and the stock scan
-    // of the same (possibly empty) file set is always correct — the
-    // fallback costs I/O only on the contradictory-predicate case,
-    // where the reader's own filters still return zero rows
-    }.filter(_.nonEmpty)
-
-  /** Partition schema latched from the INITIAL scan (constant across
-    * runtime-filter rebuilds — filters never change the table's
-    * partition columns). Drives both the reported identity transforms
-    * and the per-file key rows, so field ORDER always agrees. */
-  private lazy val partSchema = initial0.fileIndex.partitionSchema
-
-  private lazy val keyExprs: Array[org.apache.spark.sql.connector.expressions.Expression] =
-    (partSchema.fields.map(f => Expressions.identity(f.name):
-        org.apache.spark.sql.connector.expressions.Expression) :+
-      (Expressions.bucket(numBuckets, bucketCol):
-        org.apache.spark.sql.connector.expressions.Expression)).toArray
-
-  /** One file's grouping key: `(partition values…, bucket id)` —
-    * `InternalRow(b)` in the unpartitioned case. Values are COPIED out
-    * of the listing's row (which may be unsafe/reused) so row equality
-    * inside BatchScanExec's grouping is structural. */
-  private def keyRow(b: Int, pv: InternalRow): InternalRow =
-    if (partSchema.isEmpty) InternalRow(b)
-    else InternalRow.fromSeq(pv.toSeq(partSchema) :+ b)
-
-  /** Runtime (DPP) partition predicates that arrive AFTER the keyed
-    * snapshot latched. The planner read `outputPartitioning` during
-    * EnsureRequirements, so the GROUP COUNT is contractual —
-    * `BatchScanExec.filteredPartitions` verifies the distinct key set
-    * survives runtime filtering. The snapshot therefore stays latched,
-    * and these predicates instead EMPTY the pruned-out groups' file
-    * lists at `planInputPartitions` time: every key survives (the
-    * contract holds), the partition directories a dim-driven DPP filter
-    * excluded are simply never read. At 100 TB this is the composite
-    * table's fact⋈dim case: date-partitioned + key-bucketed fact joined
-    * to a filtered date dim skips whole directories even though the
-    * scan also reports bucket alignment for fact⋈fact joins. */
-  @volatile private var lateFilters:
-    Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil
-
-  /** RUNTIME BUCKET PRUNING: bucket ids hashed from a runtime (DPP)
-    * filter's key values — a selective dim join prunes fact BUCKETS the
-    * way q103's DPP prunes fact directories. `None` = no runtime
-    * narrowing; `Some(ids)` = only these buckets can hold matching rows
-    * (every key value v lives in bucket pmod(murmur3(v), n), the shared
-    * [[graft.catalog.GraftBucketFunction.bucketId]] invariant). At
-    * 100 TB this is the point-lookup join: fact bucketed by order id ⋈
-    * a filtered dim of a few ids reads a handful of buckets instead of
-    * the whole table, with no partitioning column needed. */
+  /** RUNTIME BUCKET PRUNING: bucket ids hashed from a runtime filter's
+    * key values (every key value v lives in bucket pmod(murmur3(v), n),
+    * the shared [[graft.catalog.GraftBucketFunction.bucketId]]
+    * invariant). `None` = no runtime narrowing. A fact bucketed by order
+    * id ⋈ a filtered dim of a few ids reads a handful of buckets. */
   @volatile private var lateBuckets: Option[Set[Int]] = None
 
-  /** RUNTIME FILE SKIPPING on NON-key columns (q117): runtime `IN`/`=`
-    * filters over declared skipping/bloom columns that arrive AFTER the
-    * keyed snapshot latched. Evaluated per FILE against the
-    * per-directory skip-stats shards at `planInputPartitions` — a file
-    * whose recorded range (or bloom) provably excludes every key EMPTIES
-    * out of its group, exactly like [[lateFilters]]' directories and
-    * [[lateBuckets]]' buckets. At 100 TB this closes the composite
-    * layout's remaining join case: fact partitioned by date + bucketed
-    * by order key, joined to a selective dim on a THIRD column the
-    * layout doesn't encode, still schedules a file subset (the shards'
-    * ranges/blooms are the index the layout lacks). Advisory end to
-    * end: no shard entry keeps the file, the join re-applies the
-    * predicate. */
-  @volatile private var lateSkip:
-    Seq[org.apache.spark.sql.catalyst.expressions.Expression] = Nil
+  /** RUNTIME FILE SKIPPING on non-key columns (q117): runtime filters
+    * over the skipping columns, evaluated per FILE against the
+    * per-directory skip-stats shards — a file whose recorded range (or
+    * bloom) provably excludes every key drops, or empties out of its
+    * keyed group. Advisory end to end: no shard entry keeps the file. */
+  @volatile private var lateSkip: Seq[Expression] = Nil
 
-  /** The bucket column joins the partition columns as a runtime-filter
-    * target (same output-presence guard — PartitionPruning resolves
-    * these against the scan output with a THROWING resolver). The
-    * skipping columns ride the inherited surface. */
-  override def filterAttributes(): Array[NamedReference] = {
-    val base = super.filterAttributes()
-    val out = readSchema().fieldNames
-    if (out.exists(SQLConf.get.resolver(_, bucketCol)))
-      base :+ org.apache.spark.sql.connector.expressions.FieldReference(bucketCol)
-    else base
-  }
-
-  /** `=`/`IN` literal values over the bucket column → their bucket-id
-    * set (`translateRuntimeFilterV2` emits exactly these shapes; values
-    * are catalyst-internal, matching the hash's expectation). */
-  private def bucketIdsFromV2(
-      p: org.apache.spark.sql.connector.expressions.filter.Predicate): Option[Set[Int]] =
-    GraftSqlBridge.bucketIdsFromRuntimePredicate(p, bucketCol, numBuckets)
-
-  override def filter(predicates: Array[
-      org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    super.filter(predicates) // pre-latch arrivals narrow the listing itself
-    if (partSchema.nonEmpty)
-      lateFilters = lateFilters ++ predicates.toSeq.flatMap(toPartitionFilter)
-    val sets = predicates.toSeq.flatMap(bucketIdsFromV2)
-    if (sets.nonEmpty) {
-      val s = sets.reduce(_ intersect _)
-      lateBuckets = Some(lateBuckets.fold(s)(_ intersect s))
+  /** Record the planner's runtime predicates as late state, and return
+    * their (partition, skip-stats) catalyst translations for a scan
+    * whose listing can still be rebuilt. */
+  def filter(predicates: Array[Predicate]): (Seq[Expression], Seq[Expression]) = {
+    val partitionFilters =
+      predicates.toSeq.flatMap(GraftSqlBridge.runtimeValueFilter(_, partSchema))
+    val skipFilters =
+      predicates.toSeq.flatMap(GraftSqlBridge.runtimeValueFilter(_, skipSchema))
+    lateFilters = lateFilters ++ partitionFilters
+    lateSkip = lateSkip ++ skipFilters
+    bucket.foreach { case (n, col) =>
+      val sets = predicates.toSeq.flatMap(
+        GraftSqlBridge.bucketIdsFromRuntimePredicate(_, col, n))
+      if (sets.nonEmpty) {
+        val s = sets.reduce(_ intersect _)
+        lateBuckets = Some(lateBuckets.fold(s)(_ intersect s))
+      }
     }
-    if (skipMeta.isDefined)
-      lateSkip = lateSkip ++ predicates.toSeq.flatMap(toSkippingFilter)
+    (partitionFilters, skipFilters)
   }
 
-  /** Survivor test compiled from [[lateSkip]]: qualified-path membership
-    * in the skip-stats-filtered file set (one shard read per involved
-    * directory, memoized inside applySkipping). Identity when no late
-    * skipping filter arrived. Any failure keeps every file. */
-  private def lateSkipKeep(
-      fs: Seq[(Int, org.apache.spark.sql.execution.datasources.FileStatusWithMetadata,
-        InternalRow)]):
-      org.apache.spark.sql.execution.datasources.FileStatusWithMetadata => Boolean = {
+  /** BUCKET PRUNING from the scan's static filters (see
+    * [[GraftSqlBridge.bucketSetFromFilters]]): a point lookup reads 1/n
+    * of the table's files in every session, no conf needed. */
+  private lazy val allowedBuckets: Option[Set[Int]] = bucket.flatMap {
+    case (n, col) => GraftSqlBridge.bucketSetFromFilters(staticFilters, col, n)
+  }
+
+  /** The keyed layout's members, latched with the listing so the
+    * planner's group count and execution's splits derive from one
+    * value: one (bucket id, one-file directory) per live file — the id
+    * parsed from the file name, or -1 on the identity layout, where an
+    * empty registered partition is one zero-file member. None = no
+    * keyed layout: none declared, a foreign file name, or an EMPTY set
+    * (empty table, or static bucket conjuncts intersecting to nothing)
+    * — a `KeyGroupedPartitioning` with zero partition values is an edge
+    * Spark's SPJ path has no contract for, and the stock scan of the
+    * same file set is always correct. */
+  lazy val members: Option[Seq[(Int, PartitionDirectory)]] = (bucket match {
+    case Some((n, _)) =>
+      val tagged = listing().flatMap(d => d.files.map(f =>
+        RuntimePruning.BucketName.findFirstMatchIn(f.getPath.getName)
+          .map(_.group(1).toInt).filter(_ < n)
+          .map(b => (b, PartitionDirectory(d.values, Seq(f))))))
+      if (tagged.forall(_.isDefined))
+        Some(tagged.flatten.filter(m => allowedBuckets.forall(_.contains(m._1))))
+      else None
+    case None if identityKeyed =>
+      Some(listing().flatMap(d =>
+        if (d.files.isEmpty) Seq((-1, d))
+        else d.files.map(f => (-1, PartitionDirectory(d.values, Seq(f))))))
+    case None => None
+  }).filter(_.nonEmpty)
+
+  lazy val keyed: Boolean = SQLConf.get.v2BucketingEnabled && members.isDefined
+
+  /** Whether a trusted bucket layout is narrowed by static or runtime
+    * bucket pruning — then even unkeyed planning reads only the allowed
+    * buckets' files. */
+  def narrowsBuckets: Boolean =
+    bucket.isDefined && members.isDefined &&
+      (allowedBuckets.isDefined || lateBuckets.isDefined)
+
+  /** One member's grouping key: `(partition values…[, bucket id])`.
+    * Values are COPIED out of the listing's row (which may be
+    * unsafe/reused) so row equality inside BatchScanExec's grouping is
+    * structural. */
+  private def keyRow(b: Int, pv: InternalRow): InternalRow =
+    InternalRow.fromSeq(pv.toSeq(partSchema) ++ bucket.map(_ => b))
+
+  def outputPartitioning(): Partitioning =
+    if (!keyed) new UnknownPartitioning(0)
+    else new KeyGroupedPartitioning(
+      (partSchema.fieldNames.map(Expressions.identity(_): Transform) ++
+        bucket.map { case (n, col) => Expressions.bucket(n, col) })
+        .toArray[org.apache.spark.sql.connector.expressions.Expression],
+      members.get.map { case (b, d) => (b, d.values.toSeq(partSchema)) }.distinct.size)
+
+  /** SORT-FREE MERGE JOINS (`SupportsReportOrdering`): under the
+    * catalog's sort-trust marker every live file is internally sorted
+    * by `sortedBy` (the write path orders partition cols first, then
+    * the cluster cols). Reported ONLY on the keyed path, where each input
+    * partition is ONE whole file, so the claim is exactly the per-file
+    * invariant; when `BatchScanExec` groups several same-key splits, its
+    * own `partitioningPreservesOrdering` check discards the ordering, so
+    * appends-without-compaction degrade to a planned sort, never to
+    * wrong rows. With every partition column in the output the write's
+    * full `(partitionCols, clusterCols)` order is reported; when the
+    * projection dropped one, the cluster cols alone — valid because
+    * partition values are CONSTANT within a keyed group. Either way only
+    * the longest prefix present in the output is claimed (the rule
+    * resolves refs with a throwing resolver). */
+  def outputOrdering(): Array[SortOrder] =
+    if (sortedBy.isEmpty || !keyed) Array.empty
+    else {
+      def present(c: String) = resolves(readSchema.fieldNames, c)
+      val partCols = partSchema.fieldNames.toSeq
+      val candidate =
+        if (partCols.nonEmpty && partCols.forall(present)) partCols ++ sortedBy
+        else sortedBy
+      candidate.takeWhile(present).map(c =>
+        Expressions.sort(Expressions.identity(c), SortDirection.ASCENDING)).toArray
+    }
+
+  /** THE survivor test of the late state: `ms` with every file of an
+    * excluded partition value or bucket, and every file the skip-stats
+    * shards exclude, removed — members keep their slot (and key) with
+    * an emptied file list. A bucket id below 0 (identity layout, or an
+    * untrusted listing) is never bucket-tested. Any evaluation failure
+    * keeps the file. */
+  def survivors(ms: Seq[(Int, PartitionDirectory)]): Seq[(Int, PartitionDirectory)] = {
+    val keepValues = GraftSqlBridge.compilePartitionPredicate(lateFilters, partSchema)
+    val buckets = lateBuckets
+    val keepFile = skipSurvivors(ms.map(_._2))
+    ms.map { case (b, d) =>
+      val live = keepValues(d.values) && (b < 0 || buckets.forall(_.contains(b)))
+      (b, d.copy(files = if (live) d.files.filter(keepFile) else Nil))
+    }
+  }
+
+  /** The surviving directories: the keyed members when the layout is
+    * trusted, else `untrusted` (the scan's own listing). */
+  def liveDirs(untrusted: => Seq[PartitionDirectory]): Seq[PartitionDirectory] =
+    survivors(members.getOrElse(untrusted.map((-1, _)))).map(_._2)
+
+  // one shard read per involved directory, memoized inside applySkipping
+  private def skipSurvivors(
+      dirs: Seq[PartitionDirectory]): FileStatusWithMetadata => Boolean = {
     val filters = lateSkip
     skipMeta match {
       case Some((schema, props)) if filters.nonEmpty =>
         try {
-          val survivors = graft.catalog.SkipStats.applySkipping(
-            org.apache.spark.sql.SparkSession.active, schema, props,
-            fs.map { case (_, f, pv) =>
-              org.apache.spark.sql.execution.datasources.PartitionDirectory(pv, Seq(f))
-            }, filters)
+          val kept = graft.catalog.SkipStats.applySkipping(
+            org.apache.spark.sql.SparkSession.active, schema, props, dirs, filters)
             .iterator.flatMap(_.files).map(_.getPath.toString).toSet
-          f => survivors.contains(f.getPath.toString)
+          f => kept.contains(f.getPath.toString)
         } catch { case scala.util.control.NonFatal(_) => _ => true }
       case _ => _ => true
     }
   }
 
-  /** Partition-value predicate compiled from [[lateFilters]] — bound by
-    * NAME to the partition schema's positions and interpreted (no
-    * codegen: it runs once per file at planning). Any binding or eval
-    * failure keeps the file: pruning is an optimization, never a row
-    * filter. */
-  private def lateKeep(): InternalRow => Boolean =
-    GraftSqlBridge.compilePartitionPredicate(lateFilters, partSchema)
+  /** Keyed planning: one WHOLE-file split per member (a split spanning
+    * two keys would break the contract), emptied by [[survivors]]. */
+  def keyedSplits(): Array[InputPartition] =
+    survivors(members.get).zipWithIndex.map { case ((b, d), i) =>
+      val files = d.files.flatMap(f => PartitionedFileUtil.splitFiles(f, f.getPath,
+        isSplitable = false, maxSplitBytes = Long.MaxValue,
+        partitionValues = d.values)).toArray
+      new GraftKeyedFilePartition(i, files, keyRow(b, d.values)): InputPartition
+    }.toArray
 
-  override def outputPartitioning(): Partitioning =
-    if (spjActive && pruned.isDefined)
-      new KeyGroupedPartitioning(keyExprs,
-        pruned.get.map { case (b, _, pv) => (b, pv.toSeq(partSchema)) }
-          .distinct.size)
-    else new UnknownPartitioning(0)
-
-  /** SORT-FREE MERGE JOINS (`SupportsReportOrdering`): under the
-    * catalog's sort-trust marker every live file is internally sorted
-    * by `sortedBy` (the engine's write path orders partition cols first,
-    * then the cluster cols — so within one file, whose partition values
-    * are constant, rows ascend by the cluster cols). Reported ONLY when
-    * the keyed (SPJ) batch path is active: there each input partition is
-    * ONE whole file, so the per-partition ordering claim is exactly the
-    * per-file invariant — the stock path bin-packs unrelated files into
-    * a partition and may split one file into ranges, where no such claim
-    * holds. When `BatchScanExec` groups several same-key splits into one
-    * partition (a multi-file bucket), its own
-    * `partitioningPreservesOrdering` check discards the ordering, so
-    * appends-without-compaction degrade to a planned sort, never to
-    * wrong rows. A merge join over two co-bucketed tables clustered by
-    * their bucket key then runs with ZERO exchanges and ZERO sorts —
-    * at 100 TB the full cost of the join collapses to aligned streaming
-    * reads of pre-sorted buckets.
-    *
-    * The reported sequence adapts to the projection (the rule's
-    * `toCatalystOrdering` resolves refs against the scan OUTPUT with a
-    * throwing resolver — the filterAttributes lesson): with every
-    * partition column still in the output the write's full
-    * `(partitionCols, clusterCols)` order is reported (satisfies a
-    * merge join on the full composite key, whose required sort
-    * EnsureRequirements reorders to partition-cols-first); when the
-    * projection dropped a partition column — typically a bucket-key-only
-    * join — the cluster cols alone are reported, valid because partition
-    * values are CONSTANT within a keyed group. Either way only the
-    * longest prefix present in the output is claimed. */
-  override def outputOrdering(): Array[
-      org.apache.spark.sql.connector.expressions.SortOrder] =
-    if (sortedBy.isEmpty || !spjActive || pruned.isEmpty)
-      Array.empty
-    else {
-      val out = readSchema().fieldNames
-      def present(c: String) = out.exists(SQLConf.get.resolver(_, c))
-      val candidate =
-        if (partitionCols.nonEmpty && partitionCols.forall(present))
-          partitionCols ++ sortedBy
-        else sortedBy
-      candidate.takeWhile(present).map(c =>
-        Expressions.sort(Expressions.identity(c),
-          org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-        .toArray
-    }
-
-  override def toBatch: Batch = (pruned, spjActive) match {
-    case (Some(fs), true) => new Batch {
-      // per-file WHOLE splits (a split spanning two buckets would break
-      // the key contract): BatchScanExec groups key-equal splits, and
-      // partially-clustered planning can leave a hot bucket un-grouped
-      override def planInputPartitions(): Array[InputPartition] = {
-        val keep = lateKeep()
-        val bKeep = lateBuckets
-        val sKeep = lateSkipKeep(fs)
-        fs.zipWithIndex.map { case ((b, f, pv), i) =>
-          // late-DPP-excluded groups keep their KEY with an empty file
-          // list (see lateFilters / lateBuckets / lateSkip): group count
-          // preserved, I/O skipped — partition-value, bucket-id AND
-          // per-file range/bloom runtime pruning ride the same
-          // emptied-group mechanism
-          val files =
-            if (keep(pv) && bKeep.forall(_.contains(b)) && sKeep(f))
-              PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable = false,
-                maxSplitBytes = Long.MaxValue, partitionValues = pv).toArray
-            else Array.empty[PartitionedFile]
-          new GraftKeyedFilePartition(i, files, keyRow(b, pv)): InputPartition
-        }.toArray
-      }
-      override def createReaderFactory(): PartitionReaderFactory =
-        currentScan.createReaderFactory()
-    }
-    // bucket pruning pays WITHOUT the SPJ confs too: a narrowed bucket
-    // set plans splits over only the allowed buckets' files (the stock
-    // path would read every file). No key contract to preserve here, so
-    // the files re-split on the format's own terms — a point lookup on
-    // a bucket held in ONE large file keeps the intra-file parallelism
-    // the stock path would give it. Un-narrowed scans keep the stock
-    // planning entirely.
-    case (Some(fs0), false) if allowedBuckets.isDefined || lateBuckets.isDefined =>
-      new Batch {
-      override def planInputPartitions(): Array[InputPartition] = {
-        // no key contract without SPJ: runtime-pruned buckets' (and
-        // skip-excluded) files are simply dropped (BatchScanExec
-        // re-plans through a fresh toBatch after filter(), so this
-        // branch also serves a purely-runtime narrowing with no static
-        // bucket predicate)
-        val sKeep = lateSkipKeep(fs0)
-        val fs = fs0.filter { case (b, f, _) =>
-          lateBuckets.forall(_.contains(b)) && sKeep(f) }
-        val session = org.apache.spark.sql.SparkSession.active
-        val scan = currentScan
-        val maxSplit = org.apache.spark.sql.execution.datasources.FilePartition
-          .maxSplitBytes(session, fs.map { case (_, f, pv) =>
-            org.apache.spark.sql.execution.datasources.PartitionDirectory(pv, Seq(f))
-          })
-        val splits = fs.flatMap { case (_, f, pv) =>
-          PartitionedFileUtil.splitFiles(f, f.getPath,
-            isSplitable = scan.isSplitable(f.getPath),
-            maxSplitBytes = maxSplit, partitionValues = pv)
-        }.sortBy(_.length)(Ordering[Long].reverse)
-        org.apache.spark.sql.execution.datasources.FilePartition
-          .getFilePartitions(session, splits, maxSplit)
-          .toArray[InputPartition]
-      }
-      override def createReaderFactory(): PartitionReaderFactory =
-        currentScan.createReaderFactory()
-    }
-    case _ => super.toBatch
+  /** Stock planning over `dirs`: format-splittable files, bin-packed
+    * largest first — a point lookup on a bucket held in ONE large file
+    * keeps the intra-file parallelism the stock path would give it. */
+  def stockSplits(
+      dirs: Seq[PartitionDirectory],
+      isSplitable: org.apache.hadoop.fs.Path => Boolean): Array[InputPartition] = {
+    val session = org.apache.spark.sql.SparkSession.active
+    val maxSplit = FilePartition.maxSplitBytes(session, dirs)
+    val splits = dirs.flatMap(d => d.files.flatMap(f =>
+      PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable(f.getPath),
+        maxSplit, d.values))).sortBy(_.length)(Ordering[Long].reverse)
+    FilePartition.getFilePartitions(session, splits, maxSplit).toArray[InputPartition]
   }
+}
+
+private[graft] object RuntimePruning {
+  private val BucketName = "^part-(\\d+)-".r
 }
 
 /** A [[org.apache.spark.sql.execution.datasources.FilePartition]] that
@@ -997,12 +757,10 @@ class GraftFormatScan(
   with org.apache.spark.sql.connector.read.SupportsReportOrdering
   with org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering
   with org.apache.spark.sql.connector.read.SupportsReportStatistics {
-  import org.apache.spark.sql.catalyst.InternalRow
-  import org.apache.spark.sql.connector.expressions.{Expressions, FieldReference, NamedReference}
+  import org.apache.spark.sql.connector.expressions.{NamedReference, SortOrder}
   import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
-  import org.apache.spark.sql.connector.read.partitioning.{KeyGroupedPartitioning, Partitioning, UnknownPartitioning}
-  import org.apache.spark.sql.execution.PartitionedFileUtil
-  import org.apache.spark.sql.execution.datasources.{FilePartition, FileStatusWithMetadata, PartitionDirectory, PartitionedFile}
+  import org.apache.spark.sql.connector.read.partitioning.Partitioning
+  import org.apache.spark.sql.execution.datasources.PartitionDirectory
 
   private val partSet = index.partitionSchema.fieldNames
     .map(_.toLowerCase(java.util.Locale.ROOT)).toSet
@@ -1038,17 +796,6 @@ class GraftFormatScan(
       override def numRows(): java.util.OptionalLong = java.util.OptionalLong.empty()
     }
 
-  // ---- bucket layout surface (q104 follow-through: a BUCKETED avro
-  // table gets the same read-side fast paths as the columnar providers)
-  // — mirrors GraftBucketedFileScan: bucket ids recovered from file
-  // names, never trusted on parse failure; pruning from equality/IN on
-  // the bucket key; KeyGroupedPartitioning (with identity prefixes when
-  // the table is also partitioned) under the v2 bucketing conf. All
-  // derived from ONE latched listing so planning and execution agree.
-
-  private lazy val spjActive: Boolean = SQLConf.get.v2BucketingEnabled
-  private val BucketName = "^part-(\\d+)-".r
-
   // data filters thread through to the LISTING so the catalog index's
   // file-level skipping evaluates them (q109 on row formats: the
   // ANALYZE-built synthetic ranges — reader pushdown is still not
@@ -1056,210 +803,26 @@ class GraftFormatScan(
   private lazy val selected: Seq[PartitionDirectory] =
     index.listFiles(partitionFilters, dataFilters)
 
-  /** (bucket id, file, partition values), or None when unbucketed, the
-    * table is empty, or any file name fails to parse (foreign layout). */
-  private lazy val parsed: Option[Seq[(Int, FileStatusWithMetadata, InternalRow)]] =
-    bucket.flatMap { case (n, _) =>
-      val files = selected.flatMap(d => d.files.map(f => (f, d.values)))
-      val tagged = files.map { case (f, pv) =>
-        BucketName.findFirstMatchIn(f.getPath.getName)
-          .map(_.group(1).toInt).filter(_ < n).map(b => (b, f, pv))
-      }
-      if (tagged.nonEmpty && tagged.forall(_.isDefined)) Some(tagged.map(_.get))
-      else None
-    }
+  // the listing is fixed at build, so every runtime filter (DPP on the
+  // partition columns, bucket ids, skip-stats on the skipping columns —
+  // the row formats' shards come from CALL sys.analyze) takes the late
+  // survivor path; a BUCKETED table gets the same keyed layout as the
+  // columnar providers
+  private val pruning = new RuntimePruning(index.partitionSchema, readSchema(),
+    bucket, identityKeyed = false, sortedBy, skippingCols, skipMeta, dataFilters,
+    () => selected)
 
-  private lazy val allowed: Option[Set[Int]] = bucket.flatMap { case (n, col) =>
-    GraftSqlBridge.bucketSetFromFilters(dataFilters, col, n)
-  }
-
-  private lazy val pruned: Option[Seq[(Int, FileStatusWithMetadata, InternalRow)]] =
-    parsed.map { fs =>
-      allowed match {
-        case Some(a) => fs.filter { case (b, _, _) => a.contains(b) }
-        case None => fs
-      }
-    }.filter(_.nonEmpty) // empty keyed set → stock planning (no SPJ contract)
-
-  private def keyRow(b: Int, pv: InternalRow): InternalRow =
-    if (index.partitionSchema.isEmpty) InternalRow(b)
-    else InternalRow.fromSeq(pv.toSeq(index.partitionSchema) :+ b)
-
-  // ---- runtime (DPP) filtering: R13 parity for the generic format
-  // path — partition-value predicates narrow the latched listing, and
-  // bucket-key values hash to bucket ids (q107's mechanism). Both
-  // arrive after the keyed snapshot latched when SPJ is active, so
-  // there they EMPTY pruned groups' file lists (group count
-  // contractual); without the key contract the files drop outright.
-
-  @volatile private var lateFilters: Seq[Expression] = Nil
-  @volatile private var lateBuckets: Option[Set[Int]] = None
-
-  /** RUNTIME FILE SKIPPING on declared skipping columns (q117 parity
-    * for the row formats): runtime `IN`/`=` filters evaluate against
-    * the per-directory shards `CALL sys.analyze` built, and
-    * provably-excluded files drop (or empty out of their keyed groups
-    * on the SPJ path). */
-  @volatile private var lateSkip: Seq[Expression] = Nil
-
-  /** The subset of the full schema the skipping filters bind against:
-    * declared skipping columns that are neither partition nor bucket
-    * keys (those have their own pruning surfaces). */
-  private lazy val skipSchema: StructType = StructType(
-    fullSchema.fields.filter(f =>
-      skippingCols.exists(SQLConf.get.resolver(_, f.name)) &&
-        !index.partitionSchema.fieldNames.exists(SQLConf.get.resolver(_, f.name)) &&
-        !bucket.exists(b => SQLConf.get.resolver(b._2, f.name))))
-
-  /** Partition columns, the bucket column AND the skipping columns,
-    * each only when present in the scan output (`PartitionPruning`
-    * resolves these refs against the output with a THROWING resolver). */
-  override def filterAttributes(): Array[NamedReference] = {
-    val out = readSchema().fieldNames
-    def present(c: String) = out.exists(SQLConf.get.resolver(_, c))
-    (index.partitionSchema.fieldNames.toSeq.filter(present) ++
-      bucket.map(_._2).filter(present) ++
-      (if (skipMeta.isDefined)
-         skipSchema.fieldNames.toSeq.filter(present) else Nil))
-      .map(FieldReference(_)).toArray
-  }
-
+  override def filterAttributes(): Array[NamedReference] = pruning.filterAttributes()
   override def filter(predicates: Array[
-      org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit = {
-    if (index.partitionSchema.nonEmpty)
-      lateFilters = lateFilters ++ predicates.toSeq.flatMap(
-        GraftSqlBridge.runtimeValueFilter(_, index.partitionSchema))
-    bucket.foreach { case (n, col) =>
-      val sets = predicates.toSeq.flatMap(
-        GraftSqlBridge.bucketIdsFromRuntimePredicate(_, col, n))
-      if (sets.nonEmpty) {
-        val s = sets.reduce(_ intersect _)
-        lateBuckets = Some(lateBuckets.fold(s)(_ intersect s))
-      }
-    }
-    if (skipMeta.isDefined && skipSchema.nonEmpty)
-      lateSkip = lateSkip ++ predicates.toSeq.flatMap(
-        GraftSqlBridge.runtimeValueFilter(_, skipSchema))
-  }
-
-  private def lateKeep(): InternalRow => Boolean =
-    GraftSqlBridge.compilePartitionPredicate(lateFilters, index.partitionSchema)
-
-  /** Per-file survivor test from [[lateSkip]] against the shards (one
-    * shard read per involved dir, memoized inside applySkipping);
-    * identity when nothing arrived, keeps everything on any failure. */
-  private def lateSkipKeep(
-      fs: Seq[(Int, FileStatusWithMetadata, InternalRow)])
-      : FileStatusWithMetadata => Boolean = {
-    val filters = lateSkip
-    skipMeta match {
-      case Some((schema, props)) if filters.nonEmpty =>
-        try {
-          val survivors = graft.catalog.SkipStats.applySkipping(
-            spark, schema, props,
-            fs.map { case (_, f, pv) => PartitionDirectory(pv, Seq(f)) },
-            filters)
-            .iterator.flatMap(_.files).map(_.getPath.toString).toSet
-          f => survivors.contains(f.getPath.toString)
-        } catch { case scala.util.control.NonFatal(_) => _ => true }
-      case _ => _ => true
-    }
-  }
-
-  override def outputPartitioning(): Partitioning = (bucket, pruned) match {
-    case (Some((n, col)), Some(fs)) if spjActive =>
-      new KeyGroupedPartitioning(
-        (index.partitionSchema.fields.map(f => Expressions.identity(f.name):
-            org.apache.spark.sql.connector.expressions.Expression) :+
-          (Expressions.bucket(n, col):
-            org.apache.spark.sql.connector.expressions.Expression)).toArray,
-        fs.map { case (b, _, pv) =>
-          (b, pv.toSeq(index.partitionSchema))
-        }.distinct.size)
-    case _ => new UnknownPartitioning(0)
-  }
-
-  /** Same sort-free-merge-join surface as
-    * [[GraftBucketedFileScan.outputOrdering]]: under the catalog's
-    * sort-trust marker the cluster cols are reported as output ordering
-    * when the keyed path is active (one whole file per input partition;
-    * multi-file buckets are discarded by BatchScanExec's own
-    * preserves-ordering check). */
-  override def outputOrdering(): Array[
-      org.apache.spark.sql.connector.expressions.SortOrder] =
-    if (sortedBy.isEmpty || !spjActive || pruned.isEmpty)
-      Array.empty
-    else {
-      val out = readSchema().fieldNames
-      def present(c: String) = out.exists(SQLConf.get.resolver(_, c))
-      val partCols = index.partitionSchema.fieldNames.toSeq
-      val candidate =
-        if (partCols.nonEmpty && partCols.forall(present)) partCols ++ sortedBy
-        else sortedBy
-      candidate.takeWhile(present).map(c =>
-        Expressions.sort(Expressions.identity(c),
-          org.apache.spark.sql.connector.expressions.SortDirection.ASCENDING))
-        .toArray
-    }
+      org.apache.spark.sql.connector.expressions.filter.Predicate]): Unit =
+    pruning.filter(predicates)
+  override def outputPartitioning(): Partitioning = pruning.outputPartitioning()
+  override def outputOrdering(): Array[SortOrder] = pruning.outputOrdering()
 
   override def planInputPartitions(): Array[InputPartition] =
-    (pruned, spjActive) match {
-      case (Some(fs), true) =>
-        // whole-file keyed splits: the SPJ key contract forbids ranges.
-        // Late runtime filters (partition values, bucket ids or
-        // shard-excluded files) keep each group's KEY with an emptied
-        // file list.
-        val keep = lateKeep()
-        val bKeep = lateBuckets
-        val sKeep = lateSkipKeep(fs)
-        fs.zipWithIndex.map { case ((b, f, pv), i) =>
-          val files =
-            if (keep(pv) && bKeep.forall(_.contains(b)) && sKeep(f))
-              PartitionedFileUtil.splitFiles(f, f.getPath, isSplitable = false,
-                maxSplitBytes = Long.MaxValue, partitionValues = pv).toArray
-            else Array.empty[PartitionedFile]
-          new GraftKeyedFilePartition(i, files, keyRow(b, pv)): InputPartition
-        }.toArray
-      case (Some(fs), false)
-          if allowed.isDefined || lateBuckets.isDefined ||
-            lateFilters.nonEmpty || lateSkip.nonEmpty =>
-        // bucket/partition pruning without the SPJ conf: stock splits
-        // over only the surviving buckets' files — no key contract, so
-        // runtime-excluded files simply drop (a fresh toBatch after
-        // filter() serves purely-runtime narrowing too)
-        val keep = lateKeep()
-        val sKeep = lateSkipKeep(fs)
-        planStock(fs.filter { case (b, f, pv) =>
-          keep(pv) && lateBuckets.forall(_.contains(b)) && sKeep(f)
-        }.map { case (_, f, pv) => PartitionDirectory(pv, Seq(f)) })
-      case _ =>
-        // unbucketed (or foreign-file) listing: runtime partition
-        // predicates narrow the directories, runtime skipping filters
-        // the surviving dirs' files, before split planning
-        val keep = lateKeep()
-        val kept = selected.filter(d => keep(d.values))
-        val dirs =
-          if (lateSkip.isEmpty || skipMeta.isEmpty) kept
-          else {
-            val flat = kept.flatMap(d => d.files.map(f => (0, f, d.values)))
-            val sKeep = lateSkipKeep(flat)
-            kept.map(d => d.copy(files = d.files.filter(sKeep)))
-          }
-        planStock(dirs)
-    }
-
-  private def planStock(dirs: Seq[PartitionDirectory]): Array[InputPartition] = {
-    val maxSplit = FilePartition.maxSplitBytes(spark, dirs)
-    val splits = dirs.flatMap { dir =>
-      dir.files.flatMap { f =>
-        PartitionedFileUtil.splitFiles(f, f.getPath,
-          isSplitable = format.isSplitable(spark, options, f.getPath),
-          maxSplitBytes = maxSplit, partitionValues = dir.values)
-      }
-    }.sortBy(_.length)(implicitly[Ordering[Long]].reverse)
-    FilePartition.getFilePartitions(spark, splits, maxSplit)
-      .toArray[InputPartition]
-  }
+    if (pruning.keyed) pruning.keyedSplits()
+    else pruning.stockSplits(pruning.liveDirs(selected),
+      format.isSplitable(spark, options, _))
 
   override def createReaderFactory(): PartitionReaderFactory = {
     // driver-side: the closure broadcasts the hadoop conf internally and
@@ -1363,13 +926,6 @@ object GraftSqlBridge {
       LogicalRelation(relation))
   }
 
-  /** BUCKET PRUNING's predicate → bucket-set translation, shared by the
-    * columnar bucketed scan and the generic format scan: equality/IN on
-    * the bucket column narrow to the literals' buckets (the math is THE
-    * shared `GraftBucketFunction.bucketId` definition the write routing
-    * uses); a NULL equality literal matches no rows → empty set;
-    * conjuncts of other shapes are ignored — pruning is an
-    * optimization, never a row filter. None = no narrowing. */
   /** Runtime (DPP) `=`/`IN` predicate over one of `partitionSchema`'s
     * columns → a catalyst filter on a fresh by-name attribute (the
     * planner's runtime filters arrive as `IN`/`=` over LiteralValues,
@@ -1455,6 +1011,13 @@ object GraftSqlBridge {
     } catch { case scala.util.control.NonFatal(_) =>
       (_: org.apache.spark.sql.catalyst.InternalRow) => true }
 
+  /** BUCKET PRUNING's predicate → bucket-set translation, used by
+    * [[RuntimePruning]] for both scans: equality/IN on the bucket
+    * column narrow to the literals' buckets (the math is THE shared
+    * `GraftBucketFunction.bucketId` definition the write routing
+    * uses); a NULL equality literal matches no rows → empty set;
+    * conjuncts of other shapes are ignored — pruning is an
+    * optimization, never a row filter. None = no narrowing. */
   private[graft] def bucketSetFromFilters(
       filters: Seq[Expression], bucketCol: String,
       numBuckets: Int): Option[Set[Int]] = {

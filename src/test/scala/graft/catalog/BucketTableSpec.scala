@@ -587,6 +587,103 @@ class BucketTableSpec extends AnyFunSuite with SparkFixture {
     }
   }
 
+  private def priorityDim(name: String): String = {
+    import spark.implicits._
+    val dim = freshTable(name)
+    Seq(("1-URGENT", "keep"), ("2-HIGH", "drop"), ("3-MEDIUM", "drop"),
+      ("4-NOT SPECIFIED", "drop"), ("5-LOW", "drop")).toDF("prio", "tag")
+      .writeTo(dim).create()
+    dim
+  }
+
+  private def dppJoin(fact: String, dim: String): org.apache.spark.sql.DataFrame = {
+    import spark.implicits._
+    spark.table(fact)
+      .join(spark.table(dim).filter($"tag" === "keep"), $"o_orderpriority" === $"prio")
+      .select($"o_orderkey", $"o_totalprice", $"o_orderpriority")
+  }
+
+  /** [[dppJoin]] (only '1-URGENT' survives the dim filter) under the SPJ
+    * confs: its rows, and the fact scan's executed splits as
+    * (partition key, whether the split carries files). The dim
+    * broadcasts inside the SPJ confs because DPP reuses the broadcast
+    * (`reuseBroadcastOnly`); the keyed layout latches at planning, so
+    * the DPP filter arrives late. */
+  private def lateDppJoin(fact: String, dim: String)
+      : (Seq[org.apache.spark.sql.Row], Seq[(org.apache.spark.sql.catalyst.InternalRow, Boolean)]) =
+    graft.operators.EngineQueries.withSpjConfs(spark) {
+      spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "10MB")
+      val j = dppJoin(fact, dim)
+      val rows = j.collect().toSeq
+      val p = j.queryExecution.executedPlan.toString
+      assert(p.contains("dynamicpruning"), s"DPP subquery missing from the fact scan:\n$p")
+      def allScans(sp: org.apache.spark.sql.execution.SparkPlan)
+        : Seq[org.apache.spark.sql.execution.datasources.v2.BatchScanExec] = sp match {
+        case s: org.apache.spark.sql.execution.datasources.v2.BatchScanExec => Seq(s)
+        case a: org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanExec =>
+          allScans(a.executedPlan)
+        case q: org.apache.spark.sql.execution.adaptive.QueryStageExec => allScans(q.plan)
+        case other => other.children.flatMap(allScans)
+      }
+      val factScan = allScans(j.queryExecution.executedPlan)
+        .find(_.toString.contains(fact.split("\\.").last + "["))
+        .getOrElse(fail(s"fact scan not found:\n$p"))
+      // the EXECUTED splits (post-runtime-filter), not the planning-time
+      // inputPartitions
+      val splits = factScan.inputRDD.partitions.toSeq.flatMap {
+        case dp: org.apache.spark.sql.execution.datasources.v2.DataSourceRDDPartition =>
+          dp.inputPartitions
+      }
+      val parts = splits.collect {
+        case f: org.apache.spark.sql.execution.datasources.FilePartition
+            with org.apache.spark.sql.connector.read.HasPartitionKey =>
+          (f.partitionKey(), f.files.nonEmpty)
+      }
+      assert(parts.size === splits.size,
+        "every split of a keyed scan carries its partition key")
+      (rows, parts)
+    }
+
+  test("avro composite layout: a late DPP filter keeps every (partition, bucket) key, empties the pruned groups") {
+    import spark.implicits._
+    val t = freshTable("b_avro_comp")
+    val orders = Tables(spark, sf0001, "orders")
+      .select($"o_orderkey", $"o_totalprice", $"o_orderpriority")
+    orders.writeTo(t).using("avro")
+      .partitionedBy($"o_orderpriority", bucket(4, $"o_orderkey")).create()
+    val (rows, parts) = lateDppJoin(t, priorityDim("b_avro_comp_dim"))
+    assert(rows.size.toLong === orders.filter($"o_orderpriority" === "1-URGENT").count())
+    def key(k: org.apache.spark.sql.catalyst.InternalRow) =
+      (k.getUTF8String(0).toString, k.getInt(1))
+    val keys = parts.map(p => key(p._1)).distinct
+    assert(keys.size === 5 * 4, s"expected all 20 (partition, bucket) keys, got $keys")
+    val withFiles = parts.filter(_._2).map(p => key(p._1)).distinct
+    assert(withFiles.map(_._1).toSet === Set("1-URGENT") && withFiles.size === 4,
+      s"only 1-URGENT's 4 buckets may carry files, got $withFiles")
+  }
+
+  test("graft.spj identity layout: a late DPP filter keeps every partition value, empties the pruned groups") {
+    import spark.implicits._
+    val orders = Tables(spark, sf0001, "orders")
+      .select($"o_orderkey", $"o_totalprice", $"o_orderpriority")
+    val t = freshTable("spj_late")
+    orders.writeTo(t).partitionedBy($"o_orderpriority")
+      .tableProperty("graft.spj", "true").create()
+    val flat = freshTable("spj_late_flat")
+    orders.writeTo(flat).create()
+    val dim = priorityDim("spj_late_dim")
+    val expected = dppJoin(flat, dim).collect().map(_.toString).sorted.toSeq
+    assert(expected.nonEmpty)
+    val (rows, parts) = lateDppJoin(t, dim)
+    assert(rows.map(_.toString).sorted === expected,
+      "the keyed scan's join must match the unpartitioned table's")
+    val values = parts.map(_._1.getUTF8String(0).toString).distinct
+    assert(values.size === 5, s"expected one group per partition value, got $values")
+    val withFiles = parts.filter(_._2).map(_._1.getUTF8String(0).toString).distinct
+    assert(withFiles === Seq("1-URGENT"),
+      s"only the surviving value's groups may carry files, got $withFiles")
+  }
+
   test("bucket function: bind validates shape; result matches Spark's hash routing") {
     val f = GraftBucketFunction.bind(org.apache.spark.sql.types.StructType(Seq(
       org.apache.spark.sql.types.StructField("n", org.apache.spark.sql.types.IntegerType),
