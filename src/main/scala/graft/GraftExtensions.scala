@@ -14,9 +14,7 @@ import graft.functions.{ArrayDot, ArraySqDist}
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.arrayDotDescriptor)
-    ext.injectFunction(GraftExtensions.arraySqDistDescriptor)
-    ext.injectFunction(GraftExtensions.minHashSigDescriptor)
+    GraftExtensions.functionDescriptors.foreach(ext.injectFunction)
     ext.injectOptimizerRule(_ =>
       org.apache.spark.sql.graft.ResolveStrandedTableReferences)
     // merge-on-read deletion vectors (q119): relations over DV'd tables
@@ -29,7 +27,7 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
 
 object GraftExtensions {
   /** (identifier, info, builder) triple for `graft_array_dot`. */
-  val arrayDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  private val arrayDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_array_dot"),
     new ExpressionInfo(
       classOf[ArrayDot].getCanonicalName,
@@ -45,7 +43,7 @@ object GraftExtensions {
     })
 
   /** (identifier, info, builder) triple for `graft_array_sqdist`. */
-  val arraySqDistDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  private val arraySqDistDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_array_sqdist"),
     new ExpressionInfo(
       classOf[ArraySqDist].getCanonicalName,
@@ -62,7 +60,7 @@ object GraftExtensions {
     })
 
   /** (identifier, info, builder) triple for `graft_minhash_sig`. */
-  val minHashSigDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
+  private val minHashSigDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
     FunctionIdentifier("graft_minhash_sig"),
     new ExpressionInfo(
       classOf[graft.functions.MinHashSig].getCanonicalName,
@@ -92,4 +90,11 @@ object GraftExtensions {
       }
       graft.functions.MinHashSig(args.head, k)
     })
+
+  /** Every custom expression, for both the declarative extension and
+    * [[graft.functions.GraftFunctions.register]] — a new function is
+    * added here once. */
+  val functionDescriptors
+      : Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] =
+    Seq(arrayDotDescriptor, arraySqDistDescriptor, minHashSigDescriptor)
 }

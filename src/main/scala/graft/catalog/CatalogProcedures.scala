@@ -378,10 +378,10 @@ object CatalogProcedures {
         // NDV/null/min-max into post-pruning columnStats — so CBO
         // estimates with the pruned data's cardinalities, not the whole
         // table's (a date-pruned week of a year-long table plans with
-        // the week's NDVs). Spec keys are stringified exactly like the
-        // write path's dir values; a mismatch just leaves that
-        // partition's stats unset — advisory, never wrong. PER-PARTITION
-        // HISTOGRAMS (round 19): when histogram_bins > 0, the same
+        // the week's NDVs). Spec keys are encoded by the one
+        // partition-value rule ([[PartitionValues.encode]]), so they
+        // equal the stored specs for every partition column type.
+        // PER-PARTITION HISTOGRAMS (round 19): when histogram_bins > 0, the same
         // grouped pass also sketches per-partition equi-height
         // boundaries (approx_percentile is mergeable, so still ONE
         // scan); per-bin NDV is approximated as partitionNDV / bins —
@@ -456,10 +456,8 @@ object CatalogProcedures {
                     histogram = hist)
                 }.toMap
                 pcs.zipWithIndex.map { case (c, i) =>
-                  c -> (if (r.isNullAt(i))
-                    org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                      .DEFAULT_PARTITION_NAME
-                  else r.get(i).toString)
+                  c -> PartitionValues.encode(spark, org.apache.spark.sql.catalyst
+                    .expressions.Literal.create(r.get(i), r.schema(i).dataType))
                 }.toMap -> (n, cs)
               }.toMap
           }

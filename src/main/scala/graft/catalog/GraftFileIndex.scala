@@ -6,7 +6,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference, Cast, Expression, Literal, Predicate}
+import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, NoopCache, PartitionDirectory, PartitionPath, PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.unsafe.types.UTF8String
@@ -49,29 +49,11 @@ class GraftFileIndex(
 
   override def partitionSchema: StructType = meta.partitionSchema
 
-  /** Catalog partition list → typed rows (string spec values cast with the
-    * session timezone, as the reference casts at V2Table.scala:111-112). */
-  override def partitionSpec(): PartitionSpec = {
-    val ps = meta.partitionSchema
-    val paths = meta.partitions.map { p =>
-      val row = InternalRow.fromSeq(ps.map { f =>
-        p.spec.get(f.name).orElse(
-            p.spec.find(_._1.equalsIgnoreCase(f.name)).map(_._2)) match {
-          // the Hive default-partition marker IS the null encoding —
-          // surfacing it as a literal string would leak the marker into
-          // query results
-          case Some(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-            .DEFAULT_PARTITION_NAME) => null
-          case Some(v) =>
-            Cast(Literal(UTF8String.fromString(v), StringType), f.dataType,
-              Some(timeZoneId)).eval(null)
-          case None => null
-        }
-      })
-      PartitionPath(row, qualify(new Path(partitionLocation(p))))
-    }
-    PartitionSpec(ps, paths)
-  }
+  /** Catalog partition list → typed rows ([[PartitionValues.row]]). */
+  override def partitionSpec(): PartitionSpec =
+    PartitionSpec(meta.partitionSchema, meta.partitions.map(p => PartitionPath(
+      PartitionValues.row(sparkSession, meta.partitionSchema, p.spec),
+      qualify(new Path(partitionLocation(p))))))
 
   private def partitionLocation(p: PartitionMeta): String =
     p.location.getOrElse(
@@ -112,19 +94,9 @@ class GraftFileIndex(
   private def survivingPartitions(filters: Seq[Expression]): Seq[PartitionMeta] = {
     if (meta.partitions.isEmpty) return Nil
     if (filters.isEmpty) return meta.partitions
-    val spec = partitionSpec()
-    val ps = spec.partitionColumns
-    val bound = filters.reduce(And).transform {
-      case a: AttributeReference =>
-        val idx = ps.indexWhere(f =>
-          sparkSession.sessionState.conf.resolver(f.name, a.name))
-        require(idx >= 0, s"partition filter column ${a.name} not in $ps")
-        BoundReference(idx, ps(idx).dataType, nullable = true)
-    }
-    val predicate = Predicate.createInterpreted(bound)
-    predicate.initialize(0)
-    meta.partitions.zip(spec.partitions)
-      .collect { case (pm, pp) if predicate.eval(pp.values) => pm }
+    val keep = PartitionValues.rowFilter(sparkSession, meta.partitionSchema, filters)
+    meta.partitions.zip(partitionSpec().partitions)
+      .collect { case (pm, pp) if keep(pp.values) => pm }
   }
 
   /** Sum of the SURVIVING partitions' analyze-recorded row counts —
@@ -227,21 +199,9 @@ class GraftFileIndex(
 
   def filterPartitions(filters: Seq[Expression]): InMemoryFileIndex = {
     val spec = partitionSpec()
-    val pruned =
-      if (filters.isEmpty) spec
-      else {
-        val ps = spec.partitionColumns
-        val bound = filters.reduce(And).transform {
-          case a: AttributeReference =>
-            val idx = ps.indexWhere(f =>
-              sparkSession.sessionState.conf.resolver(f.name, a.name))
-            require(idx >= 0, s"partition filter column ${a.name} not in $ps")
-            BoundReference(idx, ps(idx).dataType, nullable = true)
-        }
-        val predicate = Predicate.createInterpreted(bound)
-        predicate.initialize(0)
-        PartitionSpec(ps, spec.partitions.filter(p => predicate.eval(p.values)))
-      }
+    val keep = PartitionValues.rowFilter(
+      sparkSession, spec.partitionColumns, filters)
+    val pruned = PartitionSpec(spec.partitionColumns, spec.partitions.filter(p => keep(p.values)))
     new InMemoryFileIndex(sparkSession,
       rootPathsSpecified = pruned.partitions.map(_.path),
       parameters = Map.empty,
@@ -296,26 +256,9 @@ class GraftPinnedFileIndex(
   extends PartitioningAwareFileIndex(
     sparkSession, Map.empty, Some(meta.schema), NoopCache) {
 
-  private val timeZoneId = sparkSession.sessionState.conf.sessionLocalTimeZone
-
-  /** spec → typed row, the same Cast rule as [[GraftFileIndex]]. */
-  private def rowOf(spec: Map[String, String]): InternalRow = {
-    val ps = meta.partitionSchema
-    InternalRow.fromSeq(ps.map { f =>
-      spec.get(f.name).orElse(
-          spec.find(_._1.equalsIgnoreCase(f.name)).map(_._2)) match {
-        case Some(org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-          .DEFAULT_PARTITION_NAME) => null
-        case Some(v) =>
-          Cast(Literal(UTF8String.fromString(v), StringType), f.dataType,
-            Some(timeZoneId)).eval(null)
-        case None => null
-      }
-    })
-  }
-
   private val pinned: Seq[(InternalRow, Path, Seq[FileStatus])] =
-    resolved.dirs.map(d => (rowOf(d.spec), new Path(d.dir), d.files))
+    resolved.dirs.map(d => (PartitionValues.row(
+      sparkSession, meta.partitionSchema, d.spec), new Path(d.dir), d.files))
 
   override def rootPaths: Seq[Path] = Seq(new Path(meta.location))
   override def refresh(): Unit = ()
@@ -327,19 +270,10 @@ class GraftPinnedFileIndex(
 
   private def prune(
       filters: Seq[Expression]): Seq[(InternalRow, Path, Seq[FileStatus])] =
-    if (filters.isEmpty || meta.partitionColumns.isEmpty) pinned
+    if (meta.partitionColumns.isEmpty) pinned
     else {
-      val ps = meta.partitionSchema
-      val bound = filters.reduce(And).transform {
-        case a: AttributeReference =>
-          val idx = ps.fields.indexWhere(f =>
-            sparkSession.sessionState.conf.resolver(f.name, a.name))
-          require(idx >= 0, s"partition filter column ${a.name} not in $ps")
-          BoundReference(idx, ps(idx).dataType, nullable = true)
-      }
-      val predicate = Predicate.createInterpreted(bound)
-      predicate.initialize(0)
-      pinned.filter(p => predicate.eval(p._1))
+      val keep = PartitionValues.rowFilter(sparkSession, meta.partitionSchema, filters)
+      pinned.filter(p => keep(p._1))
     }
 
   override def listFiles(

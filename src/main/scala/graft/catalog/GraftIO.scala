@@ -79,6 +79,28 @@ private[graft] object GraftIO {
     }
   }
 
+  /** A small file's whole content as UTF-8; None when it does not exist. */
+  def readSmallFile(
+      fs: org.apache.hadoop.fs.FileSystem, p: org.apache.hadoop.fs.Path): Option[String] =
+    if (!fs.exists(p)) None
+    else {
+      val in = fs.open(p)
+      try Some(new String(in.readAllBytes(), java.nio.charset.StandardCharsets.UTF_8))
+      finally in.close()
+    }
+
+  /** A JSON string literal: quote, backslash and every control character
+    * (< 0x20) escaped — what the hand-rolled metadata writers emit. */
+  def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"' => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
   private val poolSize: Int =
     math.min(32, math.max(8, Runtime.getRuntime.availableProcessors()))
 

@@ -131,8 +131,7 @@ class GraftMetadataTable(
       if (!meta.isPartitioned) Seq((None, new Path(meta.location)))
       else meta.partitions.map { pm =>
         val frag = meta.partitionColumns.map(c =>
-          s"$c=${pm.spec.getOrElse(c, pm.spec.find(_._1.equalsIgnoreCase(c))
-            .map(_._2).getOrElse(""))}").mkString("/")
+          s"$c=${PartitionValues.lookup(pm.spec, c).getOrElse("")}").mkString("/")
         (Some(frag), pm.location.map(new Path(_))
           .getOrElse(GraftBatchWrite.partitionDir(meta, pm.spec)))
       }

@@ -9,8 +9,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.{NoSuchPartitionException, PartitionsAlreadyExistException}
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.connector.catalog._
 import org.apache.spark.sql.connector.expressions.{Expressions, Transform}
 import org.apache.spark.sql.connector.read.ScanBuilder
@@ -21,7 +20,6 @@ import org.apache.spark.sql.execution.datasources.v2.json.JsonScanBuilder
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScanBuilder
 import org.apache.spark.sql.types.{StringType, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
 import graft.catalog.write.GraftWriteBuilder
 
@@ -470,8 +468,7 @@ class GraftTable(
           // before partition tracking (parity with static overwrite)
           if (spec.size == current.partitionColumns.size) {
             val lit = defaultPartitionDir(current,
-              current.partitionColumns.map(c => c ->
-                spec.find(_._1.equalsIgnoreCase(c)).map(_._2).get).toMap)
+              current.partitionColumns.map(c => c -> PartitionValues.lookup(spec, c).get).toMap)
             Snapshots.retireDirTree(hadoopConf, current.location, lit, retireToken)
           }
           current.copy(partitions = kept,
@@ -548,15 +545,10 @@ class GraftTable(
 
   override def partitionSchema(): StructType = meta.partitionSchema
 
-  private def specOf(ident: InternalRow): Map[String, String] = {
-    val ps = meta.partitionSchema
-    ps.fields.zipWithIndex.map { case (f, i) =>
-      val v = Cast(Literal(ident.get(i, f.dataType), f.dataType), StringType,
-        Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(null)
-      f.name -> (if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-                 else v.asInstanceOf[UTF8String].toString)
+  private def specOf(ident: InternalRow): Map[String, String] =
+    meta.partitionSchema.fields.zipWithIndex.map { case (f, i) =>
+      f.name -> PartitionValues.encode(spark, Literal(ident.get(i, f.dataType), f.dataType))
     }.toMap
-  }
 
   private def fresh: TableMeta = store.loadTable(db, meta.name)
 
@@ -658,25 +650,15 @@ class GraftTable(
   override def listPartitionIdentifiers(
       names: Array[String], ident: InternalRow): Array[InternalRow] = {
     val ps = meta.partitionSchema
-    val tz = spark.sessionState.conf.sessionLocalTimeZone
     val wanted = names.zipWithIndex.map { case (n, i) =>
       val fi = ps.fieldNames.indexWhere(_.equalsIgnoreCase(n))
       require(fi >= 0, s"$n is not a partition column of ${name()}")
-      val v = Cast(Literal(ident.get(i, ps(fi).dataType), ps(fi).dataType),
-        StringType, Some(tz)).eval(null)
-      ps(fi).name -> (if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-                      else v.asInstanceOf[UTF8String].toString)
+      ps(fi).name -> PartitionValues.encode(spark,
+        Literal(ident.get(i, ps(fi).dataType), ps(fi).dataType))
     }.toMap
     fresh.partitions
       .filter(p => wanted.forall { case (k, v) => p.spec.get(k).contains(v) })
-      .map { p =>
-        InternalRow.fromSeq(ps.map { f =>
-          val raw = p.spec.getOrElse(f.name, null)
-          if (raw == null || raw == ExternalCatalogUtils.DEFAULT_PARTITION_NAME) null
-          else Cast(Literal(UTF8String.fromString(raw), StringType), f.dataType,
-            Some(tz)).eval(null)
-        })
-      }.toArray
+      .map(p => PartitionValues.row(spark, ps, p.spec)).toArray
   }
 
   private def defaultPartitionDir(current: TableMeta, spec: Map[String, String]): Path =

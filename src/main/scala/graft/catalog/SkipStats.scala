@@ -14,6 +14,8 @@ import org.apache.spark.sql.internal.SQLConf
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
+import graft.catalog.GraftIO.jsonString
+
 /** FILE-LEVEL DATA SKIPPING — the planner-side complement to q105's
   * row-group skipping: per-file min/max ranges for the columns named in
   * `graft.skipping.by` are recorded AT COMMIT TIME (read once from each
@@ -495,29 +497,19 @@ object SkipStats extends Logging {
     case _ => None
   }
 
-  // ---- manifest IO (hand-rolled JSON, mirroring Verify's escaper) --------
-
-  private def esc(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
+  // ---- manifest IO (hand-rolled JSON through GraftIO) -------------------
 
   private def writeAtomic(
       fs: FileSystem, root: Path,
       entries: Map[String, RawEntry]): Unit = {
     val body = entries.toSeq.sortBy(_._1).map { case (file, e) =>
       val ranges = e.ranges.toSeq.sortBy(_._1).map { case (c, (mn, mx)) =>
-        esc(c) + ":[" + esc(mn) + "," + esc(mx) + "]"
+        jsonString(c) + ":[" + jsonString(mn) + "," + jsonString(mx) + "]"
       }.mkString("{", ",", "}")
       val nulls = e.nulls.toSeq.sortBy(_._1).map { case (c, n) =>
-        esc(c) + ":" + esc(n)
+        jsonString(c) + ":" + jsonString(n)
       }.mkString("{", ",", "}")
-      esc(file) + ":{\"ranges\":" + ranges + ",\"nulls\":" + nulls + "}"
+      jsonString(file) + ":{\"ranges\":" + ranges + ",\"nulls\":" + nulls + "}"
     }.mkString("{\"version\":2,\"files\":{", ",", "}}")
     writeFileAtomic(fs, root, ManifestName, body)
     // the bloom shard rides separately (read only by equality probes);
@@ -526,8 +518,8 @@ object SkipStats extends Logging {
     if (withBlooms.isEmpty) fs.delete(new Path(root, BloomManifestName), false)
     else {
       val bBody = withBlooms.toSeq.sortBy(_._1).map { case (file, e) =>
-        esc(file) + ":" + e.blooms.toSeq.sortBy(_._1).map { case (c, b) =>
-          esc(c) + ":" + esc(b)
+        jsonString(file) + ":" + e.blooms.toSeq.sortBy(_._1).map { case (c, b) =>
+          jsonString(c) + ":" + jsonString(b)
         }.mkString("{", ",", "}")
       }.mkString("{\"version\":1,\"files\":{", ",", "}}")
       writeFileAtomic(fs, root, BloomManifestName, bBody)
@@ -547,19 +539,6 @@ object SkipStats extends Logging {
     if (!fs.rename(tmp, target)) { fs.delete(tmp, false); sys.error(s"rename to $target failed") }
   }
 
-  private def readText(fs: FileSystem, target: Path): Option[String] =
-    if (!fs.exists(target)) None
-    else {
-      val in = fs.open(target)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(bytes.toString("UTF-8"))
-      } finally in.close()
-    }
-
   /** Both shards merged — the maintenance-side view (the scan side uses
     * [[readMain]] + [[readBloomShard]] so range queries never read the
     * heavy bloom file). */
@@ -577,7 +556,7 @@ object SkipStats extends Logging {
   private def readBloomShard(
       fs: FileSystem, root: Path): Map[String, Map[String, String]] = try {
     import org.json4s._
-    readText(fs, new Path(root, BloomManifestName)) match {
+    GraftIO.readSmallFile(fs, new Path(root, BloomManifestName)) match {
       case None => Map.empty
       case Some(text) => org.json4s.jackson.JsonMethods.parse(text) match {
         case JObject(top) =>
@@ -594,7 +573,7 @@ object SkipStats extends Logging {
 
   private def readMain(
       fs: FileSystem, root: Path): Map[String, RawEntry] = try {
-    val text = readText(fs, new Path(root, ManifestName)).getOrElse(return Map.empty)
+    val text = GraftIO.readSmallFile(fs, new Path(root, ManifestName)).getOrElse(return Map.empty)
     import org.json4s._
     def parseRanges(cols: List[(String, JValue)]): Map[String, (String, String)] =
       cols.flatMap {

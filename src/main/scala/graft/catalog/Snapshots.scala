@@ -8,6 +8,8 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 import org.apache.spark.internal.Logging
 import org.apache.spark.sql.SparkSession
 
+import graft.catalog.GraftIO.jsonString
+
 /** SNAPSHOT-PER-COMMIT TIME TRAVEL (q116) — the Iceberg-snapshot posture
   * the staged-rewrite protocol (q114/q115) half-built, extended to EVERY
   * batch commit: append, truncate, static/dynamic overwrite, DELETE,
@@ -128,16 +130,6 @@ object Snapshots extends Logging {
 
   // ---- JSON IO (hand-rolled writer + json4s reader, the SkipStats shape) ---
 
-  private def esc(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   private def writeFile(fs: FileSystem, target: Path, body: String): Unit = {
     val tmp = new Path(target.getParent,
       s".${target.getName}.${java.util.UUID.randomUUID()}.tmp")
@@ -149,23 +141,10 @@ object Snapshots extends Logging {
     }
   }
 
-  private def readText(fs: FileSystem, target: Path): Option[String] =
-    if (!fs.exists(target)) None
-    else {
-      val in = fs.open(target)
-      try {
-        val bytes = new java.io.ByteArrayOutputStream()
-        val buf = new Array[Byte](64 * 1024)
-        var n = in.read(buf)
-        while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-        Some(bytes.toString("UTF-8"))
-      } finally in.close()
-    }
-
   private def writeShard(
       fs: FileSystem, target: Path, files: Seq[(String, Long)]): Unit = {
     val body = files.sortBy(_._1).map { case (n, sz) =>
-      "[" + esc(n) + "," + sz + "]"
+      "[" + jsonString(n) + "," + sz + "]"
     }.mkString("{\"version\":1,\"files\":[", ",", "]}")
     writeFile(fs, target, body)
   }
@@ -174,7 +153,7 @@ object Snapshots extends Logging {
       conf: Configuration, path: String): Option[Seq[(String, Long)]] = try {
     import org.json4s._
     val p = new Path(path)
-    readText(p.getFileSystem(conf), p).flatMap { text =>
+    GraftIO.readSmallFile(p.getFileSystem(conf), p).flatMap { text =>
       org.json4s.jackson.JsonMethods.parse(text) match {
         case JObject(top) => top.collectFirst {
           case ("files", JArray(items)) => items.collect {
@@ -195,19 +174,19 @@ object Snapshots extends Logging {
   private def writeSnap(fs: FileSystem, target: Path, s: Snap): Unit = {
     val dirs = s.dirs.map { d =>
       val spec = d.spec.toSeq.sortBy(_._1).map { case (k, v) =>
-        esc(k) + ":" + esc(v)
+        jsonString(k) + ":" + jsonString(v)
       }.mkString("{", ",", "}")
-      "{\"dir\":" + esc(d.dir) + ",\"spec\":" + spec +
-        ",\"shard\":" + esc(d.shard) + "}"
+      "{\"dir\":" + jsonString(d.dir) + ",\"spec\":" + spec +
+        ",\"shard\":" + jsonString(d.shard) + "}"
     }.mkString("[", ",", "]")
     val dvs = s.dvs.map { d =>
-      "{\"token\":" + esc(d.token) + ",\"keyColumn\":" + esc(d.keyColumn) +
-        ",\"manifest\":" + esc(d.manifest) + ",\"keys\":" + d.keys +
+      "{\"token\":" + jsonString(d.token) + ",\"keyColumn\":" + jsonString(d.keyColumn) +
+        ",\"manifest\":" + jsonString(d.manifest) + ",\"keys\":" + d.keys +
         ",\"createdAtMs\":" + d.createdAtMs + "}"
     }.mkString("[", ",", "]")
     val body = "{\"version\":" + s.version + ",\"tsMs\":" + s.tsMs +
-      ",\"kind\":" + esc(s.kind) + ",\"token\":" + esc(s.token) +
-      ",\"provider\":" + esc(s.provider) + ",\"location\":" + esc(s.location) +
+      ",\"kind\":" + jsonString(s.kind) + ",\"token\":" + jsonString(s.token) +
+      ",\"provider\":" + jsonString(s.provider) + ",\"location\":" + jsonString(s.location) +
       ",\"dirs\":" + dirs + ",\"dvs\":" + dvs + "}"
     writeFile(fs, target, body)
   }
@@ -216,7 +195,7 @@ object Snapshots extends Logging {
       conf: Configuration, path: String): Option[Snap] = try {
     import org.json4s._
     val p = new Path(path)
-    readText(p.getFileSystem(conf), p).flatMap { text =>
+    GraftIO.readSmallFile(p.getFileSystem(conf), p).flatMap { text =>
       org.json4s.jackson.JsonMethods.parse(text) match {
         case o: JObject =>
           val m = o.obj.toMap

@@ -18,12 +18,14 @@ import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
 import org.apache.spark.sql.execution.datasources.OutputWriter
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
-import org.apache.spark.sql.sources.{And => V1And, EqualNullSafe => V1EqualNullSafe, EqualTo => V1EqualTo, Filter => V1Filter, In => V1In, Or => V1Or}
+import org.apache.spark.sql.graft.GraftSqlBridge
+import org.apache.spark.sql.sources.{Filter => V1Filter}
 import org.apache.spark.sql.types.{StructField, StructType}
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.catalog.{DvMeta, MetaStore, PartitionMeta, Snapshots, TableMeta}
+import graft.catalog.{DvMeta, MetaStore, PartitionMeta, PartitionValues, Snapshots, TableMeta}
+import graft.catalog.GraftIO.{jsonString, readSmallFile}
 
 /** MERGE-ON-READ row-level DML (q119) — the deletion-vector sibling of
   * the copy-on-write [[GraftRowLevelOperation]], for tables declaring
@@ -134,9 +136,10 @@ class GraftMorOperation(
 
 /** Scan builder for the delta read: the provider delegate (same dispatch
   * as the COW scan) plus STATIC partition pruning — delta operations get
-  * no runtime group filtering (that is a group-based-only rule), so the
-  * condition's partition-column conjuncts are evaluated against the
-  * stored specs here and non-matching partitions never list. Every
+  * no runtime group filtering (that is a group-based-only rule), so
+  * each pushed filter, translated to Catalyst by Spark's own rules, is
+  * tested against the stored specs ([[PartitionValues.mayMatch]]) and
+  * non-matching partitions never list. Every
   * filter is reported back as un-pushed (the delta query re-applies the
   * full condition), so pruning is advisory and can never drop a row the
   * condition would have matched — the same conservative three-valued
@@ -156,80 +159,12 @@ private[write] class GraftMorScanBuilder(
   override def pruneColumns(requiredSchema: StructType): Unit =
     required = requiredSchema
 
-  /** Conservative spec evaluation of a V1 filter: Some(false) only when
-    * the partition provably contains no matching row.
-    *
-    * TYPED comparison (round-20 ADVICE fix): the stored spec string is
-    * cast to the partition column's type and the filter's external value
-    * converted to the same Catalyst representation before comparing —
-    * raw-string equality was representation-sensitive (a timestamp spec
-    * '…00:00:00' vs `Timestamp.toString`'s '…00:00:00.0', a decimal's
-    * scale) and a false mismatch PRUNED a matching partition, silently
-    * skipping rows the DML should have changed. Any conversion that
-    * fails or is undecidable keeps the partition (pruning stays
-    * advisory — the delta query re-applies the full condition). */
-  private def keepsPartition(spec: Map[String, String], f: V1Filter): Boolean = {
-    import org.apache.spark.sql.catalyst.CatalystTypeConverters
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    /** Some(matches) when the typed comparison is decidable. `nullSafe`
-      * distinguishes `<=>` (null value matches the Hive null marker)
-      * from `=` (null never matches). */
-    def specMatches(col: String, value: Any, nullSafe: Boolean): Option[Boolean] = {
-      val field = meta.partitionSchema.fields.find(_.name.equalsIgnoreCase(col))
-      val raw = spec.find(_._1.equalsIgnoreCase(col)).map(_._2)
-      (field, raw) match {
-        case (Some(fd), Some(rv)) =>
-          val specIsNull = rv == ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-          if (value == null) {
-            if (nullSafe) Some(specIsNull) else None
-          } else if (specIsNull) Some(false)
-          else try {
-            val specV = Option(Cast(
-              Literal(UTF8String.fromString(rv), StringType), fd.dataType,
-              Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(null))
-            val filtV = Option(
-              CatalystTypeConverters.createToCatalystConverter(fd.dataType)(value))
-            (specV, filtV) match {
-              case (Some(a), Some(b)) => Some(a == b)
-              case _ => None // un-castable spec / value: undecidable, keep
-            }
-          } catch { case NonFatal(_) => None }
-        case _ => None
-      }
-    }
-    def eval(f: V1Filter): Option[Boolean] = f match {
-      case V1And(l, r) => (eval(l), eval(r)) match {
-        case (Some(false), _) | (_, Some(false)) => Some(false)
-        case (Some(true), Some(true)) => Some(true)
-        case _ => None
-      }
-      case V1Or(l, r) => (eval(l), eval(r)) match {
-        case (Some(true), _) | (_, Some(true)) => Some(true)
-        case (Some(false), Some(false)) => Some(false)
-        case _ => None
-      }
-      case V1EqualTo(col, v) => specMatches(col, v, nullSafe = false)
-      case V1EqualNullSafe(col, v) => specMatches(col, v, nullSafe = true)
-      case V1In(col, vs) =>
-        val per = vs.toSeq.map(v => specMatches(col, v, nullSafe = false))
-        if (per.exists(_.contains(true))) Some(true)
-        else if (per.nonEmpty && per.forall(_.contains(false))) Some(false)
-        else None
-      case _ => None
-    }
-    // only filters that ONLY reference partition columns may prune
-    val partCols = meta.partitionColumns.map(_.toLowerCase).toSet
-    if (!f.references.forall(r => partCols.contains(r.toLowerCase))) true
-    else eval(f).getOrElse(true)
-  }
-
   override def pushFilters(filters: Array[V1Filter]): Array[V1Filter] = {
-    if (meta.isPartitioned)
+    if (meta.isPartitioned) {
+      val conds = filters.toSeq.flatMap(GraftSqlBridge.toCatalyst)
       kept = meta.partitions.filter(p =>
-        filters.forall(f => keepsPartition(p.spec, f)))
+        conds.forall(PartitionValues.mayMatch(spark, meta, p.spec, _)))
+    }
     filters // nothing is handled for row filtering — pruning is advisory
   }
 
@@ -612,23 +547,13 @@ private[write] class GraftDeltaWriterFactory(
   * qualified paths of the data files the batch applies to. */
 private[graft] object DvManifest {
 
-  private def esc(s: String): String = "\"" + s.flatMap {
-    case '"' => "\\\""
-    case '\\' => "\\\\"
-    case '\n' => "\\n"
-    case '\r' => "\\r"
-    case '\t' => "\\t"
-    case c if c < ' ' => f"\\u${c.toInt}%04x"
-    case c => c.toString
-  } + "\""
-
   def write(
       fs: FileSystem, dir: Path, keyColumn: String,
       appliesTo: Seq[String], keys: Long): Path = {
     val target = new Path(dir, "_manifest.json")
-    val body = "{\"version\":1,\"keyColumn\":" + esc(keyColumn) +
+    val body = "{\"version\":1,\"keyColumn\":" + jsonString(keyColumn) +
       ",\"keys\":" + keys +
-      ",\"appliesTo\":" + appliesTo.map(esc).mkString("[", ",", "]") + "}"
+      ",\"appliesTo\":" + appliesTo.map(jsonString).mkString("[", ",", "]") + "}"
     val tmp = new Path(dir, s"._manifest.${UUID.randomUUID()}.tmp")
     val out = fs.create(tmp, false)
     try out.write(body.getBytes(java.nio.charset.StandardCharsets.UTF_8))
@@ -648,17 +573,7 @@ private[graft] object DvManifest {
       import org.json4s._
       val p = new Path(path)
       val fs = p.getFileSystem(conf)
-      if (!fs.exists(p)) return None
-      val text = {
-        val in = fs.open(p)
-        try {
-          val bytes = new java.io.ByteArrayOutputStream()
-          val buf = new Array[Byte](64 * 1024)
-          var n = in.read(buf)
-          while (n >= 0) { bytes.write(buf, 0, n); n = in.read(buf) }
-          bytes.toString("UTF-8")
-        } finally in.close()
-      }
+      val text = readSmallFile(fs, p).getOrElse(return None)
       org.json4s.jackson.JsonMethods.parse(text) match {
         case o: JObject =>
           val m = o.obj.toMap

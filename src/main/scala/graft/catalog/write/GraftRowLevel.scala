@@ -3,18 +3,16 @@ package graft.catalog.write
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-import org.apache.spark.sql.connector.expressions.{Literal => V2Literal, NamedReference}
-import org.apache.spark.sql.connector.expressions.filter.{And => V2And, Not => V2Not, Or => V2Or, Predicate => V2Predicate}
+import org.apache.spark.sql.connector.expressions.NamedReference
+import org.apache.spark.sql.connector.expressions.filter.{Predicate => V2Predicate}
 import org.apache.spark.sql.connector.read.{Batch, Scan, ScanBuilder, SupportsPushDownRequiredColumns, SupportsRuntimeV2Filtering}
 import org.apache.spark.sql.connector.write.{LogicalWriteInfo, RowLevelOperation, RowLevelOperationBuilder, WriteBuilder}
 import org.apache.spark.sql.connector.write.RowLevelOperation.Command
-import org.apache.spark.sql.types.{StringType, StructType}
+import org.apache.spark.sql.graft.GraftSqlBridge
+import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
-import org.apache.spark.unsafe.types.UTF8String
 
-import graft.catalog.{MetaStore, PartitionMeta, TableMeta}
+import graft.catalog.{MetaStore, PartitionMeta, PartitionValues, TableMeta}
 
 /** Row-level DML (UPDATE / MERGE INTO / row-predicate DELETE) as a
   * group-based copy-on-write operation at PARTITION granularity — the
@@ -157,8 +155,9 @@ private[write] class GraftCowScanBuilder(
   * per partition column), narrows the catalog partition list, REBUILDS
   * the delegate file scan over the pruned set (BatchScanExec re-plans
   * input partitions from `toBatch` after filtering), and records the
-  * final set on the operation for the write's commit. Unknown predicate
-  * shapes keep a partition — pruning is an optimization, never a
+  * final set on the operation for the write's commit. Predicates are
+  * tested against the stored specs by [[PartitionValues.mayMatch]];
+  * undecidable ones keep a partition — pruning is an optimization, never a
   * correctness decision, and the recorded set always matches what the
   * delegate will actually read. */
 private[write] class GraftCowScan(
@@ -190,9 +189,9 @@ private[write] class GraftCowScan(
       org.apache.spark.sql.connector.expressions.Expressions.column(c)).toArray
 
   override def filter(predicates: Array[V2Predicate]): Unit = {
+    val conds = predicates.toSeq.flatMap(GraftSqlBridge.runtimeGroupFilter)
     val narrowed = kept.filter(p =>
-      predicates.forall(pred =>
-        CowPredicates.eval(spark, meta, p.spec, pred).getOrElse(true)))
+      conds.forall(PartitionValues.mayMatch(spark, meta, p.spec, _)))
     kept = narrowed
     op.scannedSpecs = Some(narrowed.map(_.spec))
     current = rebuild()
@@ -258,77 +257,5 @@ private[write] object GraftCowScan {
     // shared FileStatusCache means no second listing cost.
     val files = index.allFiles().map(_.getPath.toString).toSet
     (builder.build(), files)
-  }
-}
-
-/** Conservative three-valued evaluation of runtime V2 predicates against
-  * a stored partition spec: `Some(b)` when decidable, `None` when the
-  * predicate shape or a null partition value makes it undecidable — the
-  * caller keeps the partition in that case. Handles the shapes Spark's
-  * runtime group filtering emits (`IN` over one partition column from
-  * `translateRuntimeFilterV2`, plus `=`/AND/OR/NOT for completeness). */
-private[write] object CowPredicates {
-
-  def eval(
-      spark: SparkSession,
-      meta: TableMeta,
-      spec: Map[String, String],
-      p: V2Predicate): Option[Boolean] = p match {
-    case and: V2And =>
-      (eval(spark, meta, spec, and.left()), eval(spark, meta, spec, and.right())) match {
-        case (Some(false), _) | (_, Some(false)) => Some(false)
-        case (Some(true), Some(true)) => Some(true)
-        case _ => None
-      }
-    case or: V2Or =>
-      (eval(spark, meta, spec, or.left()), eval(spark, meta, spec, or.right())) match {
-        case (Some(true), _) | (_, Some(true)) => Some(true)
-        case (Some(false), Some(false)) => Some(false)
-        case _ => None
-      }
-    case not: V2Not => eval(spark, meta, spec, not.child()).map(!_)
-    case _ if p.name() == "ALWAYS_TRUE" => Some(true)
-    case _ if p.name() == "ALWAYS_FALSE" => Some(false)
-    case _ if p.name() == "IN" && p.children().nonEmpty =>
-      (p.children().head, p.children().tail) match {
-        case (ref: NamedReference, vals) if vals.forall(_.isInstanceOf[V2Literal[_]]) =>
-          specValue(spark, meta, spec, ref).map { sv =>
-            vals.exists { case l: V2Literal[_] => l.value == sv }
-          }
-        case _ => None
-      }
-    case _ if p.name() == "=" && p.children().length == 2 =>
-      p.children() match {
-        case Array(ref: NamedReference, l: V2Literal[_]) =>
-          specValue(spark, meta, spec, ref).map(_ == l.value)
-        case Array(l: V2Literal[_], ref: NamedReference) =>
-          specValue(spark, meta, spec, ref).map(_ == l.value)
-        case _ => None
-      }
-    case _ => None
-  }
-
-  /** The spec's value for a referenced top-level partition column, cast
-    * from its path-string encoding to the column type's Catalyst internal
-    * representation (so it compares against `LiteralValue.value`
-    * directly). `None` for nested refs, unknown columns, or the Hive
-    * null marker — all undecidable. */
-  private def specValue(
-      spark: SparkSession,
-      meta: TableMeta,
-      spec: Map[String, String],
-      ref: NamedReference): Option[Any] = {
-    ref.fieldNames() match {
-      case Array(col) =>
-        for {
-          field <- meta.partitionSchema.fields.find(_.name.equalsIgnoreCase(col))
-          raw <- spec.find(_._1.equalsIgnoreCase(col)).map(_._2)
-          if raw != ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-          v <- Option(Cast(
-            Literal(UTF8String.fromString(raw), StringType), field.dataType,
-            Some(spark.sessionState.conf.sessionLocalTimeZone)).eval(null))
-        } yield v
-      case _ => None
-    }
   }
 }

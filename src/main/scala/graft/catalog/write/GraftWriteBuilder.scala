@@ -12,6 +12,7 @@ import org.apache.spark.internal.io.FileCommitProtocol
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.catalyst.types.DataTypeUtils
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
@@ -24,7 +25,7 @@ import org.apache.spark.sql.execution.datasources.v2.FileBatchWrite
 import org.apache.spark.sql.sources.{AlwaysTrue, And, EqualNullSafe, EqualTo, Filter}
 import org.apache.spark.util.SerializableConfiguration
 
-import graft.catalog.{MetaStore, PartitionMeta, TableMeta, TableStats}
+import graft.catalog.{MetaStore, PartitionMeta, PartitionValues, TableMeta, TableStats}
 
 /** Shared translation of V1 delete/overwrite filters into a static
   * partition spec (the reference's unwrap rule,
@@ -39,20 +40,10 @@ private[graft] object PartitionPredicates {
       spark: SparkSession,
       meta: TableMeta,
       filters: Array[Filter]): Option[Map[String, String]] = {
-    // Values must be encoded EXACTLY like stored partition specs:
-    // Cast-to-string with the session timezone, null →
-    // __HIVE_DEFAULT_PARTITION__. String.valueOf would yield "null"
-    // and Timestamp.toString's ".0" suffix — neither matches a spec or
-    // a directory name, so the delete would silently miss and the
-    // target partition would keep its old files.
-    def encode(v: Any): String =
-      if (v == null) ExternalCatalogUtils.DEFAULT_PARTITION_NAME
-      else {
-        val lit = org.apache.spark.sql.catalyst.expressions.Literal(v)
-        val tz = spark.sessionState.conf.sessionLocalTimeZone
-        String.valueOf(org.apache.spark.sql.catalyst.expressions.Cast(
-          lit, org.apache.spark.sql.types.StringType, Some(tz)).eval(null))
-      }
+    // Values must be encoded EXACTLY like stored partition specs
+    // (String.valueOf would yield "null" and Timestamp.toString's ".0"
+    // suffix — the delete would silently miss its partition)
+    def encode(v: Any): String = PartitionValues.encode(spark, Literal(v))
     def un(f: Filter): Option[Seq[(String, String)]] = f match {
       case And(l, r) => for { a <- un(l); b <- un(r) } yield a ++ b
       case EqualTo(col, v) => Some(Seq(col -> encode(v)))
@@ -60,7 +51,7 @@ private[graft] object PartitionPredicates {
       // Catalyst simplifies `col <=> null` to IsNull before it reaches
       // the builder — it IS the static null-partition predicate
       case org.apache.spark.sql.sources.IsNull(col) =>
-        Some(Seq(col -> ExternalCatalogUtils.DEFAULT_PARTITION_NAME))
+        Some(Seq(col -> PartitionValues.NullName))
       case _: AlwaysTrue => Some(Seq.empty)
       case _ => None
     }
@@ -99,8 +90,7 @@ private[graft] object PartitionPredicates {
     val literal =
       if (spec.size == meta.partitionColumns.size)
         Seq(GraftBatchWrite.partitionDir(meta,
-          meta.partitionColumns.map(c => c ->
-            spec.find(_._1.equalsIgnoreCase(c)).map(_._2).get).toMap))
+          meta.partitionColumns.map(c => c -> PartitionValues.lookup(spec, c).get).toMap))
       else Seq.empty
     (tracked ++ literal).distinct
   }
@@ -1688,7 +1678,6 @@ object GraftBatchWrite {
   def partitionDir(meta: TableMeta, spec: Map[String, String]): Path =
     meta.partitionColumns.foldLeft(new Path(meta.location)) { (dir, col) =>
       new Path(dir, ExternalCatalogUtils.getPartitionPathString(col,
-        spec.getOrElse(col, spec.find(_._1.equalsIgnoreCase(col)).map(_._2)
-          .getOrElse(ExternalCatalogUtils.DEFAULT_PARTITION_NAME))))
+        PartitionValues.lookup(spec, col).getOrElse(PartitionValues.NullName)))
     }
 }

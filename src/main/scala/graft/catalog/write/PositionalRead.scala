@@ -95,11 +95,8 @@ private[graft] object PositionalRead {
         spark, meta.dataSchema, rd.files, readOpts)
       val partCols: Map[String, Column] =
         meta.partitionSchema.fields.map { f =>
-          val raw = rd.spec.find(_._1.equalsIgnoreCase(f.name)).map(_._2)
-          val v = raw match {
-            case Some(s) if s !=
-                org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-                  .DEFAULT_PARTITION_NAME =>
+          val v = graft.catalog.PartitionValues.lookup(rd.spec, f.name) match {
+            case Some(s) if s != graft.catalog.PartitionValues.NullName =>
               lit(s).cast(f.dataType)
             case _ => lit(null).cast(f.dataType)
           }

@@ -66,12 +66,9 @@ object GraftFunctions {
       if (registeredFor.contains(spark)) return
       spark.udf.register("graft_normalize_text", normalizeText _)
       spark.udf.register("graft_weighted_mean", udaf(new WeightedMean))
-      Seq(graft.GraftExtensions.arrayDotDescriptor,
-          graft.GraftExtensions.arraySqDistDescriptor,
-          graft.GraftExtensions.minHashSigDescriptor)
-        .foreach { case (ident, info, builder) =>
-          spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
-        }
+      graft.GraftExtensions.functionDescriptors.foreach { case (ident, info, builder) =>
+        spark.sessionState.functionRegistry.registerFunction(ident, info, builder)
+      }
       registeredFor += spark
     }
   }

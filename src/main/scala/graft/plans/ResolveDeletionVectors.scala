@@ -269,59 +269,6 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
     (direct ++ derived).reduceOption(And)
   }
 
-  /** Typed three-valued pruning of one directory under the delta
-    * condition: bind the spec's partition values as literals, then any
-    * DETERMINISTIC subquery-free conjunct that becomes reference-free
-    * and evaluates to false/null proves the directory holds no matching
-    * row. Anything undecidable (data-column conjuncts, failed casts,
-    * subqueries) keeps the directory — pruning is an optimization,
-    * never a correctness decision. */
-  private def keepsDir(
-      spark: SparkSession,
-      meta: graft.catalog.TableMeta,
-      spec: Map[String, String],
-      cond: org.apache.spark.sql.catalyst.expressions.Expression): Boolean = {
-    import org.apache.spark.sql.catalyst.catalog.ExternalCatalogUtils
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, Cast, Literal, PredicateHelper}
-    import org.apache.spark.sql.types.StringType
-    import org.apache.spark.unsafe.types.UTF8String
-    object Split extends PredicateHelper {
-      def conjuncts(e: org.apache.spark.sql.catalyst.expressions.Expression) =
-        splitConjunctivePredicates(e)
-    }
-    val tz = Some(spark.sessionState.conf.sessionLocalTimeZone)
-    val partVals: Map[String, Option[Any]] =
-      meta.partitionSchema.fields.map { f =>
-        val raw = spec.find(_._1.equalsIgnoreCase(f.name)).map(_._2)
-        f.name.toLowerCase -> raw.flatMap {
-          case ExternalCatalogUtils.DEFAULT_PARTITION_NAME => Some(null)
-          case s =>
-            try Some(Cast(Literal(UTF8String.fromString(s), StringType),
-              f.dataType, tz).eval(null))
-            catch { case scala.util.control.NonFatal(_) => None }
-        }
-      }.toMap
-    Split.conjuncts(cond).forall { c =>
-      try {
-        if (!c.deterministic || c.containsPattern(
-            org.apache.spark.sql.catalyst.trees.TreePattern.PLAN_EXPRESSION))
-          true // subqueries / nondeterminism: undecidable, keep
-        else {
-          val bound = c.transform {
-            case a: AttributeReference
-                if partVals.get(a.name.toLowerCase).exists(_.isDefined) =>
-              Literal.create(partVals(a.name.toLowerCase).get, a.dataType)
-          }
-          if (bound.references.nonEmpty) true // data columns involved: keep
-          else bound.eval(null) match {
-            case java.lang.Boolean.FALSE | null => false // provably no match
-            case _ => true
-          }
-        }
-      } catch { case scala.util.control.NonFatal(_) => true }
-    }
-  }
-
   private def rewrite(
       r: DataSourceV2Relation, t: GraftTable,
       forOp: Option[GraftMorOperation] = None,
@@ -355,7 +302,7 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
     val keptPartitions: Seq[graft.catalog.PartitionMeta] =
       if (meta.isPartitioned)
         meta.partitions.filter(p => deltaCond.forall(c =>
-          keepsDir(spark, meta, p.spec, c)))
+          graft.catalog.PartitionValues.mayMatch(spark, meta, p.spec, c)))
       else Nil
 
     // the file universe: the pinned snapshot's recorded set (travel

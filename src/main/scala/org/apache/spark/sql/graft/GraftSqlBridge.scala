@@ -956,6 +956,28 @@ object GraftSqlBridge {
     }
   }
 
+  /** A pushed V1 source filter as Catalyst over unresolved column
+    * names, through Spark's own translations (`Filter.toV2`, then
+    * `V2ExpressionUtils.toCatalyst`, which types the literals: a
+    * `java.sql.Timestamp` becomes epoch micros). None when Spark has no
+    * Catalyst form for it. */
+  def toCatalyst(f: org.apache.spark.sql.sources.Filter): Option[Expression] =
+    org.apache.spark.sql.catalyst.expressions.V2ExpressionUtils.toCatalyst(f.toV2)
+
+  /** A runtime group filter — `p IN (…)` over the DISTINCT partition
+    * values of the rows a row-level operation matches — as Catalyst.
+    * The values come from a grouping, so a null among them means a
+    * matching row sits in the null partition: the test is membership,
+    * and SQL's three-valued IN would wrongly prune that partition. */
+  def runtimeGroupFilter(
+      p: org.apache.spark.sql.connector.expressions.filter.Predicate): Option[Expression] = {
+    import org.apache.spark.sql.catalyst.expressions.{In, IsNull, Literal, Or}
+    org.apache.spark.sql.catalyst.expressions.V2ExpressionUtils.toCatalyst(p).map(_.transformUp {
+      case in @ In(v, list) if list.exists { case Literal(null, _) => true; case _ => false } =>
+        Or(IsNull(v), in)
+    })
+  }
+
   /** `=`/`IN` literal values over the bucket column in a runtime
     * predicate → their bucket-id set (every key value v lives in bucket
     * `pmod(murmur3(v), n)`, the write-routing invariant). NULL never

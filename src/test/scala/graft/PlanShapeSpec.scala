@@ -1465,6 +1465,32 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
 
+  test("per-partition row counts on a TIMESTAMP partition column: the pruned scan reports its exact numRows") {
+    // analyze keys its per-partition counts by the stored spec string;
+    // a timestamp rendered as java.sql.Timestamp.toString ('….0') never
+    // equals the spec, which left every count unset
+    GraftBootstrap.ensure(spark, sf0001)
+    val cat = GraftBootstrap.CatalogName
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.planshape")
+    val t = s"$cat.planshape.part_rows_ts"
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+    spark.sql(s"CREATE TABLE $t (id BIGINT, p TIMESTAMP) PARTITIONED BY (p)")
+    spark.sql(s"INSERT INTO $t VALUES " +
+      "(1, TIMESTAMP'2024-01-01 00:00:00'), (2, TIMESTAMP'2024-01-01 00:00:00'), " +
+      "(3, TIMESTAMP'2024-01-02 00:00:00')")
+    spark.sql(s"CALL $cat.sys.analyze('$t', '*')").collect()
+    val catalog = spark.sessionState.catalogManager.catalog(cat)
+      .asInstanceOf[graft.catalog.GraftCatalog]
+    val counts = catalog.metaStore.loadTable("planshape", "part_rows_ts")
+      .partitions.map(_.rowCount).toSet
+    assert(counts === Set(Some(2L), Some(1L)), s"per-partition counts: $counts")
+    val pruned = spark.table(t).filter("p = TIMESTAMP'2024-01-01 00:00:00'")
+      .queryExecution.optimizedPlan.collectLeaves().head.stats.rowCount
+    assert(pruned === Some(BigInt(2)),
+      s"the pruned scan must report the surviving partition's count, got $pruned")
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
   test("CALL sys.analyze builds the skip-stats manifest for an ALTER-declared table") {
     import org.apache.spark.sql.functions._
     import spark.implicits._

@@ -409,6 +409,18 @@ class MorDmlSpec extends AnyFunSuite with SparkFixture {
       s"the DV must apply only to the matching partition's files: $applies")
   }
 
+  test("range partition pruning: a keyed MOR DELETE over p >= 'b' scopes its DV to the matching partitions") {
+    val t = freshTable("m_range_prune")
+    createMor(t)
+    spark.sql(s"DELETE FROM $t WHERE p >= 'b' AND id IN (3, 5)")
+    assert(rows(t) === Set((1L, 10.0, "a"), (2L, 20.0, "a"), (4L, 40.0, "b")))
+    val (_, applies, _) = graft.catalog.write.DvManifest.read(
+      spark.sessionState.newHadoopConf(), meta(t).deleteVectors.head.manifest).get
+    assert(applies.exists(_.contains("p=b")) && applies.exists(_.contains("p=c")) &&
+      !applies.exists(_.contains("p=a")),
+      s"the DV must apply only to partitions b and c, got $applies")
+  }
+
   test("DV planning lists each directory once per cache epoch, not once per query") {
     val t = freshTable("m_dvcache")
     createMor(t)

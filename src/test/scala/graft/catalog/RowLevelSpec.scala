@@ -119,6 +119,28 @@ class RowLevelSpec extends AnyFunSuite with SparkFixture {
       before.keySet.filter(_.contains("p=a")))
   }
 
+  test("UPDATE on a TIMESTAMP-partitioned table keeps the other partitions' files; the null partition is rewritten") {
+    val t = freshTable("t_update_ts")
+    spark.sql(s"CREATE TABLE $t (id BIGINT, v DOUBLE, ts TIMESTAMP) PARTITIONED BY (ts)")
+    spark.sql(s"INSERT INTO $t VALUES " +
+      "(1, 10.0, TIMESTAMP'2024-01-01 00:00:00'), (2, 20.0, TIMESTAMP'2024-01-01 00:00:00'), " +
+      "(3, 30.0, TIMESTAMP'2024-01-02 00:00:00'), (4, 40.0, NULL)")
+    def values = spark.table(t).collect().map(r => r.getLong(0) -> r.getDouble(1)).toMap
+    val before = fileState(t)
+    spark.sql(s"UPDATE $t SET v = v + 1 WHERE ts = TIMESTAMP'2024-01-01 00:00:00' AND id = 1")
+    assert(values === Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0, 4L -> 40.0))
+    val after = fileState(t)
+    val untouched = before.filterNot(_._1.contains("ts=2024-01-01"))
+    assert(untouched.size === 2 && untouched.forall { case (f, sig) => after.get(f).contains(sig) },
+      s"only the matching timestamp partition may be rewritten: $before -> $after")
+    assert(after.keySet.filter(_.contains("ts=2024-01-01")) !=
+      before.keySet.filter(_.contains("ts=2024-01-01")))
+    // the group filter's value set holds null for a match in the null
+    // partition: that partition must be read and rewritten, not pruned
+    spark.sql(s"UPDATE $t SET v = v + 1 WHERE id = 4")
+    assert(values === Map(1L -> 11.0, 2L -> 20.0, 3L -> 30.0, 4L -> 41.0))
+  }
+
   test("row-predicate DELETE removes rows; emptied partitions deregister") {
     val t = freshTable("t_rowdel")
     seed(t)
