@@ -66,8 +66,8 @@ object GraftBootstrap {
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     // Fork-free local chmod (see GraftLocalFileSystem). Advisory when set
     // this late — FileSystem instances are cached per scheme, so a JVM
-    // that already resolved `file:` keeps the stock binding; the session
-    // builders (Bench/Verify) set the same key before first use.
+    // that already resolved `file:` keeps the stock binding;
+    // `localSession` sets the same key before first use.
     spark.conf.set("spark.hadoop.fs.file.impl",
       classOf[graft.catalog.GraftLocalFileSystem].getName)
     spark.conf.set("spark.hadoop.fs.AbstractFileSystem.file.impl",
@@ -87,6 +87,27 @@ object GraftBootstrap {
       spark.experimental.extraOptimizations =
         spark.experimental.extraOptimizations :+ rule
     }
+  }
+
+  /** The session of the command-line mains (Bench, Verify, ScaleProbe):
+    * `local[$SPARK_GRAFT_CPUS]` (`defaultCpus` when unset) with one
+    * shuffle partition per core, the graft extensions, the fork-free
+    * local filesystem bound before first use, UTC, no UI. */
+  def localSession(defaultCpus: String): SparkSession = {
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", defaultCpus)
+    val spark = SparkSession.builder()
+      .master(s"local[$cpus]")
+      .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.catalog.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.catalog.GraftLocalFs].getName)
+      .config("spark.sql.shuffle.partitions", cpus)
+      .config("spark.sql.session.timeZone", "UTC")
+      .config("spark.ui.enabled", "false")
+      .getOrCreate()
+    spark.sparkContext.setLogLevel("WARN")
+    spark
   }
 
   def warehouseDir(spark: SparkSession): String =

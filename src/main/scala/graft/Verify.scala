@@ -1,5 +1,4 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
 
 import graft.catalog.GraftIO.jsonString
@@ -12,19 +11,7 @@ object Verify {
     // single-query iteration (the driver's 2-arg invocation runs all)
     val (Array(sfDir, outDir), only) = (args.take(2), args.drop(2).headOption
       .map(_.split(",").map(_.trim).filter(_.nonEmpty).toSeq))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.hadoop.fs.file.impl",
-        classOf[graft.catalog.GraftLocalFileSystem].getName)
-      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
-        classOf[graft.catalog.GraftLocalFs].getName)
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = GraftBootstrap.localSession("4")
     new java.io.File(outDir).mkdirs()
     // A crashing query must surface as an error entry, never silently
     // shrink the inventory (round-10 lesson: q54's crash made the round

@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
-import org.apache.spark.sql.types.{BooleanType, DataType, LongType, StringType, StructField, StructType}
+import org.apache.spark.sql.types.{BinaryType, BooleanType, DataType, LongType, NumericType, StringType, StructField, StructType}
 import org.apache.spark.unsafe.types.UTF8String
 
 /** The catalog's SQL-invocable MAINTENANCE surface (DSv2
@@ -57,6 +57,68 @@ object CatalogProcedures {
   }
 
   private def spark: SparkSession = SparkSession.active
+
+  private def isLengthy(f: StructField): Boolean =
+    f.dataType == StringType || f.dataType == BinaryType
+  private def canMinMax(f: StructField): Boolean = f.dataType != BinaryType
+  private def numeric(f: StructField): Boolean = f.dataType.isInstanceOf[NumericType]
+
+  /** The `sys.analyze` column-stats aggregate list, shared by the table
+    * pass and the per-partition pass: the row count `n`, then per column
+    * an NDV sketch, the non-null count, min/max as strings (not for
+    * BINARY), average/max length (STRING, BINARY) and, when `histBins`
+    * is positive, equi-height boundaries of numeric columns. Every
+    * aggregate is mergeable, so either pass is one scan. */
+  private def statAggs(fields: Seq[StructField], histBins: Int): Seq[org.apache.spark.sql.Column] = {
+    import org.apache.spark.sql.functions._
+    count(lit(1)).as("n") +: fields.flatMap { f =>
+      val c = col(f.name)
+      Seq(approx_count_distinct(c).as(s"ndv:${f.name}"), count(c).as(s"nn:${f.name}")) ++
+        (if (canMinMax(f)) Seq(min(c).cast("string").as(s"min:${f.name}"),
+          max(c).cast("string").as(s"max:${f.name}")) else Nil) ++
+        (if (isLengthy(f)) Seq(ceil(avg(length(c))).as(s"avglen:${f.name}"),
+          max(length(c)).cast("bigint").as(s"maxlen:${f.name}")) else Nil) ++
+        (if (histBins > 0 && numeric(f)) {
+          val ps = (0 to histBins).map(i => (i.toDouble / histBins).toString).mkString(",")
+          Seq(expr(s"approx_percentile(cast(`${f.name}` as double), array($ps))")
+            .as(s"pct:${f.name}"))
+        } else Nil)
+    }
+  }
+
+  /** A numeric column's equi-height boundaries in a [[statAggs]] row;
+    * None without histograms or without a non-null value. */
+  private def histBounds(r: org.apache.spark.sql.Row, f: StructField, histBins: Int): Option[Seq[Double]] =
+    if (histBins == 0 || !numeric(f) || r.isNullAt(r.fieldIndex(s"pct:${f.name}"))) None
+    else Some(r.getSeq[Double](r.fieldIndex(s"pct:${f.name}")).toSeq)
+      .filter(_.length == histBins + 1)
+
+  /** A [[statAggs]] row → (row count, per-column stats). `binNdv(column,
+    * column NDV, bin)` is a histogram bin's NDV. */
+  private def readStats(
+      r: org.apache.spark.sql.Row,
+      fields: Seq[StructField],
+      histBins: Int,
+      binNdv: (String, Long, Int) => Long): (Long, Map[String, ColumnStatsMeta]) = {
+    def get[T](nm: String): Option[T] = {
+      val i = r.fieldIndex(nm)
+      if (r.isNullAt(i)) None else Some(r.get(i).asInstanceOf[T])
+    }
+    val n = r.getLong(r.fieldIndex("n"))
+    n -> fields.map { f =>
+      val nonNull = get[Long](s"nn:${f.name}").getOrElse(0L)
+      val ndv = get[Long](s"ndv:${f.name}").getOrElse(0L)
+      f.name -> ColumnStatsMeta(
+        ndv = ndv,
+        nullCount = n - nonNull,
+        min = if (canMinMax(f)) get[Any](s"min:${f.name}").map(_.toString) else None,
+        max = if (canMinMax(f)) get[Any](s"max:${f.name}").map(_.toString) else None,
+        avgLen = if (isLengthy(f)) get[Long](s"avglen:${f.name}") else None,
+        maxLen = if (isLengthy(f)) get[Long](s"maxlen:${f.name}") else None,
+        histogram = histBounds(r, f, histBins).map(bs => (nonNull.toDouble / histBins,
+          (0 until histBins).map(i => HistogramBinMeta(bs(i), bs(i + 1), binNdv(f.name, ndv, i))))))
+    }.toMap
+  }
 
   val All: Map[String, UnboundProcedure] = Map(
     "vacuum" -> new GraftProcedure(
@@ -288,52 +350,13 @@ object CatalogProcedures {
           else {
             import org.apache.spark.sql.functions._
             val df = spark.table(s"${parts(0)}.$db.$name")
-            def isLengthy(f: org.apache.spark.sql.types.StructField) =
-              f.dataType == org.apache.spark.sql.types.StringType ||
-                f.dataType == org.apache.spark.sql.types.BinaryType
-            def canMinMax(f: org.apache.spark.sql.types.StructField) =
-              f.dataType != org.apache.spark.sql.types.BinaryType
-            def numeric(f: org.apache.spark.sql.types.StructField) =
-              f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
-            val exprs = scala.collection.mutable.ArrayBuffer(count(lit(1)).as("n"))
-            selected.foreach { f =>
-              val c = col(f.name)
-              exprs += approx_count_distinct(c).as(s"ndv:${f.name}")
-              exprs += count(c).as(s"nn:${f.name}")
-              if (canMinMax(f)) {
-                exprs += min(c).cast("string").as(s"min:${f.name}")
-                exprs += max(c).cast("string").as(s"max:${f.name}")
-              }
-              if (isLengthy(f)) {
-                exprs += ceil(avg(length(c))).as(s"avglen:${f.name}")
-                exprs += max(length(c)).cast("bigint").as(s"maxlen:${f.name}")
-              }
-              // equi-height boundaries ride the SAME pass (mergeable
-              // percentile sketch); per-bin NDV needs the boundaries
-              // first, so it is the one extra scan below
-              if (histBins > 0 && numeric(f)) {
-                val ps = (0 to histBins).map(i =>
-                  (i.toDouble / histBins).toString).mkString(",")
-                exprs += expr(
-                  s"approx_percentile(cast(`${f.name}` as double), array($ps))")
-                  .as(s"pct:${f.name}")
-              }
-            }
-            val row = df.agg(exprs.head, exprs.tail.toSeq: _*).head()
-            def get[T](n: String): Option[T] = {
-              val i = row.fieldIndex(n)
-              if (row.isNullAt(i)) None else Some(row.get(i).asInstanceOf[T])
-            }
-            val n = row.getLong(row.fieldIndex("n"))
+            val aggs = statAggs(selected, histBins)
+            val row = df.agg(aggs.head, aggs.tail: _*).head()
             // pass 2 (only when histograms were requested): per-bin
             // approx NDV for every numeric column, one conditional
             // sketch per (column, bin), all in ONE scan
             val histTargets: Seq[(org.apache.spark.sql.types.StructField, Seq[Double])] =
-              if (histBins == 0) Nil
-              else selected.filter(numeric).flatMap { f =>
-                get[scala.collection.Seq[Double]](s"pct:${f.name}")
-                  .map(bs => f -> bs.toSeq).filter(_._2.length == histBins + 1)
-              }
+              selected.flatMap(f => histBounds(row, f, histBins).map(f -> _))
             val binNdv: Map[(String, Int), Long] =
               if (histTargets.isEmpty) Map.empty
               else {
@@ -352,24 +375,8 @@ object CatalogProcedures {
                     (f.name, i) -> r2.getLong(r2.fieldIndex(s"hb:${f.name}:$i")))
                 }.toMap
               }
-            val cols = selected.map { f =>
-              val nonNull = get[Long](s"nn:${f.name}").getOrElse(0L)
-              val hist = histTargets.find(_._1.name == f.name).map { case (_, bs) =>
-                (nonNull.toDouble / histBins,
-                  (0 until histBins).map(i =>
-                    HistogramBinMeta(bs(i), bs(i + 1),
-                      binNdv.getOrElse((f.name, i), 0L))))
-              }
-              f.name -> ColumnStatsMeta(
-                ndv = get[Long](s"ndv:${f.name}").getOrElse(0L),
-                nullCount = n - nonNull,
-                min = if (canMinMax(f)) get[Any](s"min:${f.name}").map(_.toString) else None,
-                max = if (canMinMax(f)) get[Any](s"max:${f.name}").map(_.toString) else None,
-                avgLen = if (isLengthy(f)) get[Long](s"avglen:${f.name}") else None,
-                maxLen = if (isLengthy(f)) get[Long](s"maxlen:${f.name}") else None,
-                histogram = hist)
-            }.toMap
-            Some((n, cols))
+            Some(readStats(row, selected, histBins,
+              (c, _, i) => binNdv.getOrElse((c, i), 0L)))
           }
         // PER-PARTITION row counts AND column statistics ride the same
         // analyze invocation (ONE grouped aggregate over the partition
@@ -393,72 +400,18 @@ object CatalogProcedures {
           val pcs = store.loadTable(db, name).partitionColumns
           if (selected.isEmpty || pcs.isEmpty) Map.empty
           else {
-            import org.apache.spark.sql.functions._
-            def isLengthy(f: org.apache.spark.sql.types.StructField) =
-              f.dataType == org.apache.spark.sql.types.StringType ||
-                f.dataType == org.apache.spark.sql.types.BinaryType
-            def canMinMax(f: org.apache.spark.sql.types.StructField) =
-              f.dataType != org.apache.spark.sql.types.BinaryType
-            def numericF(f: org.apache.spark.sql.types.StructField) =
-              f.dataType.isInstanceOf[org.apache.spark.sql.types.NumericType]
+            import org.apache.spark.sql.functions.col
             val perPartCols = selected.filterNot(f =>
               pcs.exists(_.equalsIgnoreCase(f.name)))
-            val exprs = scala.collection.mutable.ArrayBuffer(count(lit(1)).as("n"))
-            perPartCols.foreach { f =>
-              val c = col(f.name)
-              exprs += approx_count_distinct(c).as(s"ndv:${f.name}")
-              exprs += count(c).as(s"nn:${f.name}")
-              if (canMinMax(f)) {
-                exprs += min(c).cast("string").as(s"min:${f.name}")
-                exprs += max(c).cast("string").as(s"max:${f.name}")
-              }
-              if (isLengthy(f)) {
-                exprs += ceil(avg(length(c))).as(s"avglen:${f.name}")
-                exprs += max(length(c)).cast("bigint").as(s"maxlen:${f.name}")
-              }
-              if (histBins > 0 && numericF(f)) {
-                val ps = (0 to histBins).map(i =>
-                  (i.toDouble / histBins).toString).mkString(",")
-                exprs += expr(
-                  s"approx_percentile(cast(`${f.name}` as double), array($ps))")
-                  .as(s"pct:${f.name}")
-              }
-            }
+            val aggs = statAggs(perPartCols, histBins)
             spark.table(s"${parts(0)}.$db.$name")
               .groupBy(pcs.map(col): _*)
-              .agg(exprs.head, exprs.tail.toSeq: _*).collect().map { r =>
-                def get[T](nm: String): Option[T] = {
-                  val i = r.fieldIndex(nm)
-                  if (r.isNullAt(i)) None else Some(r.get(i).asInstanceOf[T])
-                }
-                val n = r.getLong(r.fieldIndex("n"))
-                val cs = perPartCols.map { f =>
-                  val nonNull = get[Long](s"nn:${f.name}").getOrElse(0L)
-                  val ndv = get[Long](s"ndv:${f.name}").getOrElse(0L)
-                  val hist =
-                    if (histBins > 0 && numericF(f) && nonNull > 0)
-                      get[scala.collection.Seq[Double]](s"pct:${f.name}")
-                        .map(_.toSeq).filter(_.length == histBins + 1)
-                        .map { bs =>
-                          (nonNull.toDouble / histBins,
-                            (0 until histBins).map(i =>
-                              HistogramBinMeta(bs(i), bs(i + 1),
-                                math.max(1L, ndv / histBins))))
-                        }
-                    else None
-                  f.name -> ColumnStatsMeta(
-                    ndv = ndv,
-                    nullCount = n - nonNull,
-                    min = if (canMinMax(f)) get[Any](s"min:${f.name}").map(_.toString) else None,
-                    max = if (canMinMax(f)) get[Any](s"max:${f.name}").map(_.toString) else None,
-                    avgLen = if (isLengthy(f)) get[Long](s"avglen:${f.name}") else None,
-                    maxLen = if (isLengthy(f)) get[Long](s"maxlen:${f.name}") else None,
-                    histogram = hist)
-                }.toMap
+              .agg(aggs.head, aggs.tail: _*).collect().map { r =>
                 pcs.zipWithIndex.map { case (c, i) =>
                   c -> PartitionValues.encode(spark, org.apache.spark.sql.catalyst
                     .expressions.Literal.create(r.get(i), r.schema(i).dataType))
-                }.toMap -> (n, cs)
+                }.toMap -> readStats(r, perPartCols, histBins,
+                  (_, ndv, _) => math.max(1L, ndv / histBins))
               }.toMap
           }
         }

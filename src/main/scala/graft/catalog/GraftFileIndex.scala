@@ -6,10 +6,9 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Cast, Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, NoopCache, PartitionDirectory, PartitionPath, PartitioningAwareFileIndex, PartitionSpec}
-import org.apache.spark.sql.types.{StringType, StructType}
-import org.apache.spark.unsafe.types.UTF8String
+import org.apache.spark.sql.types.StructType
 
 /** Catalog-pruned file index: partition predicates are evaluated against
   * the catalog-tracked partition list BEFORE any filesystem listing, so a
@@ -30,7 +29,6 @@ class GraftFileIndex(
     fileStatusCache: FileStatusCache)
   extends PartitioningAwareFileIndex(sparkSession, Map.empty, Some(meta.schema), fileStatusCache) {
 
-  private val timeZoneId = sparkSession.sessionState.conf.sessionLocalTimeZone
   private val tablePath = new Path(meta.location)
 
   /** Spec paths must be FS-qualified (`file:/…`, `hdfs://nn/…`): the
@@ -134,7 +132,6 @@ class GraftFileIndex(
     val tableNdv: Map[String, Long] =
       meta.stats.map(_.colStats.map { case (c, cs) => c -> cs.ndv })
         .getOrElse(Map.empty)
-    val tz = Some(timeZoneId)
     val m = new java.util.HashMap[
       org.apache.spark.sql.connector.expressions.NamedReference,
       org.apache.spark.sql.connector.read.colstats.ColumnStatistics]()
@@ -149,9 +146,8 @@ class GraftFileIndex(
         // typed extreme selection over the string-encoded bounds: decode
         // through the schema type, order with the type's ordering, keep
         // the ORIGINAL string (the v2 conversion re-decodes it)
-        def decode(s: String): Option[Any] = Option(
-          Cast(Literal(UTF8String.fromString(s), StringType), f.dataType, tz)
-            .eval(null))
+        def decode(s: String): Option[Any] =
+          Option(PartitionValues.cast(sparkSession, s, f.dataType))
         val ord = org.apache.spark.sql.catalyst.util.TypeUtils
           .getInterpretedOrdering(f.dataType).asInstanceOf[Ordering[Any]]
         def extreme(pick: Seq[String] => Option[String],
@@ -186,7 +182,7 @@ class GraftFileIndex(
         m.put(
           org.apache.spark.sql.connector.expressions.Expressions.column(f.name),
           org.apache.spark.sql.graft.GraftSqlBridge.v2ColumnStatistics(
-            f.dataType, ndv, entries.map(_.nullCount).sum, minS, maxS,
+            sparkSession, f.dataType, ndv, entries.map(_.nullCount).sum, minS, maxS,
             Some(entries.flatMap(_.avgLen)).filter(_.size == entries.size)
               .map(_.max),
             Some(entries.flatMap(_.maxLen)).filter(_.size == entries.size)

@@ -359,7 +359,7 @@ class GraftTable(
           meta.schema.fields.find(_.name.equalsIgnoreCase(c)).foreach { f =>
             m.put(org.apache.spark.sql.connector.expressions.Expressions.column(f.name),
               org.apache.spark.sql.graft.GraftSqlBridge.v2ColumnStatistics(
-                f.dataType, cs.ndv, cs.nullCount, cs.min, cs.max,
+                spark, f.dataType, cs.ndv, cs.nullCount, cs.min, cs.max,
                 cs.avgLen, cs.maxLen,
                 cs.histogram.map { case (h, bins) =>
                   (h, bins.map(b => (b.lo, b.hi, b.ndv)))

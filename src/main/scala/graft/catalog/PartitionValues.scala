@@ -16,7 +16,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * rule (V2Table.scala:108-113). Every encode, decode and spec-level
   * predicate test of the scan, DML and deletion-vector paths goes
   * through here, so they cannot drift on it. */
-private[graft] object PartitionValues extends PredicateHelper {
+object PartitionValues extends PredicateHelper {
 
   /** The spec string of a null partition value. */
   val NullName: String = ExternalCatalogUtils.DEFAULT_PARTITION_NAME
@@ -29,10 +29,15 @@ private[graft] object PartitionValues extends PredicateHelper {
     if (v.value == null) NullName
     else Cast(v, StringType, tz(spark)).eval(null).toString
 
+  /** Stored string → Catalyst value of `dt`, cast with the session
+    * timezone: the one decoder of stored partition values and of the
+    * descriptor's string-encoded column-stat bounds. */
+  def cast(spark: SparkSession, raw: String, dt: DataType): Any =
+    Cast(Literal(UTF8String.fromString(raw), StringType), dt, tz(spark)).eval(null)
+
   /** Spec string → Catalyst value of `dt`; the marker decodes to null. */
   def decode(spark: SparkSession, raw: String, dt: DataType): Any =
-    if (raw == NullName) null
-    else Cast(Literal(UTF8String.fromString(raw), StringType), dt, tz(spark)).eval(null)
+    if (raw == NullName) null else cast(spark, raw, dt)
 
   /** The spec's string for `col`, the name matched case-insensitively. */
   def lookup(spec: Map[String, String], col: String): Option[String] =

@@ -641,18 +641,8 @@ object SkipStats extends Logging {
     val dataSchema = StructType(
       schema.filterNot(f => partSet.contains(f.name.toLowerCase)))
     // external (collected) value → the manifest's catalyst-encoded string
-    def enc(v: Any): Option[String] = v match {
-      case null => None
-      case ts: java.sql.Timestamp => Some(String.valueOf(
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaTimestamp(ts)))
-      case ts: java.time.Instant => Some(String.valueOf(
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.instantToMicros(ts)))
-      case d: java.sql.Date => Some(String.valueOf(
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.fromJavaDate(d)))
-      case d: java.time.LocalDate => Some(String.valueOf(
-        org.apache.spark.sql.catalyst.util.DateTimeUtils.localDateToDays(d)))
-      case other => Some(String.valueOf(other))
-    }
+    def enc(v: Any): String = SkipStats.encode(
+      org.apache.spark.sql.catalyst.CatalystTypeConverters.convertToCatalyst(v))
     dirs.distinct.foreach { dir =>
       val root = new Path(dir)
       val fs = root.getFileSystem(conf)
@@ -686,8 +676,7 @@ object SkipStats extends Logging {
             val ranges = cols.flatMap { f =>
               val (mi, ma) = (r.fieldIndex(s"min:${f.name}"), r.fieldIndex(s"max:${f.name}"))
               if (r.isNullAt(mi) || r.isNullAt(ma)) None
-              else for (a <- enc(r.get(mi)); b <- enc(r.get(ma)))
-                yield f.name -> (a, b)
+              else Some(f.name -> (enc(r.get(mi)), enc(r.get(ma))))
             }.toMap
             val nulls = cols.map { f =>
               f.name -> s"${n - r.getLong(r.fieldIndex(s"nn:${f.name}"))}/$n"

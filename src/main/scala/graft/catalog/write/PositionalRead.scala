@@ -3,10 +3,11 @@ package graft.catalog.write
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.expressions.Literal
 import org.apache.spark.sql.functions.{col, concat, lit, substring_index}
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
-import graft.catalog.{Snapshots, TableMeta}
+import graft.catalog.{PartitionValues, Snapshots, TableMeta}
 
 /** POSITION-DELETE plumbing (q121) — merge-on-read DML for tables with
   * NO natural row-identity key: `graft.dml.mode = merge-on-read` without
@@ -93,14 +94,11 @@ private[graft] object PositionalRead {
       // index instead of re-stat-ing every path per planning pass
       val base = org.apache.spark.sql.graft.GraftSqlBridge.pinnedParquetDF(
         spark, meta.dataSchema, rd.files, readOpts)
+      val pv = PartitionValues.row(spark, meta.partitionSchema, rd.spec)
       val partCols: Map[String, Column] =
-        meta.partitionSchema.fields.map { f =>
-          val v = graft.catalog.PartitionValues.lookup(rd.spec, f.name) match {
-            case Some(s) if s != graft.catalog.PartitionValues.NullName =>
-              lit(s).cast(f.dataType)
-            case _ => lit(null).cast(f.dataType)
-          }
-          f.name -> v.as(f.name)
+        meta.partitionSchema.fields.zipWithIndex.map { case (f, i) =>
+          f.name -> org.apache.spark.sql.graft.GraftSqlBridge.column(
+            Literal(pv.get(i, f.dataType), f.dataType)).as(f.name)
         }.toMap
       val ordered: Seq[Column] = meta.schema.fields.map(f =>
         partCols.getOrElse(f.name, col(f.name))).toSeq

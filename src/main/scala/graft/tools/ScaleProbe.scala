@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 
 /** Scaling-exponent probe (round-14 brief #5): replicate the sf0.1
@@ -164,15 +163,7 @@ object ScaleProbe {
     val base = pos.headOption.getOrElse("/root/testdata/sf0.1")
     val out = if (pos.length > 1) pos(1) else "/tmp/graft_scaleprobe"
     val reps = if (pos.length > 2) pos(2).toInt else 10
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.extensions", "graft.GraftExtensions")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.GraftBootstrap.localSession("32")
     graft.GraftBootstrap.setSessionConfs(spark)
 
     val fs = new org.apache.hadoop.fs.Path(out)

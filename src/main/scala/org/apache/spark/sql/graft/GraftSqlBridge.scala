@@ -63,7 +63,7 @@ trait StreamingV1FallbackTable
   * partition and reading the table, so this wrapper restores the
   * surface: it forwards every pushdown to the stock builder and wraps
   * the built [[FileScan]] in a [[GraftFileScan]] that accepts the
-  * planner's runtime `IN`/`=` predicates (see [[RuntimePruning]]).
+  * planner's runtime predicates (see [[RuntimePruning]]).
   *
   * The one pushdown NOT forwarded is parquet variant extraction
   * (`SupportsPushDownVariantExtractions` is sealed inside the parquet
@@ -371,13 +371,16 @@ class GraftFileScan(
 
 /** The runtime-filter decision and the keyed layout, shared by both
   * graft DSv2 scans ([[GraftFileScan]] and [[GraftFormatScan]]): which
-  * columns accept runtime filters, how the planner's `IN`/`=` predicates
-  * become partition, bucket-id and skip-stats filters, which files
-  * survive filters that arrive after the layout latched, and the
+  * columns accept runtime filters, how the planner's predicates become
+  * partition, bucket-id and skip-stats filters, which files survive
+  * filters that arrive after the layout latched, and the
   * `KeyGroupedPartitioning` / output ordering / split planning of the
-  * keyed layout. Unknown predicate shapes are IGNORED, never
-  * mistranslated — runtime filters are an optimization; dropping one
-  * costs I/O, not rows.
+  * keyed layout. A predicate is translated by Spark's own
+  * `V2ExpressionUtils.toCatalyst`, so any shape Spark can translate
+  * prunes (from SQL the planner sends DPP `IN`); one it cannot
+  * translate, or whose columns span two of those targets, is IGNORED —
+  * runtime filters are an optimization; dropping one costs I/O, not
+  * rows.
   *
   * KEYED LAYOUTS (storage-partitioned joins). Each reports its layout
   * as a DSv2 `KeyGroupedPartitioning` and plans one WHOLE-file split per
@@ -485,19 +488,23 @@ private[graft] final class RuntimePruning(
 
   /** Record the planner's runtime predicates as late state, and return
     * their (partition, skip-stats) catalyst translations for a scan
-    * whose listing can still be rebuilt. */
+    * whose listing can still be rebuilt. Each predicate is translated
+    * once by Spark's own `V2ExpressionUtils.toCatalyst` and bound by
+    * name ([[GraftSqlBridge.bindByName]]): one whose columns all resolve
+    * in the partition schema is a partition filter, one over the
+    * skipping columns a skip-stats filter, and the bound predicates'
+    * `=`/`IN` conjuncts on the bucket column narrow the bucket set. */
   def filter(predicates: Array[Predicate]): (Seq[Expression], Seq[Expression]) = {
-    val partitionFilters =
-      predicates.toSeq.flatMap(GraftSqlBridge.runtimeValueFilter(_, partSchema))
-    val skipFilters =
-      predicates.toSeq.flatMap(GraftSqlBridge.runtimeValueFilter(_, skipSchema))
+    val translated = predicates.toSeq.flatMap(
+      org.apache.spark.sql.catalyst.expressions.V2ExpressionUtils.toCatalyst)
+    def over(schema: StructType) =
+      translated.flatMap(GraftSqlBridge.bindByName(_, schema))
+    val partitionFilters = over(partSchema)
+    val skipFilters = over(skipSchema)
     lateFilters = lateFilters ++ partitionFilters
     lateSkip = lateSkip ++ skipFilters
     bucket.foreach { case (n, col) =>
-      val sets = predicates.toSeq.flatMap(
-        GraftSqlBridge.bucketIdsFromRuntimePredicate(_, col, n))
-      if (sets.nonEmpty) {
-        val s = sets.reduce(_ intersect _)
+      GraftSqlBridge.bucketSetFromFilters(over(readSchema), col, n).foreach { s =>
         lateBuckets = Some(lateBuckets.fold(s)(_ intersect s))
       }
     }
@@ -594,7 +601,12 @@ private[graft] final class RuntimePruning(
     * untrusted listing) is never bucket-tested. Any evaluation failure
     * keeps the file. */
   def survivors(ms: Seq[(Int, PartitionDirectory)]): Seq[(Int, PartitionDirectory)] = {
-    val keepValues = GraftSqlBridge.compilePartitionPredicate(lateFilters, partSchema)
+    val keepValues: InternalRow => Boolean =
+      try {
+        val keep = graft.catalog.PartitionValues.rowFilter(
+          org.apache.spark.sql.SparkSession.active, partSchema, lateFilters)
+        row => try keep(row) catch { case scala.util.control.NonFatal(_) => true }
+      } catch { case scala.util.control.NonFatal(_) => _ => true }
     val buckets = lateBuckets
     val keepFile = skipSurvivors(ms.map(_._2))
     ms.map { case (b, d) =>
@@ -700,7 +712,6 @@ class GraftFormatScanBuilder(
   extends org.apache.spark.sql.connector.read.ScanBuilder
   with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
   with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters {
-  import org.apache.spark.sql.catalyst.expressions.AttributeReference
 
   private var required: StructType = fullSchema
   private var partitionFilters: Seq[Expression] = Nil
@@ -723,16 +734,10 @@ class GraftFormatScanBuilder(
       org.apache.spark.sql.connector.expressions.filter.Predicate] = Array.empty
 
   override def build(): org.apache.spark.sql.connector.read.Scan = {
-    // rebase the retained partition filters onto fresh attributes the
-    // file index resolves by name (same trick as GraftFileScan's
-    // runtime-filter rebuild)
-    val rebased = partitionFilters.map(_.transform {
-      case a: AttributeReference =>
-        index.partitionSchema.fields
-          .find(f => SQLConf.get.resolver(f.name, a.name))
-          .map(f => AttributeReference(f.name, f.dataType, f.nullable)())
-          .getOrElse(a)
-    })
+    // bind the retained partition filters to fresh attributes the file
+    // index resolves by name (as the runtime filters are)
+    val rebased = partitionFilters.flatMap(
+      GraftSqlBridge.bindByName(_, index.partitionSchema))
     new GraftFormatScan(spark, format, index, fullSchema, required, rebased,
       options, bucket, dataFilters, sortedBy, skippingCols, skipMeta)
   }
@@ -926,36 +931,6 @@ object GraftSqlBridge {
       LogicalRelation(relation))
   }
 
-  /** Runtime (DPP) `=`/`IN` predicate over one of `partitionSchema`'s
-    * columns → a catalyst filter on a fresh by-name attribute (the
-    * planner's runtime filters arrive as `IN`/`=` over LiteralValues,
-    * `DataSourceV2Strategy.translateRuntimeFilterV2`; values are
-    * catalyst-internal, so `Literal(v, dt)` is the exact inverse).
-    * Unknown shapes → None (pruning is an optimization, never a row
-    * filter — every filter is also re-applied post-scan). */
-  private[graft] def runtimeValueFilter(
-      p: org.apache.spark.sql.connector.expressions.filter.Predicate,
-      partitionSchema: StructType): Option[Expression] = {
-    import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualTo, In, Literal}
-    import org.apache.spark.sql.connector.expressions.{LiteralValue, NamedReference}
-    def field(r: NamedReference): Option[StructField] = r.fieldNames match {
-      case Array(n) => partitionSchema.fields.find(f => SQLConf.get.resolver(f.name, n))
-      case _ => None
-    }
-    def attr(f: StructField) = AttributeReference(f.name, f.dataType)()
-    (p.name, p.children) match {
-      case ("IN", Array(r: NamedReference, vs @ _*))
-          if vs.forall(_.isInstanceOf[LiteralValue[_]]) =>
-        field(r).map(f => In(attr(f),
-          vs.map { case lv: LiteralValue[_] => Literal(lv.value, lv.dataType) }))
-      case ("=", Array(r: NamedReference, lv: LiteralValue[_])) =>
-        field(r).map(f => EqualTo(attr(f), Literal(lv.value, lv.dataType)))
-      case ("=", Array(lv: LiteralValue[_], r: NamedReference)) =>
-        field(r).map(f => EqualTo(attr(f), Literal(lv.value, lv.dataType)))
-      case _ => None
-    }
-  }
-
   /** A pushed V1 source filter as Catalyst over unresolved column
     * names, through Spark's own translations (`Filter.toV2`, then
     * `V2ExpressionUtils.toCatalyst`, which types the literals: a
@@ -978,60 +953,31 @@ object GraftSqlBridge {
     })
   }
 
-  /** `=`/`IN` literal values over the bucket column in a runtime
-    * predicate → their bucket-id set (every key value v lives in bucket
-    * `pmod(murmur3(v), n)`, the write-routing invariant). NULL never
-    * equi-joins, so it maps to no bucket. */
-  private[graft] def bucketIdsFromRuntimePredicate(
-      p: org.apache.spark.sql.connector.expressions.filter.Predicate,
-      bucketCol: String, numBuckets: Int): Option[Set[Int]] = {
-    import org.apache.spark.sql.connector.expressions.{LiteralValue, NamedReference}
-    def isCol(r: NamedReference) = r.fieldNames match {
-      case Array(n) => SQLConf.get.resolver(n, bucketCol)
-      case _ => false
-    }
-    def id(lv: LiteralValue[_]): Set[Int] =
-      if (lv.value == null) Set.empty
-      else Set(graft.catalog.GraftBucketFunction.bucketId(
-        lv.value, lv.dataType, numBuckets))
-    (p.name, p.children) match {
-      case ("IN", Array(r: NamedReference, vs @ _*))
-          if isCol(r) && vs.forall(_.isInstanceOf[LiteralValue[_]]) =>
-        Some(vs.flatMap { case lv: LiteralValue[_] => id(lv) }.toSet)
-      case ("=", Array(r: NamedReference, lv: LiteralValue[_])) if isCol(r) =>
-        Some(id(lv))
-      case ("=", Array(lv: LiteralValue[_], r: NamedReference)) if isCol(r) =>
-        Some(id(lv))
+  /** `e` with every column reference bound by name to a fresh
+    * attribute of `schema`'s matching field — the form the scan-side
+    * evaluators ([[graft.catalog.PartitionValues.rowFilter]],
+    * [[bucketSetFromFilters]], `SkipStats.applySkipping`) take. Accepts
+    * the unresolved names `V2ExpressionUtils.toCatalyst` produces and
+    * resolved attributes alike. None when `e` names no column, some
+    * column is not in `schema`, or the bound form does not type-check
+    * (a literal of another type than its column). */
+  private[graft] def bindByName(e: Expression, schema: StructType): Option[Expression] = {
+    import org.apache.spark.sql.catalyst.analysis.UnresolvedAttribute
+    import org.apache.spark.sql.catalyst.expressions.{Attribute, AttributeReference}
+    def field(a: Attribute): Option[StructField] = (a match {
+      case u: UnresolvedAttribute => u.nameParts
+      case _ => Seq(a.name)
+    }) match {
+      case Seq(n) => schema.fields.find(f => SQLConf.get.resolver(f.name, n))
       case _ => None
     }
+    val refs = e.collect { case a: Attribute => a }
+    if (refs.isEmpty || !refs.forall(field(_).isDefined)) None
+    else Some(e.transform { case a: Attribute =>
+      val f = field(a).get
+      AttributeReference(f.name, f.dataType, f.nullable)()
+    }).filter(_.resolved)
   }
-
-  /** Partition-value predicate compiled from late (post-latch) runtime
-    * filters — bound by NAME to the partition schema's positions and
-    * interpreted (no codegen: it runs once per file at planning). Any
-    * binding or eval failure keeps the file: pruning is an
-    * optimization, never a row filter. */
-  private[graft] def compilePartitionPredicate(
-      filters: Seq[Expression],
-      partitionSchema: StructType): org.apache.spark.sql.catalyst.InternalRow => Boolean =
-    if (filters.isEmpty) (_: org.apache.spark.sql.catalyst.InternalRow) => true
-    else try {
-      import org.apache.spark.sql.catalyst.expressions.{And, AttributeReference, BoundReference}
-      val bound = filters.map(_.transform {
-        case a: AttributeReference =>
-          val i = partitionSchema.fields.indexWhere(f => SQLConf.get.resolver(f.name, a.name))
-          if (i >= 0)
-            BoundReference(i, partitionSchema.fields(i).dataType,
-              partitionSchema.fields(i).nullable)
-          else a
-      }).reduce(And(_, _))
-      val pred = org.apache.spark.sql.catalyst.expressions.Predicate
-        .createInterpreted(bound)
-      (row: org.apache.spark.sql.catalyst.InternalRow) =>
-        try pred.eval(row)
-        catch { case scala.util.control.NonFatal(_) => true }
-    } catch { case scala.util.control.NonFatal(_) =>
-      (_: org.apache.spark.sql.catalyst.InternalRow) => true }
 
   /** BUCKET PRUNING's predicate → bucket-set translation, used by
     * [[RuntimePruning]] for both scans: equality/IN on the bucket
@@ -1059,27 +1005,17 @@ object GraftSqlBridge {
     sets.reduceOption(_ intersect _)
   }
 
-  /** String-encoded descriptor min/max → the CATALYST value
-    * `transformV2Stats` expects (UTF8String for strings, Long for
-    * bigint, days-int for dates, …): a Cast through the column's own
-    * type, evaluated eagerly. None when the cast can't parse the stored
-    * form (then the bound is simply not reported — stats are advisory,
-    * never a correctness surface). */
-  def catalystStatValue(s: String, dt: org.apache.spark.sql.types.DataType): Option[Any] = {
-    import org.apache.spark.sql.catalyst.expressions.{Cast, Literal}
-    val v = Cast(
-      Literal(org.apache.spark.unsafe.types.UTF8String.fromString(s),
-        org.apache.spark.sql.types.StringType),
-      dt, Some(SQLConf.get.sessionLocalTimeZone)).eval()
-    Option(v)
-  }
-
   /** One column's DSv2 statistics view over the descriptor record.
     * `histogram` is the ANALYZE-collected equi-height histogram
     * (rows-per-bin height, (lo, hi, ndv) bins) — `transformV2Stats`
     * converts it to the catalyst `Histogram` that CBO's range-filter
-    * estimation prefers over the uniform min/max assumption. */
+    * estimation prefers over the uniform min/max assumption. The
+    * stored min/max strings become the Catalyst values
+    * `transformV2Stats` expects through [[graft.catalog.PartitionValues.cast]]
+    * (not `decode`: a STRING bound equal to the null-partition marker is
+    * a real value); a bound the cast yields null for is not reported. */
   def v2ColumnStatistics(
+      spark: org.apache.spark.sql.SparkSession,
       dt: org.apache.spark.sql.types.DataType,
       ndv: Long, nullCount: Long,
       min: Option[String], max: Option[String],
@@ -1089,11 +1025,11 @@ object GraftSqlBridge {
     // captured under fresh names: inside the anonymous class the
     // parameter names resolve to the methods being overridden
     val minV: java.util.Optional[Object] =
-      min.flatMap(catalystStatValue(_, dt))
+      min.flatMap(s => Option(graft.catalog.PartitionValues.cast(spark, s, dt)))
         .map(v => java.util.Optional.of(v.asInstanceOf[Object]))
         .getOrElse(java.util.Optional.empty[Object]())
     val maxV: java.util.Optional[Object] =
-      max.flatMap(catalystStatValue(_, dt))
+      max.flatMap(s => Option(graft.catalog.PartitionValues.cast(spark, s, dt)))
         .map(v => java.util.Optional.of(v.asInstanceOf[Object]))
         .getOrElse(java.util.Optional.empty[Object]())
     val avgLenV = avgLen.map(v => java.util.OptionalLong.of(v))

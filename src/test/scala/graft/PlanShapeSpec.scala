@@ -2130,6 +2130,87 @@ class PlanShapeSpec extends AnyFunSuite with SparkFixture {
     spark.sql(s"DROP TABLE IF EXISTS $dimT")
   }
 
+  test("runtime range predicates prune: partition ranges on both layouts, skip-column ranges by file") {
+    import org.apache.spark.sql.connector.expressions.{Expressions, filter => v2}
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    GraftBootstrap.ensure(spark, sf0001)
+    val cat = GraftBootstrap.CatalogName
+    spark.sql(s"CREATE NAMESPACE IF NOT EXISTS $cat.planshape")
+    def p = Expressions.column("p")
+    def k = Expressions.column("k")
+    def cmp(op: String, c: org.apache.spark.sql.connector.expressions.NamedReference,
+        v: org.apache.spark.sql.connector.expressions.Literal[_]) =
+      new v2.Predicate(op, Array(c, v))
+    val pLt2 = cmp("<", p, Expressions.literal(2))
+    val pIn1to3 = new v2.And(cmp(">=", p, Expressions.literal(1)),
+      cmp("<=", p, Expressions.literal(3)))
+    val kLt100 = cmp("<", k, Expressions.literal(100L))
+    def partOf(file: String): Int = "/p=(\\d+)/".r.findFirstMatchIn(file).get.group(1).toInt
+    def keys(file: String): Seq[Long] = spark.read.parquet(file).as[Long].collect().toSeq
+    Seq(false, true).foreach { spj =>
+      val name = if (spj) "runtime_range_spj" else "runtime_range"
+      val t = s"$cat.planshape.$name"
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+      // five INT partitions; each of three appends adds files whose k
+      // range, [100·i, 100·i + 100), is disjoint from the others'
+      (0 until 3).foreach { i =>
+        val df = spark.range(0, 100)
+          .select(($"id" + i * 100).as("k"), ($"id" % 5).cast("int").as("p"))
+        if (i > 0) df.writeTo(t).append()
+        else df.writeTo(t).partitionedBy($"p")
+          .tableProperty(graft.catalog.SkipStats.Prop, "k")
+          .tableProperty("graft.spj", spj.toString).create()
+      }
+      val table = spark.sessionState.catalogManager.catalog(cat)
+        .asInstanceOf[graft.catalog.GraftCatalog].loadTable(
+          org.apache.spark.sql.connector.catalog.Identifier.of(Array("planshape"), name))
+      // (split count, distinct files of the planned splits) after the
+      // planner's runtime-filter calls
+      def planned(preds: v2.Predicate*): (Int, Seq[String]) = {
+        val scan = table.asInstanceOf[org.apache.spark.sql.connector.catalog.SupportsRead]
+          .newScanBuilder(org.apache.spark.sql.util.CaseInsensitiveStringMap.empty()).build()
+        val rf = scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsRuntimeV2Filtering]
+        assert(rf.filterAttributes().map(_.fieldNames.mkString(".")).toSeq ===
+          (if (spj) Seq("p") else Seq("p", "k")))
+        // the planner reads the reported layout first: a keyed layout
+        // latches there, so its runtime filters arrive late
+        scan.asInstanceOf[org.apache.spark.sql.connector.read.SupportsReportPartitioning]
+          .outputPartitioning()
+        if (preds.nonEmpty) rf.filter(preds.toArray)
+        val splits = scan.toBatch.planInputPartitions().toSeq.map {
+          case f: org.apache.spark.sql.execution.datasources.FilePartition => f
+          case other => fail(s"unexpected split $other")
+        }
+        (splits.size, splits.flatMap(_.files).map(_.filePath.toString).distinct.sorted)
+      }
+      val (allSplits, all) = planned()
+      assert(all.map(partOf).toSet === (0 until 5).toSet)
+      def check(label: String, pOk: Int => Boolean, kOk: Long => Boolean,
+          preds: v2.Predicate*): Unit = {
+        val (n, files) = planned(preds: _*)
+        // exactly the files that can hold a matching row survive…
+        val expected = all.filter(f => pOk(partOf(f)) && keys(f).exists(kOk))
+        assert(files === expected, s"$label: planned $files")
+        assert(files.size < all.size, s"$label pruned nothing")
+        // …so no matching row is lost
+        val rows = spark.table(t).collect()
+          .count(r => pOk(r.getInt(1)) && kOk(r.getLong(0)))
+        assert(files.map(f => keys(f).count(kOk) * (if (pOk(partOf(f))) 1 else 0)).sum === rows,
+          s"$label lost rows")
+        // the keyed layout keeps every group, emptying the pruned ones
+        if (spj) assert(n === allSplits, s"$label: keyed groups changed")
+      }
+      check("p < 2", _ < 2, _ => true, pLt2)
+      check("p >= 1 AND p <= 3", q => q >= 1 && q <= 3, _ => true, pIn1to3)
+      if (!spj) {
+        check("k < 100", _ => true, _ < 100, kLt100)
+        check("p < 2, k < 100", _ < 2, _ < 100, pLt2, kLt100)
+      }
+      spark.sql(s"DROP TABLE IF EXISTS $t")
+    }
+  }
+
   test("DPP composes with STATIC partition pruning: one listing sees both filters") {
     // Static and runtime pruning share GraftFileIndex.listFiles — a
     // regression that satisfied one path by falling back to a full

@@ -155,6 +155,37 @@ class DdlSurfaceSpec extends AnyFunSuite with SparkFixture {
         null, org.apache.spark.sql.catalyst.util.ArrayData.toArrayData(Array(1.0)))) == null)
   }
 
+  test("sys array functions return NULL on a NULL element, as the session functions do") {
+    GraftBootstrap.ensure(spark, sf0001)
+    val withNull = "array(1.0D, CAST(NULL AS DOUBLE))"
+    val r = spark.sql(
+      s"SELECT $cat.sys.array_dot($withNull, array(1.0D, 2.0D)) AS a, " +
+        s"$cat.sys.array_sqdist(array(1.0D, 2.0D), $withNull) AS b, " +
+        s"graft_array_dot($withNull, array(1.0D, 2.0D)) AS c, " +
+        s"graft_array_sqdist(array(1.0D, 2.0D), $withNull) AS d")
+      .collect().head
+    assert((0 until 4).forall(r.isNullAt),
+      s"a NULL element must null every array function: $r")
+    // the magic method, on generic and unsafe arrays alike
+    val generic = new org.apache.spark.sql.catalyst.util.GenericArrayData(
+      Array[Any](1.0, null))
+    val unsafe = org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+      .fromPrimitiveArray(Array(1.0, 2.0))
+    val unsafeWithNull = org.apache.spark.sql.catalyst.expressions.UnsafeProjection
+      .create(Array[org.apache.spark.sql.types.DataType](
+        org.apache.spark.sql.types.ArrayType(org.apache.spark.sql.types.DoubleType)))
+      .apply(org.apache.spark.sql.catalyst.InternalRow(generic)).getArray(0)
+    Seq(generic, unsafeWithNull).foreach { a =>
+      assert(new ArrayDotBound().invoke(a, unsafe) == null)
+      assert(new ArraySqDistBound().invoke(unsafe, a) == null)
+    }
+    // no NULL element: the prefix fold is unchanged
+    assert(new ArrayDotBound().invoke(unsafe, unsafe) == 5.0)
+    assert(new ArraySqDistBound().invoke(unsafe,
+      org.apache.spark.sql.catalyst.expressions.UnsafeArrayData
+        .fromPrimitiveArray(Array(3.0))) == 4.0)
+  }
+
   test("metadata tables: $files/$partitions agree with the data; unknown suffixes and $-creates refuse") {
     import org.apache.spark.sql.functions._
     import spark.implicits._
