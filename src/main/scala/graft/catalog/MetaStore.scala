@@ -1,7 +1,9 @@
 package graft.catalog
 
+import java.nio.file.{Files, Path => JPath, Paths}
+
 import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileContext, FileSystem, Options, Path}
+import org.apache.hadoop.fs.{FileContext, FileStatus, FileSystem, Options, Path}
 import org.json4s._
 import org.json4s.jackson.JsonMethods
 
@@ -219,50 +221,112 @@ object TableMeta {
   *   <warehouse>/<db>/<table>/             managed table data
   * }}}
   *
-  * All writes go through tmp-file + atomic `FileContext.rename(OVERWRITE)`
-  * so a crashed writer never leaves a torn (or missing) descriptor. Uses
-  * the Hadoop `FileSystem` API so the same store works on HDFS/object
-  * stores on a real cluster, not just local fs. Driver-only by design —
+  * Every write lands in a fresh file first (a tmp sibling, or the CAS
+  * marker `<table>.json.cas-<seq>`) and is then published atomically by
+  * [[renameOverwrite]], so a crashed writer never leaves a torn (or
+  * missing) descriptor. On a LOCAL warehouse the published name is a
+  * relative symlink to an immutable version file next to it:
+  * {{{
+  *   <warehouse>/<db>/_meta/<table>.json            -> .<table>.json.v-<uuid>
+  *   <warehouse>/<db>/_meta/.<table>.json.v-<uuid>  the descriptor bytes
+  * }}}
+  * (the namespace file the same way, in `<db>/`). Readers open the link
+  * name and never see the version name; a descriptor written as a plain
+  * file by older code still loads, and its next publish replaces it with
+  * a link. Other stores keep one plain file per descriptor. Uses the
+  * Hadoop `FileSystem` API so the same store works on HDFS/object stores
+  * on a real cluster, not just local fs. Driver-only by design —
   * executors never see this class (scans carry only paths + schemas), so
   * it is deliberately NOT Serializable.
   */
-class MetaStore(val warehouse: Path, conf: Configuration) {
+class MetaStore(val warehouse: Path, conf: Configuration)
+    extends org.apache.spark.internal.Logging {
   import MetaStore._
 
   private lazy val fs: FileSystem = warehouse.getFileSystem(conf)
   private lazy val fc: FileContext = FileContext.getFileContext(warehouse.toUri, conf)
+  private def isLocal: Boolean = fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem]
 
-  /** Atomic replace-rename — the publish primitive of every descriptor
-    * write ([[writeAtomic]], the CAS publish, [[rollForwardCas]]).
+  /** Publishes that fell back to a plain replace rename because the
+    * local filesystem refused a symlink (one WARN per store). */
+  private val linkFallbackCount = new java.util.concurrent.atomic.AtomicLong(0L)
+  private[catalog] def linkFallbacks: Long = linkFallbackCount.get()
+
+  /** The symlink primitive of the local publish; a spec overrides it to
+    * exercise the fallback on a filesystem that has links. */
+  protected[catalog] def createLink(link: JPath, target: JPath): Unit =
+    Files.createSymbolicLink(link, target)
+
+  /** Atomic replace — the publish primitive of every descriptor write
+    * ([[writeAtomic]], the CAS publish, [[rollForwardCas]]). `src` is
+    * consumed.
     *
-    * On a LOCAL warehouse, `FileContext.rename(OVERWRITE)` is a
-    * surprisingly expensive call: without the native Hadoop library,
-    * `AbstractFileSystem.renameInternal` resolves the destination's link
-    * status by FORKING a `readlink` subprocess (`FileUtil.readLink` →
-    * `Shell.execCommand`), and `ChecksumFs` repeats it for the crc
-    * sidecar — two fork+execs of a multi-GB JVM per descriptor publish,
-    * measured as ~25% of the driver's commit wall time on the bench
-    * (thread-dump sampling, guide §7.3). `java.nio.file.Files.move`
-    * with ATOMIC_MOVE|REPLACE_EXISTING is the same OS-atomic rename(2)
-    * with no subprocess; the crc sidecar is republished around it
-    * (stale sidecar dropped FIRST, so a reader in the window falls back
-    * to an unverified read — ChecksumFileSystem tolerates an absent
-    * crc — rather than ever pairing the new data with the old crc).
-    * Non-local warehouses (HDFS/object stores, where rename is a
-    * metadata RPC) keep the FileContext primitive unchanged. */
+    * On a LOCAL warehouse nothing is ever renamed over a data file. ext4
+    * (`auto_da_alloc`, the default) flushes the new file's data when a
+    * rename replaces an existing file: measured at p50 50 ms for a 3 KB
+    * file on a virtio ext4 disk, against 0.003 ms for a rename to a fresh
+    * name and 0.015 ms for a symlink swap. Two publishes per commit (the
+    * write and the snapshot pointer) made that flush the largest
+    * driver-only cost of a DML statement. So the publish is:
+    *  1. move `src` to a fresh version file `.<name>.v-<uuid>` next to
+    *     `dst` (a rename to a new name: no flush);
+    *  2. create a relative symlink to it under a fresh temporary name and
+    *     rename that link over `dst` — one rename(2) of an inode without
+    *     data blocks, atomic for readers and under a process crash;
+    *  3. delete the version file `dst` pointed at before the swap.
+    * A publish that dies between 1 and 2, or loses a cross-driver race
+    * for step 3, leaves a version file no link names; [[rollForwardCas]]
+    * reclaims it once it is older than the torn-marker window.
+    *
+    * Durability: nothing in the engine fsyncs — parquet data files,
+    * manifests and markers all rely on the page cache — so the flush
+    * removed here was the filesystem's replace heuristic, not a
+    * guarantee the engine gives. If the filesystem refuses symlinks
+    * (`UnsupportedOperationException`, `FileSystemException`), the
+    * version file is renamed over `dst` instead (the old replace publish,
+    * flush included), counted in [[linkFallbacks]] and logged once.
+    *
+    * The local branch uses `java.nio.file` rather than
+    * `FileContext.rename(OVERWRITE)`: without the native Hadoop library
+    * that call forks a `readlink` subprocess per rename (twice with the
+    * crc sidecar). A stale crc sidecar of `dst` is dropped FIRST, so a
+    * reader in the window falls back to an unverified read —
+    * ChecksumFileSystem tolerates an absent crc — rather than ever
+    * pairing the new data with the old crc; `src`'s sidecar, if any, is
+    * republished after the swap. Non-local warehouses (HDFS/object
+    * stores, where rename is a metadata RPC) keep the FileContext
+    * primitive unchanged. */
   private def renameOverwrite(src: Path, dst: Path): Unit = {
-    if (fs.isInstanceOf[org.apache.hadoop.fs.LocalFileSystem]) {
-      import java.nio.file.{Files, Paths, StandardCopyOption => O}
-      def local(p: Path) = Paths.get(p.toUri.getPath)
-      def crc(p: Path) = local(new Path(p.getParent, s".${p.getName}.crc"))
+    if (isLocal) {
+      import java.nio.file.{StandardCopyOption => O}
+      val d = local(dst)
       Files.deleteIfExists(crc(dst))
-      Files.move(local(src), local(dst), O.ATOMIC_MOVE, O.REPLACE_EXISTING)
-      // crc republish is best-effort, never a failure: the data file is
+      val prev = versionTarget(d)
+      val version = d.resolveSibling(s".${d.getFileName}.v-${java.util.UUID.randomUUID()}")
+      // fresh mtime: the reclaim in rollForwardCas judges age by it, and
+      // a rolled-forward marker may be older than the torn window
+      Files.setLastModifiedTime(local(src),
+        java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis()))
+      Files.move(local(src), version, O.ATOMIC_MOVE)
+      val link = d.resolveSibling(s"${version.getFileName}.lnk")
+      val linked =
+        try { createLink(link, version.getFileName); true }
+        catch { case e @ (_: UnsupportedOperationException |
+            _: java.nio.file.FileSystemException) =>
+          if (linkFallbackCount.getAndIncrement() == 0L)
+            logWarning(s"descriptor publish under ${d.getParent}: symlinks " +
+              s"unavailable ($e) — falling back to a replace rename, which " +
+              "ext4 flushes synchronously")
+          false
+        }
+      Files.move(if (linked) link else version, d, O.ATOMIC_MOVE, O.REPLACE_EXISTING)
+      prev.foreach(Files.deleteIfExists)
+      // crc republish is best-effort, never a failure: the data is
       // already published above, and ChecksumFileSystem tolerates an
       // absent sidecar (unverified read). Exists-then-move was a TOCTOU
       // (r21 verdict "What's wrong" #5): a concurrent deletion of
       // crc(src) in the window would throw NoSuchFileException AFTER
-      // the rename succeeded, reporting failure for a publish that
+      // the swap succeeded, reporting failure for a publish that
       // happened.
       try {
         if (Files.exists(crc(src)))
@@ -270,6 +334,25 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
       } catch { case _: java.nio.file.NoSuchFileException => }
     } else fc.rename(src, dst, Options.Rename.OVERWRITE)
   }
+
+  /** The version file a local descriptor link points at; None for a
+    * plain (pre-link or fallback) descriptor or a missing one. */
+  private def versionTarget(d: JPath): Option[JPath] =
+    try Some(d.resolveSibling(Files.readSymbolicLink(d)))
+      .filter(_.getFileName.toString.startsWith(s".${d.getFileName}.v-"))
+    catch { case _: java.io.IOException | _: UnsupportedOperationException => None }
+
+  /** Remove a descriptor — on a local warehouse the link and its version
+    * file (link first: a reader sees the table gone, never a dangling
+    * link). */
+  private def deleteDescriptor(p: Path): Unit =
+    if (isLocal) {
+      val d = local(p)
+      val target = versionTarget(d)
+      Files.deleteIfExists(crc(p))
+      Files.deleteIfExists(d)
+      target.foreach(Files.deleteIfExists)
+    } else fs.delete(p, false)
 
   def namespaceDir(db: String): Path = new Path(warehouse, db)
   private def nsFile(db: String): Path = new Path(namespaceDir(db), "_namespace.json")
@@ -393,7 +476,7 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
       //     `<table>.json.cas-<s+1>` holding the complete new
       //     descriptor — the linearization point: exactly one writer
       //     per sequence number on any Hadoop filesystem;
-      //  4. publish by atomic rename marker → descriptor.
+      //  4. publish marker → descriptor ([[renameOverwrite]]).
       //
       // A loser's create throws FileAlreadyExists → reload and RE-DERIVE
       // from the fresh state (every mutator here is a pure
@@ -403,7 +486,7 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
       // next writer (the marker holds the full state); a torn marker
       // (died mid-write) is skipped while fresh and reclaimed once
       // stale. Single-writer cost is unchanged: one create + one
-      // rename, exactly what the old tmp-file write paid.
+      // publish (renameOverwrite), exactly what the tmp-file write pays.
       var attempts = 0
       while (true) {
         rollForwardCas(db, table)
@@ -450,13 +533,16 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
     * and the stale pre-loop seq let a lower marker processed later
     * overwrite a just-published newer descriptor whenever two complete
     * markers coexisted (a failed marker delete after a seq-regressing
-    * restore, rename-as-copy+delete stores). */
+    * restore, rename-as-copy+delete stores). The same listing reclaims
+    * the local publish's orphaned version files ([[reclaimVersions]]). */
   private def rollForwardCas(db: String, table: String): Unit = {
     val dir = metaDir(db)
     val prefix = s"$table.json.cas-"
-    val markers =
-      try fs.listStatus(dir).toSeq.filter(_.getPath.getName.startsWith(prefix))
+    val listing =
+      try fs.listStatus(dir).toSeq
       catch { case _: java.io.FileNotFoundException => return }
+    if (isLocal) reclaimVersions(tableMetaFile(db, table), listing)
+    val markers = listing.filter(_.getPath.getName.startsWith(prefix))
     if (markers.isEmpty) return
     markers.map { st =>
       val seq = try st.getPath.getName.stripPrefix(prefix).toLong
@@ -487,10 +573,28 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
           case _ =>
             // torn marker: the claimant died mid-write. Fresh ones may
             // still be in flight — reclaim only once stale.
-            if (System.currentTimeMillis() - st.getModificationTime > 60000L)
+            if (System.currentTimeMillis() - st.getModificationTime > TornWindowMs)
               fs.delete(st.getPath, false)
         }
       }
+    }
+  }
+
+  /** Delete the hidden `.<table>.json.v-*` entries of `dst`'s listing
+    * (version files and their temporary links) that the descriptor link
+    * does not point at and that are older than the torn-marker window —
+    * residue of a publish that died between its move and its swap, or of
+    * two cross-driver publishes that read the same previous target.
+    * Fresh ones may belong to a publish in flight. */
+  private def reclaimVersions(dst: Path, listing: Seq[FileStatus]): Unit = {
+    val prefix = s".${dst.getName}.v-"
+    val now = System.currentTimeMillis()
+    val stale = listing.filter(st => st.getPath.getName.startsWith(prefix) &&
+      now - st.getModificationTime > TornWindowMs)
+    if (stale.nonEmpty) {
+      val live = versionTarget(local(dst))
+      stale.map(st => local(st.getPath)).filterNot(live.contains)
+        .foreach(Files.deleteIfExists)
     }
   }
 
@@ -514,7 +618,7 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
     // (the commit instead fails loudly on the missing descriptor)
     lockFor(db, table).synchronized {
       val meta = loadTable(db, table)
-      fs.delete(tableMetaFile(db, table), false)
+      deleteDescriptor(tableMetaFile(db, table))
       if (deleteData && !meta.external) fs.delete(new Path(meta.location), true)
     }
 
@@ -551,7 +655,7 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
       if (newLocation == meta.location) meta
       else Snapshots.rebase(conf, meta, meta.location, newLocation)
     saveTable(toDb, rebased.copy(name = to, location = newLocation))
-    fs.delete(tableMetaFile(fromDb, from), false)
+    deleteDescriptor(tableMetaFile(fromDb, from))
     }
 
   // --- io helpers ------------------------------------------------------
@@ -560,12 +664,12 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
     while (true) {
       try return readOnce(p)
       catch {
-        // a reader racing writeAtomic's rename-replace on the LOCAL
-        // checksummed filesystem can pair the old data stream with the
-        // new crc sidecar (ChecksumException) or hit the delete-then-
-        // rename window ChecksumFs's OVERWRITE rename has
-        // (FileNotFoundException) — both transient by construction (the
-        // next open sees a consistent pair), observed from streaming-
+        // a reader racing a publish can pair the old data stream with
+        // the new crc sidecar (ChecksumException), or resolve the local
+        // descriptor link to the previous version file just as the
+        // publish deletes it after the swap (FileNotFoundException) —
+        // both transient by construction (the next open sees a
+        // consistent pair / the new target), observed from streaming-
         // source threads reading descriptors under concurrent commits.
         // Bounded retry; a persistent miss (real corruption, a genuinely
         // dropped table) still throws the original exception.
@@ -580,10 +684,11 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
         // immediately instead of paying five opens and 75 ms of sleeps.
         case e: java.io.FileNotFoundException if attempts < 5 =>
           val inFlight = try {
-            // the descriptor REAPPEARING is itself proof the miss was
-            // the replace window (the rename completed and may have
-            // already reclaimed its marker/tmp before the probe below
-            // ran) — retry unconditionally then
+            // the descriptor still (or again) resolving is itself proof
+            // the miss was the publish window — the previous target was
+            // deleted after the swap, so the link now names the new
+            // version, and the marker/tmp may already be gone before
+            // the probe below runs — retry unconditionally then
             fs.exists(p) || {
               val dir = p.getParent
               fs.exists(dir) && fs.listStatus(dir).exists { st =>
@@ -619,14 +724,21 @@ class MetaStore(val warehouse: Path, conf: Configuration) {
   private def writeAtomic(p: Path, content: String): Unit = {
     val tmp = new Path(p.getParent, s".${p.getName}.tmp")
     GraftIO.writeSmallFile(fs, tmp, content.getBytes("UTF-8"), overwrite = true)
-    // FileContext.rename(OVERWRITE) is the atomic-replace primitive —
-    // unlike delete-then-FileSystem.rename there is no window where the
+    // renameOverwrite is the atomic-replace primitive — unlike
+    // delete-then-FileSystem.rename there is no window where the
     // descriptor is missing, and failures raise instead of returning false.
     renameOverwrite(tmp, p)
   }
 }
 
 object MetaStore {
+  /** Age past which an unpublished leftover (a torn CAS marker, an
+    * orphaned version file) is reclaimed; younger ones may be in flight. */
+  private val TornWindowMs = 60000L
+
+  private def local(p: Path): JPath = Paths.get(p.toUri.getPath)
+  private def crc(p: Path): JPath = local(new Path(p.getParent, s".${p.getName}.crc"))
+
   /** Diagnostic counters: PHYSICAL descriptor reads (file read + JSON
     * parse) and their summed nanos — the per-statement catalog cost the
     * r22 descriptor cache attacks; tests pin cache behavior on them. */

@@ -30,7 +30,11 @@ import graft.operators.RelationalQueries.r4
   *    pigeonhole trick (hamming ≤ 3 ⇒ at least one identical block ⇒
   *    equality-join on block values — no pairwise hamming scan).
   */
-object Dedup {
+object Dedup extends org.apache.spark.internal.Logging {
+
+  /** Set once [[dedupClusters]] has fallen back to a count job. */
+  private val ccCountFallbackWarned =
+    new java.util.concurrent.atomic.AtomicBoolean(false)
 
   /** (doc_id, shingle) rows. The token array is materialized as a
     * column BEFORE the shingle lambda runs over it: Catalyst does no
@@ -710,12 +714,24 @@ object Dedup {
         .observe(s"graft_cc_changed_$iter",
           coalesce(sum(when(col("rep") < col("old_rep"), 1L).otherwise(0L)),
             lit(0L)).as("changed"))
+      // The metric is read from `next0.queryExecution`, so it is only
+      // there while `cp` materializes `next0`'s OWN QueryExecution, as
+      // `next0.localCheckpoint()` does. A derived Dataset in `cp` (a
+      // select, a repartition) runs a different QueryExecution, leaves
+      // this one's metric empty and costs the count job again on every
+      // iteration — hence the one-time WARN on the fallback.
       val next = cp(next0)
       val changed: Long = next0.queryExecution.observedMetrics
         .get(s"graft_cc_changed_$iter") match {
           case Some(row) if !row.isNullAt(row.fieldIndex("changed")) =>
             row.getAs[Long]("changed")
-          case _ => next.filter(col("rep") < col("old_rep")).count()
+          case _ =>
+            if (ccCountFallbackWarned.compareAndSet(false, true))
+              logWarning("dedupClusters: the observed change count was " +
+                "missing after the checkpoint job — each iteration now pays " +
+                "an extra count() job (does cp() still execute next0's own " +
+                "QueryExecution?)")
+            next.filter(col("rep") < col("old_rep")).count()
         }
       release(current)
       current = next

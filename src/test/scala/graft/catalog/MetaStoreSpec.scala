@@ -2,6 +2,8 @@ package graft.catalog
 
 import java.nio.file.Files
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.types.{StructField, StructType, LongType, StringType}
@@ -234,5 +236,132 @@ class MetaStoreSpec extends AnyFunSuite {
     val specs = a.loadTable("db", "t").partitions.map(_.spec("p")).toSet
     assert(specs === (0 until 40).map(i => s"v$i").toSet,
       s"lost updates across store spellings: ${specs.size}/40 survived")
+  }
+
+  private def metaDir(s: MetaStore, db: String): java.nio.file.Path =
+    java.nio.file.Paths.get(s.tableMetaFile(db, "x").getParent.toUri.getPath)
+
+  private def names(dir: java.nio.file.Path): Set[String] = {
+    val ls = Files.list(dir)
+    try ls.iterator.asScala.map(_.getFileName.toString).toSet finally ls.close()
+  }
+
+  test("local descriptors are links to version files: one link and one version per live table") {
+    val s = freshStore()
+    s.createNamespace("db", Map.empty)
+    Seq("a", "b", "c").foreach(t => s.saveTable("db", meta(t)))
+    (0 until 50).foreach { i =>
+      s.updateTable("db", Seq("a", "b", "c")(i % 3))(m =>
+        m.copy(properties = m.properties + (s"k$i" -> "1")))
+    }
+    s.renameTable("db", "b", "db", "b2")
+    s.dropTable("db", "c", deleteData = false)
+    val dir = metaDir(s, "db")
+    val files = names(dir)
+    assert(files.count(!_.startsWith(".")) === 2, files)
+    assert(files.size === 4, s"exactly one link and one version file per live table: $files")
+    Seq("a", "b2").foreach { t =>
+      val link = dir.resolve(s"$t.json")
+      assert(Files.isSymbolicLink(link))
+      val target = Files.readSymbolicLink(link)
+      assert(!target.isAbsolute && target.getFileName.toString.startsWith(s".$t.json.v-"))
+      assert(files.contains(target.toString))
+    }
+    assert(s.loadTable("db", "a").properties.keySet === Set("k") ++ (0 until 50 by 3).map(i => s"k$i"))
+    assert(s.loadTable("db", "b2").properties.keySet === Set("k") ++ (1 until 50 by 3).map(i => s"k$i"))
+    assert(s.listTables("db") === Seq("a", "b2"))
+  }
+
+  test("an orphaned version file is reclaimed once older than the torn window; a fresh one is kept") {
+    val s = freshStore()
+    s.createNamespace("db", Map.empty)
+    s.saveTable("db", meta("t"))
+    val dir = metaDir(s, "db")
+    val stale = dir.resolve(".t.json.v-stale")
+    val fresh = dir.resolve(".t.json.v-fresh")
+    Seq(stale, fresh).foreach(f => Files.write(f, MetaStore.toJson(meta("t")).getBytes("UTF-8")))
+    Files.setLastModifiedTime(stale,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 120000L))
+    // the live target is older than the window too and must survive
+    val live = dir.resolve(Files.readSymbolicLink(dir.resolve("t.json")))
+    Files.setLastModifiedTime(live,
+      java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 120000L))
+    s.updateTable("db", "t")(m => m)
+    assert(!Files.exists(stale), "a stale orphan must be reclaimed")
+    assert(Files.exists(fresh), "a fresh version file may be a publish in flight")
+    assert(Files.exists(live))
+    assert(s.loadTable("db", "t").properties === Map("k" -> "v"))
+  }
+
+  test("readers under 200 racing publishes from two stores always parse and never see seq go down") {
+    val s = freshStore()
+    s.createNamespace("db", Map.empty)
+    s.saveTable("db", meta("t"))
+    val s2 = new MetaStore(s.warehouse, new Configuration())
+    @volatile var done = false
+    val errors = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val reads = new java.util.concurrent.atomic.AtomicLong(0L)
+    val readers = (0 until 2).map { r =>
+      new Thread(() => {
+        var last = -1L
+        while (!done) {
+          try {
+            val seq = (if (r == 0) s else s2).loadTable("db", "t").seq
+            if (seq < last) errors.add(s"reader $r saw seq $seq after $last")
+            last = seq
+            reads.incrementAndGet()
+          } catch { case e: Throwable => errors.add(s"reader $r: $e") }
+        }
+      })
+    }
+    val writers = Seq(s, s2).zipWithIndex.map { case (store, w) =>
+      new Thread(() => (0 until 100).foreach { i =>
+        store.updateTable("db", "t")(m => m.copy(properties = m.properties + (s"w$w-$i" -> "1")))
+      })
+    }
+    readers.foreach(_.start())
+    writers.foreach(_.start())
+    writers.foreach(_.join())
+    done = true
+    readers.foreach(_.join())
+    assert(errors.isEmpty, errors.toArray.take(5).mkString("; "))
+    assert(reads.get() > 0L)
+    assert(s.loadTable("db", "t").seq === 200L)
+  }
+
+  test("a plain-file descriptor loads, and its next update turns it into a link at seq + 1") {
+    val s = freshStore()
+    s.createNamespace("db", Map.empty)
+    val old = meta("t").copy(seq = 7L)
+    val file = java.nio.file.Paths.get(s.tableMetaFile("db", "t").toUri.getPath)
+    Files.write(file, MetaStore.toJson(old).getBytes("UTF-8"))
+    assert(s.loadTable("db", "t") === old)
+    val updated = s.updateTable("db", "t")(m => m.copy(properties = m.properties + ("k2" -> "v2")))
+    assert(Files.isSymbolicLink(file))
+    val expected = old.copy(seq = 8L, properties = old.properties + ("k2" -> "v2"))
+    assert(updated === expected && s.loadTable("db", "t") === expected)
+    assert(new String(Files.readAllBytes(file), "UTF-8") === MetaStore.toJson(expected),
+      "the descriptor bytes are the same JSON a plain file held")
+    assert(names(file.getParent).size === 2)
+  }
+
+  test("a filesystem without symlinks falls back to the replace rename, counted") {
+    val s = freshStore()
+    s.createNamespace("db", Map.empty)
+    s.saveTable("db", meta("t"))
+    val noLinks = new MetaStore(s.warehouse, new Configuration()) {
+      override protected[catalog] def createLink(
+          link: java.nio.file.Path, target: java.nio.file.Path): Unit =
+        throw new UnsupportedOperationException("no symlinks here")
+    }
+    (0 until 2).foreach { i =>
+      noLinks.updateTable("db", "t")(m => m.copy(properties = m.properties + (s"f$i" -> "1")))
+    }
+    val file = java.nio.file.Paths.get(s.tableMetaFile("db", "t").toUri.getPath)
+    assert(!Files.isSymbolicLink(file) && Files.isRegularFile(file))
+    assert(noLinks.linkFallbacks === 2L && s.linkFallbacks === 0L)
+    assert(s.loadTable("db", "t").properties.keySet === Set("k", "f0", "f1"))
+    assert(names(file.getParent) === Set("t.json"),
+      "the link's old version file goes with the first fallback publish")
   }
 }
