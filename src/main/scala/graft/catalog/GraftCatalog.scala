@@ -1096,9 +1096,20 @@ object GraftCatalog {
     * with NO `graft.dml.key` — the row identity is the
     * (`_file`, `_pos`) metadata pair (Iceberg position deletes), for
     * tables without any natural NOT NULL key tuple. Parquet-only (the
-    * `_pos` source is the parquet reader's native row index). */
+    * `_pos` source is the parquet reader's native row index). A
+    * descriptor that HOLDS a positional batch reads positionally too:
+    * `sys.compact` empties the live list, after which ALTER may declare
+    * a key, while retained snapshots (travel, CDC, rollback) still carry
+    * batches that anti-join on the (_file, _pos) pair. */
   private[graft] def morPositional(meta: TableMeta): Boolean =
-    morEnabled(meta) && !meta.properties.contains(DmlKeyProp)
+    (morEnabled(meta) && !meta.properties.contains(DmlKeyProp)) ||
+      meta.deleteVectors.exists(_.keyColumn == write.PositionalRead.Marker)
+
+  /** `meta` declared positional: the pinned read of files that positional
+    * batches apply to but whose descriptor carries none of them (a
+    * deletion-vector fragment, a changelog delete image). */
+  private[graft] def asPositional(meta: TableMeta): TableMeta =
+    meta.copy(properties = meta.properties - DmlKeyProp + (DmlModeProp -> MorMode))
 
   private[graft] def morKeyColumns(declared: String): Seq[String] =
     declared.split(",").map(_.trim).filter(_.nonEmpty).toSeq

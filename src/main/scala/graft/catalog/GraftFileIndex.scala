@@ -9,6 +9,7 @@ import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex, NoopCache, PartitionDirectory, PartitionPath, PartitioningAwareFileIndex, PartitionSpec}
 import org.apache.spark.sql.types.StructType
+import org.apache.spark.unsafe.types.UTF8String
 
 /** Catalog-pruned file index: partition predicates are evaluated against
   * the catalog-tracked partition list BEFORE any filesystem listing, so a
@@ -244,7 +245,16 @@ class GraftSkippingFileIndex(
   * dirs once), partition pruning still applies against the recorded
   * specs, and `sizeInBytes` is the snapshot's own byte count — so a
   * travel read plans with the stats of the data it actually serves,
-  * not the live table's. */
+  * not the live table's.
+  *
+  * On a POSITIONAL merge-on-read table (q121) every file is its own
+  * partition directory whose row carries one more value after the
+  * spec's: `_file`, the file's logical identity — the qualified ORIGINAL
+  * directory plus the basename. A retired file keeps the identity of
+  * the directory it was written to, so position deletes recorded
+  * against it keep applying after it moves. The scan serves `_file` as
+  * a partition value, and a filter on it prunes files like a filter on
+  * a partition column does. */
 class GraftPinnedFileIndex(
     sparkSession: SparkSession,
     meta: TableMeta,
@@ -252,25 +262,33 @@ class GraftPinnedFileIndex(
   extends PartitioningAwareFileIndex(
     sparkSession, Map.empty, Some(meta.schema), NoopCache) {
 
+  private val positional = GraftCatalog.morPositional(meta)
+
   private val pinned: Seq[(InternalRow, Path, Seq[FileStatus])] =
-    resolved.dirs.map(d => (PartitionValues.row(
-      sparkSession, meta.partitionSchema, d.spec), new Path(d.dir), d.files))
+    resolved.dirs.flatMap { d =>
+      val row = PartitionValues.row(sparkSession, meta.partitionSchema, d.spec)
+      val dir = new Path(d.dir)
+      if (!positional) Seq((row, dir, d.files))
+      else d.files.map(f => (InternalRow.fromSeq(row.toSeq(meta.partitionSchema) :+
+        UTF8String.fromString(write.PositionalRead.identity(
+          dir, f.getPath.getName, hadoopConf))), dir, Seq(f)))
+    }
 
   override def rootPaths: Seq[Path] = Seq(new Path(meta.location))
   override def refresh(): Unit = ()
-  override def partitionSchema: StructType = meta.partitionSchema
+  override def partitionSchema: StructType =
+    if (positional) meta.partitionSchema.add(write.PositionalRead.idFields.head)
+    else meta.partitionSchema
 
   override def partitionSpec(): PartitionSpec =
-    PartitionSpec(meta.partitionSchema,
+    PartitionSpec(partitionSchema,
       pinned.map { case (row, dir, _) => PartitionPath(row, dir) })
 
   private def prune(
-      filters: Seq[Expression]): Seq[(InternalRow, Path, Seq[FileStatus])] =
-    if (meta.partitionColumns.isEmpty) pinned
-    else {
-      val keep = PartitionValues.rowFilter(sparkSession, meta.partitionSchema, filters)
-      pinned.filter(p => keep(p._1))
-    }
+      filters: Seq[Expression]): Seq[(InternalRow, Path, Seq[FileStatus])] = {
+    val keep = PartitionValues.rowFilter(sparkSession, partitionSchema, filters)
+    pinned.filter(p => keep(p._1))
+  }
 
   override def listFiles(
       partitionFilters: Seq[Expression],

@@ -70,12 +70,16 @@ class GraftTable(
   /** A READ-ONLY relation over an explicit subset of this table's files
     * (the deletion-vector splitter's building block): same schema and
     * provider, pinned index, every layout/stats claim and every DV
-    * marker dropped — the fragment is exactly its file list. */
-  private[graft] def pinnedSubset(dirs: Seq[Snapshots.ResolvedDir]): GraftTable =
+    * marker dropped — the fragment is exactly its file list. A
+    * positional table's fragments stay positional: they serve the
+    * (_file, _pos) pair its batches anti-join on. */
+  private[graft] def pinnedSubset(dirs: Seq[Snapshots.ResolvedDir]): GraftTable = {
+    val sub = meta.copy(history = Nil, snapshots = Nil, deleteVectors = Nil)
     new GraftTable(catalog, db,
-      meta.copy(history = Nil, snapshots = Nil, deleteVectors = Nil),
+      if (GraftCatalog.morPositional(meta)) GraftCatalog.asPositional(sub) else sub,
       timeTravel = true,
       pinned = Some(Snapshots.Resolved(meta.provider, dirs)))
+  }
 
   override def name(): String = s"${catalog.name}.$db.${meta.name}"
 
@@ -83,15 +87,14 @@ class GraftTable(
 
   /** POSITIONAL merge-on-read tables (q121) expose the Iceberg-shaped
     * (`_file`, `_pos`) metadata pair — the rowId of their delta
-    * operations, and a user-selectable inspection surface. Both are
-    * SERVED exclusively by the extension's plan rewrite
-    * ([[graft.plans.ResolveDeletionVectors]] replaces any relation whose
-    * output references them with the V1 `_metadata`-backed plan); the
-    * DSv2 scan below never produces them, and a session without the
-    * extension fails the reference loudly at analysis. Keyed/COW tables
-    * expose nothing — their reads are byte-identical to round 19.
-    * Fragments the rewrite mints (pinned subsets) never reference the
-    * columns, so the rule cannot re-match its own output. */
+    * operations, and a user-selectable inspection surface. A PINNED
+    * scan serves both: `_file` is a per-file partition value of
+    * [[GraftPinnedFileIndex]], `_pos` the parquet reader's row index
+    * ([[org.apache.spark.sql.graft.GraftRowIndexScanBuilder]]). A live
+    * relation that references them is replaced by pinned fragments in
+    * the extension's plan rewrite ([[graft.plans.ResolveDeletionVectors]]);
+    * its scan serves neither. Keyed/COW tables expose nothing — their
+    * reads are byte-identical to round 19. */
   override def metadataColumns(): Array[MetadataColumn] =
     if (GraftCatalog.morPositional(meta))
       Array(
@@ -262,7 +265,8 @@ class GraftTable(
     // pinned index and the STOCK builder — no bucket/SPJ/skipping/stats
     // wrappers (layout claims and live statistics describe the CURRENT
     // table, not the snapshot; partition pruning still applies via the
-    // pinned specs).
+    // pinned specs). A positional table's pinned scan also serves the
+    // (_file, _pos) metadata pair (see metadataColumns).
     val index: PartitioningAwareFileIndex =
       if (pinned.isDefined)
         new GraftPinnedFileIndex(spark, meta, pinned.get)
@@ -370,7 +374,11 @@ class GraftTable(
           org.apache.spark.sql.connector.expressions.NamedReference,
           org.apache.spark.sql.connector.read.colstats.ColumnStatistics])
       }
-    if (pinned.isDefined) return builder
+    if (pinned.isDefined) return (
+      if (GraftCatalog.morPositional(meta))
+        new org.apache.spark.sql.graft.GraftRowIndexScanBuilder(
+          builder, write.PositionalRead.PosCol)
+      else builder)
     GraftCatalog.writableBucketSpec(meta) match {
       case Some((n, col)) =>
         // the skipping/bloom columns join the BUCKETED scan's runtime

@@ -367,14 +367,19 @@ class MetaStore(val warehouse: Path, conf: Configuration)
 
   def createNamespace(db: String, props: Map[String, String]): Unit = {
     fs.mkdirs(metaDir(db))
-    writeAtomic(nsFile(db), JsonMethods.compact(JsonMethods.render(mapToJson(props))))
+    alterNamespace(db, props)
   }
 
   def loadNamespace(db: String): Map[String, String] =
     jsonToMap(JsonMethods.parse(readFully(nsFile(db))))
 
-  def alterNamespace(db: String, props: Map[String, String]): Unit =
+  /** Publish the namespace file. On a local warehouse one listing of
+    * `<db>/` then reclaims its orphaned version files, as the table
+    * roll-forward does for `_meta/`. */
+  def alterNamespace(db: String, props: Map[String, String]): Unit = {
     writeAtomic(nsFile(db), JsonMethods.compact(JsonMethods.render(mapToJson(props))))
+    if (isLocal) reclaimVersions(nsFile(db), fs.listStatus(namespaceDir(db)).toSeq)
+  }
 
   def listNamespaces(): Seq[String] =
     if (!fs.exists(warehouse)) Nil

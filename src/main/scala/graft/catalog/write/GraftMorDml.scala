@@ -77,8 +77,8 @@ class GraftMorOperation(
     cmd: Command,
     /** The declared `graft.dml.key` columns, or None for POSITIONAL
       * merge-on-read (q121): the row identity is then the
-      * (`_file`, `_pos`) metadata pair served by
-      * [[PositionalRead]] / the plan-level rewrite. */
+      * (`_file`, `_pos`) metadata pair ([[PositionalRead]]) served by
+      * the pinned fragments of the plan-level rewrite. */
     key: Option[String],
     autoSizeUpdate: Boolean,
     writeLockTimeoutSec: Long)
@@ -179,8 +179,8 @@ private[write] class GraftMorScanBuilder(
     // means the session lacks the rule — the raw files include hidden
     // rows, and re-emitting them would resurrect deleted keys.
     // A POSITIONAL operation (q121) can never use this scan at all: its
-    // rowId is the (_file, _pos) metadata pair, which only the rewrite's
-    // V1 `_metadata` plan can produce.
+    // rowId is the (_file, _pos) metadata pair, which only the pinned
+    // fragments the rewrite plans can serve.
     op match {
       case mor: GraftMorOperation if mor.positional =>
         throw new IllegalStateException(

@@ -4,6 +4,7 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{lit, col}
 
 import graft.catalog.{GraftCatalog, GraftTable, Snapshots, TableMeta}
+import graft.catalog.write.PositionalRead
 
 /** CHANGELOG READ (q120 — CDC): the rows inserted and deleted between
   * two retained snapshots, emitted as the table's columns plus
@@ -113,13 +114,15 @@ object ChangeFeed {
 
     def pinnedDf(
         sel: Map[(String, String), (Snapshots.ResolvedDir, org.apache.hadoop.fs.FileStatus)],
-        dvs: Seq[graft.catalog.DvMeta]): DataFrame = {
+        dvs: Seq[graft.catalog.DvMeta],
+        positional: Boolean = false): DataFrame = {
       val dirs = sel.toSeq.groupBy(_._2._1.dir).map { case (dir, entries) =>
         val spec = entries.head._2._1.spec
         Snapshots.ResolvedDir(dir, spec, entries.map(_._2._2))
       }.toSeq.sortBy(_.dir)
+      val m = meta.copy(history = Nil, snapshots = Nil, deleteVectors = dvs)
       val tbl = new GraftTable(plugin, db,
-        meta.copy(history = Nil, snapshots = Nil, deleteVectors = dvs),
+        if (positional) GraftCatalog.asPositional(m) else m,
         timeTravel = true,
         pinned = Some(Snapshots.Resolved(meta.provider, dirs, dvs)))
       org.apache.spark.sql.graft.GraftSqlBridge.tableDF(spark, tbl)
@@ -176,42 +179,21 @@ object ChangeFeed {
             val appliesQ = applies.map(s =>
               qualify(new org.apache.hadoop.fs.Path(s))).toSet
             val affected = olderFiles.filter { case ((dir, fname), _) =>
-              appliesQ.contains(
-                qualify(new org.apache.hadoop.fs.Path(dir)) + "/" + fname)
+              appliesQ.contains(PositionalRead.identity(
+                new org.apache.hadoop.fs.Path(dir), fname, conf))
             }
             if (affected.isEmpty) None
-            else if (keyCol == graft.catalog.write.PositionalRead.Marker) {
-              // POSITIONAL batch (q121): deleted rows = the affected
-              // files read WITH their (_file, _pos) identities, older
-              // positional batches applied (rows already hidden before
-              // this commit are not re-deleted), SEMI-joined to this
-              // batch's recorded positions
-              import graft.catalog.write.PositionalRead
-              val dirs = affected.toSeq.groupBy(_._2._1.dir).map {
-                case (dir, entries) => Snapshots.ResolvedDir(
-                  dir, entries.head._2._1.spec, entries.map(_._2._2))
-              }.toSeq.sortBy(_.dir)
-              var base = PositionalRead.filesDf(spark, meta, dirs, withMeta = true)
-              val olderPosDirs = older.dvs
-                .filter(_.keyColumn == PositionalRead.Marker)
-                .map(d => new org.apache.hadoop.fs.Path(d.manifest)
-                  .getParent.toString)
-              if (olderPosDirs.nonEmpty)
-                base = PositionalRead.applyBatches(base,
-                  PositionalRead.keysDf(spark, olderPosDirs))
-              Some(tagged(
-                PositionalRead.applyBatches(base,
-                  PositionalRead.keysDf(spark, Seq(
-                    new org.apache.hadoop.fs.Path(dv.manifest)
-                      .getParent.toString)),
-                  joinType = "left_semi"),
-                "delete", newerMeta.version))
-            }
             else {
-              // comma-separated composite keys semi-join on the TUPLE
-              val keyFields = GraftCatalog.morKeyColumns(keyCol)
-                .map(kc => meta.schema.fields
-                  .find(_.name.equalsIgnoreCase(kc)).get)
+              // the affected files read under the OLDER dv state (rows
+              // already hidden before this commit are not re-deleted),
+              // semi-joined to this batch's keys on the TUPLE: comma-
+              // separated composite keys, or the (_file, _pos) identity
+              // the pinned scan serves for a positional batch (q121)
+              val keyFields =
+                if (keyCol == PositionalRead.Marker) PositionalRead.idFields
+                else GraftCatalog.morKeyColumns(keyCol)
+                  .map(kc => meta.schema.fields
+                    .find(_.name.equalsIgnoreCase(kc)).get)
               var keys = spark.read
                 .schema(org.apache.spark.sql.types.StructType(keyFields))
                 .parquet(new org.apache.hadoop.fs.Path(dv.manifest)
@@ -219,7 +201,8 @@ object ChangeFeed {
               keyFields.foreach { f =>
                 keys = keys.withColumnRenamed(f.name, s"__graft_dv_${f.name}")
               }
-              val base = pinnedDf(affected, older.dvs)
+              val base = pinnedDf(affected, older.dvs,
+                positional = keyCol == PositionalRead.Marker)
               val cond = keyFields
                 .map(f => base(f.name) <=> keys(s"__graft_dv_${f.name}"))
                 .reduce(_ && _)

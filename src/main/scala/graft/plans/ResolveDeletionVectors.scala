@@ -3,9 +3,9 @@ package graft.plans
 import org.apache.hadoop.fs.Path
 
 import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.expressions.EqualNullSafe
+import org.apache.spark.sql.catalyst.expressions.{AttributeReference, EqualNullSafe}
 import org.apache.spark.sql.catalyst.plans.LeftAnti
-import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, JoinHint, LocalRelation, LogicalPlan, Union}
+import org.apache.spark.sql.catalyst.plans.logical.{BROADCAST, HintInfo, Join, JoinHint, LocalRelation, LogicalPlan, Project, Union}
 import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.types.StructType
@@ -103,15 +103,17 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
 
   override def apply(plan: LogicalPlan): LogicalPlan =
     plan.transformDownWithSubqueries {
-      // any read of a table with live DV batches, PLUS (q121) a read of
-      // a positional-MOR table whose output references the (_file, _pos)
-      // metadata columns — only the rewrite's V1 `_metadata` plan can
-      // produce them (fragments the rewrite mints never reference them,
-      // so the rule cannot re-match its own output)
+      // any read of a table with live DV batches, PLUS (q121) a LIVE
+      // read of a positional-MOR table whose output references the
+      // (_file, _pos) metadata columns — only a pinned scan serves them.
+      // Pinned relations without batches (the fragments this rule mints,
+      // batch-free travel reads) serve them themselves, so the rule never
+      // re-matches its own output.
       case r: DataSourceV2Relation if r.table.isInstanceOf[GraftTable] && {
           val t = r.table.asInstanceOf[GraftTable]
           t.meta.deleteVectors.nonEmpty ||
             (graft.catalog.GraftCatalog.morPositional(t.meta) &&
+              t.pinnedResolved.isEmpty &&
               r.output.exists(a => PositionalRead.isReserved(a.name)))
         } =>
         rewrite(r, r.table.asInstanceOf[GraftTable])
@@ -180,8 +182,7 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
           .rowLevelOperationTable(r.table) match {
           // a POSITIONAL operation's delta read is ALWAYS planned here
           // (q121, any command, even with zero live batches): its rowId
-          // is the (_file, _pos) pair only the V1 `_metadata` plan can
-          // produce
+          // is the (_file, _pos) pair only the pinned fragments serve
           case Some((t: GraftTable, op: GraftMorOperation))
               if op.positional ||
                 (op.command() != Command.DELETE &&
@@ -313,8 +314,8 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
     val universe: Seq[(String, String, Map[String, String], org.apache.hadoop.fs.FileStatus)] =
       t.pinnedResolved match {
         case Some(res) => res.dirs.flatMap { rd =>
-          val qd = qualify(new Path(rd.dir))
-          rd.files.map(f => (s"$qd/${f.getPath.getName}", rd.dir, rd.spec, f))
+          rd.files.map(f => (PositionalRead.identity(
+            new Path(rd.dir), f.getPath.getName, conf), rd.dir, rd.spec, f))
         }
         case None =>
           val dirSpecs: Seq[(String, Map[String, String])] =
@@ -432,35 +433,41 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
 
     if (grouped.isEmpty) return LocalRelation(r.output)
 
-    // POSITIONAL tables (q121) take the V1 `_metadata` plan shape: the
-    // (_file, _pos) identity only exists there. Keyed tables keep the
-    // round-19 DSv2 split byte-for-byte.
-    val positional = graft.catalog.GraftCatalog.morPositional(meta) ||
-      batches.exists(_._1 == PositionalRead.Marker)
-    if (positional) return positionalUnion(spark, r, t, grouped, batches)
+    // POSITIONAL tables (q121) anti-join on the (_file, _pos) identity
+    // their pinned fragments serve. A read whose output lacks the pair
+    // (a plain read, not a delta read or a metadata-column select) gets
+    // it as extra fragment output, projected away above the join.
+    val idAttrs =
+      if (!graft.catalog.GraftCatalog.morPositional(meta)) Nil
+      else PositionalRead.idFields
+        .filterNot(f => r.output.exists(_.name.equalsIgnoreCase(f.name)))
+        .map(f => AttributeReference(f.name, f.dataType, f.nullable)())
+    val out = r.output ++ idAttrs
 
     val children: Seq[LogicalPlan] = grouped.zipWithIndex.map {
       case ((batchIdxs, dirs), i) =>
-        val sub = t.pinnedSubset(dirs)
         // head child reuses the ORIGINAL attribute ids so the rewritten
         // subtree is a drop-in for the relation it replaces
-        val base =
-          if (i == 0) DataSourceV2Relation(sub, r.output, None, None, r.options)
-          else DataSourceV2Relation.create(sub, None, None)
+        val base = DataSourceV2Relation(t.pinnedSubset(dirs),
+          if (i == 0) out else out.map(_.newInstance()), None, None, r.options)
         if (batchIdxs.isEmpty) base
         else {
-          // the batch's key declaration: one or more comma-separated
-          // columns (a composite key anti-joins on the TUPLE, null-safe
-          // per column — all key columns are NOT NULL by the DDL gate,
-          // so <=> degrades to = for the planner)
-          val keyCols =
-            graft.catalog.GraftCatalog.morKeyColumns(batches(batchIdxs.head)._1)
-          val keyAttrs = keyCols.map(kc =>
-            base.output.find(_.name.equalsIgnoreCase(kc))
-              .getOrElse(throw new IllegalStateException(
-                s"deletion-vector key '$kc' not in output of ${t.name()}")))
-          val keyFields = keyCols.map(kc => meta.schema.fields
-            .find(_.name.equalsIgnoreCase(kc)).get)
+          // the batch's key declaration: the positional identity pair, or
+          // one or more comma-separated columns (a composite key
+          // anti-joins on the TUPLE, null-safe per column — all key
+          // columns are NOT NULL by the DDL gate, so <=> degrades to =
+          // for the planner)
+          val keyCol = batches(batchIdxs.head)._1
+          def missing(kc: String) = new IllegalStateException(
+            s"deletion-vector key '$kc' not in output of ${t.name()}")
+          val keyFields =
+            if (keyCol == PositionalRead.Marker) PositionalRead.idFields
+            else graft.catalog.GraftCatalog.morKeyColumns(keyCol).map(kc =>
+              meta.schema.fields.find(_.name.equalsIgnoreCase(kc))
+                .getOrElse(throw missing(kc)))
+          val keyAttrs = keyFields.map(f =>
+            base.output.find(_.name.equalsIgnoreCase(f.name))
+              .getOrElse(throw missing(f.name)))
           // the batch group's deleted keys: tiny parquet sidecars, read
           // with an explicit schema (no inference round-trip) and —
           // while the group stays under the dvBroadcastKeys ceiling —
@@ -484,55 +491,7 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
             .reduce(org.apache.spark.sql.catalyst.expressions.And(_, _))
           Join(base, keysPlan, LeftAnti, Some(cond), hint)
         }
-    }
-    children match {
-      case Seq(one) => one
-      case many => Union(many, false, false)
-    }
-  }
-
-  /** The POSITIONAL fragment union (q121): groups whose files no batch
-    * touches stay on the untouched DSv2 scan (vectorized, pruned) unless
-    * the read itself asked for the metadata columns; touched groups (and
-    * metadata-column reads) are served by [[PositionalRead.filesDf]] —
-    * the V1 parquet plan generating `_file`/`_pos` — anti-joined to the
-    * group's recorded positions. Each child projects to the relation's
-    * output by NAME; the head child is re-aliased onto the ORIGINAL
-    * attribute ids so the rewritten subtree is a drop-in replacement. */
-  private def positionalUnion(
-      spark: SparkSession,
-      r: DataSourceV2Relation,
-      t: GraftTable,
-      grouped: Seq[(Seq[Int], Seq[Snapshots.ResolvedDir])],
-      batches: Seq[(String, Set[String], String, Long)]): LogicalPlan = {
-    import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, NamedExpression}
-    import org.apache.spark.sql.catalyst.plans.logical.Project
-    import org.apache.spark.sql.functions.col
-    val meta = t.meta
-    val needMeta = r.output.exists(a => PositionalRead.isReserved(a.name))
-    def alignTo(out: Seq[Attribute], plan: LogicalPlan): LogicalPlan =
-      Project(out.map { a =>
-        val c = plan.output.find(_.name.equalsIgnoreCase(a.name)).getOrElse(
-          throw new IllegalStateException(
-            s"positional rewrite of ${t.name()} lost column '${a.name}'"))
-        Alias(c, a.name)(exprId = a.exprId): NamedExpression
-      }, plan)
-    val children: Seq[LogicalPlan] = grouped.zipWithIndex.map {
-      case ((batchIdxs, dirs), i) =>
-        if (batchIdxs.isEmpty && !needMeta) {
-          val sub = t.pinnedSubset(dirs)
-          if (i == 0) DataSourceV2Relation(sub, r.output, None, None, r.options)
-          else DataSourceV2Relation.create(sub, None, None)
-        } else {
-          var df = PositionalRead.filesDf(spark, meta, dirs, withMeta = true)
-          if (batchIdxs.nonEmpty)
-            df = PositionalRead.applyBatches(df,
-              PositionalRead.keysDf(spark, batchIdxs.map(bi => batches(bi)._3)))
-          val projected =
-            df.select(r.output.map(a => col(a.name)): _*).queryExecution.analyzed
-          if (i == 0) alignTo(r.output, projected) else projected
-        }
-    }
+    }.map(c => if (idAttrs.isEmpty) c else Project(c.output.take(r.output.size), c))
     children match {
       case Seq(one) => one
       case many => Union(many, false, false)

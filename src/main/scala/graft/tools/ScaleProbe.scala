@@ -135,7 +135,7 @@ object ScaleProbe {
     "q120b_changelog_row_granular",
     // round-20: q121's positional merge-on-read — the keyless seed is
     // the linear write term; DELETE/UPDATE/MERGE ship (file, pos)
-    // pairs + replacement rows ∝ rows changed; the V1 `_metadata`
+    // pairs + replacement rows ∝ rows changed; the pinned-fragment
     // delta reads and the (file,pos) anti-joins are ∝ scanned bytes +
     // positions, with condition pruning bounding the delta universe —
     // the claim is the same no-partition-rewrite property as q119

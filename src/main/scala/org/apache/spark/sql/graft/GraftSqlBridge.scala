@@ -114,6 +114,79 @@ class GraftScanBuilder(
   }
 }
 
+/** The pinned parquet scan of a POSITIONAL merge-on-read table (q121),
+  * serving the row ordinal `_pos` (`posCol`) from the parquet reader's own
+  * row-index generator: both the vectorized and the row reader fill a
+  * requested field named `ParquetFileFormat.ROW_INDEX_TEMPORARY_COLUMN_NAME`
+  * with each row's index within its file, also when pushed filters
+  * skip row groups. This builder requests `_pos` under that
+  * name and reports it back as `_pos`: the plan binds scan output by
+  * name, execution by position and type. Filters on `_pos` stay
+  * post-scan filters — the parquet filter converters only know the
+  * file's columns, so a row-index predicate never prunes row groups.
+  * `_file` needs nothing here: it is a partition value of
+  * [[graft.catalog.GraftPinnedFileIndex]]. Aggregate push-down is
+  * forwarded for aggregates that do not read `_pos` (parquet footers
+  * know nothing of it); variant extraction is not, as in
+  * [[GraftScanBuilder]]. */
+class GraftRowIndexScanBuilder(
+    inner: org.apache.spark.sql.execution.datasources.v2.FileScanBuilder,
+    posCol: String)
+  extends org.apache.spark.sql.connector.read.ScanBuilder
+  with org.apache.spark.sql.connector.read.SupportsPushDownRequiredColumns
+  with org.apache.spark.sql.internal.connector.SupportsPushDownCatalystFilters
+  with org.apache.spark.sql.connector.read.SupportsPushDownAggregates {
+  import org.apache.spark.sql.connector.read.{Batch, Scan, Statistics, SupportsPushDownAggregates, SupportsReportStatistics}
+  import org.apache.spark.sql.connector.expressions.aggregate.Aggregation
+  import org.apache.spark.sql.execution.datasources.v2.FileScan
+  import org.apache.spark.sql.internal.connector.SupportsMetadata
+
+  private val rowIndex =
+    org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
+      .ROW_INDEX_TEMPORARY_COLUMN_NAME
+  private var pos: Option[StructField] = None
+
+  override def pruneColumns(requiredSchema: StructType): Unit = {
+    pos = requiredSchema.find(_.name == posCol)
+    inner.pruneColumns(StructType(requiredSchema.map(f =>
+      // nullable: the reader refuses a required column the file lacks
+      if (pos.contains(f)) f.copy(name = rowIndex, nullable = true) else f)))
+  }
+  override def pushFilters(filters: Seq[Expression]): Seq[Expression] =
+    inner.pushFilters(filters)
+  override def pushedFilters: Array[
+      org.apache.spark.sql.connector.expressions.filter.Predicate] =
+    inner.pushedFilters
+  private def pushable(aggregation: Aggregation): Option[SupportsPushDownAggregates] =
+    inner match {
+      case a: SupportsPushDownAggregates if !(aggregation.groupByExpressions ++
+          aggregation.aggregateExpressions).exists(_.references.exists(
+            _.fieldNames.exists(_.equalsIgnoreCase(posCol)))) => Some(a)
+      case _ => None
+    }
+  override def pushAggregation(aggregation: Aggregation): Boolean =
+    pushable(aggregation).exists(_.pushAggregation(aggregation))
+  override def supportCompletePushDown(aggregation: Aggregation): Boolean =
+    pushable(aggregation).exists(_.supportCompletePushDown(aggregation))
+
+  override def build(): Scan = {
+    val scan = inner.build().asInstanceOf[FileScan]
+    pos.fold[Scan](scan) { p =>
+      val schema = StructType(scan.readSchema().map(f =>
+        if (f.name == rowIndex) p else f))
+      new SupportsReportStatistics with SupportsMetadata {
+        override def readSchema(): StructType = schema
+        override def toBatch: Batch = scan.toBatch
+        override def description(): String = scan.description()
+        override def estimateStatistics(): Statistics = scan.estimateStatistics()
+        override def getMetaData(): Map[String, String] = scan.getMetaData()
+        override def columnarSupportMode(): Scan.ColumnarSupportMode =
+          scan.columnarSupportMode()
+      }
+    }
+  }
+}
+
 /** The delegated file scan behind every graft parquet/csv/json/orc
   * table that needs more than the stock scan: runtime filtering,
   * ANALYZE statistics, and the keyed layouts of [[RuntimePruning]] —
@@ -883,53 +956,6 @@ object GraftSqlBridge {
       // rows. With None/None the plan can only ever mean this instance.
       org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
         .create(table, None, None))
-
-  /** A V1 parquet DataFrame over an EXPLICIT, ALREADY-LISTED file set —
-    * the positional merge-on-read read path's building block (q121).
-    * `spark.read.parquet(paths)` would re-`getFileStatus` every path on
-    * the driver at each planning pass; the planner already HOLDS the
-    * statuses (from the seq-keyed listing cache or a pinned snapshot),
-    * so this serves them through a pinned [[FileIndex]] with zero
-    * filesystem calls. The V1 relation keeps the whole standard surface:
-    * vectorized parquet, predicate pushdown into row groups, column
-    * pruning, and the `_metadata` struct (`file_path`/`row_index`) the
-    * positional identity is built from. */
-  def pinnedParquetDF(
-      spark: org.apache.spark.sql.SparkSession,
-      dataSchema: org.apache.spark.sql.types.StructType,
-      files: Seq[org.apache.hadoop.fs.FileStatus],
-      options: Map[String, String]): org.apache.spark.sql.DataFrame = {
-    import org.apache.spark.sql.catalyst.InternalRow
-    import org.apache.spark.sql.catalyst.expressions.Expression
-    import org.apache.spark.sql.execution.datasources.{FileIndex, FileStatusWithMetadata, HadoopFsRelation, LogicalRelation, PartitionDirectory}
-    import org.apache.spark.sql.types.StructType
-    val index = new FileIndex {
-      override def rootPaths: Seq[org.apache.hadoop.fs.Path] =
-        files.map(_.getPath)
-      override def listFiles(
-          partitionFilters: Seq[Expression],
-          dataFilters: Seq[Expression]): Seq[PartitionDirectory] =
-        Seq(PartitionDirectory(InternalRow.empty,
-          files.map(FileStatusWithMetadata(_))))
-      override def inputFiles: Array[String] =
-        files.map(_.getPath.toString).toArray
-      override def refresh(): Unit = ()
-      override def sizeInBytes: Long = files.map(_.getLen).sum
-      override def partitionSchema: StructType = StructType(Nil)
-    }
-    val relation = HadoopFsRelation(
-      location = index,
-      partitionSchema = StructType(Nil),
-      dataSchema = dataSchema,
-      bucketSpec = None,
-      fileFormat =
-        new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat,
-      options = options)(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession])
-    org.apache.spark.sql.classic.Dataset.ofRows(
-      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession],
-      LogicalRelation(relation))
-  }
 
   /** A pushed V1 source filter as Catalyst over unresolved column
     * names, through Spark's own translations (`Filter.toV2`, then

@@ -364,4 +364,27 @@ class MetaStoreSpec extends AnyFunSuite {
     assert(names(file.getParent) === Set("t.json"),
       "the link's old version file goes with the first fallback publish")
   }
+
+  test("an orphaned namespace version file is reclaimed by the next namespace publish; a fresh one is kept") {
+    val s = freshStore()
+    s.createNamespace("db", Map("owner" -> "me"))
+    val dir = java.nio.file.Paths.get(s.namespaceDir("db").toUri.getPath)
+    val old = java.nio.file.attribute.FileTime.fromMillis(System.currentTimeMillis() - 120000L)
+    val stale = dir.resolve("._namespace.json.v-stale")
+    val fresh = dir.resolve("._namespace.json.v-fresh")
+    Seq(stale, fresh).foreach(f => Files.write(f, "{}".getBytes("UTF-8")))
+    Files.setLastModifiedTime(stale, old)
+    // the live target is older than the window too: the publish itself
+    // replaces it; the reclaim is what removes the stale orphan
+    val live = dir.resolve(Files.readSymbolicLink(dir.resolve("_namespace.json")))
+    Files.setLastModifiedTime(live, old)
+    s.alterNamespace("db", Map("owner" -> "you"))
+    assert(!Files.exists(stale), "a stale orphan must be reclaimed")
+    assert(Files.exists(fresh), "a fresh version file may be a publish in flight")
+    val target = dir.resolve(Files.readSymbolicLink(dir.resolve("_namespace.json")))
+    assert(Files.exists(target))
+    assert(s.loadNamespace("db") === Map("owner" -> "you"))
+    assert(names(dir).filter(_.startsWith("._namespace.json.v-")) ===
+      Set(target.getFileName.toString, fresh.getFileName.toString))
+  }
 }

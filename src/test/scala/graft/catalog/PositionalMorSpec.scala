@@ -453,4 +453,183 @@ class PositionalMorSpec extends AnyFunSuite with SparkFixture {
     assert(rows(t) === Seq((1L, 1.0, "a"), (2L, 2.0, "a"),
       (4L, 4.0, "b"), (101L, 1011.0, "a")))
   }
+
+  /** Session confs set for the duration of `body`, then restored (or
+    * unset when they were absent). */
+  private def withConfs[A](kvs: (String, String)*)(body: => A): A = {
+    val saved = kvs.map { case (k, _) => k -> spark.conf.getOption(k) }
+    kvs.foreach { case (k, v) => spark.conf.set(k, v) }
+    try body
+    finally saved.foreach {
+      case (k, Some(v)) => spark.conf.set(k, v)
+      case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  /** The positional identity format, pinned byte for byte: `_file` is
+    * the qualified ORIGINAL directory plus the basename, for live files
+    * and for files retired into a retirement area, and a DELETE's
+    * sidecar records exactly those strings — so sidecars written by
+    * any earlier release keep applying. */
+  test("_file is the qualified original dir + basename, live and retired, and the sidecar records it") {
+    val t = freshTable("p_ident")
+    createPos(t)
+    val conf = spark.sessionState.newHadoopConf()
+    val m = meta(t)
+    // the formula, computed from the descriptor and a raw listing
+    val expected: Set[String] = m.partitions.flatMap { p =>
+      val dir = new Path(graft.catalog.write.GraftBatchWrite.partitionDir(m, p.spec).toString)
+      val fs = dir.getFileSystem(conf)
+      val id = fs.makeQualified(dir).toString
+      fs.listStatus(dir).toSeq
+        .filter(s => s.isFile && !s.getPath.getName.startsWith("_") &&
+          !s.getPath.getName.startsWith("."))
+        .map(s => s"$id/${s.getPath.getName}")
+    }.toSet
+    def ids(sql: String): Set[String] =
+      spark.sql(sql).collect().map(_.getString(0)).toSet
+    assert(expected.nonEmpty)
+    assert(ids(s"SELECT _file FROM $t") === expected)
+    // the DELETE's sidecar pairs are exactly the pairs a read reports
+    val victims = spark.sql(s"SELECT _file, _pos FROM $t WHERE id IN (1, 3)")
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(victims.size === 3)
+    spark.sql(s"DELETE FROM $t WHERE id IN (1, 3)")
+    val dv = meta(t).deleteVectors.head
+    val sidecar = spark.read.parquet(new Path(dv.manifest).getParent.toString)
+      .collect().map(r => (r.getString(0), r.getLong(1))).toSet
+    assert(sidecar === victims)
+    val afterDelete = ids(s"SELECT _file FROM $t")
+    assert(afterDelete.nonEmpty && afterDelete.subsetOf(expected))
+    // retire partition a's files: the travel read still names them by
+    // their original directory, and the positions still apply
+    spark.table(t).where("p = 'a'")
+      .withColumn("v", org.apache.spark.sql.functions.col("v") + 0.5)
+      .writeTo(t).overwritePartitions()
+    assert(ids(s"SELECT _file FROM $t VERSION AS OF 1") === afterDelete)
+    assert(spark.sql(s"SELECT _file, _pos FROM $t VERSION AS OF 1").collect()
+      .map(r => (r.getString(0), r.getLong(1))).toSet.intersect(victims).isEmpty)
+    val live = ids(s"SELECT _file FROM $t WHERE p = 'a'")
+    assert(live.nonEmpty && live.intersect(expected).isEmpty,
+      "the overwrite's new files carry their own identities")
+  }
+
+  /** `_pos` is the parquet reader's row index: it must run 0..n-1 per
+    * file past the first vectorized batch (4,096 rows) and across row
+    * groups, stay exact when a pushed data filter skips row groups,
+    * and filters on `_pos`/`_file` must select exactly their rows — a
+    * `_pos` filter must never prune row groups (the file has no such
+    * column), and `_file` is a partition value. Both parquet readers. */
+  test("row indexes stay exact past the first batch and row group, under pushed filters, both readers") {
+    val n = 10000L
+    Seq("true", "false").foreach { vectorized =>
+      withConfs("parquet.block.size" -> "16384",
+          "spark.sql.parquet.enableVectorizedReader" -> vectorized) {
+        val t = freshTable(s"p_rowidx_$vectorized")
+        spark.sql(s"CREATE TABLE $t (id BIGINT, v DOUBLE) " +
+          "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
+        spark.range(0, n).selectExpr("id", "CAST(id AS DOUBLE) AS v")
+          .coalesce(1).writeTo(t).append()
+        val loc = new Path(meta(t).location)
+        val fs = loc.getFileSystem(spark.sessionState.newHadoopConf())
+        val files = fs.listStatus(loc).toSeq.filter(s => s.isFile &&
+          !s.getPath.getName.startsWith("_") && !s.getPath.getName.startsWith("."))
+        assert(files.size === 1)
+        val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(
+            files.head, spark.sessionState.newHadoopConf()))
+        val rowGroups = try reader.getRowGroups.size finally reader.close()
+        assert(rowGroups > 2, s"expected several row groups, got $rowGroups")
+
+        // positions run 0..n-1 and follow the write order
+        val all = spark.sql(s"SELECT id, _pos FROM $t").collect()
+          .map(r => (r.getLong(0), r.getLong(1)))
+        assert(all.map(_._2).sorted.toSeq === (0L until n))
+        assert(all.forall { case (id, pos) => id == pos })
+
+        // a DELETE whose pushed filter skips every earlier row group
+        val late = n - 7
+        spark.sql(s"DELETE FROM $t WHERE id = $late")
+        val sidecar = spark.read
+          .parquet(new Path(meta(t).deleteVectors.head.manifest).getParent.toString)
+          .collect().map(_.getLong(1)).toSeq
+        assert(sidecar === Seq(late), s"vectorized=$vectorized")
+        assert(spark.sql(s"SELECT id FROM $t WHERE id >= ${late - 3}")
+          .collect().map(_.getLong(0)).sorted.toSeq ===
+          ((late - 3) until n).filterNot(_ == late))
+        assert(spark.table(t).count() === n - 1)
+
+        // metadata-column filters select exactly their rows
+        assert(spark.sql(s"SELECT id FROM $t WHERE _pos = 5000")
+          .collect().map(_.getLong(0)).toSeq === Seq(5000L))
+        assert(spark.sql(s"SELECT id FROM $t WHERE _pos = $late").count() === 0)
+        val file = spark.sql(s"SELECT _file FROM $t LIMIT 1").collect().head.getString(0)
+        assert(spark.sql(s"SELECT id FROM $t WHERE _file = '$file'").count() === n - 1)
+        assert(spark.sql(s"SELECT id FROM $t WHERE _file = '${file}x'").count() === 0)
+        assert(spark.sql(s"SELECT id FROM $t WHERE _file = '$file' AND _pos > ${n - 10}")
+          .collect().map(_.getLong(0)).sorted.toSeq ===
+          ((n - 9) until n).filterNot(_ == late))
+      }
+    }
+  }
+
+  /** `sys.compact` empties the live list, after which ALTER may declare a
+    * key; retained snapshots still hold the positional batches. A travel
+    * read of such a version, and the changelog over its commit, still
+    * apply them on (_file, _pos) — the batches, not the current
+    * declaration, make a read positional. */
+  test("positional batches in retained snapshots apply after the table is re-declared keyed") {
+    val t = freshTable("p_rekey")
+    spark.sql(
+      s"""CREATE TABLE $t (id BIGINT NOT NULL, v DOUBLE, p STRING)
+         |PARTITIONED BY (p)
+         |TBLPROPERTIES ('graft.dml.mode'='merge-on-read')
+         |""".stripMargin)
+    spark.sql(s"INSERT INTO $t VALUES " +
+      "(1, 10.0, 'a'), (1, 10.0, 'a'), (2, 20.0, 'a'), (3, 30.0, 'b')")
+    spark.sql(s"DELETE FROM $t WHERE id = 1")
+    val afterDelete = rows(t)
+    assert(afterDelete === Seq((2L, 20.0, "a"), (3L, 30.0, "b")))
+    spark.sql(s"CALL ${GraftBootstrap.CatalogName}.sys.compact('$t')")
+    assert(meta(t).deleteVectors.isEmpty)
+    spark.sql(s"ALTER TABLE $t SET TBLPROPERTIES ('graft.dml.key'='id')")
+    assert(rows(t) === afterDelete)
+    val back = meta(t).snapshots.indexWhere(_.kind == "dml-mor")
+    assert(back >= 1, s"no retained dml-mor snapshot: ${meta(t).snapshots}")
+    val travel = spark.sql(s"SELECT * FROM $t VERSION AS OF $back").collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2))).toSeq.sorted
+    assert(travel === afterDelete)
+    assert(spark.sql(s"SELECT _file, _pos FROM $t VERSION AS OF $back").count() === 2)
+    val changes = graft.operators.ChangeFeed
+      .changesBetween(spark, t, fromVersionsBack = back + 1, toVersionsBack = back)
+      .collect()
+      .map(r => (r.getLong(0), r.getDouble(1), r.getString(2),
+        r.getString(3))).toSeq.sorted
+    assert(changes === Seq((1L, 10.0, "a", "delete"), (1L, 10.0, "a", "delete")))
+    // a keyed DELETE now records a keyed batch on the same files
+    spark.sql(s"DELETE FROM $t WHERE id = 2")
+    assert(rows(t) === Seq((3L, 30.0, "b")))
+  }
+
+  /** The pinned positional scan keeps the parquet builder's aggregate
+    * push-down for aggregates that do not read `_pos`; one over `_pos`
+    * is computed above the scan. */
+  test("pinned positional scans push aggregates down unless they read _pos") {
+    val t = freshTable("p_aggpush")
+    spark.sql(s"CREATE TABLE $t (id BIGINT, v DOUBLE) " +
+      "TBLPROPERTIES ('graft.dml.mode'='merge-on-read')")
+    spark.range(0, 100).selectExpr("id", "CAST(id AS DOUBLE) AS v")
+      .coalesce(1).writeTo(t).append()
+    spark.sql(s"INSERT INTO $t VALUES (1000, 0.0)")
+    withConfs("spark.sql.parquet.aggregatePushdown" -> "true") {
+      val q = spark.sql(s"SELECT max(id), count(*) FROM $t VERSION AS OF 1")
+      val r = q.collect().head
+      assert((r.getLong(0), r.getLong(1)) === ((99L, 100L)))
+      val plan = q.queryExecution.executedPlan.toString
+      assert(plan.contains("PushedAggregation: [MAX(id), COUNT(*)]"), plan)
+      val p = spark.sql(s"SELECT max(_pos), count(*) FROM $t VERSION AS OF 1")
+        .collect().head
+      assert((p.getLong(0), p.getLong(1)) === ((99L, 100L)))
+    }
+  }
 }
