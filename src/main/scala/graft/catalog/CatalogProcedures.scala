@@ -154,8 +154,8 @@ object CatalogProcedures {
       "rollback",
       "undo the last versions_back commits: an in-place commit (append/" +
         "overwrite/truncate/DELETE/DML/epoch) restores its snapshot's " +
-        "exact file set by renames (redo-able); a rewrite flip (migrate/" +
-        "zorder) re-points the descriptor at the retired generation. " +
+        "exact file set by renames (redo-able); a rewrite flip (compact/" +
+        "migrate/zorder) re-points the descriptor at the retired generation. " +
         "See <table>$snapshots / <table>$history for what is restorable",
       Array(param("table", StringType),
         paramDefault("versions_back", LongType, "1")),
@@ -194,11 +194,10 @@ object CatalogProcedures {
         df.createOrReplaceTempView(view)
         // the slice's file count from the same manifest diff (the V2
         // relation's inputFiles is empty before pushdown)
-        val tp = t.split("\\.")
-        val plugin = spark.sessionState.catalogManager.catalog(tp(0))
-          .asInstanceOf[GraftCatalog]
+        val (plugin, Array(db, name)) =
+          GraftCatalog.resolve(spark, t, "appendedBetween")
         val files = Snapshots.addedBetween(spark,
-          plugin.metaStore.loadTable(tp(1), tp(2)), from, to)
+          plugin.metaStore.loadTable(db, name), from, to)
           .dirs.map(_.files.size.toLong).sum
         InternalRow(utf8(view), files)
       }),
@@ -237,9 +236,10 @@ object CatalogProcedures {
     "compact" -> new GraftProcedure(
       "compact",
       "rewrite a fragmented table: partitioned tables via dynamic " +
-        "self-overwrite in place, unpartitioned via a staged-rewrite " +
-        "generation flip (both under the write-permit lease, honoring " +
-        "graft.cluster.by); also FOLDS merge-on-read deletion vectors",
+        "self-overwrite in place, unpartitioned via a relocating rewrite " +
+        "(a staged generation and one descriptor flip, rollback-able; " +
+        "both under the write-permit lease, honoring graft.cluster.by); " +
+        "also FOLDS merge-on-read deletion vectors",
       Array(param("table", StringType)),
       StructType(Seq(StructField("table", StringType, nullable = false))),
       in => {
@@ -253,7 +253,8 @@ object CatalogProcedures {
         "numeric columns (comma list) into target_files files — every " +
         "file gets a tight per-column min/max box, so q109's skip-stats " +
         "manifest prunes on ANY of the columns (the OPTIMIZE ZORDER " +
-        "capability; staged-rewrite crash model shared with migrate)",
+        "capability; the relocating rewrite shared with compact and " +
+        "migrate: a staged generation and one descriptor flip)",
       Array(param("table", StringType),
         param("columns", StringType),
         paramDefault("target_files", LongType, "32")),
@@ -284,20 +285,14 @@ object CatalogProcedures {
         StructField("size_in_bytes", LongType, nullable = false),
         StructField("columns_analyzed", LongType, nullable = false))),
       in => {
-        val parts = in.getUTF8String(0).toString.split("\\.")
-        require(parts.length == 3, s"analyze expects catalog.ns.table")
+        val table = in.getUTF8String(0).toString
+        val (plugin, Array(db, name)) = GraftCatalog.resolve(spark, table, "analyze")
         val colsArg =
           if (in.isNullAt(1)) "" else in.getUTF8String(1).toString.trim
         val histBins = if (in.isNullAt(2)) 0 else in.getLong(2).toInt
         require(histBins >= 0 && histBins <= 254,
           s"histogram_bins must be in [0, 254], got $histBins")
-        val plugin = spark.sessionState.catalogManager.catalog(parts(0)) match {
-          case g: GraftCatalog => g
-          case other => throw new IllegalArgumentException(
-            s"analyze: not a graft catalog: ${other.name()}")
-        }
         val store = plugin.metaStore
-        val (db, name) = (parts(1), parts(2))
         val conf = spark.sessionState.newHadoopConf()
         // PERMIT-FREE sizing: only COMMITTED data is counted. A
         // concurrent append's uncommitted bytes live under hidden names
@@ -349,7 +344,7 @@ object CatalogProcedures {
           if (selected.isEmpty) None
           else {
             import org.apache.spark.sql.functions._
-            val df = spark.table(s"${parts(0)}.$db.$name")
+            val df = spark.table(table)
             val aggs = statAggs(selected, histBins)
             val row = df.agg(aggs.head, aggs.tail: _*).head()
             // pass 2 (only when histograms were requested): per-bin
@@ -404,7 +399,7 @@ object CatalogProcedures {
             val perPartCols = selected.filterNot(f =>
               pcs.exists(_.equalsIgnoreCase(f.name)))
             val aggs = statAggs(perPartCols, histBins)
-            spark.table(s"${parts(0)}.$db.$name")
+            spark.table(table)
               .groupBy(pcs.map(col): _*)
               .agg(aggs.head, aggs.tail: _*).collect().map { r =>
                 pcs.zipWithIndex.map { case (c, i) =>

@@ -320,7 +320,8 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
         "already reclaimed by the namespace vacuum")
     new GraftTable(this, asSingle(ident.namespace),
       meta.copy(provider = g.provider, location = g.location,
-        partitions = g.partitions, stats = g.stats, history = Nil),
+        partitions = g.partitions, stats = g.stats,
+        deleteVectors = g.deleteVectors, history = Nil),
       timeTravel = true)
   }
 
@@ -980,6 +981,21 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
 }
 
 object GraftCatalog {
+  /** Resolve an operator's `catalog.ns.table` argument (`catalog.ns`
+    * with that `shape`) to its graft catalog and the name parts after
+    * the catalog; `op` names the caller in the refusals. */
+  private[graft] def resolve(spark: SparkSession, name: String, op: String,
+      shape: String = "catalog.ns.table"): (GraftCatalog, Array[String]) = {
+    val parts = name.split("\\.")
+    require(parts.length == shape.split("\\.").length,
+      s"$op expects $shape, got $name")
+    spark.sessionState.catalogManager.catalog(parts.head) match {
+      case g: GraftCatalog => (g, parts.tail)
+      case other => throw new IllegalArgumentException(
+        s"$op($name): not a graft catalog: ${other.name()}")
+    }
+  }
+
   /** Bucket spec recorded from a `CLUSTERED BY ... INTO n BUCKETS`
     * transform. Catalog-managed: settable only via the create transform,
     * guarded against ALTER, never forwarded as a format option. */

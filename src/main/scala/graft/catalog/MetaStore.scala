@@ -96,16 +96,18 @@ object PartitionMeta {
 
 /** One RETIRED generation of a table — everything a rollback needs to
   * re-point the descriptor at it: the provider, the root location, the
-  * partition registrations and the stats as they were at the flip. The
-  * data itself stays on disk until the namespace vacuum's retention
-  * window expires (the migrate trade), so a rollback within the window
-  * is a pure descriptor flip — no data movement. */
+  * partition registrations, the stats and the live deletion-vector
+  * batches as they were at the flip. The data itself stays on disk
+  * until the namespace vacuum's retention window expires (the migrate
+  * trade), so a rollback within the window is a pure descriptor flip —
+  * no data movement. */
 case class GenerationMeta(
     provider: String,
     location: String,
     partitions: Seq[PartitionMeta],
     stats: Option[TableStats],
-    retiredAtMs: Long)
+    retiredAtMs: Long,
+    deleteVectors: Seq[DvMeta] = Nil)
 
 /** One live DELETION-VECTOR batch of a merge-on-read table (q119): the
   * sidecar a MOR DELETE / UPDATE / MERGE commit registers instead of
@@ -145,8 +147,10 @@ case class SnapshotMeta(
   * /root/reference/.../V2Table.scala:37-38).
   *
   * `history` records the last [[TableMeta.MaxHistory]] retired
-  * generations, newest first — appended by the staged-rewrite flips
-  * (migrate, zorder, rollback itself), never by in-place writes. */
+  * generations, newest first — appended by the relocating rewrites'
+  * flips ([[graft.operators.Relocate]]: unpartitioned compaction,
+  * migrate, zorder, generation rollback) and by deep rollbacks across
+  * them, never by in-place writes. */
 case class TableMeta(
     name: String,
     schemaJson: String,
@@ -188,7 +192,7 @@ case class TableMeta(
   /** The current generation captured as a history entry (for the flip
     * that is about to retire it). */
   def asGeneration(retiredAtMs: Long): GenerationMeta =
-    GenerationMeta(provider, location, partitions, stats, retiredAtMs)
+    GenerationMeta(provider, location, partitions, stats, retiredAtMs, deleteVectors)
 
   def schema: StructType = DataType.fromJson(schemaJson).asInstanceOf[StructType]
   /** Case-insensitive partition-column resolution: Spark resolves
@@ -815,6 +819,27 @@ object MetaStore {
        else List("colStats" -> colStatsJson(p.colStats))))
   }.toList)
 
+  private def dvsJson(dvs: Seq[DvMeta]): JValue = JArray(dvs.map { d =>
+    JObject(List(
+      "token" -> JString(d.token),
+      "keyColumn" -> JString(d.keyColumn),
+      "manifest" -> JString(d.manifest),
+      "keys" -> JLong(d.keys),
+      "createdAtMs" -> JLong(d.createdAtMs)))
+  }.toList)
+
+  private def dvsFromJson(jv: JValue): Seq[DvMeta] = jv match {
+    case JArray(items) => items.flatMap { it =>
+      ((it \ "token"), (it \ "keyColumn"), (it \ "manifest")) match {
+        case (JString(t), JString(k), JString(mf)) =>
+          Some(DvMeta(t, k, mf, jlongOpt(it \ "keys").getOrElse(0L),
+            jlongOpt(it \ "createdAtMs").getOrElse(0L)))
+        case _ => None
+      }
+    }
+    case _ => Nil
+  }
+
   def toJson(m: TableMeta): String = {
     val stats: JValue = statsJson(m.stats)
     val parts: JValue = partsJson(m.partitions)
@@ -824,7 +849,11 @@ object MetaStore {
         "location" -> JString(g.location),
         "partitions" -> partsJson(g.partitions),
         "stats" -> statsJson(g.stats),
-        "retiredAtMs" -> JLong(g.retiredAtMs)))
+        "retiredAtMs" -> JLong(g.retiredAtMs)) ++
+        // emitted only when present: generations without batches keep
+        // the descriptor bytes they had before the field existed
+        (if (g.deleteVectors.isEmpty) Nil
+         else List("deleteVectors" -> dvsJson(g.deleteVectors))))
     }.toList)
     val root = JObject(List(
       "name" -> JString(m.name),
@@ -847,14 +876,7 @@ object MetaStore {
       }.toList),
       "lastSnapshotVersion" -> JLong(m.lastSnapshotVersion),
       "seq" -> JLong(m.seq),
-      "deleteVectors" -> JArray(m.deleteVectors.map { d =>
-        JObject(List(
-          "token" -> JString(d.token),
-          "keyColumn" -> JString(d.keyColumn),
-          "manifest" -> JString(d.manifest),
-          "keys" -> JLong(d.keys),
-          "createdAtMs" -> JLong(d.createdAtMs)))
-      }.toList)))
+      "deleteVectors" -> dvsJson(m.deleteVectors)))
     JsonMethods.pretty(JsonMethods.render(root))
   }
 
@@ -953,7 +975,7 @@ object MetaStore {
               case _ => 0L
             }
             Some(GenerationMeta(pv, lc, partsFromJson(it \ "partitions"),
-              statsFromJson(it \ "stats"), at))
+              statsFromJson(it \ "stats"), at, dvsFromJson(it \ "deleteVectors")))
           case _ => None
         }
       }
@@ -983,19 +1005,9 @@ object MetaStore {
       }
       case _ => Nil
     }
-    val deleteVectors: Seq[DvMeta] = (j \ "deleteVectors") match {
-      case JArray(items) => items.flatMap { it =>
-        ((it \ "token"), (it \ "keyColumn"), (it \ "manifest")) match {
-          case (JString(t), JString(k), JString(mf)) =>
-            Some(DvMeta(t, k, mf, jl(it \ "keys"), jl(it \ "createdAtMs")))
-          case _ => None
-        }
-      }
-      case _ => Nil
-    }
     TableMeta(str("name"), str("schemaJson"), str("provider"), partCols,
       str("location"), (j \ "external") == JBool(true), jsonToMap(j \ "properties"),
       stats, parts, history, createdAt, snapshots, jl(j \ "lastSnapshotVersion"),
-      deleteVectors, jl(j \ "seq"))
+      dvsFromJson(j \ "deleteVectors"), jl(j \ "seq"))
   }
 }

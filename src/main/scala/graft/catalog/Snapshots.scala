@@ -373,6 +373,32 @@ object Snapshots extends Logging {
     val meta = store.loadTable(db, table)
     if (meta.external) return
     val conf = spark.sessionState.newHadoopConf()
+    val head = record(conf, meta, kind, token, touchedDirs,
+      System.currentTimeMillis())
+    gc(conf, store.updateTable(db, table)(withHead(_, head)))
+    ()
+  } catch { case NonFatal(e) =>
+    logWarning(s"snapshot maintenance failed for $db.$table — clearing the " +
+      s"lineage (time travel refuses until commits rebuild it): $e")
+    try store.updateTable(db, table)(_.copy(snapshots = Nil))
+    catch { case NonFatal(_) => }
+  }
+
+  /** Write the snapshot and shard files that record `meta` — a
+    * descriptor about to be published — as version
+    * `meta.lastSnapshotVersion + 1`, and return its lineage entry
+    * (publish it with [[withHead]]). A caller that publishes the
+    * descriptor and its snapshot in ONE update calls this inside the
+    * update, so a CAS retry on a moved version records afresh. Throws
+    * on failure; the caller keeps the advisory rule by publishing with
+    * the lineage cleared. */
+  private[graft] def record(
+      conf: Configuration,
+      meta: TableMeta,
+      kind: String,
+      token: String,
+      touchedDirs: Seq[String],
+      tsMs: Long): SnapshotMeta = {
     val root = new Path(meta.location)
     val fs = root.getFileSystem(conf)
     val dirSpecs: Seq[(String, Map[String, String])] =
@@ -404,33 +430,18 @@ object Snapshots extends Logging {
       }
       SnapDir(qd, spec, shard)
     }
-    val now = System.currentTimeMillis()
     val sf = new Path(snapDir, s"snap-$v.json")
     writeSnap(fs, sf,
-      Snap(v, now, kind, token, meta.provider, qualStr(conf, meta.location), dirs,
+      Snap(v, tsMs, kind, token, meta.provider, qualStr(conf, meta.location), dirs,
         meta.deleteVectors))
-    val updated = store.updateTable(db, table) { cur =>
-      cur.copy(
-        snapshots = (SnapshotMeta(v, now, kind,
-          fs.makeQualified(sf).toString) +: cur.snapshots)
-          .take(keep(cur.properties)),
-        lastSnapshotVersion = v)
-    }
-    gc(conf, updated)
-    ()
-  } catch { case NonFatal(e) =>
-    logWarning(s"snapshot maintenance failed for $db.$table — clearing the " +
-      s"lineage (time travel refuses until commits rebuild it): $e")
-    try store.updateTable(db, table)(_.copy(snapshots = Nil))
-    catch { case NonFatal(_) => }
+    SnapshotMeta(v, tsMs, kind, fs.makeQualified(sf).toString)
   }
 
-  /** The rewrite-flip hook (migrate / zorder / generation rollback): the
-    * location changed wholesale, so no parent shard pointer can match —
-    * every registered directory of the NEW generation lists fresh. */
-  def recordRewrite(
-      spark: SparkSession, store: MetaStore, db: String, table: String): Unit =
-    maintain(spark, store, db, table, "rewrite", "", Nil)
+  /** `meta` with `head` as its newest retained snapshot. */
+  private[graft] def withHead(meta: TableMeta, head: SnapshotMeta): TableMeta =
+    meta.copy(
+      snapshots = (head +: meta.snapshots).take(keep(meta.properties)),
+      lastSnapshotVersion = head.version)
 
   /** Delete snapshot/shard files and retired-token dirs that no RETAINED
     * snapshot can need. Precise, not time-based: a token (the retirement
@@ -438,7 +449,7 @@ object Snapshots extends Logging {
     * snapshot OLDER than v is retained — those are the snapshots whose
     * file sets still include the retired files. Runs under the write
     * permit. Returns (files, bytes) reclaimed. */
-  private[catalog] def gc(conf: Configuration, meta: TableMeta): (Long, Long) = try {
+  private[graft] def gc(conf: Configuration, meta: TableMeta): (Long, Long) = try {
     val root = new Path(meta.location)
     val fs = root.getFileSystem(conf)
     var files = 0L

@@ -58,15 +58,8 @@ object ChangeFeed {
     require(fromVersionsBack > toVersionsBack && toVersionsBack >= 0,
       s"changesBetween($table): need from > to >= 0 in versions_back, " +
         s"got from=$fromVersionsBack to=$toVersionsBack")
-    val parts = table.split("\\.")
-    require(parts.length == 3,
-      s"changesBetween expects catalog.ns.table, got $table")
-    val plugin = spark.sessionState.catalogManager.catalog(parts.head) match {
-      case g: GraftCatalog => g
-      case other => throw new IllegalArgumentException(
-        s"changesBetween($table): not a graft catalog: ${other.name()}")
-    }
-    val (db, name) = (parts(1), parts(2))
+    val (plugin, Array(db, name)) =
+      GraftCatalog.resolve(spark, table, "changesBetween")
     val meta = plugin.metaStore.loadTable(db, name)
     changesIn(spark, plugin, db, name, table, meta,
       fromVersionsBack, toVersionsBack, rowGranular)

@@ -53,22 +53,15 @@ object Compaction {
       case _ => tbl.partitioning().nonEmpty
     }
     if (!identityPartitioned) {
-      // UNPARTITIONED tables compact via a STAGED REWRITE (round 19):
+      // UNPARTITIONED tables compact via a RELOCATING REWRITE (round 19):
       // dynamic overwrite — the only safe IN-PLACE self-rewrite — needs
       // partition dirs to swap, so the unpartitioned path writes a
-      // fresh generation and flips, exactly the zorder/migrate crash
-      // model (staging residue is vacuumable; the old generation stays
-      // for in-flight readers). This is also the unpartitioned FOLD for
-      // merge-on-read deletion vectors: the staging read applies them,
-      // the flip clears them — without it a one-DELETE unpartitioned
-      // MOR table could never UPDATE again.
-      cat match {
-        case g: graft.catalog.GraftCatalog =>
-          compactUnpartitioned(spark, g, parts(1), parts.last, table, ident)
-          return
-        case _ => throw new UnsupportedOperationException(
-          s"compact($table): unpartitioned compaction requires a graft catalog")
-      }
+      // fresh generation and flips ([[Relocate]]). This is also the
+      // unpartitioned FOLD for merge-on-read deletion vectors: the
+      // staging read applies them, the flip clears them — without it a
+      // one-DELETE unpartitioned MOR table could never UPDATE again.
+      compactUnpartitioned(spark, table)
+      return
     }
     val location = tbl.properties.get(
       org.apache.spark.sql.connector.catalog.TableCatalog.PROP_LOCATION)
@@ -116,30 +109,24 @@ object Compaction {
     } finally release()
   }
 
-  /** The unpartitioned staged-rewrite branch of [[compact]]: read the
-    * table through the catalog (deletion vectors applied), write a
-    * fresh generation sized to `spark.sql.files.maxPartitionBytes` per
-    * file — honoring `graft.cluster.by` with a range distribution +
-    * within-file sort, which also restores the sort-trust marker — and
-    * flip atomically (history prepend, lineage snapshot, dv list
-    * cleared). Refuses bucketed declarations: a V1 staged write cannot
-    * reproduce the hash-routed bucket file names, and silently
-    * unbucketing would corrupt every SPJ assumption. */
-  private def compactUnpartitioned(
-      spark: SparkSession,
-      plugin: graft.catalog.GraftCatalog,
-      db: String,
-      name: String,
-      table: String,
-      ident: org.apache.spark.sql.connector.catalog.Identifier): Unit = {
+  /** The unpartitioned branch of [[compact]]: a [[Relocate]] rewrite
+    * that reads the table through the catalog (deletion vectors applied)
+    * into files sized to `spark.sql.files.maxPartitionBytes` — honoring
+    * `graft.cluster.by` with a range distribution + within-file sort,
+    * which also restores the sort-trust marker. Bucketed declarations
+    * take a hash-routed self-overwrite instead: a V1 staged write cannot
+    * reproduce the bucket file names, and silently unbucketing would
+    * corrupt every SPJ assumption. */
+  private def compactUnpartitioned(spark: SparkSession, table: String): Unit = {
     import org.apache.spark.sql.functions.col
-    val store = plugin.metaStore
-    val pre = store.loadTable(db, name)
+    val (plugin, Array(db, name)) =
+      graft.catalog.GraftCatalog.resolve(spark, table, "compact")
+    val pre = plugin.metaStore.loadTable(db, name)
     require(!pre.external,
       s"compact($table): EXTERNAL tables own their files; refusing to rewrite")
     if (graft.catalog.GraftCatalog.writableBucketSpec(pre).isDefined) {
       // BUCKET-PRESERVING compaction (round 20, the bucketed-MOR fold):
-      // the V1 staged rewrite below cannot reproduce hash-routed bucket
+      // the relocating rewrite cannot reproduce hash-routed bucket
       // file names, but the engine's own V2 writer is exactly the
       // machinery every bucketed append uses (shuffle partition id ==
       // bucket id == committer file name) — so the rewrite is a
@@ -173,61 +160,35 @@ object Compaction {
           snapshot.writeTo(table)
             .overwrite(org.apache.spark.sql.functions.lit(true))
           foldInertDvs(spark, plugin, db, name)
-          plugin.invalidateTable(ident)
+          plugin.invalidateTable(
+            org.apache.spark.sql.connector.catalog.Identifier.of(Array(db), name))
         } finally if (!aqeOn) { snapshot.unpersist(); () }
       } finally release()
       return
     }
     // (multi-column bucket declarations are metadata-only — no physical
-    // routing to preserve — so they take the staged rewrite like any
+    // routing to preserve — so they take the relocating rewrite like any
     // unbucketed table)
-    val release = graft.catalog.write.GraftBatchWrite.leaseWritePermit(
-      spark, pre.location,
-      s"unpartitioned compaction of $table since ${java.time.Instant.now()}",
-      plugin.writeLockTimeoutSec)
-    try {
-      val meta = store.loadTable(db, name)
-      val conf = spark.sessionState.newHadoopConf()
-      val oldRoot = new org.apache.hadoop.fs.Path(meta.location)
-      val fs = oldRoot.getFileSystem(conf)
-      val staging = new org.apache.hadoop.fs.Path(oldRoot.getParent,
-        s"${oldRoot.getName}__migrate_${java.util.UUID.randomUUID()}")
+    Relocate.rewrite(spark, plugin, db, pre,
+      s"unpartitioned compaction of $table since ${java.time.Instant.now()}") { meta =>
+      val root = new org.apache.hadoop.fs.Path(meta.location)
+      val fs = root.getFileSystem(spark.sessionState.newHadoopConf())
       val bytes = meta.stats.map(_.sizeInBytes).filter(_ > 0).getOrElse(
-        if (fs.exists(oldRoot)) fs.getContentSummary(oldRoot).getLength else 0L)
+        if (fs.exists(root)) fs.getContentSummary(root).getLength else 0L)
       val perFile = spark.sessionState.conf.filesMaxPartitionBytes
       val nFiles = math.max(1, math.ceil(bytes.toDouble / perFile).toInt)
       val cluster = graft.catalog.GraftCatalog.clusterColumns(meta.properties)
       val df = spark.table(table)
-      val shaped =
-        if (cluster.nonEmpty)
-          df.repartitionByRange(nFiles, cluster.map(col): _*)
-            .sortWithinPartitions(cluster.map(col): _*)
-        else df.repartition(nFiles)
-      shaped.write.format(meta.provider)
-        .options(graft.catalog.GraftCatalog.optionProps(meta.properties))
-        .mode("overwrite")
-        .save(staging.toString)
-      graft.catalog.SkipStats.maintainDir(spark, staging.toString,
-        meta.schema, meta.properties, meta.provider)
-      store.updateTable(db, name) { cur =>
-        cur.copy(location = staging.toString,
-          partitions = Nil,
-          stats = cur.stats.map(_.copy(
-            sizeInBytes = fs.getContentSummary(staging).getLength)),
-          history = (cur.asGeneration(System.currentTimeMillis()) +:
-            cur.history).take(graft.catalog.TableMeta.MaxHistory),
-          // every file is freshly engine-sorted when cluster columns are
-          // declared — the sort-trust marker restores with the rewrite
-          properties =
-            if (cluster.nonEmpty) cur.properties +
-              (graft.catalog.GraftCatalog.ClusterSortedProp -> "true")
-            else cur.properties,
-          // the staging read applied the deletion vectors — folded
-          deleteVectors = Nil)
-      }
-      graft.catalog.Snapshots.recordRewrite(spark, store, db, name)
-      plugin.invalidateTable(ident)
-    } finally release()
+      if (cluster.isEmpty) Relocate.Staged(df.repartition(nFiles), meta.provider)
+      else Relocate.Staged(
+        df.repartitionByRange(nFiles, cluster.map(col): _*)
+          .sortWithinPartitions(cluster.map(col): _*),
+        meta.provider,
+        // every file is freshly engine-sorted — the sort-trust marker
+        // restores with the rewrite
+        m => m.copy(properties = m.properties +
+          (graft.catalog.GraftCatalog.ClusterSortedProp -> "true")))
+    }
   }
 
   /** Drop descriptor entries of deletion-vector batches none of whose

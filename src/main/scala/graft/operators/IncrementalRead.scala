@@ -42,17 +42,9 @@ object IncrementalRead {
     require(fromVersionsBack > toVersionsBack && toVersionsBack >= 0,
       s"appendedBetween($table): need from > to >= 0 in versions_back, " +
         s"got from=$fromVersionsBack to=$toVersionsBack")
-    val parts = table.split("\\.")
-    require(parts.length == 3,
-      s"appendedBetween expects catalog.ns.table, got $table")
-    val plugin = spark.sessionState.catalogManager.catalog(parts.head) match {
-      case g: GraftCatalog => g
-      case other => throw new IllegalArgumentException(
-        s"appendedBetween($table): not a graft catalog: ${other.name()}")
-    }
-    val store = plugin.metaStore
-    val (db, name) = (parts(1), parts(2))
-    val meta = store.loadTable(db, name)
+    val (plugin, Array(db, name)) =
+      GraftCatalog.resolve(spark, table, "appendedBetween")
+    val meta = plugin.metaStore.loadTable(db, name)
     // the manifest set-difference, every file resolved to its current
     // physical path (live, or retired by a post-`to` commit)
     val added = Snapshots.addedBetween(

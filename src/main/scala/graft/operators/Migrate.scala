@@ -1,11 +1,9 @@
 package graft.operators
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions.col
 
-import graft.catalog.{GraftCatalog, GraftConf, PartitionMeta, TableMeta}
-import graft.catalog.write.GraftBatchWrite
+import graft.catalog.{GraftCatalog, GraftConf}
 
 /** In-place table FORMAT MIGRATION — the working form of Hive's
   * `ALTER TABLE … SET FILEFORMAT` (the DDL a reference user runs when
@@ -17,37 +15,30 @@ import graft.catalog.write.GraftBatchWrite
   * table is uniformly in the target format afterwards — the migration
   * people actually want.
   *
-  * Protocol, under the table's write-permit lease (no writer can be
-  * mid-commit):
-  *  1. read the CURRENT table and write it to a STAGING directory
-  *     (`<table>__migrate_<uuid>` beside the table dir) in the target
-  *     provider, re-partitioned by the declared partition columns,
-  *     carrying the table's format options (compression, csv
-  *     sep/header, …) so the post-flip read path — which applies the
-  *     same properties as options — parses what was written;
-  *  2. enumerate the staged partition dirs into fresh registrations;
-  *  3. ONE atomic descriptor update flips provider + location +
-  *     partitions together — a reader resolves either the complete old
-  *     table or the complete new one, never a mix (the descriptor file
-  *     is the atomicity unit, same argument as every other commit).
+  * The rewrite is a [[Relocate]] transaction: under the table's
+  * write-permit lease the CURRENT table is read and written to a staging
+  * generation beside the table in the target provider, re-partitioned by
+  * the declared partition columns and carrying the table's format
+  * options (compression, csv sep/header, …) so the post-flip read path —
+  * which applies the same properties as options — parses what was
+  * written; then ONE descriptor publish flips provider + location +
+  * partitions together — a reader resolves either the complete old table
+  * or the complete new one, never a mix.
   *
   * The OLD generation is deliberately NOT deleted here: a concurrent
   * reader that resolved the old descriptor before the flip may still be
-  * mid-scan over its files (the same reader-safety argument
-  * [[Vacuum]] makes), so reclamation is deferred to the age-gated
-  * namespace sweep — [[Vacuum.vacuumNamespace]] removes retired
-  * generations and crashed staging dirs once older than the retention
-  * window, exactly like table VACUUM's cutoff protects in-flight jobs.
-  * Crash anywhere before step 3 leaves the old table untouched plus an
-  * unreferenced staging dir; the sweep reclaims that too. EXTERNAL
-  * tables refuse (their files are user-owned, and rewriting them would
-  * break the external contract).
+  * mid-scan over its files (the same reader-safety argument [[Vacuum]]
+  * makes), so reclamation is deferred to the age-gated namespace sweep —
+  * [[Vacuum.vacuumNamespace]] removes retired generations and crashed
+  * staging dirs once older than the retention window. EXTERNAL tables
+  * refuse (their files are user-owned, and rewriting them would break
+  * the external contract).
   *
   * Location invariant: after migration the table's data lives under the
-  * `<table>__migrate_<uuid>` staging name permanently — a table's
-  * location is an opaque catalog detail, not a naming contract (DESCRIBE
-  * shows it; nothing may parse it). The original `<table>` dir is the
-  * retired generation awaiting the sweep.
+  * staging name permanently — a table's location is an opaque catalog
+  * detail, not a naming contract (DESCRIBE shows it; nothing may parse
+  * it). The original `<table>` dir is the retired generation awaiting
+  * the sweep.
   *
   * 100 TB posture: cost is ONE full rewrite of the table — the
   * migration IS a data move, there is no cheaper uniform-format end
@@ -63,39 +54,20 @@ object Migrate {
     require(GraftConf.SupportedProviders.contains(p),
       s"migrate($table): unsupported provider $provider " +
         s"(supported: ${GraftConf.SupportedProviders.toSeq.sorted.mkString(", ")})")
-    val parts = table.split("\\.")
-    require(parts.length == 3, s"migrate expects catalog.ns.table, got $table")
-    val plugin = spark.sessionState.catalogManager.catalog(parts.head) match {
-      case g: GraftCatalog => g
-      case other => throw new IllegalArgumentException(
-        s"migrate($table): not a graft catalog: ${other.name()}")
-    }
-    val store = plugin.metaStore
-    val (db, name) = (parts(1), parts(2))
-    val pre = store.loadTable(db, name)
+    val (plugin, Array(db, name)) = GraftCatalog.resolve(spark, table, "migrate")
+    val pre = plugin.metaStore.loadTable(db, name)
     require(!pre.external,
       s"migrate($table): EXTERNAL tables own their files; refusing to rewrite")
     if (pre.provider == p) return // already there — nothing to rewrite
+    // the DML declaration must hold in the target provider, as at CREATE
+    // and ALTER: positional merge-on-read is parquet-only (elsewhere its
+    // row positions do not exist and a DELETE hides every row)
+    GraftCatalog.validateDmlMode(pre.properties, pre.schema,
+      pre.partitionColumns, table, Some(p))
 
-    val release = GraftBatchWrite.leaseWritePermit(
-      spark, pre.location,
-      s"format migration of $table to $p since ${java.time.Instant.now()}",
-      plugin.writeLockTimeoutSec)
-    try {
-      val meta = store.loadTable(db, name)
-      val conf = spark.sessionState.newHadoopConf()
-      val oldRoot = new Path(meta.location)
-      val fs = oldRoot.getFileSystem(conf)
-      val staging = new Path(oldRoot.getParent,
-        s"${oldRoot.getName}__migrate_${java.util.UUID.randomUUID()}")
-
-      // 1. rewrite into the staging dir in the target format; the
-      // reader resolves through the CURRENT (old-format) scan path.
-      // The table's format options ride along: the post-flip read path
-      // applies the same properties as options, so e.g. a csv table's
-      // declared separator must be what the staging generation was
-      // written with (options foreign to the target format are ignored
-      // by its writer).
+    Relocate.rewrite(spark, plugin, db, pre,
+      s"format migration of $table to $p since ${java.time.Instant.now()}") { meta =>
+      // the reader resolves through the CURRENT (old-format) scan path.
       // LAYOUT invariants survive the rewrite: a writable-bucketed
       // table re-routes through repartition(n, bucketCol) — the same
       // HashPartitioning the catalog write path requires, so the V1
@@ -106,100 +78,20 @@ object Migrate {
       // declared graft.cluster.by sort is re-applied within tasks so
       // the row-group-locality layout survives too.
       val df = spark.table(table)
-      val routed = graft.catalog.GraftCatalog.writableBucketSpec(meta) match {
-        case Some((n, bucketCol)) =>
-          df.repartition(n, org.apache.spark.sql.functions.col(bucketCol))
+      val routed = GraftCatalog.writableBucketSpec(meta) match {
+        case Some((n, bucketCol)) => df.repartition(n, col(bucketCol))
         case None => df
       }
-      val clusterCols = graft.catalog.GraftCatalog.clusterColumns(meta.properties)
+      val clusterCols = GraftCatalog.clusterColumns(meta.properties)
       // partition columns FIRST, mirroring GraftWrite.requiredOrdering:
       // the V1 writer's dynamic-partition path requires ordering by the
       // partition columns and would insert its own (cluster-destroying)
       // sort if ours didn't already satisfy it as a prefix
-      val shaped =
+      Relocate.Staged(
         if (clusterCols.isEmpty) routed
         else routed.sortWithinPartitions(
-          (meta.partitionColumns ++ clusterCols)
-            .map(org.apache.spark.sql.functions.col): _*)
-      // a bloom declaration survives the format change: migrating INTO
-      // parquet re-emits the per-row-group split-block blooms (the V1
-      // writer forwards parquet.* options into the job conf), so the
-      // post-flip shard carries real filters, not absent-markers
-      val bloomOpts: Map[String, String] =
-        if (p != "parquet") Map.empty
-        else {
-          val ndv = graft.catalog.SkipStats.bloomNdv(meta.properties)
-          graft.catalog.SkipStats.resolvedBloomCols(meta.properties, meta.schema)
-            .flatMap(f => Seq(
-              s"parquet.bloom.filter.enabled#${f.name}" -> "true",
-              s"parquet.bloom.filter.expected.ndv#${f.name}" -> ndv.toString))
-            .toMap
-        }
-      val writer = shaped.write.format(p)
-        .options(graft.catalog.GraftCatalog.optionProps(meta.properties))
-        .options(bloomOpts)
-        .mode("overwrite")
-      (if (meta.partitionColumns.nonEmpty)
-        writer.partitionBy(meta.partitionColumns: _*)
-      else writer).save(staging.toString)
-
-      // 2. fresh registrations from the staged layout (hive-style
-      // col=value dirs; sizes from one listing pass each)
-      val leafDirs: Seq[(Path, Seq[String])] =
-        if (meta.partitionColumns.isEmpty) Nil
-        else {
-          // hive-layout leaf dirs at exactly partition-column depth,
-          // carrying the `col=v/col2=v2` fragment built from the walked
-          // segments (listing paths come back FS-qualified — never
-          // string-strip a path prefix)
-          def level(dirs: Seq[(Path, Seq[String])], depth: Int): Seq[(Path, Seq[String])] =
-            if (depth == meta.partitionColumns.size) dirs
-            else level(dirs.flatMap { case (d, segs) =>
-              fs.listStatus(d).toSeq
-                .filter(s => s.isDirectory && s.getPath.getName.contains("="))
-                .map(s => (s.getPath, segs :+ s.getPath.getName))
-            }, depth + 1)
-          level(Seq((staging, Nil)), 0)
-        }
-      val newParts: Seq[PartitionMeta] = leafDirs.map { case (d, segs) =>
-        val spec = GraftBatchWrite.parseFragment(meta, segs.mkString("/"))
-        PartitionMeta(spec, None, fs.getContentSummary(d).getLength)
-      }
-
-      // skip-stats continuity: manifest the staging generation BEFORE
-      // the flip (the zorder posture), so the first post-flip query
-      // skips instead of waiting for the next commit — one footer/tail
-      // read per rewritten file, ranges AND blooms
-      val stagingDirs =
-        if (meta.partitionColumns.isEmpty) Seq(staging.toString)
-        else leafDirs.map(_._1.toString)
-      graft.catalog.SkipStats.maintainDirs(spark, stagingDirs,
-        meta.schema, meta.properties, p)
-
-      // 3. the atomic flip: provider + location + partitions in one
-      // descriptor write; the retired generation joins the bounded
-      // HISTORY so `CALL sys.rollback` can re-point at it while the
-      // vacuum retention window keeps its data alive
-      store.updateTable(db, name) { cur =>
-        cur.copy(provider = p, location = staging.toString,
-          partitions = newParts,
-          stats = cur.stats.map(_.copy(
-            sizeInBytes = fs.getContentSummary(staging).getLength)),
-          history = (cur.asGeneration(System.currentTimeMillis()) +:
-            cur.history).take(TableMeta.MaxHistory),
-          // the staging read went through the deletion-vector rewrite,
-          // so the new generation has the deletes MATERIALIZED (q119)
-          deleteVectors = Nil)
-      }
-      // the flip joins the snapshot lineage too (q116): every dir of the
-      // new generation lists fresh (the location changed, so no parent
-      // shard pointer can match)
-      graft.catalog.Snapshots.recordRewrite(spark, store, db, name)
-      plugin.invalidateTable(
-        org.apache.spark.sql.connector.catalog.Identifier.of(Array(db), name))
-      // the old generation stays on disk for in-flight readers;
-      // Vacuum.vacuumNamespace reclaims it after the retention window
-    } finally release()
+          (meta.partitionColumns ++ clusterCols).map(col): _*),
+        p)
+    }
   }
-
 }

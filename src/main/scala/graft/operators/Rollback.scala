@@ -7,16 +7,17 @@ import org.apache.spark.sql.SparkSession
 import graft.catalog.{GraftCatalog, MetaStore, PartitionMeta, Snapshots, TableMeta, TableStats}
 import graft.catalog.write.GraftBatchWrite
 
-/** GENERATION ROLLBACK — the "oops" lever the staged-rewrite protocol
-  * makes nearly free: migrate and zorder flip a table to a NEW
-  * generation directory and leave the old one on disk until the
-  * namespace vacuum's retention window expires, so un-doing a rewrite
-  * within the window is a pure descriptor flip back — provider,
-  * location, partition registrations and stats restored exactly as
-  * retired, NO data movement at any table size. The generation being
-  * rolled AWAY from joins the history in its place, so a rollback is
-  * itself rollback-able (redo), bounded at [[TableMeta.MaxHistory]]
-  * entries.
+/** GENERATION ROLLBACK — the "oops" lever the relocating rewrite
+  * ([[Relocate]]) makes nearly free: compaction, migrate and zorder
+  * flip a table to a NEW generation directory and leave the old one on
+  * disk until the namespace vacuum's retention window expires, so
+  * un-doing a rewrite within the window is a pure descriptor flip back
+  * — provider, location, partition registrations, stats and
+  * deletion-vector batches restored exactly as retired, NO data
+  * movement at any table size. The flip back is itself a [[Relocate]]
+  * flip: the generation being rolled AWAY from joins the history in its
+  * place, so a rollback is itself rollback-able (redo), bounded at
+  * [[TableMeta.MaxHistory]] entries.
   *
   * Refusals keep it honest: no history → nothing to roll back to; a
   * retired generation whose directory the vacuum already reclaimed →
@@ -37,7 +38,7 @@ object Rollback {
     * the previous SNAPSHOT's exact file set — appended files retire,
     * retired files rename back — making "undo last night's append" a
     * handful of renames at any table size (q116). When the most recent
-    * change was a REWRITE FLIP (migrate/zorder/rollback), the legacy
+    * change was a REWRITE FLIP (compact/migrate/zorder/rollback), the
     * O(1) generation flip restores the retired directory wholesale.
     * Both forms are redo-able (the state rolled away from joins the
     * lineage in its place).
@@ -55,15 +56,8 @@ object Rollback {
   def rollback(spark: SparkSession, table: String,
       versionsBack: Int = 1): (String, String) = {
     require(versionsBack >= 1, s"rollback($table): versions_back must be >= 1")
-    val parts = table.split("\\.")
-    require(parts.length == 3, s"rollback expects catalog.ns.table, got $table")
-    val plugin = spark.sessionState.catalogManager.catalog(parts.head) match {
-      case g: GraftCatalog => g
-      case other => throw new IllegalArgumentException(
-        s"rollback($table): not a graft catalog: ${other.name()}")
-    }
+    val (plugin, Array(db, name)) = GraftCatalog.resolve(spark, table, "rollback")
     val store = plugin.metaStore
-    val (db, name) = (parts(1), parts(2))
     val pre = store.loadTable(db, name)
     if (pre.snapshots.size >= 2 && pre.snapshots.head.kind != "rewrite")
       return rollbackSnapshot(spark, plugin, store, db, name, table, versionsBack)
@@ -81,32 +75,23 @@ object Rollback {
       s"rollback($table): generation ${target.location} was already " +
         "reclaimed by the namespace vacuum; it cannot be restored")
 
-    val release = GraftBatchWrite.leaseWritePermit(
-      spark, pre.location,
-      s"generation rollback of $table since ${java.time.Instant.now()}",
-      plugin.writeLockTimeoutSec)
-    try {
-      store.updateTable(db, name) { cur =>
-        // the head may have changed under a racing flip — re-resolve and
-        // re-check liveness inside the permit
-        require(cur.history.nonEmpty, s"rollback($table): history emptied by a concurrent flip")
-        val g = cur.history.head
-        val gp = new Path(g.location)
-        require(gp.getFileSystem(conf).exists(gp),
-          s"rollback($table): generation ${g.location} was reclaimed")
-        cur.copy(provider = g.provider, location = g.location,
-          partitions = g.partitions, stats = g.stats,
-          history = (cur.asGeneration(System.currentTimeMillis()) +:
-            cur.history.tail).take(TableMeta.MaxHistory))
-      }
-      // the restored state is a new lineage event — record its snapshot
-      // (kind=rewrite: parent pointers reference the other location, so
-      // every dir lists fresh)
-      Snapshots.recordRewrite(spark, store, db, name)
-      plugin.invalidateTable(
-        org.apache.spark.sql.connector.catalog.Identifier.of(Array(db), name))
-      (target.provider, target.location)
-    } finally release()
+    Relocate.flip(spark, plugin, db, pre,
+      s"generation rollback of $table since ${java.time.Instant.now()}") { _ => cur =>
+      // the head may have changed under a racing flip — re-resolve and
+      // re-check liveness inside the permit
+      require(cur.history.nonEmpty, s"rollback($table): history emptied by a concurrent flip")
+      val g = cur.history.head
+      val gp = new Path(g.location)
+      require(gp.getFileSystem(conf).exists(gp),
+        s"rollback($table): generation ${g.location} was reclaimed")
+      cur.copy(provider = g.provider, location = g.location,
+        partitions = g.partitions, stats = g.stats,
+        // the generation's OWN batches: its files never materialized
+        // the deletes they hide
+        deleteVectors = g.deleteVectors,
+        history = cur.history.tail)
+    }
+    (target.provider, target.location)
   }
 
   /** IN-PLACE rollback: restore the previous snapshot's exact file set.

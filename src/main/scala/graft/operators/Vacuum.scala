@@ -3,7 +3,7 @@ package graft.operators
 import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
-import graft.catalog.{GraftCatalog, TableMeta}
+import graft.catalog.GraftCatalog
 import graft.catalog.write.GraftBatchWrite
 
 /** Orphan-file reclamation (`VACUUM`) for catalog tables.
@@ -67,16 +67,9 @@ object Vacuum {
   def vacuum(spark: SparkSession, table: String,
       retentionMs: Long = DefaultRetentionMs): Stats = {
     require(retentionMs >= 0, s"vacuum($table): negative retention")
-    val parts = table.split("\\.")
-    require(parts.length == 3, s"vacuum expects catalog.ns.table, got $table")
-    val plugin = spark.sessionState.catalogManager.catalog(parts.head) match {
-      case g: GraftCatalog => g
-      case other => throw new IllegalArgumentException(
-        s"vacuum($table): not a graft catalog: ${other.name()}")
-    }
+    val (plugin, Array(db, name)) = GraftCatalog.resolve(spark, table, "vacuum")
     val store = plugin.metaStore
-    val db = parts(1)
-    val preMeta = store.loadTable(db, parts(2))
+    val preMeta = store.loadTable(db, name)
     require(!preMeta.external,
       s"vacuum($table): EXTERNAL tables own their files; refusing to delete")
 
@@ -87,7 +80,7 @@ object Vacuum {
     try {
       // registered truth as of holding the permit — no writer can be
       // mid-commit now
-      val meta = store.loadTable(db, parts(2))
+      val meta = store.loadTable(db, name)
       val conf = spark.sessionState.newHadoopConf()
       val root = new Path(meta.location)
       val fs = root.getFileSystem(conf)
@@ -96,20 +89,22 @@ object Vacuum {
 
       var files = 0L
       var bytes = 0L
-      def reclaim(st: FileStatus): Unit = {
-        val summary = fs.getContentSummary(st.getPath)
-        // directories count their files; a bare file counts itself
-        files += math.max(summary.getFileCount, if (st.isFile) 1L else 0L)
-        bytes += summary.getLength
-        fs.delete(st.getPath, true)
-        ()
+      // ONE recursive walk per candidate gathers the retention signal
+      // (the newest mtime anywhere under it — a dir whose listing is old
+      // but that received a fresh file counts as fresh) AND the reclaim
+      // stats
+      def reclaimIfOld(st: FileStatus): Unit = {
+        val (newest, fc, bc) = walkStats(fs, st)
+        if (newest <= cutoff) {
+          files += fc
+          bytes += bc
+          fs.delete(st.getPath, true)
+        }
       }
-      def oldEnough(st: FileStatus): Boolean = newestIn(fs, st) <= cutoff
 
       // 2. committer staging from crashed/aborted jobs
       val tmpDir = new Path(root, "_temporary")
-      if (fs.exists(tmpDir) && oldEnough(fs.getFileStatus(tmpDir)))
-        reclaim(fs.getFileStatus(tmpDir))
+      if (fs.exists(tmpDir)) reclaimIfOld(fs.getFileStatus(tmpDir))
 
       // 3. resolved txn residue (never .pending manifests, never
       // quarantine dirs — repair's domain)
@@ -133,8 +128,7 @@ object Vacuum {
           val orphanMarker =
             n.endsWith(".committed") && !pendingIds.contains(n.stripSuffix(".committed"))
           val draft = s.isFile && n.startsWith(".") && n.endsWith(".tmp")
-          if ((orphanMarker || draft) && s.getModificationTime <= cutoff)
-            reclaim(s)
+          if (orphanMarker || draft) reclaimIfOld(s)
         }
       }
 
@@ -144,7 +138,7 @@ object Vacuum {
       // retired-token areas only they referenced — after this, a
       // VERSION/TIMESTAMP AS OF into the expired range refuses loudly
       val (snapFiles, snapBytes) =
-        graft.catalog.Snapshots.expire(spark, store, db, parts(2), cutoff)
+        graft.catalog.Snapshots.expire(spark, store, db, name, cutoff)
       files += snapFiles
       bytes += snapBytes
 
@@ -158,10 +152,9 @@ object Vacuum {
             .getOrElse(GraftBatchWrite.partitionDir(meta, p.spec)))
             .toString
         }.toSet
-        partitionLeafDirs(fs, root, meta).foreach { st =>
-          if (!registered.contains(fs.makeQualified(st.getPath).toString) &&
-              oldEnough(st))
-            reclaim(st)
+        Relocate.partitionLeaves(fs, root, meta.partitionColumns.size).foreach { st =>
+          if (!registered.contains(fs.makeQualified(st.getPath).toString))
+            reclaimIfOld(st)
         }
       }
       Stats(files, bytes)
@@ -169,16 +162,19 @@ object Vacuum {
   }
 
   /** NAMESPACE-level sweep: reclaims the residue table-scoped VACUUM
-    * cannot see because it lives OUTSIDE every table location —
-    * [[Migrate]]'s crash/retirement artifacts:
+    * cannot see because it lives OUTSIDE every table location — the
+    * crash and retirement artifacts of [[Relocate]] (unpartitioned
+    * compaction, zorder, migrate, generation rollback):
     *
-    *  1. '''Crashed migration staging''' — `<x>__migrate_<uuid>` dirs
-    *     that are not the location of any live table (a COMMITTED
-    *     migration's staging IS the table's location and is skipped by
-    *     the liveness check, never by name).
+    *  1. '''Relocate staging''' — dirs with a [[Relocate.isStaging]]
+    *     name that are not the location of any live table: crashed
+    *     staging, and retired generations that were staged once (a
+    *     COMMITTED rewrite's staging IS the table's location and is
+    *     skipped by the liveness check, never by name).
     *  2. '''Retired generations''' — a dir named exactly like a live
-    *     MANAGED table whose descriptor points elsewhere: the
-    *     pre-migration data Migrate leaves for in-flight readers.
+    *     MANAGED table whose descriptor points elsewhere: the original
+    *     generation a relocate leaves for in-flight readers and
+    *     rollback.
     *
     * Anything else (unknown dirs, `_meta`, `_namespace.json`) is left
     * untouched — the sweep deletes only what the engine's own crash
@@ -199,15 +195,9 @@ object Vacuum {
   def vacuumNamespace(spark: SparkSession, namespace: String,
       retentionMs: Long = DefaultRetentionMs): Stats = {
     require(retentionMs >= 0, s"vacuumNamespace($namespace): negative retention")
-    val parts = namespace.split("\\.")
-    require(parts.length == 2, s"vacuumNamespace expects catalog.ns, got $namespace")
-    val plugin = spark.sessionState.catalogManager.catalog(parts.head) match {
-      case g: GraftCatalog => g
-      case other => throw new IllegalArgumentException(
-        s"vacuumNamespace($namespace): not a graft catalog: ${other.name()}")
-    }
+    val (plugin, Array(db)) =
+      GraftCatalog.resolve(spark, namespace, "vacuumNamespace", "catalog.ns")
     val store = plugin.metaStore
-    val db = parts(1)
     require(store.namespaceExists(db), s"no such namespace: $namespace")
     val conf = spark.sessionState.newHadoopConf()
     val nsDir = store.namespaceDir(db)
@@ -245,7 +235,6 @@ object Vacuum {
         .map(t => t.name -> qualify(new Path(t.location))).toMap
       (locations, managed)
     }
-    val MigrateStaging = ".*__migrate_[0-9a-f-]{36}$".r
     def isCandidate(st: FileStatus,
         live: (Set[String], Map[String, String])): Boolean = {
       val (liveLocations, managedNames) = live
@@ -259,7 +248,7 @@ object Vacuum {
         !liveLocations.exists(l =>
           l == qualified || l.startsWith(qualified + "/") ||
             qualified.startsWith(l + "/")) && (
-          MigrateStaging.matches(name) ||
+          Relocate.isStaging(name) ||
           managedNames.get(name).exists(_ != qualified))
     }
 
@@ -270,7 +259,7 @@ object Vacuum {
       if (isCandidate(st, initial)) {
         // ONE recursive walk gathers the retention signal AND the
         // reclaim stats — on object stores the listing IS the cost, and
-        // a newestIn + getContentSummary pair would traverse every
+        // a separate age check and size summary would traverse every
         // candidate tree twice
         val (newest, fc, bc) = walkStats(fs, st)
         // RE-VERIFY against fresh descriptors immediately before the
@@ -289,13 +278,6 @@ object Vacuum {
     Stats(files, bytes)
   }
 
-  /** Newest modification time anywhere under `st` — a dir whose listing
-    * is old but that received a fresh file must count as fresh. */
-  private def newestIn(fs: org.apache.hadoop.fs.FileSystem, st: FileStatus): Long =
-    if (st.isFile) st.getModificationTime
-    else (st.getModificationTime +:
-      fs.listStatus(st.getPath).toSeq.map(newestIn(fs, _))).max
-
   /** One recursive walk: (newest mtime anywhere, file count, byte sum). */
   private def walkStats(
       fs: org.apache.hadoop.fs.FileSystem, st: FileStatus): (Long, Long, Long) =
@@ -305,21 +287,4 @@ object Vacuum {
         val (cm, cf, cb) = walkStats(fs, child)
         (math.max(m, cm), f + cf, b + cb)
       }
-
-  /** Hive-layout leaf partition dirs under the table root: descend
-    * exactly `partitionColumns.size` levels of `col=value` dirs,
-    * skipping hidden/metadata names at every level. */
-  private def partitionLeafDirs(
-      fs: org.apache.hadoop.fs.FileSystem, root: Path,
-      meta: TableMeta): Seq[FileStatus] = {
-    def level(dirs: Seq[FileStatus], depth: Int): Seq[FileStatus] =
-      if (depth == meta.partitionColumns.size) dirs
-      else level(dirs.flatMap { d =>
-        fs.listStatus(d.getPath).toSeq.filter { s =>
-          val n = s.getPath.getName
-          s.isDirectory && !n.startsWith("_") && !n.startsWith(".") && n.contains("=")
-        }
-      }, depth + 1)
-    level(Seq(fs.getFileStatus(root)), 0)
-  }
 }

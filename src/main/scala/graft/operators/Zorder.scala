@@ -1,11 +1,10 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types.NumericType
 
-import graft.catalog.{GraftCatalog, PartitionMeta, SkipStats, TableMeta}
-import graft.catalog.write.GraftBatchWrite
+import graft.catalog.GraftCatalog
 
 /** Z-ORDER clustering — multi-dimensional file locality for q109's
   * file-level data skipping. A single-column sort (`cluster.by`, or
@@ -32,14 +31,13 @@ import graft.catalog.write.GraftBatchWrite
   * degrade gracefully — bins collapse but ranges stay CORRECT, and the
   * manifest never over-promises (a wide file range just skips less).
   *
-  * Safety: the rewrite is ATOMIC via the migrate staging protocol —
-  * written to a sibling `__migrate_<uuid>` dir while readers resolve
-  * the current location, then one descriptor flip under the write
-  * permit; a crash leaves staging residue the namespace vacuum already
-  * classifies and reclaims, and the old generation stays for in-flight
-  * readers until the retention sweep (see [[Migrate]]). The skip-stats
-  * manifest for the new generation is written before the flip, so the
-  * first post-flip query already skips.
+  * Safety: the rewrite is a [[Relocate]] transaction — written to a
+  * staging generation while readers resolve the current location, then
+  * one descriptor flip under the write permit; a crash leaves staging
+  * residue the namespace vacuum reclaims, and the old generation stays
+  * for in-flight readers and rollback until the retention sweep. The
+  * skip-stats manifest for the new generation is written before the
+  * flip, so the first post-flip query already skips.
   *
   * Scope: unpartitioned, unbucketed tables — the heap-shaped fact
   * table this layout tier exists for. Partitioned tables compose
@@ -89,16 +87,8 @@ object Zorder {
       s"zorder($table): interleaving needs >= 2 columns " +
         "(single-column locality is graft.cluster.by / a range-distributed write)")
     require(targetFiles > 0, s"zorder($table): targetFiles must be positive")
-    val parts = table.split("\\.")
-    require(parts.length == 3, s"zorder expects catalog.ns.table, got $table")
-    val plugin = spark.sessionState.catalogManager.catalog(parts.head) match {
-      case g: GraftCatalog => g
-      case other => throw new IllegalArgumentException(
-        s"zorder($table): not a graft catalog: ${other.name()}")
-    }
-    val store = plugin.metaStore
-    val (db, name) = (parts(1), parts(2))
-    val pre = store.loadTable(db, name)
+    val (plugin, Array(db, name)) = GraftCatalog.resolve(spark, table, "zorder")
+    val pre = plugin.metaStore.loadTable(db, name)
     require(!pre.external,
       s"zorder($table): EXTERNAL tables own their files; refusing to rewrite")
     require(pre.partitionColumns.isEmpty,
@@ -118,21 +108,9 @@ object Zorder {
       f.name
     }
 
-    val release = GraftBatchWrite.leaseWritePermit(
-      spark, pre.location,
+    Relocate.rewrite(spark, plugin, db, pre,
       s"zorder rewrite of $table by ${resolved.mkString(",")} since " +
-        s"${java.time.Instant.now()}",
-      plugin.writeLockTimeoutSec)
-    try {
-      val meta = store.loadTable(db, name)
-      val conf = spark.sessionState.newHadoopConf()
-      val oldRoot = new org.apache.hadoop.fs.Path(meta.location)
-      val fs = oldRoot.getFileSystem(conf)
-      // the migrate staging name: a crash before the flip leaves a dir
-      // Vacuum.vacuumNamespace already classifies as reclaimable residue
-      val staging = new org.apache.hadoop.fs.Path(oldRoot.getParent,
-        s"${oldRoot.getName}__migrate_${java.util.UUID.randomUUID()}")
-
+        s"${java.time.Instant.now()}") { meta =>
       val df = spark.table(table)
       val ranges = {
         val aggs = resolved.flatMap(c =>
@@ -145,36 +123,12 @@ object Zorder {
         }
       }
       val zc = "__graft_z"
-      df.withColumn(zc, zvalue(ranges))
-        .repartitionByRange(targetFiles, col(zc))
-        .sortWithinPartitions(zc)
-        .drop(zc)
-        .write.format(meta.provider)
-        .options(GraftCatalog.optionProps(meta.properties))
-        .mode("overwrite")
-        .save(staging.toString)
-
-      // manifest BEFORE the flip: the first post-flip query skips
-      SkipStats.maintainDir(spark, staging.toString, meta.schema,
-        meta.properties, meta.provider)
-
-      store.updateTable(db, name) { cur =>
-        cur.copy(location = staging.toString,
-          partitions = Nil: Seq[PartitionMeta],
-          stats = cur.stats.map(_.copy(
-            sizeInBytes = fs.getContentSummary(staging).getLength)),
-          history = (cur.asGeneration(System.currentTimeMillis()) +:
-            cur.history).take(TableMeta.MaxHistory),
-          // the staging read went through the deletion-vector rewrite,
-          // so the new generation has the deletes MATERIALIZED (q119)
-          deleteVectors = Nil)
-      }
-      // the flip joins the snapshot lineage too (q116)
-      graft.catalog.Snapshots.recordRewrite(spark, store, db, name)
-      plugin.invalidateTable(
-        org.apache.spark.sql.connector.catalog.Identifier.of(Array(db), name))
-      // old generation stays for in-flight readers; the namespace sweep
-      // reclaims it after the retention window (the migrate trade)
-    } finally release()
+      Relocate.Staged(
+        df.withColumn(zc, zvalue(ranges))
+          .repartitionByRange(targetFiles, col(zc))
+          .sortWithinPartitions(zc)
+          .drop(zc),
+        meta.provider)
+    }
   }
 }
