@@ -228,7 +228,13 @@ object Dedup extends org.apache.spark.internal.Logging {
     * At 100 TB: candidate cost is Σ_s prefix_df(s)·df(s) — the rarest-
     * first prefix order keeps prefix_df small, and a df cap on prefix
     * shingles (the q28 `maxShingleDf` lever) bounds the worst key. The
-    * default τ=0.9 keeps prefixes at ~10% of each doc. */
+    * default τ=0.9 keeps prefixes at ~10% of each doc.
+    *
+    * Durability: the four `localCheckpoint`s cut lineage by caching
+    * blocks on the executors that computed them. A lost executor loses
+    * those blocks, and the truncated plan cannot recompute them, so the
+    * query fails instead of retrying; `checkpoint()` to reliable
+    * storage would survive that at the cost of a write per cut. */
   def containmentPairs(
       docs: DataFrame, idCol: String, textCol: String,
       n: Int = 3, tau: Double = 0.9,
@@ -283,7 +289,12 @@ object Dedup extends org.apache.spark.internal.Logging {
   /** Exact-Jaccard verification of candidate pairs against the full
     * shingle sets. Only candidate docs' sets are materialized (semi-join
     * first): at corpus scale candidates ≪ docs, so the collect_set
-    * aggregation touches a sliver of the data. */
+    * aggregation touches a sliver of the data.
+    *
+    * Durability: its `localCheckpoint`s keep their blocks only on the
+    * executors that computed them. A lost executor loses those blocks,
+    * and the truncated plan cannot recompute them, so the query fails
+    * instead of retrying (see [[containmentPairs]]). */
   private def verifyPairsExact(
       cands0: DataFrame, sh: DataFrame, tau: Double): DataFrame = {
     // The candidate pipeline (prefix self-join + length filter) appears

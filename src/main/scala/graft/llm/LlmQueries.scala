@@ -758,10 +758,12 @@ object LlmQueries {
 
   // ---------------------------------------------------------------- q81
   /** Tokenizer induction — the corpus' first 10 BPE merge rules (see
-    * [[TextAnalysis.bpeMerges]] for the bounded-vocabulary iteration
-    * and the fold that IS the greedy merge rule). An iterated global
-    * argmax isn't oracle-SQL-expressible ⇒ rows-only at the driver;
-    * TextAnalysisSpec gates equality with a reference implementation. */
+    * [[TextAnalysis.bpeMerges]]: Spark counts and cuts the vocabulary
+    * and fetches it once; the merge loop runs on the driver with
+    * Spark's UTF-8 tiebreak order, so the step count adds no jobs). An
+    * iterated global argmax isn't oracle-SQL-expressible ⇒ rows-only
+    * at the driver; TextAnalysisSpec gates equality with reference
+    * implementations. */
   def q81_bpe_merges(spark: SparkSession, dir: String): DataFrame =
     TextAnalysis.bpeMerges(docs(spark, dir), "text", steps = 10)
       .orderBy(col("step"))

@@ -1,7 +1,10 @@
 package graft.llm
 
+import scala.collection.mutable
+
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
+import org.apache.spark.unsafe.types.UTF8String
 
 import graft.llm.TextOps._
 
@@ -196,39 +199,40 @@ object TextAnalysis {
     * byte-pair-encoding tokenizer trained on the corpus (Sennrich et
     * al.): repeatedly find the adjacent symbol pair with the highest
     * frequency-weighted count and fuse it, greedily left-to-right
-    * within each word. The iteration is driver-coordinated DataFrame
-    * jobs (the Lloyd-training pattern): per step, one adjacent-pair
-    * explode + one counting aggregate with map-side combine + a
-    * 1-row argmax fetch (`orderBy.limit(1)` → TakeOrderedAndProject),
-    * then a row-local fold rewrites each word's symbol array — the
-    * merge applies via `aggregate()`, whose left-to-right
-    * accumulation IS BPE's greedy non-overlapping rule.
+    * within each word.
+    *
+    * The corpus-wide work stays in Spark: ONE token explode + word
+    * count (map-side combined), the (freq desc, word asc) cut to
+    * `maxVocabWords` (the standard practice — real BPE trainers run on
+    * a frequency-weighted vocabulary, not the corpus) and Spark's
+    * `split(w, "")` into symbols. That bounded table is fetched ONCE;
+    * the merge loop then runs on the driver over the fetched arrays:
+    * exact `Long` pair counts, the argmax, and the greedy fold (fuse
+    * when the accumulator's last symbol is `l` and the next is `r`;
+    * after fusing the last symbol is `l+r`, never `l` again, so the
+    * merges never overlap). No step runs a Spark job: per-step jobs
+    * over a table this small cost their scheduling overhead, not data.
     *
     * Determinism: word frequencies and pair counts are exact longs;
     * the vocabulary cut is (freq desc, word asc) and the per-step
-    * argmax tiebreak is (count desc, left asc, right asc) — fully
-    * ordered, so the merge table is reproducible across runs and
-    * partitionings. Not oracle-SQL-expressible (an iterated global
-    * argmax) ⇒ rows-only at the driver; TextAnalysisSpec gates
-    * equality with a reference BPE implementation.
+    * argmax tiebreak is (count desc, left asc, right asc), both in
+    * Spark's string order — UTF-8 bytes, which `String.compareTo`'s
+    * UTF-16 order contradicts above U+FFFF — so the merge table is
+    * reproducible across runs and partitionings. A step with no pair
+    * left ends the table early. Not oracle-SQL-expressible (an
+    * iterated global argmax) ⇒ rows-only at the driver;
+    * TextAnalysisSpec gates equality with a reference BPE
+    * implementation.
     *
-    * 100 TB posture: the corpus collapses to a word-frequency table in
-    * ONE token explode + aggregate (map-side combined); everything
-    * after operates on ≤ `maxVocabWords` rows (the standard practice —
-    * real BPE trainers run on a frequency-weighted vocabulary, not the
-    * corpus), each step shuffling pair counts of a bounded table and
-    * moving ONE row to the driver. `localCheckpoint` per step keeps
-    * the lineage flat (q55's iteration discipline). */
+    * 100 TB posture: one scan and one shuffle of the corpus; the
+    * driver holds at most `maxVocabWords` rows and the loop costs at
+    * most `steps` × Σ|word| map updates. */
   def bpeMerges(docs: DataFrame, textCol: String, steps: Int = 10,
       maxVocabWords: Int = 10000): DataFrame = {
     val spark = docs.sparkSession
     import spark.implicits._
     require(steps >= 1, "steps must be positive")
-    val pairsOf = when(size(col("sym")) >= 2,
-      transform(sequence(lit(0), size(col("sym")) - 2),
-        i => struct(element_at(col("sym"), i + 1).as("l"),
-          element_at(col("sym"), i + 2).as("r"))))
-      .otherwise(array().cast("array<struct<l:string,r:string>>"))
+    require(maxVocabWords >= 1, "maxVocabWords must be positive")
     var words = docs
       .select(explode(tokens(col(textCol))).as("w"))
       .groupBy(col("w")).agg(count(lit(1)).as("freq"))
@@ -237,34 +241,26 @@ object TextAnalysis {
       // split-by-empty-regex keeps a trailing "" under Spark's limit=-1;
       // strip it (tokens contain no genuinely-empty symbols)
       .select(array_remove(split(col("w"), ""), "").as("sym"), col("freq"))
-      .localCheckpoint()
+      .as[(Seq[String], Long)].collect().toSeq // the ONE fetch
+    val utf8: Ordering[String] = (a, b) =>
+      UTF8String.fromString(a).compareTo(UTF8String.fromString(b))
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var step = 1
     var exhausted = false
     while (step <= steps && !exhausted) {
-      val best = words
-        .select(col("freq"), explode(pairsOf).as("p"))
-        .groupBy(col("p.l"), col("p.r")).agg(sum(col("freq")).as("cnt"))
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .limit(1).collect() // ONE row per step — the argmax fetch
-      if (best.isEmpty) exhausted = true
+      val counts = mutable.HashMap.empty[(String, String), Long].withDefaultValue(0L)
+      for ((sym, freq) <- words; i <- 1 until sym.length) counts((sym(i - 1), sym(i))) += freq
+      if (counts.isEmpty) exhausted = true
       else {
-        val (l, r, cnt) = (best(0).getString(0), best(0).getString(1),
-          best(0).getLong(2))
+        val ((l, r), cnt) = counts.minBy { case ((a, b), n) => (-n, a, b) }(
+          Ordering.Tuple3(Ordering.Long, utf8, utf8))
         merges += ((step, l, r, l + r, cnt))
-        // greedy left-to-right non-overlapping merge as a row-local fold:
-        // fuse when the accumulator's LAST symbol is `l` and the incoming
-        // one is `r` (after fusing, the last symbol is `l+r`, which can
-        // never equal `l` again — non-overlap falls out of the algebra)
-        // `get` (not element_at): out-of-range yields NULL instead of an
-        // ANSI error, so the condition is safe on the fold's empty start
-        val fold = aggregate(col("sym"),
-          array().cast("array<string>"),
-          (acc, x) => when(
-            get(acc, size(acc) - 1) === lit(l) && x === lit(r),
-            concat(slice(acc, lit(1), size(acc) - 1), array(lit(l + r))))
-            .otherwise(concat(acc, array(x))))
-        words = words.select(fold.as("sym"), col("freq")).localCheckpoint()
+        words = words.map { case (sym, freq) =>
+          (sym.foldLeft(Vector.empty[String]) { (acc, x) =>
+            if (acc.nonEmpty && acc.last == l && x == r) acc.init :+ (l + r)
+            else acc :+ x
+          }, freq)
+        }
         step += 1
       }
     }

@@ -1,6 +1,13 @@
 package graft.llm
 
+import java.nio.charset.StandardCharsets.UTF_8
+import java.util.concurrent.atomic.AtomicInteger
+
+import org.apache.spark.graft.SuiteHygiene
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.functions._
+import org.scalacheck.Gen
+import org.scalacheck.rng.Seed
 import org.scalatest.funsuite.AnyFunSuite
 
 import graft.SparkFixture
@@ -141,6 +148,142 @@ class TextAnalysisSpec extends AnyFunSuite with SparkFixture {
     val docs = Seq((1L, "a b c a")).toDF("doc_id", "text")
     val got = TextAnalysis.bpeMerges(docs, "text", steps = 3).collect()
     assert(got.isEmpty)
+  }
+
+  /** Spark's string order: unsigned UTF-8 bytes. `String.compareTo`
+    * orders by UTF-16 units and disagrees above U+FFFF (😀 < ａ there,
+    * ａ < 😀 here). */
+  private val utf8Order: Ordering[String] = (a, b) =>
+    java.util.Arrays.compareUnsigned(a.getBytes(UTF_8), b.getBytes(UTF_8))
+
+  /** Reference BPE from raw text, with every order in UTF-8 bytes: space
+    * tokens, the (freq desc, word asc) cut to `maxVocabWords`, code-point
+    * symbols, the (count desc, left asc, right asc) argmax and the greedy
+    * left-to-right fold. Also reports which edge cases the corpus hit. */
+  private def utf8RefBpe(texts: Seq[String], steps: Int, maxVocabWords: Int)
+      : (Seq[(Long, String, String, String, Long)], Set[String]) = {
+    val hits = Set.newBuilder[String]
+    val freq = texts.flatMap(_.split(" ")).groupBy(identity).toSeq
+      .map { case (w, ws) => (w, ws.size.toLong) }
+      .sortBy { case (w, f) => (-f, w) }(Ordering.Tuple2(Ordering.Long, utf8Order))
+    if (freq.size > maxVocabWords && freq(maxVocabWords - 1)._2 == freq(maxVocabWords)._2)
+      hits += "cut tie"
+    var words = freq.take(maxVocabWords).map { case (w, f) =>
+      (w.codePoints.toArray.toVector.map(cp => new String(Character.toChars(cp))), f)
+    }
+    if (words.exists(_._1.sliding(3).exists(t => t.size == 3 && t.distinct.size == 1)))
+      hits += "overlapping repeat"
+    val out = Seq.newBuilder[(Long, String, String, String, Long)]
+    var step = 1
+    var done = false
+    while (step <= steps && !done) {
+      val counts = collection.mutable.Map.empty[(String, String), Long]
+      words.foreach { case (sym, f) =>
+        sym.sliding(2).foreach {
+          case Seq(a, b) => counts((a, b)) = counts.getOrElse((a, b), 0L) + f
+          case _         =>
+        }
+      }
+      if (counts.isEmpty) { done = true; hits += "exhaustion" }
+      else {
+        val top = counts.values.max
+        val tied = counts.keys.filter(counts(_) == top).toSeq
+        val (l, r) = tied.min(Ordering.Tuple2(utf8Order, utf8Order))
+        if (tied.size > 1) hits += "count tie"
+        if (tied.min != ((l, r))) hits += "utf-8 tiebreak"
+        out += ((step.toLong, l, r, l + r, top))
+        words = words.map { case (sym, f) =>
+          var acc = Vector.empty[String]
+          sym.foreach { x =>
+            if (acc.nonEmpty && acc.last == l && x == r) acc = acc.init :+ (l + r)
+            else acc :+= x
+          }
+          (acc, f)
+        }
+        step += 1
+      }
+    }
+    val merges = out.result()
+    val merged = merges.map(_._4).toSet
+    if (merges.exists(m => merged(m._2) || merged(m._3))) hits += "chained merge"
+    Seq("ascii" -> "[a-c]", "cjk" -> "[中文]", "fullwidth" -> "[ａｘ]", "supplementary" -> "[😀😁]")
+      .foreach { case (k, re) =>
+        if (merges.exists(m => re.r.findFirstIn(m._2 + m._3).isDefined)) hits += k
+      }
+    (merges, hits.result())
+  }
+
+  private def bpeRows(texts: Seq[String], steps: Int, maxVocabWords: Int) = {
+    import spark.implicits._
+    TextAnalysis.bpeMerges(texts.toDF("text"), "text", steps, maxVocabWords)
+      .collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getString(3), r.getLong(4)))
+      .toSeq.sortBy(_._1)
+  }
+
+  test("bpeMerges orders ties by UTF-8 bytes, as Spark does (U+FF41 before U+1F600)") {
+    // step 2 ties (ａ,x) with (😀,x) and step 4 (aa,a) with (aa,😀); after
+    // step 5 no pair is left
+    val got = bpeRows(Seq("ａx ａx 😀x 😀x aa😀 aaa"), steps = 10, maxVocabWords = 10000)
+    assert(got === Seq((1L, "a", "a", "aa", 3L), (2L, "ａ", "x", "ａx", 2L),
+      (3L, "😀", "x", "😀x", 2L), (4L, "aa", "a", "aaa", 1L), (5L, "aa", "😀", "aa😀", 1L)))
+    assert(utf8RefBpe(Seq("ａx ａx 😀x 😀x aa😀 aaa"), 10, 10000)._1 === got)
+  }
+
+  test("bpeMerges matches a UTF-8-ordered reference on seeded corpora") {
+    // small per-corpus alphabets and word pools force repeats, count
+    // ties and ties at the vocabulary cut; the symbols span ASCII, CJK,
+    // fullwidth (U+FF41 class) and supplementary (emoji) code points
+    val symbols = Seq("a", "b", "c", "中", "文", "ａ", "ｘ", "😀", "😁")
+    val corpusGen = for {
+      alphabet <- Gen.pick(3, symbols)
+      word = Gen.oneOf(
+        Gen.choose(1, 5).flatMap(Gen.listOfN(_, Gen.oneOf(alphabet.toSeq))).map(_.mkString),
+        Gen.zip(Gen.oneOf(alphabet.toSeq), Gen.choose(2, 4)).map { case (x, n) => x * n })
+      pool <- Gen.choose(2, 8).flatMap(Gen.listOfN(_, word))
+      words <- Gen.choose(1, 25).flatMap(Gen.listOfN(_, Gen.oneOf(pool)))
+      docs <- Gen.choose(1, 3)
+      steps <- Gen.choose(1, 8)
+      cut <- Gen.frequency(3 -> Gen.choose(1, pool.distinct.size), 1 -> Gen.const(10000))
+    } yield (words.grouped((words.size + docs - 1) / docs).map(_.mkString(" ")).toSeq, steps, cut)
+    val hits = (1 to 30).flatMap { seed =>
+      val (texts, steps, cut) = corpusGen.pureApply(Gen.Parameters.default, Seed(seed.toLong))
+      val (want, hit) = utf8RefBpe(texts, steps, cut)
+      assert(bpeRows(texts, steps, cut) === want,
+        s"seed $seed: steps $steps, maxVocabWords $cut, corpus $texts")
+      hit
+    }.toSet
+    // the seeds above must exercise every edge case, or the property is vacuous
+    val cases = Set("cut tie", "overlapping repeat", "exhaustion", "count tie",
+      "utf-8 tiebreak", "chained merge", "ascii", "cjk", "fullwidth", "supplementary")
+    assert(cases -- hits === Set.empty[String])
+  }
+
+  test("bpeMerges runs the same few Spark jobs at 1 step and at 10") {
+    val sc = spark.sparkContext
+    val docs = fixtureDocs // the catalog bootstrap's own jobs stay outside the count
+    def jobs(steps: Int): (Int, Int) = {
+      val group = s"bpe-jobs-$steps"
+      val n = new AtomicInteger
+      val listener = new SparkListener {
+        override def onJobStart(e: SparkListenerJobStart): Unit =
+          if (Option(e.properties).exists(_.getProperty("spark.jobGroup.id") == group))
+            n.incrementAndGet()
+      }
+      sc.addSparkListener(listener)
+      sc.setJobGroup(group, "bpeMerges job count")
+      val merges = try TextAnalysis.bpeMerges(docs, "text", steps = steps).collect().length
+      finally {
+        sc.clearJobGroup()
+        SuiteHygiene.settle(sc)
+        sc.removeSparkListener(listener)
+      }
+      (n.get, merges)
+    }
+    val ((one, _), (ten, merges)) = (jobs(1), jobs(10))
+    assert(merges === 10, "the fixture ran out of pairs before step 10")
+    assert(one === ten, "jobs grow with the step count")
+    assert(ten <= 6, s"$ten jobs")
   }
 
   test("vocabTopK ranks by count desc with token-asc tiebreak, keeps k") {
