@@ -422,11 +422,8 @@ object CatalogProcedures {
         while (result == null) {
           attempt += 1
           val snap = store.loadTable(db, name)
-          val sized = snap.partitions.map { pm =>
-            val dir = pm.location.map(new org.apache.hadoop.fs.Path(_))
-              .getOrElse(graft.catalog.write.GraftBatchWrite.partitionDir(snap, pm.spec))
-            pm.spec -> committedBytes(dir)
-          }.toMap
+          val sized = snap.partitions.map(pm => pm.spec ->
+            committedBytes(graft.catalog.write.GraftBatchWrite.dirOf(snap, pm))).toMap
           val tableBytes =
             if (snap.partitionColumns.isEmpty)
               committedBytes(new org.apache.hadoop.fs.Path(snap.location))
@@ -472,9 +469,8 @@ object CatalogProcedures {
             // the declaration; advisory, never fails the procedure)
             val skipDirs =
               if (updated.partitionColumns.isEmpty) Seq(updated.location)
-              else updated.partitions.map(pm => pm.location.getOrElse(
-                graft.catalog.write.GraftBatchWrite
-                  .partitionDir(updated, pm.spec).toString))
+              else updated.partitions.map(
+                graft.catalog.write.GraftBatchWrite.dirOf(updated, _).toString)
             graft.catalog.SkipStats.maintainDirs(spark, skipDirs,
               updated.schema, updated.properties, updated.provider)
             // ROW formats (avro/csv/json) have no footers for the commit

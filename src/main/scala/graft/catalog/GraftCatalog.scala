@@ -106,13 +106,12 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     new GraftTable(this, db, repairResidueAtRead(db, ident.name))
   }
 
-  /** REPAIR-AT-READ: a crashed writer's residue (a dynamic overwrite's
-    * `.retire` moves, a COW rewrite's `.pending` deletes, a MOR DML's
-    * `.delta`, a rollback's `.rbk`) previously healed only at the NEXT
-    * WRITE's job start — until then a reader of a crashed dynamic
-    * overwrite saw its written partitions empty. Now every table load
-    * probes the txn dir (one cheap negative `exists` on healthy tables)
-    * and runs the same repairs under a non-blocking permit grab — see
+  /** REPAIR-AT-READ: a crashed writer's intent record
+    * ([[graft.catalog.write.IntentLog]]) would otherwise heal only at
+    * the NEXT WRITE's job start — until then a reader of a crashed
+    * dynamic overwrite saw its written partitions empty. Every table
+    * load lists the txn dir (one listing; a missing dir is empty) and
+    * runs the same repair under a non-blocking permit grab — see
     * [[graft.catalog.write.GraftBatchWrite.readRepair]]. Advisory: any
     * failure leaves the residue for the next write, never fails the
     * read. */
@@ -121,16 +120,9 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     if (meta.external) return meta
     try {
       val conf = spark.sessionState.newHadoopConf()
-      val txn = new Path(meta.location,
-        graft.catalog.write.GraftBatchWrite.TxnDirName)
-      val fs = txn.getFileSystem(conf)
-      val residueFiles =
-        (if (fs.exists(txn)) fs.listStatus(txn).toSeq else Nil).filter { st =>
-          val n = st.getPath.getName
-          n.endsWith(".pending") || n.endsWith(".retire") ||
-            n.endsWith(graft.catalog.write.RollbackTxn.Suffix) ||
-            n.endsWith(".delta")
-        }
+      val txn = graft.catalog.write.IntentLog.txnDir(meta.location)
+      val residueFiles = graft.catalog.write.IntentLog.list(txn.getFileSystem(conf), txn)
+        .filter(st => graft.catalog.write.IntentLog.isIntent(st.getPath.getName))
       // CROSS-DRIVER guard (round-20 ADVICE): the permit is per-JVM, so
       // a reader here cannot see a LIVE writer in another driver — whose
       // txn manifests exist BEFORE its FS commit. Consuming one would
@@ -791,8 +783,7 @@ class GraftCatalog extends TableCatalog with SupportsNamespaces
     }
     val dirs: Seq[Path] =
       if (meta.isPartitioned)
-        meta.partitions.map(p => p.location.map(new Path(_)).getOrElse(
-          graft.catalog.write.GraftBatchWrite.partitionDir(meta, p.spec)))
+        meta.partitions.map(graft.catalog.write.GraftBatchWrite.dirOf(meta, _))
       else Seq(new Path(meta.location))
     dirs.exists(hasFiles)
   }

@@ -55,8 +55,7 @@ class GraftFileIndex(
       qualify(new Path(partitionLocation(p))))))
 
   private def partitionLocation(p: PartitionMeta): String =
-    p.location.getOrElse(
-      graft.catalog.write.GraftBatchWrite.partitionDir(meta, p.spec).toString)
+    graft.catalog.write.GraftBatchWrite.dirOf(meta, p).toString
 
   /** Prune first, list after — only surviving partition dirs hit the
     * filesystem. */

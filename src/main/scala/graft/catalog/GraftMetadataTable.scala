@@ -132,8 +132,7 @@ class GraftMetadataTable(
       else meta.partitions.map { pm =>
         val frag = meta.partitionColumns.map(c =>
           s"$c=${PartitionValues.lookup(pm.spec, c).getOrElse("")}").mkString("/")
-        (Some(frag), pm.location.map(new Path(_))
-          .getOrElse(GraftBatchWrite.partitionDir(meta, pm.spec)))
+        (Some(frag), GraftBatchWrite.dirOf(meta, pm))
       }
     val files: Seq[(Option[String], Path, Long, Option[Long])] = dirs.flatMap {
       case (frag, dir) =>

@@ -451,34 +451,17 @@ class GraftTable(
     try {
       var unpartitioned = false
       store.updateTable(db, meta.name) { current =>
+        // the same retirement as truncate (empty spec, whole table incl.
+        // custom LOCATIONs) and static overwrite (matching partition dirs
+        // plus a full spec's literal dir)
+        write.PartitionPredicates.retire(hadoopConf, current, spec, retireToken)
         if (spec.isEmpty) {
-          // whole-table DELETE == truncate
           unpartitioned = !current.isPartitioned
-          Snapshots.retireTableRoot(hadoopConf, current.location, retireToken)
-          // custom-LOCATION partition data retires into its own dir's
-          // ext area (round 19) — restorable like everything else
-          current.partitions.flatMap(_.location).foreach { l =>
-            Snapshots.retireDirTree(
-              hadoopConf, current.location, new Path(l), retireToken)
-          }
           current.copy(partitions = Nil,
             stats = if (catalog.autoSizeUpdate) Some(TableStats(0L, None)) else None)
         } else {
-          val (dropped, kept) = current.partitions.partition(p =>
-            spec.forall { case (k, v) =>
-              p.spec.exists { case (pk, pv) => pk.equalsIgnoreCase(k) && pv == v } })
-          dropped.foreach { p =>
-            val d = p.location.map(new Path(_))
-              .getOrElse(defaultPartitionDir(current, p.spec))
-            Snapshots.retireDirTree(hadoopConf, current.location, d, retireToken)
-          }
-          // the literal dir for a full spec also covers files written
-          // before partition tracking (parity with static overwrite)
-          if (spec.size == current.partitionColumns.size) {
-            val lit = defaultPartitionDir(current,
-              current.partitionColumns.map(c => c -> PartitionValues.lookup(spec, c).get).toMap)
-            Snapshots.retireDirTree(hadoopConf, current.location, lit, retireToken)
-          }
+          val kept = current.partitions
+            .filterNot(p => write.PartitionPredicates.matches(spec, p.spec))
           current.copy(partitions = kept,
             stats =
               if (catalog.autoSizeUpdate && kept.forall(_.isSized))
@@ -573,7 +556,7 @@ class GraftTable(
         name(), dupIdents.toSeq, meta.partitionSchema)
       val added = specs.zip(properties).map { case (spec, props) =>
         val loc = Option(props.get(TableCatalog.PROP_LOCATION))
-        val dir = loc.map(new Path(_)).getOrElse(defaultPartitionDir(current, spec))
+        val dir = write.GraftBatchWrite.dirOf(current, PartitionMeta(spec, loc))
         dir.getFileSystem(spark.sessionState.newHadoopConf()).mkdirs(dir)
         // Unsized, not 0: a LOCATION may point at existing data, and the
         // next sizing commit repairs the placeholder exactly once.
@@ -612,8 +595,7 @@ class GraftTable(
           if (!current.external) {
             dropped.foreach { p =>
               Snapshots.retireDirTree(hadoopConf, current.location,
-                p.location.map(new Path(_))
-                  .getOrElse(defaultPartitionDir(current, p.spec)), retireToken)
+                write.GraftBatchWrite.dirOf(current, p), retireToken)
             }
           }
           current.copy(
@@ -647,8 +629,7 @@ class GraftTable(
     val current = fresh
     current.partitions.find(_.spec == spec) match {
       case Some(p) => Map(
-        TableCatalog.PROP_LOCATION ->
-          p.location.getOrElse(defaultPartitionDir(current, spec).toString)).asJava
+        TableCatalog.PROP_LOCATION -> write.GraftBatchWrite.dirOf(current, p).toString).asJava
       case None => throw new NoSuchPartitionException(db, meta.name, spec)
     }
   }
@@ -668,9 +649,6 @@ class GraftTable(
       .filter(p => wanted.forall { case (k, v) => p.spec.get(k).contains(v) })
       .map(p => PartitionValues.row(spark, ps, p.spec)).toArray
   }
-
-  private def defaultPartitionDir(current: TableMeta, spec: Map[String, String]): Path =
-    graft.catalog.write.GraftBatchWrite.partitionDir(current, spec)
 }
 
 object GraftTable {

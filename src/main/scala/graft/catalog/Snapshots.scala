@@ -269,21 +269,18 @@ object Snapshots extends Logging {
     * deletes as before, and travel across that removal refuses. */
   def retireFile(
       conf: Configuration, location: String, file: Path, token: String): Boolean =
+    try {
+      val target = retiredPath(conf, location, file, token)
+      val fs = target.getFileSystem(conf)
+      fs.mkdirs(target.getParent)
+      fs.rename(file, target)
+    } catch { case NonFatal(_) => false }
+
+  /** Where [[retireFile]] moves `file` under `token`. */
+  def retiredPath(conf: Configuration, location: String, file: Path, token: String): Path =
     relPathUnder(conf, location, file) match {
-      case None => try {
-        val fs = file.getFileSystem(conf)
-        val target = new Path(file.getParent,
-          s"$ExtRetiredDirName/$token/${file.getName}")
-        fs.mkdirs(target.getParent)
-        fs.rename(file, target)
-      } catch { case NonFatal(_) => false }
-      case Some(rel) => try {
-        val root = new Path(location)
-        val fs = root.getFileSystem(conf)
-        val target = new Path(root, s"$RetiredDirName/$token/$rel")
-        fs.mkdirs(target.getParent)
-        fs.rename(file, target)
-      } catch { case NonFatal(_) => false }
+      case None => new Path(file.getParent, s"$ExtRetiredDirName/$token/${file.getName}")
+      case Some(rel) => new Path(new Path(location), s"$RetiredDirName/$token/$rel")
     }
 
   /** Retire every data file under `dir` (recursively through VISIBLE
@@ -403,10 +400,8 @@ object Snapshots extends Logging {
     val fs = root.getFileSystem(conf)
     val dirSpecs: Seq[(String, Map[String, String])] =
       if (meta.isPartitioned)
-        meta.partitions.map(p => (
-          p.location.getOrElse(
-            graft.catalog.write.GraftBatchWrite.partitionDir(meta, p.spec).toString),
-          p.spec))
+        meta.partitions.map(p =>
+          (graft.catalog.write.GraftBatchWrite.dirOf(meta, p).toString, p.spec))
       else Seq((meta.location, Map.empty[String, String]))
     val parent: Option[Snap] =
       meta.snapshots.headOption.flatMap(s => readSnap(conf, s.file))

@@ -54,13 +54,10 @@ import graft.catalog.GraftIO.{jsonString, readSmallFile}
   * Reads apply the vectors via the plan-level anti-join
   * ([[graft.plans.ResolveDeletionVectors]]); compaction folds them.
   *
-  * Crash atomicity mirrors the COW `.pending` protocol: a `.delta`
-  * intent manifest (write-target dirs + pre-existing files + the DvMeta)
-  * persists before the FS commit, the `.delta.committed` marker is
-  * created the instant files publish, and
-  * [[GraftBatchWrite.repairDeltaManifests]] rolls the statement forward
-  * (marker) or back (no marker) at the next write — the statement fully
-  * happened or never happened, never "inserts without their deletes".
+  * Crash atomicity: the statement's [[IntentLog]] record (write-target
+  * dirs, their pre-existing files, the DV dir and the DvMeta) rides the
+  * append's commit, so the statement fully happened or never happened,
+  * never "inserts without their deletes".
   *
   * 100 TB posture: DML cost ∝ rows changed + one scan of the candidate
   * partitions (static partition pruning below); read-time cost is one
@@ -227,7 +224,7 @@ private[write] class GraftDeltaWrite(
   // the INSERT half is a plain append through the stock machinery — its
   // batch write owns the permit, repairs, registration, skip-stats and
   // snapshot maintenance; the delta wrapper adds the DV sidecar and the
-  // .delta crash protocol around it. Constructed eagerly so the delta
+  // intent record around it. Constructed eagerly so the delta
   // plan inherits the append's distribution/ordering verbatim (bucketed
   // MOR tables route their inserts exactly like any bucketed append).
   private val innerWrite: GraftWrite = {
@@ -306,15 +303,6 @@ private[write] class GraftDeltaBatchWrite(
     }
   }
 
-  private def dataFiles(dir: Path, conf: Configuration): Seq[Path] = {
-    val dfs = dir.getFileSystem(conf)
-    if (!dfs.exists(dir)) Nil
-    else dfs.listStatus(dir).toSeq.collect {
-      case s if s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".") => s.getPath
-    }
-  }
-
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     val conf = spark.sessionState.newHadoopConf()
     val rootFs = new Path(meta.location).getFileSystem(conf)
@@ -329,15 +317,9 @@ private[write] class GraftDeltaBatchWrite(
       op.scannedFiles.foreach { expected =>
         val scannedDirs: Seq[Path] =
           if (fresh.partitionColumns.isEmpty) Seq(new Path(fresh.location))
-          else {
-            val specs = op.scannedSpecs.getOrElse(fresh.partitions.map(_.spec))
-            specs.map { s =>
-              fresh.partitions.find(_.spec == s).flatMap(_.location)
-                .map(new Path(_))
-                .getOrElse(GraftBatchWrite.partitionDir(fresh, s))
-            }
-          }
-        val live = scannedDirs.flatMap(dataFiles(_, conf))
+          else GraftBatchWrite.dirsOf(fresh,
+            op.scannedSpecs.getOrElse(fresh.partitions.map(_.spec)))
+        val live = scannedDirs.flatMap(GraftBatchWrite.dataFiles(_, conf))
           .map(_.toString).toSet
         if (live != expected)
           throw new IllegalStateException(
@@ -369,70 +351,32 @@ private[write] class GraftDeltaBatchWrite(
           System.currentTimeMillis()))
       } else None
 
-      // .delta intent manifest: write-target dirs + their pre-existing
-      // files (so an uncommitted crash can sweep the strays), the DV
-      // area, and the DvMeta to (re-)register on roll-forward
+      // the intent record: write-target dirs + their pre-existing files
+      // (so an uncommitted crash can sweep the strays), the DV area, and
+      // the DvMeta to (re-)register on roll-forward. The append commit
+      // does the rest: record, FS publish, marker, partition registration
+      // + DvMeta in ONE atomic descriptor update, skip-stats, snapshot
+      // (kind dml-mor, dv list included), then the record retires — all
+      // under the permit
       val writeDirs: Seq[Path] =
         if (fresh.partitionColumns.isEmpty) Seq(new Path(fresh.location))
-        else {
-          val locBySpec = fresh.partitions
-            .collect { case p if p.location.isDefined => p.spec -> p.location.get }
-            .toMap
-          innerMsgs
-            .collect { case w: org.apache.spark.sql.execution.datasources.WriteTaskResult =>
-              w.summary.updatedPartitions }
-            .flatten.distinct
-            .map(GraftBatchWrite.parseFragment(fresh, _))
-            .map(spec => locBySpec.get(spec).map(new Path(_))
-              .getOrElse(GraftBatchWrite.partitionDir(fresh, spec)))
-        }
-      val txnDir = new Path(meta.location, GraftBatchWrite.TxnDirName)
-      rootFs.mkdirs(txnDir)
-      val pending = new Path(txnDir, s"$token.delta")
-      val marker = new Path(txnDir, s"$token.delta.committed")
-      val sb = new StringBuilder
-      writeDirs.foreach(d => sb.append("W\t").append(d.toString).append('\n'))
-      writeDirs.flatMap(dataFiles(_, conf)).foreach(f =>
-        sb.append("K\t").append(f.toString).append('\n'))
-      dvMeta.foreach { dv =>
-        sb.append("DV\t")
-          .append(new Path(meta.location, s"${Snapshots.DvDirName}/$token"))
-          .append('\n')
-        sb.append("DVMETA\t").append(dv.token).append('\t')
-          .append(dv.keyColumn).append('\t').append(dv.manifest).append('\t')
-          .append(dv.keys).append('\t').append(dv.createdAtMs).append('\n')
-      }
-      sb.append("DVTMP\t").append(dvTmpDir.toString).append('\n')
-      val tmp = new Path(txnDir, s".$token.delta.tmp")
-      val out = rootFs.create(tmp, false)
-      try out.write(sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!rootFs.rename(tmp, pending))
-        throw new java.io.IOException(s"failed to persist $pending")
-      GraftBatchWrite.ownTxnFile(pending.getName)
-
-      // the append commit does the rest: FS publish (marker right
-      // after, via the hook — the COW marker point), partition
-      // registration + DvMeta in ONE atomic descriptor update,
-      // skip-stats, snapshot (kind dml-mor, dv list included), then the
-      // txn files retire — all under the permit
-      gbw.afterFsCommit = () => rootFs.create(marker, false).close()
+        else GraftBatchWrite.dirsOf(fresh, GraftBatchWrite.writtenSpecs(fresh, innerMsgs))
+      gbw.intent = Some(IntentLog.Intent(
+        writeDirs = writeDirs,
+        keeps = writeDirs.flatMap(GraftBatchWrite.dataFiles(_, conf)),
+        dv = dvMeta.map(_ => new Path(meta.location, s"${Snapshots.DvDirName}/$token")),
+        dvMeta = dvMeta,
+        tmp = Seq(dvTmpDir)))
       dvMeta.foreach { dv =>
         gbw.metaExtra = m => m.copy(deleteVectors = m.deleteVectors :+ dv)
       }
       gbw.kindOverride = Some("dml-mor")
-      gbw.postCommit = () => {
-        rootFs.delete(pending, false)
-        rootFs.delete(marker, false)
-        rootFs.delete(dvTmpDir, true)
-        ()
-      }
       gbw.commit(innerMsgs.toArray)
     } catch { case t: Throwable =>
-      // pre-publish failures (conflict, finalize, manifest): clean the
+      // pre-publish failures (conflict, finalize, record): clean the
       // unreferenced DV area and let the inner abort release the permit
       // and the staging. Post-publish failures inside gbw.commit leave
-      // the .delta manifest for the next write's repair.
+      // the intent record for the next repair.
       try {
         rootFs.delete(dvTmpDir, true)
         ()

@@ -46,9 +46,8 @@ import graft.catalog.{MetaStore, PartitionMeta, PartitionValues, TableMeta}
   * directory-backed table without a file-level transaction log, and the
   * declared isolation level (see SCALE.md). WRITERS never see that
   * state: the per-table write permit serializes them, and a crash
-  * anywhere in the window is repaired by the next write's
-  * [[GraftBatchWrite.repairPendingCowDeletes]] — the persisted manifest
-  * plus its `.committed` marker make the statement atomic-to-writers
+  * anywhere in the window is repaired by [[IntentLog.repair]] — the
+  * statement's intent record plus its marker make it atomic-to-writers
   * (rolled forward after the marker, rolled back before it). The
   * reference connector has no row-level DML at all — this surface is
   * Spark-4-native (reference scope:

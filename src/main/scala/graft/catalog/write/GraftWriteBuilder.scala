@@ -85,14 +85,37 @@ private[graft] object PartitionPredicates {
     * `deleteWhere` so dir targeting cannot drift between the surfaces. */
   def matchDirs(meta: TableMeta, spec: Map[String, String]): Seq[Path] = {
     val tracked = meta.partitions.filter(p => matches(spec, p.spec))
-      .map(p => p.location.map(new Path(_))
-        .getOrElse(GraftBatchWrite.partitionDir(meta, p.spec)))
+      .map(GraftBatchWrite.dirOf(meta, _))
     val literal =
       if (spec.size == meta.partitionColumns.size)
         Seq(GraftBatchWrite.partitionDir(meta,
           meta.partitionColumns.map(c => c -> PartitionValues.lookup(spec, c).get).toMap))
       else Seq.empty
     (tracked ++ literal).distinct
+  }
+
+  /** Remove every file a static spec owns — the empty spec owns the
+    * whole table, custom-LOCATION partitions included. Managed tables
+    * RETIRE the files under `token` (q116: the pre-statement snapshot
+    * stays restorable); EXTERNAL tables delete them. Shared by truncate,
+    * static overwrite and partition DELETE FROM. */
+  def retire(
+      conf: org.apache.hadoop.conf.Configuration, meta: TableMeta,
+      spec: Map[String, String], token: String): Unit = {
+    def clear(d: Path): Unit = {
+      val fs = d.getFileSystem(conf)
+      if (spec.nonEmpty) fs.delete(d, true)
+      else if (fs.exists(d)) fs.listStatus(d).foreach(s => fs.delete(s.getPath, true))
+    }
+    val custom = meta.partitions.flatMap(_.location).map(new Path(_))
+    if (meta.external)
+      (if (spec.isEmpty) new Path(meta.location) +: custom else matchDirs(meta, spec))
+        .foreach(clear)
+    else if (spec.isEmpty) {
+      graft.catalog.Snapshots.retireTableRoot(conf, meta.location, token)
+      custom.foreach(graft.catalog.Snapshots.retireDirTree(conf, meta.location, _, token))
+    } else matchDirs(meta, spec)
+      .foreach(graft.catalog.Snapshots.retireDirTree(conf, meta.location, _, token))
   }
 }
 
@@ -397,7 +420,6 @@ class GraftWrite(
     // side matches by id; a file written without ids would REFUSE to
     // read on an id-mapped table)
     val schema = graft.catalog.GraftCatalog.copyFieldIds(meta, info.schema())
-    val fs = new Path(meta.location).getFileSystem(hadoopConf)
     // the retirement token of THIS job: every file this commit removes
     // (truncate/static-overwrite sweeps here, the COW delete phase in
     // commit) renames under `_graft_retired/<token>/`, and the commit's
@@ -439,45 +461,12 @@ class GraftWrite(
     // — Spark bakes them into the job description — so partition DDL
     // racing an IN-FLIGHT append is the one interleaving writers must
     // still sequence themselves.)
-    val preWriteDeletes: () => Unit = () => {
-      val fresh = store.loadTableLocked(db, meta.name)
-      mode match {
-        case Truncate =>
-          // MANAGED tables RETIRE instead of delete (q116): each removed
-          // file renames into `_graft_retired/<token>/<relpath>` so the
-          // retained snapshots stay restorable. EXTERNAL tables and
-          // custom-LOCATION partition data (outside the root) keep the
-          // delete — their files are not under the managed tree.
-          if (fresh.external) {
-            if (fs.exists(new Path(fresh.location))) {
-              fs.listStatus(new Path(fresh.location)).foreach(s => fs.delete(s.getPath, true))
-            }
-          } else graft.catalog.Snapshots.retireTableRoot(
-            hadoopConf, fresh.location, retireToken)
-          // tracked partitions with a custom LOCATION live outside the
-          // table dir — truncate owns their data too. Managed tables
-          // RETIRE it (the dir's own _graft_retired_ext area, round 19)
-          // so travel across the truncate serves those rows as well.
-          fresh.partitions.flatMap(_.location).foreach { l =>
-            val p = new Path(l)
-            if (fresh.external) {
-              val pfs = p.getFileSystem(hadoopConf)
-              if (pfs.exists(p))
-                pfs.listStatus(p).foreach(s => pfs.delete(s.getPath, true))
-            } else graft.catalog.Snapshots.retireDirTree(
-              hadoopConf, fresh.location, p, retireToken)
-          }
-        case StaticOverwrite(spec) =>
-          // per-path FS: custom-LOCATION partitions may live on a
-          // different scheme than the table root
-          PartitionPredicates.matchDirs(fresh, spec).foreach { d =>
-            if (fresh.external)
-              d.getFileSystem(hadoopConf).delete(d, true)
-            else graft.catalog.Snapshots.retireDirTree(
-              hadoopConf, fresh.location, d, retireToken)
-          }
-        case _ =>
-      }
+    val preWriteDeletes: () => Unit = () => mode match {
+      case Truncate => PartitionPredicates.retire(
+        hadoopConf, store.loadTableLocked(db, meta.name), Map.empty, retireToken)
+      case StaticOverwrite(spec) => PartitionPredicates.retire(
+        hadoopConf, store.loadTableLocked(db, meta.name), spec, retireToken)
+      case _ =>
     }
 
     // BLOOM SKIPPING (q112): have the parquet writer emit split-block
@@ -608,15 +597,10 @@ class GraftBatchWrite(
     * ranges containing it. */
   @volatile private[write] var kindOverride: Option[String] = None
 
-  /** Hook invoked right AFTER the FS commit publishes files and before
-    * the catalog phase — the merge-on-read commit creates its `.delta`
-    * marker here (the COW marker point, same crash semantics). */
-  @volatile private[write] var afterFsCommit: () => Unit = () => ()
-
-  /** Hook invoked at the very end of a successful commit, still under
-    * the write permit — the merge-on-read commit retires its `.delta`
-    * intent manifest here. */
-  @volatile private[write] var postCommit: () => Unit = () => ()
+  /** The intent record of a wrapper that commits THROUGH this batch
+    * write — the merge-on-read DML commit's inserted files, DV batch and
+    * DvMeta ([[IntentLog]]). COW and dynamic overwrite build their own. */
+  @volatile private[write] var intent: Option[IntentLog.Intent] = None
 
   private val permitKey = GraftBatchWrite.qualifiedKey(spark, meta.location)
   private val writePermit =
@@ -651,23 +635,10 @@ class GraftBatchWrite(
     // abort(), so a throw from here (deletes or the inner factory) would
     // otherwise leak the permit forever and wedge all writes to the table.
     try {
-      // a crashed snapshot ROLLBACK heals first (its undo restores the
-      // descriptor and empties its retirement token back into the live
-      // tree, so nothing below — including this commit's snapshot GC —
-      // can observe or reclaim the half-rolled-back state)
-      RollbackTxn.repair(spark.sessionState.newHadoopConf(), store, db, meta)
-      // a crashed row-level rewrite may have published replacement files
-      // without completing its old-file deletes — finish (or abandon)
-      // that transaction first, while the permit guarantees no other
-      // writer is mid-flight
-      repairPendingCowDeletes()
-      // ... and a crashed dynamic overwrite may have moved replaced
-      // files to retirement without completing its swap — restore the
-      // unswapped dirs' files (empty-dir rule)
-      repairRetireManifests()
-      // ... and a crashed merge-on-read DML rolls forward (marker) or
-      // back (no marker) before any new files land
-      repairDeltaManifests()
+      // a crashed statement rolls forward or back first, while the
+      // permit guarantees no other writer is mid-flight — nothing below,
+      // this commit's snapshot GC included, can observe its half state
+      IntentLog.repair(spark.sessionState.newHadoopConf(), store, db, meta)
       // repairs move/delete files WITHOUT bumping the descriptor seq
       // (the crashed commit never published) — listings cached before
       // the repair would keep planning the swept files
@@ -695,18 +666,6 @@ class GraftBatchWrite(
     * the commit protocol's task-attempt paths already make commits safe. */
   override def useCommitCoordinator(): Boolean = false
 
-  /** Direct data files of a dir (hidden/underscore names are committer
-    * metadata, never table data). */
-  private def dataFiles(
-      dir: Path, hadoopConf: org.apache.hadoop.conf.Configuration): Seq[Path] = {
-    val dfs = dir.getFileSystem(hadoopConf)
-    if (!dfs.exists(dir)) Nil
-    else dfs.listStatus(dir).toSeq.collect {
-      case s if s.isFile && !s.getPath.getName.startsWith("_") &&
-        !s.getPath.getName.startsWith(".") => s.getPath
-    }
-  }
-
   /** COW pre-commit snapshot: the scanned partitions (resolved against
     * the live descriptor) and their current data files — everything the
     * rewrite must delete once its replacement files are published —
@@ -721,437 +680,72 @@ class GraftBatchWrite(
       writeDirs: Seq[Path],
       keepFiles: Seq[Path])
 
-  /** Durability for the COW delete phase: a crash between the FS commit
-    * (replacement files published) and the old-file delete would
-    * otherwise leave PERMANENT duplicate rows — no process is alive to
-    * finish the delete, and a listing can no longer tell old files from
-    * new. So the delete intent is persisted before publishing:
-    *
-    *  1. `_graft_txn/<id>.pending` (tmp+rename, atomic): every dir the
-    *     rewrite touches — scanned dirs (`D`) with the exact old files
-    *     to remove (`F`), and unscanned write-target dirs (`W`) with
-    *     their pre-existing files (`K`);
-    *  2. `inner.commit` publishes the replacement files;
-    *  3. `_graft_txn/<id>.committed` marker (single atomic create) —
-    *     THE commit point of the rewrite;
-    *  4. old files deleted, then the txn files removed — `.pending`
-    *     strictly BEFORE `.committed`. The order is load-bearing: a
-    *     marker-less manifest means "never committed" to repair, so the
-    *     manifest must never outlive its marker — a crash between the
-    *     two cleanup deletes in the other order would present a
-    *     committed rewrite (old files already gone) as uncommitted, and
-    *     rollback would delete the live replacement files. An orphaned
-    *     `.committed` with no `.pending` is inert (repair iterates
-    *     `.pending` files only; txn ids are UUIDs, never reused).
-    *
-    * [[repairPendingCowDeletes]] runs at the start of every subsequent
-    * write (under the permit, so no other writer is mid-flight):
-    *
-    *  - marker present → the rewrite committed: roll FORWARD by
-    *    replaying the `F` deletes (idempotent delete-if-exists);
-    *  - marker absent → the rewrite did NOT commit (crash anywhere up
-    *    to and including step 3's create): roll BACK by deleting every
-    *    data file in the `D`/`W` dirs that is not `F`/`K`-listed. Those
-    *    can only be the crashed rewrite's replacement files — possibly
-    *    a PARTIAL set, since `commitJob` renames task outputs
-    *    sequentially — and the old files are all still present (their
-    *    deletes only ever run after the marker), so the table returns
-    *    to its exact pre-statement state. Rolling forward here instead
-    *    would lose rows whose replacement files were never published.
-    *
-    * Either way the statement is atomic to the NEXT writer: it fully
-    * happened (marker) or never happened (no marker). */
-  private def writePendingManifest(
-      cs: CowSnapshot, conf: org.apache.hadoop.conf.Configuration): (Path, Path) = {
-    val txnDir = new Path(meta.location, GraftBatchWrite.TxnDirName)
-    val fs = txnDir.getFileSystem(conf)
-    fs.mkdirs(txnDir)
-    val id = UUID.randomUUID().toString
-    val pending = new Path(txnDir, s"$id.pending")
-    val tmp = new Path(txnDir, s".$id.tmp")
-    val dirs =
-      if (cs.dirs.nonEmpty) cs.dirs.map(_._2) else Seq(new Path(meta.location))
-    val sb = new StringBuilder
-    dirs.foreach(d => sb.append("D\t").append(d.toString).append('\n'))
-    cs.oldFiles.foreach(f => sb.append("F\t").append(f.toString).append('\n'))
-    cs.writeDirs.foreach(d => sb.append("W\t").append(d.toString).append('\n'))
-    cs.keepFiles.foreach(f => sb.append("K\t").append(f.toString).append('\n'))
-    graft.catalog.GraftIO.writeSmallFile(fs, tmp,
-      sb.toString.getBytes(java.nio.charset.StandardCharsets.UTF_8),
-      overwrite = false)
-    if (!fs.rename(tmp, pending))
-      throw new java.io.IOException(s"failed to persist COW delete manifest $pending")
-    GraftBatchWrite.ownTxnFile(pending.getName)
-    (pending, new Path(txnDir, s"$id.committed"))
-  }
-
-  /** Data files in a pending manifest's D/W dirs that its F/K listing
-    * did not record — the crashed rewrite's replacement files. ONE
-    * definition shared by the rollback and quarantine branches so both
-    * classify the same file identically. */
-  private def unlistedFiles(
-      lines: List[String],
-      conf: org.apache.hadoop.conf.Configuration): Seq[Path] = {
-    def tagged(t: String): Seq[Path] =
-      lines.collect { case l if l.startsWith(t + "\t") => new Path(l.drop(2)) }
-    val preexisting = (tagged("F") ++ tagged("K")).map(_.toString).toSet
-    (tagged("D") ++ tagged("W")).distinct
-      .flatMap(d => dataFiles(d, conf))
-      .filterNot(f => preexisting.contains(f.toString))
-  }
-
-  private[write] def repairPendingCowDeletes(): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val txnDir = new Path(meta.location, GraftBatchWrite.TxnDirName)
-    val fs = txnDir.getFileSystem(conf)
-    if (!fs.exists(txnDir)) return
-    fs.listStatus(txnDir).map(_.getPath)
-      .filter(_.getName.endsWith(".pending")).foreach { pm =>
-        val marker = new Path(txnDir,
-          pm.getName.stripSuffix(".pending") + ".committed")
-        val lines = {
-          val in = fs.open(pm)
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        }
-        def tagged(t: String): Seq[Path] =
-          lines.collect { case l if l.startsWith(t + "\t") => new Path(l.drop(2)) }
-        val files = tagged("F")
-        // Defense-in-depth on the rollback decision: an uncommitted
-        // rewrite can NEVER have a missing F file (old-file deletes only
-        // run after the marker, and the conflict check pinned the
-        // listing), so marker-less + ALL F files absent means the
-        // manifest is post-commit residue (the legacy cleanup-order
-        // crash deleted every F, then died before removing the pending
-        // file). Roll FORWARD only there. A PARTIALLY-missing F set is
-        // AMBIGUOUS: under current code it can only mean an externally
-        // lost old file on an uncommitted txn (→ rollback would be
-        // right), but as legacy crash-mid-F-delete residue of a
-        // COMMITTED rewrite a rollback would delete the committed
-        // replacements while some originals are already gone — combined
-        // loss in the opposite direction. Neither direction is provably
-        // safe to EXECUTE destructively — but doing NOTHING leaves the
-        // unlisted files reader-visible, serving duplicate /
-        // half-rewritten rows on every read until a human acts. So the
-        // repair QUARANTINES: unlisted files move (a rename, reversible)
-        // into the underscore-hidden txn dir, giving readers the exact
-        // pre-statement state under the only interpretation current
-        // code can produce; for legacy committed-rewrite residue an
-        // operator restores them from the quarantine (each quarantined
-        // file carries a `.origin` sidecar naming its restore path).
-        // The manifest retires as `.ambiguous` — terminal, so files
-        // from LATER writes can never be mistaken for this rewrite's on
-        // a subsequent pass. An EMPTY F list (rewrite of an empty table) always
-        // takes rollback: current-code crashes can only leave
-        // marker-less manifests pre-commit (pending is deleted before
-        // the marker), where rollback correctly sweeps partial
-        // replacements; the one adverse case — legacy-writer residue of
-        // a committed empty-table rewrite — loses that single write but
-        // returns the table to its pre-write (empty) state rather than
-        // exposing partial files as committed data.
-        val missingF = files.count(f => !f.getFileSystem(conf).exists(f))
-        val committed = fs.exists(marker) ||
-          (files.nonEmpty && missingF == files.size)
-        if (!committed && missingF > 0 && missingF < files.size) {
-          // ambiguous: quarantine the unlisted files (reversible), then
-          // retire the manifest as .ambiguous for operator review. The
-          // manifest retires ONLY if every rename succeeded — on any
-          // failure (cross-filesystem partition location, quota, …) the
-          // .pending manifest stays so the next write re-examines the
-          // dirs and retries the remainder (already-moved files are a
-          // no-op on retry). Quarantined names are `<i>_<origName>`
-          // (short, collision-free); each file's original path lives in
-          // a `<name>.origin` sidecar next to it.
-          val log = org.slf4j.LoggerFactory.getLogger(classOf[GraftBatchWrite])
-          val base = pm.getName.stripSuffix(".pending")
-          val qDir = new Path(txnDir, s"$base.quarantine")
-          fs.mkdirs(qDir)
-          // .map then .forall: every movable file moves THIS pass even
-          // if an earlier one fails — readers lose as many duplicate
-          // sources as possible while the manifest stays pending
-          val unlisted = unlistedFiles(lines, conf)
-          val moved = unlisted.map { f =>
-            // unique within qDir even across partial-failure retries;
-            // the sidecar name is reserved together with the data name
-            // so a quarantined data file literally named `*.origin` can
-            // never be clobbered by another file's sidecar
-            var i = 0
-            def tgt = new Path(qDir, s"${i}_${f.getName}")
-            def side = new Path(qDir, s"${i}_${f.getName}.origin")
-            while (fs.exists(tgt) || fs.exists(side)) i += 1
-            val ok =
-              try {
-                // the restore map, one sidecar per file: <name>.origin
-                // holds the original full path (written FIRST — a crash
-                // between the two leaves an inert sidecar, never an
-                // unmapped quarantined file)
-                val o = fs.create(side, false)
-                try o.write(f.toString.getBytes(
-                  java.nio.charset.StandardCharsets.UTF_8))
-                finally o.close()
-                f.getFileSystem(conf).rename(f, tgt)
-              } catch {
-                // IOException, cross-FS IllegalArgumentException, … —
-                // any failure degrades to keep-pending-and-retry
-                case scala.util.control.NonFatal(_) => false
-              }
-            if (!ok) log.error(
-              s"COW repair: failed to quarantine $f — keeping $pm pending " +
-                "so the next write retries")
-            ok
-          }.forall(identity)
-          if (moved) {
-            val amb = new Path(txnDir, s"$base.ambiguous")
-            val out = fs.create(amb, true)
-            try out.write(lines.mkString("", "\n", "\n").getBytes(
-              java.nio.charset.StandardCharsets.UTF_8))
-            finally out.close()
-            fs.delete(pm, false)
-            log.warn(
-              s"COW repair: manifest $pm was marker-less with $missingF of " +
-                s"${files.size} old files missing — ambiguous crash state " +
-                "(uncommitted txn with externally-lost originals, or legacy " +
-                s"committed-rewrite residue). Quarantined ${unlisted.size} " +
-                s"unlisted files under $qDir (each with a .origin sidecar " +
-                "naming its restore path); manifest retired as " +
-                s"$base.ambiguous.")
-          }
-        } else {
-          if (committed) {
-            // committed: finish the delete phase
-            files.foreach(f => f.getFileSystem(conf).delete(f, false))
-          } else {
-            // uncommitted: remove the crashed rewrite's (possibly
-            // partial) replacement files — everything in the touched
-            // dirs that the pre-publish listing didn't record
-            unlistedFiles(lines, conf)
-              .foreach(f => f.getFileSystem(conf).delete(f, false))
-          }
-          // pending BEFORE marker — see writePendingManifest step 4
-          fs.delete(pm, false)
-          fs.delete(marker, false)
-        }
-      }
-    // empty txn dir left behind is harmless (underscore-hidden)
-  }
-
-  /** DYNAMIC OVERWRITE RETIREMENT (q116 follow-through): the committer's
-    * staging swap DELETES each replaced partition's dir before renaming
-    * the staged one in — unreachable from here — so instead the replaced
-    * files are MOVED to the retirement area just before `inner.commit`
-    * (reader exposure identical to the swap's own delete+rename window).
-    * Crash safety without a marker: a `.retire` manifest in `_graft_txn`
-    * records every move, and repair restores a file iff its ORIGINAL
-    * dir holds no data files — after a full swap every written dir is
-    * non-empty (nothing restores: the commit stands), before the swap
-    * every dir is empty (everything restores: the job never happened),
-    * and a mid-swap crash resolves per dir, which is exactly the
-    * partial-swap exposure the stock committer already has. An in-JVM
-    * commit failure restores eagerly. With this, time travel and
-    * rollback work ACROSS dynamic overwrites — including compaction,
-    * the most common maintenance rewrite.
-    *
-    * Declared trade (reader exposure): the stock swap empties each dir
-    * for the instant between its delete and rename; the retirement
-    * moves empty ALL written dirs for the duration of the commitJob,
-    * and a crash in that window leaves them empty until the NEXT write
-    * runs the repair (restorable, never lost — the same
-    * repair-at-next-write contract as the COW delete phase, whose
-    * crash leaves duplicates instead). */
+  /** A dynamic overwrite's replaced files MOVE to the retirement area
+    * just before `inner.commit`, whose partition swap would otherwise
+    * delete them (reader exposure: the written dirs are empty for the
+    * commitJob, not just per dir between delete and rename) — so time
+    * travel and rollback work across dynamic overwrites, compaction
+    * included. The moves are `M` lines of the statement's intent record
+    * ([[IntentLog]]), with the written dirs as `W`. A failed move undoes
+    * the record and degrades to the swap's delete (logged: travel then
+    * refuses across this overwrite). */
   private def retireDynamicOverwrite(
-      writtenSpecs: Seq[Map[String, String]],
-      fresh: TableMeta,
-      hadoopConf: org.apache.hadoop.conf.Configuration): Option[(Path, Seq[(Path, Path)])] = {
+      messages: Array[WriterCommitMessage],
+      conf: org.apache.hadoop.conf.Configuration): Option[IntentLog.Record] = {
+    val fresh = store.loadTableLocked(db, meta.name)
     if (fresh.external) return None
-    val locBySpec = fresh.partitions
-      .collect { case p if p.location.isDefined => p.spec -> p.location.get }.toMap
-    val dirs = writtenSpecs.map(spec => locBySpec.get(spec).map(new Path(_))
-      .getOrElse(GraftBatchWrite.partitionDir(fresh, spec))).distinct
-    val files = dirs.flatMap(d => dataFiles(d, hadoopConf))
-    if (files.isEmpty) return None
-    val txnDir = new Path(fresh.location, GraftBatchWrite.TxnDirName)
-    val fs = txnDir.getFileSystem(hadoopConf)
+    val dirs = GraftBatchWrite.dirsOf(fresh, GraftBatchWrite.writtenSpecs(fresh, messages.toSeq)).distinct
+    val moves = dirs.flatMap(GraftBatchWrite.dataFiles(_, conf)).map(f =>
+      f -> graft.catalog.Snapshots.retiredPath(conf, fresh.location, f, retireToken))
+    if (moves.isEmpty) return None
+    var record: Option[IntentLog.Record] = None
     try {
-      fs.mkdirs(txnDir)
-      val root = new Path(fresh.location)
-      val rootQ = fs.makeQualified(root).toString
-      val moves: Seq[(Path, Path)] = files.map { f =>
-        val q = f.getFileSystem(hadoopConf).makeQualified(f).toString
-        if (q.startsWith(rootQ + "/"))
-          (new Path(root,
-            s"${graft.catalog.Snapshots.RetiredDirName}/$retireToken/" +
-              q.stripPrefix(rootQ + "/")), f)
-        else
-          // custom-location partition outside the root: retire into the
-          // dir's own ext area (round 19) — same .retire repair rule
-          (new Path(f.getParent,
-            s"${graft.catalog.Snapshots.ExtRetiredDirName}/$retireToken/" +
-              f.getName), f)
+      record = Some(IntentLog.write(conf, fresh.location, retireToken,
+        IntentLog.Intent(writeDirs = dirs, moves = moves)))
+      moves.foreach { case (from, to) =>
+        val fs = from.getFileSystem(conf)
+        fs.mkdirs(to.getParent)
+        if (!fs.rename(from, to))
+          throw new java.io.IOException(s"failed to retire $from to $to")
       }
-      if (moves.isEmpty) return None
-      // intent manifest FIRST (tmp+rename, atomic), then the moves
-      val pending = new Path(txnDir, s"$retireToken.retire")
-      val tmp = new Path(txnDir, s".$retireToken.tmp")
-      val out = fs.create(tmp, false)
-      try out.write(moves.map { case (to, from) => s"R\t$to\t$from" }
-        .mkString("", "\n", "\n")
-        .getBytes(java.nio.charset.StandardCharsets.UTF_8))
-      finally out.close()
-      if (!fs.rename(tmp, pending)) { fs.delete(tmp, false); return None }
-      GraftBatchWrite.ownTxnFile(pending.getName)
-      val moved = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
-      val allOk = moves.forall { case (to, from) =>
-        val ok = try {
-          fs.mkdirs(to.getParent)
-          fs.rename(from, to)
-        } catch { case scala.util.control.NonFatal(_) => false }
-        if (ok) moved += ((to, from))
-        ok
-      }
-      if (!allOk) {
-        // degrade to the stock delete semantics: undo what moved, drop
-        // the manifest — the committer's swap removes the files as before
-        moved.foreach { case (to, from) =>
-          try fs.rename(to, from)
-          catch { case scala.util.control.NonFatal(_) => }
-        }
-        fs.delete(pending, false)
-        None
-      } else Some((pending, moves))
-    } catch { case scala.util.control.NonFatal(_) => None }
-  }
-
-  /** Repair crash residue of [[retireDynamicOverwrite]]: restore each
-    * recorded move iff the file's original directory holds no data
-    * files (see the method's crash-safety note), then drop the
-    * manifest. Runs under the write permit at every job start. */
-  private[write] def repairRetireManifests(): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val txnDir = new Path(meta.location, GraftBatchWrite.TxnDirName)
-    val fs = txnDir.getFileSystem(conf)
-    if (!fs.exists(txnDir)) return
-    fs.listStatus(txnDir).map(_.getPath)
-      .filter(_.getName.endsWith(".retire")).foreach { pm =>
-        val lines = {
-          val in = fs.open(pm)
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        }
-        val emptyDir = scala.collection.mutable.Map.empty[String, Boolean]
-        lines.foreach { l =>
-          l.split("\t") match {
-            case Array("R", to, from) =>
-              val fromP = new Path(from)
-              val isEmpty = emptyDir.getOrElseUpdate(fromP.getParent.toString,
-                dataFiles(fromP.getParent, conf).isEmpty)
-              val toP = new Path(to)
-              if (isEmpty && fs.exists(toP)) {
-                fs.mkdirs(fromP.getParent)
-                fs.rename(toP, fromP)
-              }
-            case _ =>
-          }
-        }
-        fs.delete(pm, false)
-      }
-  }
-
-  /** Repair crash residue of a merge-on-read DML commit (q119 — see
-    * [[GraftDeltaBatchWrite]] for the protocol). A `.delta` intent
-    * manifest records the write-target dirs (`W`) with their
-    * pre-existing files (`K`), the finalized DV dir, its tmp dir, and
-    * the DvMeta to register; the `.delta.committed` marker is created
-    * right after the FS commit (the COW marker point):
-    *
-    *  - marker present → the statement committed: ensure the DvMeta is
-    *    registered (the descriptor update may not have run), drop the
-    *    tmp dir, retire the txn files;
-    *  - marker absent → it did not: delete the unlisted files in the
-    *    `W` dirs (the crashed statement's inserts, possibly partial),
-    *    the DV dir and tmp dir, then the manifest — the statement never
-    *    happened. */
-  private[write] def repairDeltaManifests(): Unit = {
-    val conf = spark.sessionState.newHadoopConf()
-    val txnDir = new Path(meta.location, GraftBatchWrite.TxnDirName)
-    val fs = txnDir.getFileSystem(conf)
-    if (!fs.exists(txnDir)) return
-    fs.listStatus(txnDir).map(_.getPath)
-      .filter(_.getName.endsWith(".delta")).foreach { pm =>
-        val marker = new Path(txnDir,
-          pm.getName.stripSuffix(".delta") + ".delta.committed")
-        val lines = {
-          val in = fs.open(pm)
-          try scala.io.Source.fromInputStream(in, "UTF-8").getLines().toList
-          finally in.close()
-        }
-        def tagged1(t: String): Seq[String] =
-          lines.collect { case l if l.startsWith(t + "\t") =>
-            l.drop(t.length + 1) }
-        val committed = fs.exists(marker)
-        if (committed) {
-          lines.collectFirst {
-            case l if l.startsWith("DVMETA\t") => l.split("\t") match {
-              case Array(_, token, keyCol, manifestPath, keys, createdAt) =>
-                graft.catalog.DvMeta(token, keyCol, manifestPath,
-                  keys.toLong, createdAt.toLong)
-              case _ => sys.error(s"torn DVMETA line in $pm")
-            }
-          }.foreach { dv =>
-            store.updateTable(db, meta.name) { m =>
-              if (m.deleteVectors.exists(_.token == dv.token)) m
-              else m.copy(deleteVectors = m.deleteVectors :+ dv)
-            }
-          }
-        } else {
-          unlistedFiles(lines, conf)
-            .foreach(f => f.getFileSystem(conf).delete(f, false))
-          tagged1("DV").foreach(d => fs.delete(new Path(d), true))
-        }
-        tagged1("DVTMP").foreach(d => fs.delete(new Path(d), true))
-        fs.delete(pm, false)
-        fs.delete(marker, false)
-      }
+      record
+    } catch { case scala.util.control.NonFatal(e) =>
+      // a failed undo fails the statement: its record repairs at the next write
+      record.foreach(IntentLog.undo(conf, store, db, _))
+      org.slf4j.LoggerFactory.getLogger(classOf[GraftBatchWrite]).warn(
+        s"dynamic overwrite of $db.${meta.name}: retiring the replaced files " +
+          "failed, so the partition swap deletes them and time travel cannot " +
+          s"cross this overwrite: $e")
+      None
+    }
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = try {
     // COW: snapshot the scanned groups' files BEFORE the FS commit
     // publishes replacement files into the same directories — afterwards
     // old and new files are indistinguishable by listing.
+    val hadoopConf = spark.sessionState.newHadoopConf()
     val cowSnapshot: Option[CowSnapshot] = mode match {
       case CowReplace(scannedThunk, _, _, _) =>
-        val conf0 = spark.sessionState.newHadoopConf()
         val fresh = store.loadTableLocked(db, meta.name)
         if (fresh.partitionColumns.isEmpty) {
           Some(CowSnapshot(Nil, Nil,
-            dataFiles(new Path(fresh.location), conf0), Nil, Nil))
+            GraftBatchWrite.dataFiles(new Path(fresh.location), hadoopConf), Nil, Nil))
         } else {
           val scanned = scannedThunk().getOrElse(fresh.partitions.map(_.spec))
-          val dirs = scanned.map { s =>
-            s -> fresh.partitions.find(_.spec == s).flatMap(_.location)
-              .map(new Path(_))
-              .getOrElse(GraftBatchWrite.partitionDir(fresh, s))
-          }
+          val dirs = scanned.zip(GraftBatchWrite.dirsOf(fresh, scanned))
           // Write-target dirs OUTSIDE the scanned set (merge-inserts into
           // unscanned or brand-new partitions), resolved from the tasks'
           // commit messages — they exist before inner.commit publishes.
           // Their current listing is the pre-existing data a rollback
           // must preserve; anything beyond it is the crashed rewrite's.
           val scannedSet = scanned.toSet
-          val locBySpec = fresh.partitions
-            .collect { case p if p.location.isDefined => p.spec -> p.location }
-            .toMap
-          val writeDirs = messages.toSeq
-            .collect { case w: WriteTaskResult => w.summary.updatedPartitions }
-            .flatten.distinct
-            .map(GraftBatchWrite.parseFragment(fresh, _))
-            .filterNot(scannedSet.contains)
-            .map { spec =>
-              locBySpec.getOrElse(spec, None).map(new Path(_))
-                .getOrElse(GraftBatchWrite.partitionDir(fresh, spec))
-            }.distinct
+          val writeDirs = GraftBatchWrite.dirsOf(fresh,
+            GraftBatchWrite.writtenSpecs(fresh, messages.toSeq).filterNot(scannedSet.contains))
+            .distinct
           Some(CowSnapshot(scanned, dirs,
-            dirs.flatMap(d => dataFiles(d._2, conf0)),
-            writeDirs, writeDirs.flatMap(d => dataFiles(d, conf0))))
+            dirs.flatMap(d => GraftBatchWrite.dataFiles(d._2, hadoopConf)),
+            writeDirs, writeDirs.flatMap(GraftBatchWrite.dataFiles(_, hadoopConf))))
         }
       case _ => None
     }
@@ -1183,43 +777,26 @@ class GraftBatchWrite(
       }
     }
 
-    // persist the delete intent BEFORE publishing (see
-    // writePendingManifest) — a crash after inner.commit is then
-    // repairable instead of leaving permanent duplicates
-    val txnFiles: Option[(Path, Path)] = cowSnapshot.map(cs =>
-      writePendingManifest(cs, spark.sessionState.newHadoopConf()))
-
-    // dynamic overwrite: move the replaced files to retirement just
-    // before the committer's swap would delete them (manifest-guarded;
-    // see retireDynamicOverwrite) — travel and rollback then work
-    // across dynamic overwrites, compaction included
-    val dynRetire: Option[(Path, Seq[(Path, Path)])] = mode match {
-      case DynamicOverwrite =>
-        val fresh = store.loadTableLocked(db, meta.name)
-        val specs = messages.toSeq
-          .collect { case w: WriteTaskResult => w.summary.updatedPartitions }
-          .flatten.distinct.map(GraftBatchWrite.parseFragment(fresh, _))
-        retireDynamicOverwrite(specs, fresh, spark.sessionState.newHadoopConf())
-      case _ => None
+    // the statement's intent record, persisted BEFORE publishing
+    // ([[IntentLog]]) — a crash after inner.commit is then repairable
+    // instead of leaving duplicates, emptied dirs or orphan DV batches
+    val record: Option[IntentLog.Record] = mode match {
+      case DynamicOverwrite => retireDynamicOverwrite(messages, hadoopConf)
+      case _ => cowSnapshot.map(cs => IntentLog.Intent(
+        dirs = if (cs.dirs.nonEmpty) cs.dirs.map(_._2) else Seq(new Path(meta.location)),
+        deletes = cs.oldFiles, writeDirs = cs.writeDirs, keeps = cs.keepFiles))
+        .orElse(intent)
+        .map(IntentLog.write(hadoopConf, meta.location, retireToken, _))
     }
     // Test-only crash injection: die between the retirement moves and
-    // the FS commit — drives the .retire repair's all-dirs-empty branch
+    // the FS commit (outside the in-JVM undo, like a real death)
     GraftBatchWrite.crashBeforeFsCommit.foreach(f => f())
     try inner.commit(messages)
     catch { case t: Throwable =>
-      // in-JVM commit failure: the swap never happened — restore the
-      // moved files eagerly and drop the manifest, then let the abort
-      // path clean the staging as before
-      dynRetire.foreach { case (pending, moves) =>
-        val conf0 = spark.sessionState.newHadoopConf()
-        val fs = pending.getFileSystem(conf0)
-        moves.foreach { case (to, from) =>
-          try { if (fs.exists(to)) { fs.mkdirs(from.getParent); fs.rename(to, from) } }
-          catch { case scala.util.control.NonFatal(_) => }
-        }
-        try fs.delete(pending, false)
-        catch { case scala.util.control.NonFatal(_) => }
-      }
+      // in-JVM commit failure: the statement never happened — undo its
+      // record eagerly, then let the abort path clean the staging
+      record.foreach(r => try IntentLog.undo(hadoopConf, store, db, r)
+        catch { case scala.util.control.NonFatal(u) => t.addSuppressed(u) })
       throw t
     }
     // Test-only crash injection: die between the FS commit (replacement
@@ -1227,15 +804,8 @@ class GraftBatchWrite(
     // the deletes, and the catalog registration. WritePathSpec drives
     // the two-phase-commit recovery contract through this point.
     GraftBatchWrite.crashAfterFsCommit.foreach(f => f())
-    afterFsCommit()
-
-    val hadoopConf = spark.sessionState.newHadoopConf()
-
-    // replacements are live: marker first (one atomic create narrows the
-    // unrepairable window to zero-output rewrites), then the deletes
-    txnFiles.foreach { case (_, marker) =>
-      marker.getFileSystem(hadoopConf).create(marker, false).close()
-    }
+    // THE commit point: from here on a crash rolls the statement forward
+    record.foreach(IntentLog.commit(hadoopConf, _))
     // COW: replacements are live — removing the snapshot completes the
     // group rewrite. Managed tables RETIRE the old files (q116 — the
     // pre-rewrite snapshot stays restorable); external tables and
@@ -1247,23 +817,6 @@ class GraftBatchWrite(
           !graft.catalog.Snapshots.retireFile(hadoopConf, meta.location, f, retireToken))
         f.getFileSystem(hadoopConf).delete(f, false)
     })
-    // the rewrite's delete phase is complete — retire the transaction:
-    // pending strictly BEFORE marker (a crash in between must leave an
-    // inert orphan marker, never a marker-less manifest that repair
-    // would roll back over the live replacements — see
-    // writePendingManifest step 4)
-    txnFiles.foreach { case (pending, marker) =>
-      val fs = pending.getFileSystem(hadoopConf)
-      fs.delete(pending, false)
-      fs.delete(marker, false)
-    }
-    // dynamic overwrite committed: the retirement stands (the snapshot
-    // below records the token) — drop the intent manifest. A crash
-    // before this line repairs per the empty-dir rule: every written
-    // dir is non-empty post-swap, so nothing restores.
-    dynRetire.foreach { case (pending, _) =>
-      pending.getFileSystem(hadoopConf).delete(pending, false)
-    }
     // per-path FileSystem: a partition registered with a custom LOCATION
     // may live on a different scheme than the table root, and the
     // root FS would throw "Wrong FS" on it
@@ -1306,10 +859,7 @@ class GraftBatchWrite(
         restoreSortTrust(metaExtra(m.copy(stats = tableStats))))
       skipStatsDirs = Seq(snapshot.location)
     } else {
-      val writtenSpecs = messages.toSeq
-        .collect { case w: WriteTaskResult => w.summary.updatedPartitions }
-        .flatten.distinct
-        .map(GraftBatchWrite.parseFragment(snapshot, _))
+      val writtenSpecs = GraftBatchWrite.writtenSpecs(snapshot, messages.toSeq)
       // COW: a scanned partition that received no replacement files lost
       // every row to the rewrite — remove its now-empty dir and
       // deregister it below (partitions are never left registered over
@@ -1319,7 +869,7 @@ class GraftBatchWrite(
           val writtenSet = writtenSpecs.toSet
           cs.dirs.collect {
             case (s, d) if !writtenSet.contains(s) &&
-              dataFiles(d, hadoopConf).isEmpty =>
+              GraftBatchWrite.dataFiles(d, hadoopConf).isEmpty =>
               d.getFileSystem(hadoopConf).delete(d, true)
               s
           }.toSet
@@ -1337,20 +887,17 @@ class GraftBatchWrite(
         Future.traverse(writtenSpecs) { spec => Future {
           // a pre-registered custom LOCATION survives the write (the
           // files just landed there via customPartitionLocations)
-          val loc = snapLocBySpec.getOrElse(spec, None)
-          val dir = loc.map(new Path(_))
-            .getOrElse(GraftBatchWrite.partitionDir(snapshot, spec))
-          val size =
+          val p = PartitionMeta(spec, snapLocBySpec.getOrElse(spec, None))
+          p.copy(sizeInBytes =
             if (!autoSizeUpdate) PartitionMeta.Unsized
-            else try sizeOf(dir) catch {
+            else try sizeOf(GraftBatchWrite.dirOf(snapshot, p)) catch {
               // this pass runs OUTSIDE the metastore monitor, so
               // concurrent partition DDL can delete the dir between
               // exists() and getContentSummary — that must not fail a
               // commit whose files are already published. Register
               // Unsized; the next sizing commit repairs it.
               case _: java.io.FileNotFoundException => PartitionMeta.Unsized
-            }
-          PartitionMeta(spec, loc, size)
+            })
         } }, graft.catalog.GraftIO.footerReadDeadline(writtenSpecs.size))
       catch {
         // registration is correctness, sizing is not: on a hung
@@ -1375,8 +922,7 @@ class GraftBatchWrite(
       // take the union.
       val cowTouchedDirs: Seq[String] = cowSnapshot.toSeq.flatMap(cs =>
         cs.dirs.map(_._2.toString) ++ cs.writeDirs.map(_.toString))
-      skipStatsDirs = (written.map(p => p.location.getOrElse(
-        GraftBatchWrite.partitionDir(snapshot, p.spec).toString)) ++
+      skipStatsDirs = (written.map(GraftBatchWrite.dirOf(snapshot, _).toString) ++
         cowTouchedDirs).distinct
 
       // Atomic descriptor update: concurrent commits to different
@@ -1384,9 +930,8 @@ class GraftBatchWrite(
       store.updateTable(db, meta.name) { current =>
         val base = mode match {
           case Truncate => Nil
-          case StaticOverwrite(spec) => current.partitions.filterNot(p =>
-            spec.forall { case (k, v) =>
-              p.spec.exists { case (pk, pv) => pk.equalsIgnoreCase(k) && pv == v } })
+          case StaticOverwrite(spec) =>
+            current.partitions.filterNot(p => PartitionPredicates.matches(spec, p.spec))
           case _: CowReplace =>
             current.partitions.filterNot(p => cowEmptied.contains(p.spec))
           case _ => current.partitions
@@ -1429,10 +974,8 @@ class GraftBatchWrite(
           else Nil
         val repaired = try Await.result(
           Future.traverse(staleSpecs) { spec => Future {
-            val loc = curLocBySpec.getOrElse(spec, None)
-            val dir = loc.map(new Path(_))
-              .getOrElse(GraftBatchWrite.partitionDir(current, spec))
-            PartitionMeta(spec, loc, sizeOf(dir))
+            val p = PartitionMeta(spec, curLocBySpec.getOrElse(spec, None))
+            p.copy(sizeInBytes = sizeOf(GraftBatchWrite.dirOf(current, p)))
           } }, graft.catalog.GraftIO.footerReadDeadline(staleSpecs.size))
         catch {
           // repair is one-shot by design — skipping it here just leaves
@@ -1471,7 +1014,8 @@ class GraftBatchWrite(
       graft.catalog.Snapshots.maintain(spark, store, db, meta.name,
         kind, retireToken, skipStatsDirs)
     }
-    postCommit()
+    // the statement is complete: its record retires (before its marker)
+    record.foreach(IntentLog.finish(hadoopConf, _))
     FileStatusCache.getOrCreate(spark).invalidateAll()
   } finally releasePermit()
 
@@ -1503,8 +1047,8 @@ class GraftBatchWrite(
 }
 
 object GraftBatchWrite {
-  /** Table-root directory holding COW delete-phase transaction files
-    * (underscore-prefixed: invisible to every scan listing). */
+  /** Table-root directory holding the intent records ([[IntentLog]];
+    * underscore-prefixed: invisible to every scan listing). */
   private[graft] val TxnDirName = "_graft_txn"
 
   /** Test-only failpoint: when set, every batch commit invokes it right
@@ -1515,8 +1059,8 @@ object GraftBatchWrite {
   @volatile private[graft] var crashAfterFsCommit: Option[() => Unit] = None
 
   /** Test-only failpoint: fires between a dynamic overwrite's
-    * retirement moves and the FS commit (OUTSIDE the in-JVM restore
-    * try, like a real death) — the `.retire` repair contract's input. */
+    * retirement moves and the FS commit (OUTSIDE the in-JVM undo, like
+    * a real death) — a marker-less record with its moves executed. */
   @volatile private[graft] var crashBeforeFsCommit: Option[() => Unit] = None
 
   /** Per-table-location write permits (see `writePermit`). */
@@ -1614,11 +1158,10 @@ object GraftBatchWrite {
     ownedTxn.containsKey(name)
 
   /** REPAIR-AT-READ (VERDICT r18 "next" #4): heal crash residue from a
-    * READ path — `loadTable` probes the table's `_graft_txn` dir (one
-    * cheap negative `exists` on healthy tables) and calls this when
-    * residue is present, so a reader AFTER a crashed dynamic overwrite /
-    * COW rewrite / MOR DML / rollback sees the repaired state without
-    * waiting for the next write to run the same repairs. Non-blocking:
+    * READ path — `loadTable` probes the table's `_graft_txn` dir and
+    * calls this when an intent record is present, so a reader AFTER a
+    * crashed statement sees the repaired state without waiting for the
+    * next write to run the same [[IntentLog.repair]]. Non-blocking:
     * if the permit is held, a LIVE writer owns the table — it already
     * repaired at its own job start — so the read proceeds against the
     * writer-consistent state (tryAcquire, never wait). Returns true iff
@@ -1633,13 +1176,7 @@ object GraftBatchWrite {
     writeLockHolders.put(key,
       s"read-repair of $db.${meta.name} since ${java.time.Instant.now()}")
     try {
-      RollbackTxn.repair(spark.sessionState.newHadoopConf(), store, db, meta)
-      // a repair-only instance: the inner batch write is never touched
-      // by the repair methods (they operate on the txn dir + descriptor)
-      val w = new GraftBatchWrite(null, spark, store, db, meta, Append)
-      w.repairPendingCowDeletes()
-      w.repairRetireManifests()
-      w.repairDeltaManifests()
+      IntentLog.repair(spark.sessionState.newHadoopConf(), store, db, meta)
       // same rule as the write-side repair block: swept files may be
       // sitting in listings cached under an unchanged (dir, seq, tokens)
       graft.plans.ResolveDeletionVectors.invalidateListings()
@@ -1679,5 +1216,31 @@ object GraftBatchWrite {
     meta.partitionColumns.foldLeft(new Path(meta.location)) { (dir, col) =>
       new Path(dir, ExternalCatalogUtils.getPartitionPathString(col,
         PartitionValues.lookup(spec, col).getOrElse(PartitionValues.NullName)))
+    }
+
+  /** A partition's data dir: its custom LOCATION, else the
+    * table-relative default. */
+  def dirOf(meta: TableMeta, p: PartitionMeta): Path =
+    p.location.fold(partitionDir(meta, p.spec))(new Path(_))
+
+  /** [[dirOf]] for specs, resolved against `meta`'s registrations. */
+  def dirsOf(meta: TableMeta, specs: Seq[Map[String, String]]): Seq[Path] = {
+    val registered = meta.partitions.map(p => p.spec -> p).toMap
+    specs.map(s => dirOf(meta, registered.getOrElse(s, PartitionMeta(s, None))))
+  }
+
+  /** The partition specs a write's tasks wrote into. */
+  def writtenSpecs(
+      meta: TableMeta, messages: Seq[WriterCommitMessage]): Seq[Map[String, String]] =
+    messages.collect { case w: WriteTaskResult => w.summary.updatedPartitions }
+      .flatten.distinct.map(parseFragment(meta, _))
+
+  /** Direct data files of a dir (hidden/underscore names are committer
+    * metadata, never table data); none when the dir does not exist. */
+  private[graft] def dataFiles(
+      dir: Path, conf: org.apache.hadoop.conf.Configuration): Seq[Path] =
+    IntentLog.list(dir.getFileSystem(conf), dir).collect {
+      case s if s.isFile && !s.getPath.getName.startsWith("_") &&
+        !s.getPath.getName.startsWith(".") => s.getPath
     }
 }

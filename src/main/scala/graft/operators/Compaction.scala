@@ -205,8 +205,8 @@ object Compaction {
     def qualify(p: org.apache.hadoop.fs.Path): String =
       p.getFileSystem(conf).makeQualified(p).toString
     val dirs: Seq[String] =
-      if (m.isPartitioned) m.partitions.map(p => p.location.getOrElse(
-        graft.catalog.write.GraftBatchWrite.partitionDir(m, p.spec).toString))
+      if (m.isPartitioned)
+        m.partitions.map(graft.catalog.write.GraftBatchWrite.dirOf(m, _).toString)
       else Seq(m.location)
     val live: Set[String] = dirs.flatMap { d =>
       val dir = new org.apache.hadoop.fs.Path(d)

@@ -5,7 +5,7 @@ import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.SparkSession
 
 import graft.catalog.{GraftCatalog, MetaStore, PartitionMeta, Snapshots, TableMeta, TableStats}
-import graft.catalog.write.GraftBatchWrite
+import graft.catalog.write.{GraftBatchWrite, IntentLog}
 
 /** GENERATION ROLLBACK — the "oops" lever the relocating rewrite
   * ([[Relocate]]) makes nearly free: compaction, migrate and zorder
@@ -102,14 +102,15 @@ object Rollback {
     * target retire wholesale. Cost ∝ files that actually changed —
     * renames only, no data rewrite.
     *
-    * FAILURE-ATOMIC via [[graft.catalog.write.RollbackTxn]]: every
-    * planned move plus the complete pre-rollback descriptor persist to
-    * a `.rbk` intent manifest BEFORE the first rename; the manifest is
-    * removed only after the descriptor update and the rollback's own
-    * snapshot record succeed. An in-JVM failure undoes eagerly; a crash
-    * is undone by the next write's (or rollback's) repair pass — so the
-    * rollback fully happened or never happened, and the live table can
-    * never be left silently missing rows mid-campaign. */
+    * FAILURE-ATOMIC via an [[IntentLog]] record: every planned move
+    * (`M`) plus the complete pre-rollback descriptor (`META`) persist
+    * BEFORE the first rename; the record is never marked and is removed
+    * only after the descriptor update and the rollback's own snapshot
+    * record succeed. An in-JVM failure undoes eagerly; a crash is undone
+    * by the next repair — so the rollback fully happened or never
+    * happened, and the live table can never be left silently missing
+    * rows mid-campaign. Files outside the table root (custom partition
+    * LOCATIONs) move into their own dir's ext area, undo-able alike. */
   private def rollbackSnapshot(
       spark: SparkSession,
       plugin: GraftCatalog,
@@ -124,11 +125,9 @@ object Rollback {
       s"snapshot rollback of $table since ${java.time.Instant.now()}",
       plugin.writeLockTimeoutSec)
     try {
-      // heal residue of a previously crashed rollback FIRST (under the
-      // permit): its manifest reverses and the descriptor restores, so
-      // the state below is always a consistent commit point
-      graft.catalog.write.RollbackTxn.repair(
-        conf, store, db, store.loadTable(db, name))
+      // heal residue of a previously crashed statement FIRST (under the
+      // permit), so the state below is always a consistent commit point
+      IntentLog.repair(conf, store, db, store.loadTable(db, name))
       // a repair moves files without a seq bump — cached listings would
       // keep planning the swept paths
       graft.plans.ResolveDeletionVectors.invalidateListings()
@@ -150,7 +149,7 @@ object Rollback {
       // bounded history — robust to any flip chain, including
       // rollback-of-rollback cancellations — and the descriptor flips
       // straight to it before the file-level restore runs within its
-      // root. All under one .rbk manifest, so flip+restore stays atomic.
+      // root. All under one intent record, so flip+restore stays atomic.
       // refuses loudly if any target file is no longer restorable
       val resolved = Snapshots.resolve(spark, cur, target)
       val sameRoot = resolved.location.isEmpty ||
@@ -189,23 +188,10 @@ object Rollback {
       // ---- PLAN every move (no filesystem mutation yet) ----------------
       val rootPath = new Path(base.location)
       val qRoot = rootPath.getFileSystem(conf).makeQualified(rootPath).toString
-      def retiredTarget(f: Path): Path = {
-        val q = f.getFileSystem(conf).makeQualified(f).toString
-        if (q.startsWith(qRoot + "/"))
-          new Path(rootPath,
-            s"${Snapshots.RetiredDirName}/$token/${q.stripPrefix(qRoot + "/")}")
-        else
-          // custom-LOCATION data outside the root retires into its own
-          // dir's ext area (round 19) — a rename on its own filesystem,
-          // fully undo-able like every other move
-          new Path(f.getParent,
-            s"${Snapshots.ExtRetiredDirName}/$token/${f.getName}")
-      }
-      val moves = scala.collection.mutable.ArrayBuffer
-        .empty[graft.catalog.write.RollbackTxn.Move]
+      val moves = scala.collection.mutable.ArrayBuffer.empty[(Path, Path)]
       val emptiedDirs = scala.collection.mutable.ArrayBuffer.empty[Path]
       def planRetire(p: Path): Unit = {
-        moves += graft.catalog.write.RollbackTxn.Move(p, retiredTarget(p)); ()
+        moves += p -> Snapshots.retiredPath(conf, base.location, p, token); ()
       }
       val targetDirSet = resolved.dirs.map(d =>
         Snapshots.qualify(conf, d.dir)).toSet
@@ -215,9 +201,7 @@ object Rollback {
       // generation itself (flips > 0) is untouched: it joins the history
       // for redo, the vacuum reclaims it later (the flip trade).
       val currentDirs: Seq[String] =
-        if (base.isPartitioned)
-          base.partitions.map(p => p.location.getOrElse(
-            GraftBatchWrite.partitionDir(base, p.spec).toString))
+        if (base.isPartitioned) base.partitions.map(GraftBatchWrite.dirOf(base, _).toString)
         else Seq(base.location)
       currentDirs.filterNot(d =>
         targetDirSet.contains(Snapshots.qualify(conf, d))).foreach { d =>
@@ -247,27 +231,25 @@ object Rollback {
         targetByName.foreach { case (n, st) =>
           val parent = st.getPath.getParent
           if (parent.getFileSystem(conf).makeQualified(parent).toString != qdir)
-            moves += graft.catalog.write.RollbackTxn.Move(
-              st.getPath, new Path(dir, n))
+            moves += st.getPath -> new Path(dir, n)
         }
         (rd, rd.files.map(_.getLen).sum)
       }
 
-      // ---- intent manifest FIRST, then execute --------------------------
-      // the manifest carries the complete pre-rollback descriptor plus
+      // ---- intent record FIRST, then execute ----------------------------
+      // the record carries the complete pre-rollback descriptor plus
       // every planned move, so any failure below (in-JVM via the catch,
-      // a crash via RollbackTxn.repair at the next write) reverses to
-      // EXACTLY the pre-rollback state — never a half-moved live table,
-      // and the token can never be GC'd unrecorded (repair empties it
-      // back before any commit's GC runs)
-      val manifest = graft.catalog.write.RollbackTxn.writeManifest(
-        conf, cur.location, token, cur, moves.toSeq)
+      // a crash via the next repair) reverses to EXACTLY the
+      // pre-rollback state — never a half-moved live table, and the
+      // token can never be GC'd unrecorded (repair empties it back
+      // before any commit's GC runs)
+      val record = IntentLog.write(conf, cur.location, token,
+        IntentLog.Intent(moves = moves.toSeq, meta = Some(cur)))
       try {
-        moves.foreach { m =>
-          val mfs = m.to.getFileSystem(conf)
-          mfs.mkdirs(m.to.getParent)
-          require(m.from.getFileSystem(conf).rename(m.from, m.to),
-            s"rollback($table): failed to move ${m.from} to ${m.to}")
+        moves.foreach { case (from, to) =>
+          to.getFileSystem(conf).mkdirs(to.getParent)
+          require(from.getFileSystem(conf).rename(from, to),
+            s"rollback($table): failed to move $from to $to")
         }
         // the rolled-back commit's emptied dirs drop wholesale (their
         // skip shards are advisory and rebuild on the next commit there)
@@ -323,17 +305,16 @@ object Rollback {
           resolved.dirs.map(_.dir) ++ currentDirs)
         // COMMIT POINT: only now does the rollback "fully happen". (For
         // a flip-crossing restore, a crash between the descriptor update
-        // and this delete orphans the manifest under the now-retired
+        // and this delete orphans the record under the now-retired
         // location — the completed rollback stands; the orphan is
         // reclaimed with its generation.)
-        manifest.getFileSystem(conf).delete(manifest, false)
+        IntentLog.finish(conf, record)
       } catch { case scala.util.control.NonFatal(t) =>
         // eager in-JVM undo: reverse the executed moves and restore the
         // descriptor — the rollback never happened
-        try graft.catalog.write.RollbackTxn.undo(
-          conf, store, db, manifest, restoreDescriptor = true)
+        try IntentLog.undo(conf, store, db, record)
         catch { case scala.util.control.NonFatal(u) =>
-          t.addSuppressed(u) } // manifest stays; the next write repairs
+          t.addSuppressed(u) } // the record stays; the next write repairs
         throw t
       }
       plugin.invalidateTable(

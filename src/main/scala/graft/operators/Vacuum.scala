@@ -4,7 +4,7 @@ import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.SparkSession
 
 import graft.catalog.GraftCatalog
-import graft.catalog.write.GraftBatchWrite
+import graft.catalog.write.{GraftBatchWrite, IntentLog}
 
 /** Orphan-file reclamation (`VACUUM`) for catalog tables.
   *
@@ -26,14 +26,12 @@ import graft.catalog.write.GraftBatchWrite
   *     which the retention window protects).
   *  2. '''`_temporary` staging''' — a crashed/aborted job's committer
   *     leftovers under the table root.
-  *  3. '''Resolved transaction residue''' in `_graft_txn`: orphaned
-  *     `.committed` markers whose `.pending` manifest is already
-  *     retired (documented inert in the COW commit protocol) and
-  *     `.tmp` manifest drafts. PENDING manifests and quarantine dirs
-  *     are deliberately untouched — they are the repair protocol's
-  *     input ([[graft.catalog.write.GraftBatchWrite]] rolls them
-  *     forward/back at the next write) and an operator's restore
-  *     evidence, respectively.
+  *  3. '''Resolved transaction residue''' in `_graft_txn`: markers
+  *     whose intent record is already retired (inert by the protocol)
+  *     and tmp drafts ([[graft.catalog.write.IntentLog.resolvedResidue]]).
+  *     Intent records, their live markers and quarantine dirs are
+  *     deliberately untouched — they are the repair's input and an
+  *     operator's restore evidence, respectively.
   *
   * Retention: nothing younger than `retentionMs` is deleted — the same
   * guard every table format's VACUUM ships (files of an IN-FLIGHT job
@@ -106,31 +104,11 @@ object Vacuum {
       val tmpDir = new Path(root, "_temporary")
       if (fs.exists(tmpDir)) reclaimIfOld(fs.getFileStatus(tmpDir))
 
-      // 3. resolved txn residue (never .pending manifests, never
-      // quarantine dirs — repair's domain)
-      val txnDir = new Path(root, GraftBatchWrite.TxnDirName)
-      if (fs.exists(txnDir)) {
-        val entries = fs.listStatus(txnDir)
-        // every intent-manifest class whose marker strips to its name:
-        // COW `<id>.pending` / `<id>.committed`, and merge-on-read
-        // `<tok>.delta` / `<tok>.delta.committed` (round 19) — a marker
-        // whose manifest still exists is REPAIR'S INPUT (it proves the
-        // statement committed; reclaiming it would make the next repair
-        // roll a committed statement BACK over live data)
-        val pendingIds = entries.collect {
-          case s if s.getPath.getName.endsWith(".pending") =>
-            s.getPath.getName.stripSuffix(".pending")
-          case s if s.getPath.getName.endsWith(".delta") =>
-            s.getPath.getName
-        }.toSet
-        entries.foreach { s =>
-          val n = s.getPath.getName
-          val orphanMarker =
-            n.endsWith(".committed") && !pendingIds.contains(n.stripSuffix(".committed"))
-          val draft = s.isFile && n.startsWith(".") && n.endsWith(".tmp")
-          if (orphanMarker || draft) reclaimIfOld(s)
-        }
-      }
+      // 3. resolved txn residue (never an intent record or its marker —
+      // the marker proves the statement committed, so reclaiming it would
+      // make the next repair roll a committed statement BACK)
+      IntentLog.resolvedResidue(IntentLog.list(fs, IntentLog.txnDir(meta.location)))
+        .foreach(reclaimIfOld)
 
       // 4. snapshot-lineage retention (q116): retained snapshots older
       // than the window expire (the CURRENT state always stays), then
@@ -147,11 +125,8 @@ object Vacuum {
       if (meta.isPartitioned) {
         // FS-qualify both sides: descriptor locations are stored
         // unqualified (`/x/y`) while listings return `file:/x/y`
-        val registered = meta.partitions.map { p =>
-          fs.makeQualified(p.location.map(new Path(_))
-            .getOrElse(GraftBatchWrite.partitionDir(meta, p.spec)))
-            .toString
-        }.toSet
+        val registered = meta.partitions
+          .map(p => fs.makeQualified(GraftBatchWrite.dirOf(meta, p)).toString).toSet
         Relocate.partitionLeaves(fs, root, meta.partitionColumns.size).foreach { st =>
           if (!registered.contains(fs.makeQualified(st.getPath).toString))
             reclaimIfOld(st)

@@ -320,10 +320,8 @@ object ResolveDeletionVectors extends Rule[LogicalPlan] {
         case None =>
           val dirSpecs: Seq[(String, Map[String, String])] =
             if (meta.isPartitioned)
-              keptPartitions.map(p => (
-                p.location.getOrElse(
-                  GraftBatchWrite.partitionDir(meta, p.spec).toString),
-                p.spec))
+              keptPartitions.map(p =>
+                (GraftBatchWrite.dirOf(meta, p).toString, p.spec))
             else Seq((meta.location, Map.empty[String, String]))
           // dir listings ride the seq-keyed planner cache (round 20):
           // repeated reads of a DV'd table between commits pay ONE

@@ -576,4 +576,73 @@ class MorDmlSpec extends AnyFunSuite with SparkFixture {
          |  'graft.dml.key'='id,ID')""".stripMargin))
     assert(e.getMessage.contains("twice"), e.getMessage)
   }
+
+  /** Hand-write an old-format record under the table's txn dir, aged
+    * past the write-lock timeout so a read repairs it like a crashed
+    * writer's. */
+  private def plantLegacy(m: TableMeta, name: String, lines: Seq[String]): Unit = {
+    val f = new Path(graft.catalog.write.IntentLog.txnDir(m.location), name)
+    val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
+    val out = fs.create(f, false)
+    try out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8")) finally out.close()
+    fs.setTimes(f, System.currentTimeMillis() - 3600L * 1000, -1L)
+  }
+
+  private def txnEntries(m: TableMeta): Seq[String] = {
+    val dir = graft.catalog.write.IntentLog.txnDir(m.location)
+    graft.catalog.write.IntentLog.list(
+      dir.getFileSystem(spark.sessionState.newHadoopConf()), dir).map(_.getPath.getName)
+  }
+
+  test("a legacy committed .delta record re-registers its DvMeta at the next read") {
+    val t = freshTable("m_legacy_delta_fwd")
+    createMor(t)
+    spark.sql(s"DELETE FROM $t WHERE id = 1")
+    val dv = meta(t).deleteVectors.last
+    // the crash: marker created, descriptor update never ran
+    cat.metaStore.updateTable("mortest", "m_legacy_delta_fwd")(_.copy(deleteVectors = Nil))
+    assert(rows(t).exists(_._1 == 1L))
+    val m = meta(t)
+    val dirA = graft.catalog.write.GraftBatchWrite.partitionDir(m, Map("p" -> "a"))
+    val fs = dirA.getFileSystem(spark.sessionState.newHadoopConf())
+    val tmp = new Path(m.location, s"${Snapshots.DvDirName}/.tmp-${dv.token}")
+    fs.mkdirs(tmp)
+    plantLegacy(m, s"${dv.token}.delta", Seq(
+      s"W\t$dirA",
+      s"DV\t${new Path(m.location, s"${Snapshots.DvDirName}/${dv.token}")}",
+      Seq("DVMETA", dv.token, dv.keyColumn, dv.manifest, dv.keys, dv.createdAtMs).mkString("\t"),
+      s"DVTMP\t$tmp"))
+    plantLegacy(m, s"${dv.token}.delta.committed", Nil)
+    assert(rows(t) === Set((2L, 20.0, "a"), (3L, 30.0, "b"), (4L, 40.0, "b"), (5L, 50.0, "c")),
+      "the committed statement's deletes must be live again")
+    assert(meta(t).deleteVectors.map(_.token) === Seq(dv.token))
+    assert(!fs.exists(tmp), "the scratch dir must be dropped")
+    assert(txnEntries(meta(t)).isEmpty)
+  }
+
+  test("a legacy .delta record without its marker sweeps the W strays and the DV dir") {
+    val t = freshTable("m_legacy_delta_back")
+    createMor(t)
+    val expect = rows(t)
+    val m = meta(t)
+    val dirA = graft.catalog.write.GraftBatchWrite.partitionDir(m, Map("p" -> "a"))
+    val fs = dirA.getFileSystem(spark.sessionState.newHadoopConf())
+    val kept = graft.catalog.write.GraftBatchWrite.dataFiles(dirA, fs.getConf)
+    // the crash: an insert file published, a DV batch finalized, no marker
+    val stray = new Path(dirA, "part-99999-stray.parquet")
+    org.apache.hadoop.fs.FileUtil.copy(fs, kept.head, fs, stray, false, fs.getConf)
+    val token = java.util.UUID.randomUUID().toString
+    val dvDir = new Path(m.location, s"${Snapshots.DvDirName}/$token")
+    fs.mkdirs(dvDir)
+    fs.create(new Path(dvDir, "del-0.parquet")).close()
+    plantLegacy(m, s"$token.delta",
+      Seq(s"W\t$dirA") ++ kept.map(f => s"K\t$f") ++ Seq(s"DV\t$dvDir"))
+    assert(spark.table(t).count() === 5)
+    assert(rows(t) === expect)
+    assert(!fs.exists(stray), "the unlisted insert file must be swept")
+    kept.foreach(f => assert(fs.exists(f), s"a K-listed file must survive: $f"))
+    assert(!fs.exists(dvDir), "the DV dir must be swept")
+    assert(meta(t).deleteVectors.isEmpty)
+    assert(txnEntries(meta(t)).isEmpty)
+  }
 }

@@ -1888,4 +1888,153 @@ class WritePathSpec extends AnyFunSuite with SparkFixture {
       s"unexpected: ${e.getMessage}")
     spark.sql(s"DROP TABLE IF EXISTS $t")
   }
+
+  private def wcat: GraftCatalog = spark.sessionState.catalogManager
+    .catalog(GraftBootstrap.CatalogName).asInstanceOf[GraftCatalog]
+
+  private def ids(t: String): Seq[Long] =
+    spark.table(t).collect().map(_.getLong(0)).sorted.toSeq
+
+  /** Hand-write a record under the table's txn dir, aged past the
+    * write-lock timeout so a read repairs it like a crashed writer's. */
+  private def plantRecord(m: TableMeta, name: String, lines: Seq[String]): Unit = {
+    import org.apache.hadoop.fs.Path
+    val f = new Path(graft.catalog.write.IntentLog.txnDir(m.location), name)
+    val fs = f.getFileSystem(spark.sessionState.newHadoopConf())
+    val out = fs.create(f, false)
+    try out.write(lines.map(_ + "\n").mkString.getBytes("UTF-8")) finally out.close()
+    fs.setTimes(f, System.currentTimeMillis() - 3600L * 1000, -1L)
+  }
+
+  private def txnRecords(m: TableMeta): Seq[String] = {
+    val dir = graft.catalog.write.IntentLog.txnDir(m.location)
+    graft.catalog.write.IntentLog.list(
+      dir.getFileSystem(spark.sessionState.newHadoopConf()), dir).map(_.getPath.getName)
+  }
+
+  test("a dynamic overwrite killed after its partition swap rolls back whole at the next read") {
+    import spark.implicits._
+    import graft.catalog.write.GraftBatchWrite
+    val t = freshTable("t_dyn_crash_after")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "p").writeTo(t).partitionedBy($"p").create()
+    GraftBatchWrite.crashAfterFsCommit =
+      Some(() => throw new RuntimeException("injected post-swap crash"))
+    try {
+      intercept[Exception] {
+        Seq((10L, "a"), (20L, "c")).toDF("id", "p").writeTo(t).overwritePartitions()
+      }
+    } finally GraftBatchWrite.crashAfterFsCommit = None
+    // no marker: the swapped-in files are swept, the retired ones restored
+    assert(ids(t) === Seq(1L, 2L), "a reader must see exactly the pre-statement rows")
+    val m = wcat.metaStore.loadTable("wtest", "t_dyn_crash_after")
+    val conf = spark.sessionState.newHadoopConf()
+    assert(GraftBatchWrite.dataFiles(
+      GraftBatchWrite.partitionDir(m, Map("p" -> "c")), conf).isEmpty,
+      "the unregistered written dir must lose the crashed statement's file")
+    assert(txnRecords(m).isEmpty)
+    Seq((10L, "a")).toDF("id", "p").writeTo(t).overwritePartitions()
+    assert(ids(t) === Seq(2L, 10L))
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a legacy .retire record restores only into an emptied origin dir") {
+    import org.apache.hadoop.fs.Path
+    import spark.implicits._
+    import graft.catalog.write.GraftBatchWrite
+    val t = freshTable("t_legacy_retire")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "p").writeTo(t).partitionedBy($"p").create()
+    val m = wcat.metaStore.loadTable("wtest", "t_legacy_retire")
+    val conf = spark.sessionState.newHadoopConf()
+    val dirA = GraftBatchWrite.partitionDir(m, Map("p" -> "a"))
+    val dirB = GraftBatchWrite.partitionDir(m, Map("p" -> "b"))
+    val fs = dirA.getFileSystem(conf)
+    val fa = GraftBatchWrite.dataFiles(dirA, conf).head
+    val fb = GraftBatchWrite.dataFiles(dirB, conf).head
+    val token = java.util.UUID.randomUUID().toString
+    val toA = Snapshots.retiredPath(conf, m.location, fa, token)
+    val toB = Snapshots.retiredPath(conf, m.location, fb, token)
+    // the crash: both dirs' files retired, the swap refilled only p=b
+    Seq(fa -> toA, fb -> toB).foreach { case (from, to) =>
+      fs.mkdirs(to.getParent)
+      assert(fs.rename(from, to))
+    }
+    org.apache.hadoop.fs.FileUtil.copy(fs, toB, fs,
+      new Path(dirB, "part-00000-swapped.parquet"), false, conf)
+    plantRecord(m, s"$token.retire", Seq(s"R\t$toA\t$fa", s"R\t$toB\t$fb"))
+    assert(ids(t) === Seq(1L, 2L))
+    assert(fs.exists(fa) && !fs.exists(toA), "an emptied origin dir restores")
+    assert(!fs.exists(fb) && fs.exists(toB), "a refilled origin dir stands")
+    assert(txnRecords(m).isEmpty)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("a legacy .rbk record reverses its moves and restores the descriptor") {
+    import spark.implicits._
+    import graft.catalog.write.GraftBatchWrite
+    val t = freshTable("t_legacy_rbk")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "p").writeTo(t).partitionedBy($"p").create()
+    val pre = wcat.metaStore.loadTable("wtest", "t_legacy_rbk")
+    val conf = spark.sessionState.newHadoopConf()
+    val fb = GraftBatchWrite.dataFiles(
+      GraftBatchWrite.partitionDir(pre, Map("p" -> "b")), conf).head
+    val fs = fb.getFileSystem(conf)
+    val token = java.util.UUID.randomUUID().toString
+    val to = Snapshots.retiredPath(conf, pre.location, fb, token)
+    // the crash: the rollback moved p=b's file away and published a
+    // descriptor without p=b, then died before removing its record
+    fs.mkdirs(to.getParent)
+    assert(fs.rename(fb, to))
+    wcat.metaStore.updateTable("wtest", "t_legacy_rbk")(m =>
+      m.copy(partitions = m.partitions.filterNot(_.spec == Map("p" -> "b"))))
+    plantRecord(pre, s"$token.rbk", Seq(
+      "META\t" + java.util.Base64.getEncoder.encodeToString(
+        MetaStore.toJson(pre).getBytes("UTF-8")),
+      s"M\t$fb\t$to"))
+    assert(ids(t) === Seq(1L, 2L))
+    assert(fs.exists(fb) && !fs.exists(to), "the move must be reversed")
+    assert(wcat.metaStore.loadTable("wtest", "t_legacy_rbk").partitions.map(_.spec).toSet
+      === pre.partitions.map(_.spec).toSet, "the pre-rollback descriptor must be restored")
+    assert(txnRecords(pre).isEmpty)
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+
+  test("the one repair lists _graft_txn once per call, whatever the records") {
+    import spark.implicits._
+    import graft.catalog.write.{GraftBatchWrite, IntentLog}
+    val t = freshTable("t_repair_listing")
+    Seq((1L, "a"), (2L, "b")).toDF("id", "p").writeTo(t).partitionedBy($"p").create()
+    val m = wcat.metaStore.loadTable("wtest", "t_repair_listing")
+    val conf = spark.sessionState.newHadoopConf()
+    val dirA = GraftBatchWrite.partitionDir(m, Map("p" -> "a"))
+    val fa = GraftBatchWrite.dataFiles(dirA, conf).head
+    def token = java.util.UUID.randomUUID().toString
+    val committed = token
+    plantRecord(m, s"$token.pending", Seq(s"W\t$dirA", s"K\t$fa"))
+    plantRecord(m, s"$committed.pending", Seq(s"F\t$dirA/part-gone.parquet"))
+    plantRecord(m, s"$committed.committed", Nil)
+    plantRecord(m, s"$token.delta", Nil)
+    plantRecord(m, s"$token.rbk", Seq(s"M\t$dirA/part-x.parquet\t$dirA/_moved"))
+    val counting = new org.apache.hadoop.conf.Configuration(conf)
+    counting.set("fs.file.impl", classOf[TxnListingCountingFs].getName)
+    counting.setBoolean("fs.file.impl.disable.cache", true)
+    TxnListingCountingFs.listings.set(0)
+    IntentLog.repair(counting, wcat.metaStore, "wtest", m)
+    assert(TxnListingCountingFs.listings.get === 1)
+    assert(txnRecords(m).isEmpty)
+    assert(ids(t) === Seq(1L, 2L))
+    spark.sql(s"DROP TABLE IF EXISTS $t")
+  }
+}
+
+/** A local filesystem that counts listings of `_graft_txn` dirs. */
+class TxnListingCountingFs extends org.apache.hadoop.fs.LocalFileSystem {
+  override def listStatus(f: org.apache.hadoop.fs.Path): Array[org.apache.hadoop.fs.FileStatus] = {
+    if (f.getName == graft.catalog.write.GraftBatchWrite.TxnDirName)
+      TxnListingCountingFs.listings.incrementAndGet()
+    super.listStatus(f)
+  }
+}
+
+object TxnListingCountingFs {
+  val listings = new java.util.concurrent.atomic.AtomicInteger
 }
