@@ -59,6 +59,19 @@ object GraftBootstrap {
       }
     } catch { case scala.util.control.NonFatal(_) => }
 
+  private val unboundWarned = new java.util.concurrent.atomic.AtomicBoolean(false)
+
+  /** One WARN per JVM when the cached `file:` FileSystem is not the graft
+    * binding (it was resolved before the confs above were set). */
+  private def warnIfUnbound(conf: org.apache.hadoop.conf.Configuration): Unit = {
+    val fs = org.apache.hadoop.fs.FileSystem.get(java.net.URI.create("file:///"), conf)
+    if (!fs.isInstanceOf[graft.catalog.GraftLocalFileSystem] && !unboundWarned.getAndSet(true))
+      org.slf4j.LoggerFactory.getLogger(getClass).warn(s"the cached file: FileSystem is " +
+        s"${fs.getClass.getName}, not the graft binding: every local create forks a chmod " +
+        "subprocess, and every overwrite is truncated in place, which ext4 flushes " +
+        "(~60 ms each). Set spark.hadoop.fs.file.impl before the session's first file: use.")
+  }
+
   /** Dynamic confs every session needs for these fixtures (naive
     * timestamps + int64-ns `events.ts`, see Tables's scaladoc). */
   def setSessionConfs(spark: SparkSession): Unit = {
@@ -66,8 +79,8 @@ object GraftBootstrap {
     spark.conf.set("spark.sql.parquet.inferTimestampNTZ.enabled", "true")
     // Fork-free local chmod (see GraftLocalFileSystem). Advisory when set
     // this late — FileSystem instances are cached per scheme, so a JVM
-    // that already resolved `file:` keeps the stock binding;
-    // `localSession` sets the same key before first use.
+    // that already resolved `file:` keeps the stock binding (logged once
+    // by `warnIfUnbound`); `localSession` sets the same key before first use.
     spark.conf.set("spark.hadoop.fs.file.impl",
       classOf[graft.catalog.GraftLocalFileSystem].getName)
     spark.conf.set("spark.hadoop.fs.AbstractFileSystem.file.impl",
@@ -77,6 +90,7 @@ object GraftBootstrap {
     spark.sparkContext.hadoopConfiguration.setIfUnset(
       "fs.AbstractFileSystem.file.impl",
       classOf[graft.catalog.GraftLocalFs].getName)
+    warnIfUnbound(spark.sparkContext.hadoopConfiguration)
     stripConfSources(spark.sparkContext.hadoopConfiguration)
     // Imperative twin of GraftExtensions' optimizer-rule injection, for
     // sessions built without spark.sql.extensions (a static conf): the

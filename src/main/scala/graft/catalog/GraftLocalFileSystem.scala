@@ -23,10 +23,38 @@ import org.apache.hadoop.fs.permission.FsPermission
   * subprocess. Sticky-bit modes (beyond the POSIX enum) and non-POSIX
   * stores fall back to the stock path.
   *
+  * Overwrites replace, never truncate: a create that overwrites an
+  * existing regular file unlinks it first, so the new bytes land in a new
+  * inode. ext4 (`auto_da_alloc`, the default) flushes a file that is
+  * truncated and written again, as it does one renamed over an existing
+  * file (see `MetaStore.renameOverwrite`): measured at p50 61.7 ms for an
+  * 8-byte file on a virtio ext4 disk, against 0.013 ms for a fresh
+  * create. Hadoop's `FileOutputCommitter.commitJob` rewrites `_SUCCESS`
+  * and its `._SUCCESS.crc` at the table root on every commit that is not
+  * a dynamic overwrite, so that flush was most of a commit's tail after
+  * its last job. `ChecksumFileSystem` creates the crc sidecar through the
+  * same raw call, and [[GraftLocalFs]] delegates to this class, so the
+  * rule covers every overwriting create on a bound session. Appends keep
+  * the inode; a symlink is written through to its target and a directory
+  * at the path fails, as with the stock filesystem. What differs: a hard
+  * link to an overwritten file keeps the old bytes, and a reader between
+  * the unlink and the create finds no file instead of an empty one.
+  * `GraftIO.writeSmallFile` writes through nio and still truncates: its
+  * overwriting callers write fresh tmp names on every commit.
+  *
   * Registered via `fs.file.impl` (see [[graft.GraftBootstrap]] and the
   * session builders): local deployments get fork-free metadata I/O;
   * cluster filesystems (hdfs/s3/...) are untouched by construction. */
 class GraftRawLocalFileSystem extends RawLocalFileSystem {
+
+  override protected def createOutputStreamWithMode(
+      f: Path, append: Boolean, permission: FsPermission): java.io.OutputStream = {
+    val p = pathToFile(f).toPath
+    // a symlink or a directory is left alone: the stock create handles it
+    if (!append && Files.isRegularFile(p, java.nio.file.LinkOption.NOFOLLOW_LINKS))
+      Files.deleteIfExists(p)
+    super.createOutputStreamWithMode(f, append, permission)
+  }
 
   /** Link status without the subprocess: stock `getFileLinkStatus`
     * resolves symlinks through `FileUtil.readLink` — a fork+exec of

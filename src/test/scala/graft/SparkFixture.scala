@@ -18,6 +18,10 @@ object SparkFixture {
       .master("local[4]")
       .appName("graft-test")
       .config("spark.sql.extensions", "graft.GraftExtensions")
+      .config("spark.hadoop.fs.file.impl",
+        classOf[graft.catalog.GraftLocalFileSystem].getName)
+      .config("spark.hadoop.fs.AbstractFileSystem.file.impl",
+        classOf[graft.catalog.GraftLocalFs].getName)
       .config("spark.sql.shuffle.partitions", "4")
       .config("spark.sql.session.timeZone", "UTC")
       .config("spark.ui.enabled", "false")

@@ -12,7 +12,12 @@ checks and `stmt.extra` passes do not count):
 - job-covered: the union of those job spans, clipped to the statement;
 - driver-only: wall minus job-covered (no job running);
 - catalyst: Catalyst analysis, optimization and planning outside jobs,
-  as `perfbench/summarize.py` counts it.
+  as `perfbench/summarize.py` counts it;
+- before-jobs: the first job's start minus the statement's start (all of
+  the wall when the statement runs no job);
+- after-jobs: the statement's end minus the last job's end. For a write
+  this is the commit's tail: `_SUCCESS`, the descriptor publish and the
+  snapshot record, after the write job.
 
 Then it prints the same columns summed per family, where a statement's
 family is its id without a trailing `_<n>` (`update_mor_17` and
@@ -30,7 +35,7 @@ sys.path.insert(0, os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(
 
 from summarize import clip, overlap, union  # noqa: E402
 
-COLUMNS = ("wall", "jobs", "job-covered", "driver-only", "catalyst")
+COLUMNS = ("wall", "jobs", "job-covered", "driver-only", "catalyst", "before-jobs", "after-jobs")
 
 
 def statements(spans):
@@ -51,12 +56,16 @@ def statements(spans):
             cat = clip([(s["start"], s["end"]) for s in inside
                         if s["name"].startswith("catalyst.") or s["name"] == "plan"], lo, hi)
             covered = union(jobs)
+            first = min((a for a, _ in jobs), default=hi)
+            last = max((b for _, b in jobs), default=hi)
             out.append((lo, stmt, {
                 "wall": (hi - lo) / 1000.0,
                 "jobs": len(job_spans),
                 "job-covered": covered / 1000.0,
                 "driver-only": (hi - lo - covered) / 1000.0,
                 "catalyst": (union(cat) - overlap(cat, jobs)) / 1000.0,
+                "before-jobs": (first - lo) / 1000.0,
+                "after-jobs": (hi - last) / 1000.0,
             }))
     return [(stmt, row) for _, stmt, row in sorted(out, key=lambda t: t[0])]
 
