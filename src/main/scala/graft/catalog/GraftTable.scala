@@ -445,32 +445,30 @@ class GraftTable(
       s"DELETE FROM ${name()} since ${java.time.Instant.now()}",
       catalog.writeLockTimeoutSec)
     // DELETE is a commit: removed files RETIRE under a token (q116) so
-    // the pre-delete snapshot stays restorable, and a new snapshot is
-    // recorded after the descriptor update
+    // the pre-delete snapshot stays restorable, and its snapshot is
+    // recorded by the descriptor update itself
     val retireToken = java.util.UUID.randomUUID().toString
     try {
-      var unpartitioned = false
-      store.updateTable(db, meta.name) { current =>
-        // the same retirement as truncate (empty spec, whole table incl.
-        // custom LOCATIONs) and static overwrite (matching partition dirs
-        // plus a full spec's literal dir)
-        write.PartitionPredicates.retire(hadoopConf, current, spec, retireToken)
-        if (spec.isEmpty) {
-          unpartitioned = !current.isPartitioned
-          current.copy(partitions = Nil,
-            stats = if (catalog.autoSizeUpdate) Some(TableStats(0L, None)) else None)
-        } else {
-          val kept = current.partitions
-            .filterNot(p => write.PartitionPredicates.matches(spec, p.spec))
-          current.copy(partitions = kept,
-            stats =
-              if (catalog.autoSizeUpdate && kept.forall(_.isSized))
-                Some(TableStats(kept.map(_.sizeInBytes).sum, None))
-              else None)
-        }
+      // the same retirement as truncate (empty spec, whole table incl.
+      // custom LOCATIONs) and static overwrite (matching partition dirs
+      // plus a full spec's literal dir), run like theirs under the
+      // permit and before the publish
+      val pre = store.loadTable(db, meta.name)
+      write.PartitionPredicates.retire(hadoopConf, pre, spec, retireToken)
+      // deregister exactly what was retired: a partition ADDed since
+      // `pre` keeps its files, so it stays registered
+      val retired = pre.partitions.map(_.spec)
+        .filter(write.PartitionPredicates.matches(spec, _)).toSet
+      val published = Snapshots.publish(hadoopConf, store, db, meta.name, "delete",
+        retireToken, if (pre.isPartitioned) Nil else Seq(pre.location)) { current =>
+        val kept = current.partitions.filterNot(p => retired(p.spec))
+        current.copy(partitions = kept,
+          stats =
+            if (catalog.autoSizeUpdate && kept.forall(_.isSized))
+              Some(TableStats(kept.map(_.sizeInBytes).sum, None))
+            else None)
       }
-      Snapshots.maintain(spark, store, db, meta.name, "delete", retireToken,
-        if (unpartitioned) Seq(meta.location) else Nil)
+      Snapshots.gc(hadoopConf, published)
       FileStatusCache.getOrCreate(spark).invalidateAll()
     } finally release()
   }
@@ -580,12 +578,14 @@ class GraftTable(
       s"DROP PARTITION on ${name()} since ${java.time.Instant.now()}",
       catalog.writeLockTimeoutSec)
     try {
-      var external = meta.external
-      store.updateTable(db, meta.name) { current =>
+      // the drop is a lineage event: its snapshot records the token so
+      // the retired trees stay resolvable (dropped partitions are
+      // deregistered, so no shard lists them as live)
+      val published = Snapshots.publish(hadoopConf, store, db, meta.name,
+          "drop-partition", retireToken, Nil) { current =>
         val (dropped, kept) = current.partitions.partition(p => specs.contains(p.spec))
-        external = current.external
-        // returning `current` unchanged makes updateTable skip the
-        // descriptor rewrite — a missing partition is a read-only outcome
+        // returning `current` unchanged skips the publish and the
+        // snapshot — a missing partition is a read-only outcome
         if (dropped.size < specs.size) { allFound = false; current }
         else {
           // Managed tables own their data; EXTERNAL tables retain it — the
@@ -609,12 +609,7 @@ class GraftTable(
               else None)
         }
       }
-      // the drop is a lineage event: its snapshot records the token so
-      // the retired trees stay resolvable (dropped partitions are
-      // deregistered, so no shard lists them as live)
-      if (allFound && !external)
-        Snapshots.maintain(spark, store, db, meta.name, "drop-partition",
-          retireToken, Nil)
+      if (allFound && !published.external) Snapshots.gc(hadoopConf, published)
     } finally release()
     if (allFound) FileStatusCache.getOrCreate(spark).invalidateAll()
     allFound

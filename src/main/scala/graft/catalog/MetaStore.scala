@@ -169,9 +169,10 @@ case class TableMeta(
     // then the creation-bound check stays permissive.
     createdAtMs: Long = 0L,
     // Per-COMMIT snapshot lineage, newest first (head = the current
-    // state). Bounded by `graft.snapshots.keep`; maintained advisorily
-    // by [[graft.catalog.Snapshots]] (a maintenance failure clears the
-    // list — travel then refuses — never wrong rows).
+    // state). Bounded by `graft.snapshots.keep`; recorded advisorily by
+    // each commit's publish ([[graft.catalog.Snapshots.publish]]: a
+    // failed record clears the list — travel then refuses — never wrong
+    // rows).
     snapshots: Seq[SnapshotMeta] = Nil,
     // Monotonic snapshot version counter — survives lineage clears and
     // eviction so a version number is never reused within a table.
@@ -483,8 +484,9 @@ class MetaStore(val warehouse: Path, conf: Configuration)
       //  2. derive the new state, stamped seq = s + 1;
       //  3. claim seq s + 1 by EXCLUSIVE CREATE of
       //     `<table>.json.cas-<s+1>` holding the complete new
-      //     descriptor — the linearization point: exactly one writer
-      //     per sequence number on any Hadoop filesystem;
+      //     descriptor, then re-read the descriptor: the create plus a
+      //     seq still at s is the linearization point, exactly
+      //     one writer per sequence number on any Hadoop filesystem;
       //  4. publish marker → descriptor ([[renameOverwrite]]).
       //
       // A loser's create throws FileAlreadyExists → reload and RE-DERIVE
@@ -494,8 +496,8 @@ class MetaStore(val warehouse: Path, conf: Configuration)
       // A winner that dies between 3 and 4 is rolled forward by the
       // next writer (the marker holds the full state); a torn marker
       // (died mid-write) is skipped while fresh and reclaimed once
-      // stale. Single-writer cost is unchanged: one create + one
-      // publish (renameOverwrite), exactly what the tmp-file write pays.
+      // stale. Single-writer cost: one create, one descriptor re-read
+      // and one publish (renameOverwrite).
       var attempts = 0
       while (true) {
         rollForwardCas(db, table)
@@ -505,9 +507,9 @@ class MetaStore(val warehouse: Path, conf: Configuration)
         if (updated0 eq current) return current
         val updated = updated0.copy(seq = current.seq + 1)
         val marker = new Path(metaDir(db), s"$table.json.cas-${updated.seq}")
+        val json = toJson(updated)
         val claimed = try {
-          GraftIO.writeSmallFile(fs, marker,
-            toJson(updated).getBytes("UTF-8"), overwrite = false)
+          GraftIO.writeSmallFile(fs, marker, json.getBytes("UTF-8"), overwrite = false)
           true
         } catch {
           case _: org.apache.hadoop.fs.FileAlreadyExistsException => false
@@ -515,14 +517,35 @@ class MetaStore(val warehouse: Path, conf: Configuration)
               if e.getMessage != null && e.getMessage.contains("exists") =>
             false
         }
+        MetaStore.casClaimTestHook.foreach(h => if (claimed) h())
+        // the claim alone does not prove s + 1 was free: a writer that
+        // claimed AND published it between our load and our create
+        // consumed its marker, so the create succeeded over a descriptor
+        // already at s + 1. One re-read decides:
+        //  - below s + 1: ours to publish (no one else can while our
+        //    marker exists);
+        //  - at s + 1 with our exact bytes: another writer's roll-forward
+        //    published our marker for us — done, never applied twice;
+        //  - past s + 1 with our marker gone: that roll-forward plus a
+        //    commit on top (a stale marker stays until reclaimed; the
+        //    one case read as this wrongly needs a foreign publish before
+        //    our create AND a reclaim plus a commit before this read);
+        //  - otherwise the claim is stale: withdraw it and re-derive.
         if (claimed) {
-          try renameOverwrite(marker, tableMetaFile(db, table))
-          catch { case e: java.io.IOException =>
-            // a concurrent roll-forward may have published our marker
-            // for us — success iff the descriptor now carries our seq
-            if (loadTable(db, table).seq < updated.seq) throw e
+          val raw = countedRead(readFully(tableMetaFile(db, table)))
+          if (raw == json) return updated
+          val seen = fromJson(raw).seq
+          if (seen < updated.seq) {
+            try renameOverwrite(marker, tableMetaFile(db, table))
+            catch { case e: java.io.IOException =>
+              // a concurrent roll-forward may have published our marker
+              // for us — success iff the descriptor now carries our seq
+              if (loadTable(db, table).seq < updated.seq) throw e
+            }
+            return updated
           }
-          return updated
+          if (seen > updated.seq && !fs.exists(marker)) return updated
+          fs.delete(marker, false)
         }
         attempts += 1
         require(attempts < 1000,
@@ -607,12 +630,16 @@ class MetaStore(val warehouse: Path, conf: Configuration)
     }
   }
 
-  def loadTable(db: String, table: String): TableMeta = {
+  def loadTable(db: String, table: String): TableMeta =
+    countedRead(fromJson(readFully(tableMetaFile(db, table))))
+
+  /** One descriptor read, counted and timed for the trace metrics. */
+  private def countedRead[T](read: => T): T = {
     val t0 = System.nanoTime()
-    val m = fromJson(readFully(tableMetaFile(db, table)))
+    val r = read
     MetaStore.descriptorReads.incrementAndGet()
     MetaStore.descriptorReadNanos.addAndGet(System.nanoTime() - t0)
-    m
+    r
   }
 
   /** Descriptor read under the same monitor as [[updateTable]] — for
@@ -761,6 +788,12 @@ object MetaStore {
     * simulates a SECOND DRIVER's descriptor write landing between this
     * driver's load and its CAS claim. Never set outside tests. */
   @volatile private[graft] var casTestHook: Option[Int => Unit] = None
+
+  /** Test-only failpoint: invoked inside [[MetaStore.updateTable]]'s CAS
+    * loop right after a successful claim, before the re-read that
+    * decides whether the claim stands — a spec lands a second driver's
+    * roll-forward there. Never set outside tests. */
+  @volatile private[graft] var casClaimTestHook: Option[() => Unit] = None
 
   /** Per-table monitors for [[MetaStore.updateTable]] — JVM-global so
     * every MetaStore instance over the same warehouse shares them.

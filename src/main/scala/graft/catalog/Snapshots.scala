@@ -20,10 +20,10 @@ import graft.catalog.GraftIO.jsonString
   *
   * Shape (the q109 manifest-list shard shape, per the judge's brief):
   *
-  *  - `<location>/_graft_snapshots/snap-<v>.json` — one small JSON per
-  *    commit: version, timestamp, kind, retirement token, provider, and
-  *    per-directory entries `{dir, partition spec, shard}`.
-  *  - `shard-<v>-<i>.json` — ONE directory's live data files
+  *  - `<location>/_graft_snapshots/snap-<v>-<uuid>.json` — one small
+  *    JSON per commit: version, timestamp, kind, retirement token,
+  *    provider, and per-directory entries `{dir, partition spec, shard}`.
+  *  - `shard-<v>-<uuid>-<i>.json` — ONE directory's live data files
   *    (`[name, size]` pairs) at version v. A commit writes shards only
   *    for the directories it TOUCHED; untouched directories reuse the
   *    parent snapshot's shard by pointer — commit cost ∝ partitions
@@ -44,11 +44,17 @@ import graft.catalog.GraftIO.jsonString
   * partition locations outside the root) refuses loudly — never wrong
   * rows.
   *
-  * Correctness posture: snapshotting is ADVISORY — a maintenance
-  * failure clears the lineage (travel then refuses with "no snapshots")
-  * and the commit itself never fails on it; current-table reads never
-  * consult snapshots (they stay listing-based), so a stale or missing
-  * manifest can never change live query results.
+  * ONE PUBLISH PER COMMIT: [[publish]] is the commit's only descriptor
+  * write — the data registration, stats, deletion vectors and the new
+  * lineage head ([[record]] + [[withHead]]) land together, the Iceberg /
+  * Delta shape of one atomic metadata write per commit.
+  *
+  * Correctness posture: snapshotting is ADVISORY — a failed record
+  * publishes the commit with the lineage cleared (travel then refuses
+  * with "no snapshots") and the commit itself never fails on it;
+  * current-table reads never consult snapshots (they stay
+  * listing-based), so a stale or missing manifest can never change live
+  * query results.
   *
   * 100 TB posture: per-commit cost is one parent-manifest read, one
   * shard write per TOUCHED directory, one snapshot JSON ∝ partition
@@ -342,59 +348,76 @@ object Snapshots extends Logging {
     }
   }
 
-  // ---- commit-side maintenance ----------------------------------------------
+  // ---- the commit publish ----------------------------------------------------
 
-  private def listDataFiles(
-      conf: Configuration, dir: Path): Seq[FileStatus] = {
-    val fs = dir.getFileSystem(conf)
-    if (!fs.exists(dir)) Nil
-    else fs.listStatus(dir).toSeq
-      .filter(s => s.isFile && !hidden(s.getPath.getName))
+  /** A dir's live data files as shard entries (`[name, size]`). */
+  private def listShard(conf: Configuration, dir: String): Seq[(String, Long)] = {
+    val p = new Path(dir)
+    val fs = p.getFileSystem(conf)
+    if (!fs.exists(p)) Nil
+    else fs.listStatus(p).toSeq.filter(s => s.isFile && !hidden(s.getPath.getName))
+      .map(f => (f.getPath.getName, f.getLen))
   }
 
-  /** Record the POST-commit state as a new snapshot. Runs under the
-    * commit's write permit, AFTER the descriptor update. `touchedDirs`
-    * are the directories whose file lists this commit changed (written
-    * or retired-from) — only they get fresh shards; every other
-    * registered directory reuses the parent snapshot's shard pointer.
-    * Advisory: any failure clears the lineage (one warning, travel
-    * refuses from then on) and never fails the commit. */
-  def maintain(
-      spark: SparkSession,
-      store: MetaStore,
-      db: String,
-      table: String,
-      kind: String,
-      token: String,
-      touchedDirs: Seq[String]): Unit = try {
-    val meta = store.loadTable(db, table)
-    if (meta.external) return
-    val conf = spark.sessionState.newHadoopConf()
-    val head = record(conf, meta, kind, token, touchedDirs,
-      System.currentTimeMillis())
-    gc(conf, store.updateTable(db, table)(withHead(_, head)))
-    ()
-  } catch { case NonFatal(e) =>
-    logWarning(s"snapshot maintenance failed for $db.$table — clearing the " +
-      s"lineage (time travel refuses until commits rebuild it): $e")
-    try store.updateTable(db, table)(_.copy(snapshots = Nil))
-    catch { case NonFatal(_) => }
+  /** THE commit publish: one [[MetaStore.updateTable]] that applies a
+    * commit's `edit` (data registration, stats, deletion vectors,
+    * properties) and, in the same closure, records the edited descriptor
+    * as the new lineage head ([[record]] + [[withHead]]) — so no reader
+    * ever sees the commit's data live without its snapshot, and a crash
+    * after the publish leaves the commit at the lineage head. Every
+    * lineage-recording writer publishes through here.
+    *
+    *  - `touchedDirs` — the dirs whose live file list the commit changed
+    *    — are listed HERE, before the update: the metastore monitor only
+    *    covers the small snapshot and shard writes (and the listing of a
+    *    dir registered by DDL since the parent snapshot, see [[record]]).
+    *  - CAS: the record runs inside the update's closure, so a retry over
+    *    a moved version records afresh.
+    *  - An edit returning its input unchanged (`eq`) publishes and
+    *    records nothing; external tables record no lineage.
+    *  - Advisory: if the record fails, the commit publishes with the
+    *    lineage cleared (one WARN; travel refuses until commits rebuild
+    *    it) and never fails on it.
+    *
+    * Returns the published descriptor; the caller runs [[gc]] after it,
+    * under the same write permit. */
+  private[graft] def publish(
+      conf: Configuration, store: MetaStore, db: String, table: String,
+      kind: String, token: String, touchedDirs: Seq[String])(
+      edit: TableMeta => TableMeta): TableMeta = {
+    val listed = touchedDirs.map(d => qualStr(conf, d) -> listShard(conf, d)).toMap
+    store.updateTable(db, table) { cur =>
+      val next = edit(cur)
+      if ((next eq cur) || next.external) next
+      else try {
+        // strictly after the newest retired generation: the TIMESTAMP
+        // AS OF fallback serves only generations retired before the
+        // oldest retained snapshot
+        val tsMs = math.max(System.currentTimeMillis(),
+          next.history.headOption.fold(0L)(_.retiredAtMs + 1))
+        withHead(next, record(conf, next, kind, token, listed, tsMs))
+      } catch { case NonFatal(e) =>
+        logWarning(s"snapshot of the $kind commit on $db.$table failed — " +
+          s"clearing the lineage (time travel refuses until commits rebuild it): $e")
+        next.copy(snapshots = Nil)
+      }
+    }
   }
 
-  /** Write the snapshot and shard files that record `meta` — a
-    * descriptor about to be published — as version
-    * `meta.lastSnapshotVersion + 1`, and return its lineage entry
-    * (publish it with [[withHead]]). A caller that publishes the
-    * descriptor and its snapshot in ONE update calls this inside the
-    * update, so a CAS retry on a moved version records afresh. Throws
-    * on failure; the caller keeps the advisory rule by publishing with
-    * the lineage cleared. */
-  private[graft] def record(
+  /** Write the snapshot and shard files that record `meta` — the
+    * descriptor [[publish]] is about to publish — as version
+    * `meta.lastSnapshotVersion + 1`, and return its lineage entry. A dir
+    * in `listed` (qualified dir → its live files) gets a fresh shard; any
+    * other registered dir reuses the parent snapshot's shard pointer, or
+    * is listed here when the parent has none (a partition registered by
+    * DDL since). File names carry a per-attempt UUID, so a CAS loser
+    * never overwrites the winner's files. Throws on failure. */
+  private def record(
       conf: Configuration,
       meta: TableMeta,
       kind: String,
       token: String,
-      touchedDirs: Seq[String],
+      listed: Map[String, Seq[(String, Long)]],
       tsMs: Long): SnapshotMeta = {
     val root = new Path(meta.location)
     val fs = root.getFileSystem(conf)
@@ -407,25 +430,22 @@ object Snapshots extends Logging {
       meta.snapshots.headOption.flatMap(s => readSnap(conf, s.file))
     val parentShards: Map[String, String] =
       parent.map(_.dirs.map(d => d.dir -> d.shard).toMap).getOrElse(Map.empty)
-    val touched = touchedDirs.map(qualStr(conf, _)).toSet
     val v = meta.lastSnapshotVersion + 1
+    val id = java.util.UUID.randomUUID()
     val snapDir = new Path(root, SnapDirName)
     fs.mkdirs(snapDir)
-    var idx = 0
-    val dirs = dirSpecs.map { case (d, spec) =>
+    val dirs = dirSpecs.zipWithIndex.map { case ((d, spec), i) =>
       val qd = qualStr(conf, d)
-      val reuse = if (touched.contains(qd)) None else parentShards.get(qd)
-      val shard = reuse.getOrElse {
-        val files = listDataFiles(conf, new Path(d))
-          .map(f => (f.getPath.getName, f.getLen))
-        val sf = new Path(snapDir, s"shard-$v-$idx.json")
-        idx += 1
-        writeShard(fs, sf, files)
-        fs.makeQualified(sf).toString
+      val shard = listed.get(qd) match {
+        case None if parentShards.contains(qd) => parentShards(qd)
+        case files =>
+          val sf = new Path(snapDir, s"shard-$v-$id-$i.json")
+          writeShard(fs, sf, files.getOrElse(listShard(conf, d)))
+          fs.makeQualified(sf).toString
       }
       SnapDir(qd, spec, shard)
     }
-    val sf = new Path(snapDir, s"snap-$v.json")
+    val sf = new Path(snapDir, s"snap-$v-$id.json")
     writeSnap(fs, sf,
       Snap(v, tsMs, kind, token, meta.provider, qualStr(conf, meta.location), dirs,
         meta.deleteVectors))
@@ -433,7 +453,7 @@ object Snapshots extends Logging {
   }
 
   /** `meta` with `head` as its newest retained snapshot. */
-  private[graft] def withHead(meta: TableMeta, head: SnapshotMeta): TableMeta =
+  private def withHead(meta: TableMeta, head: SnapshotMeta): TableMeta =
     meta.copy(
       snapshots = (head +: meta.snapshots).take(keep(meta.properties)),
       lastSnapshotVersion = head.version)
@@ -505,7 +525,10 @@ object Snapshots extends Logging {
           }
           if (efs.listStatus(ext).isEmpty) efs.delete(ext, true)
         }
-      } catch { case NonFatal(_) => } // advisory, like the rest of GC
+      } catch { case NonFatal(e) =>
+        // advisory, like the rest of GC
+        logWarning(s"snapshot GC of ${meta.name} skipped the retirement area under $d: $e")
+      }
     }
     // deletion-vector batches (q119) reclaim like retirement tokens: a
     // `_graft_dv/<token>` dir lives while the CURRENT descriptor or any

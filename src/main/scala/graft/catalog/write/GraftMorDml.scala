@@ -41,15 +41,16 @@ import graft.catalog.GraftIO.{jsonString, readSmallFile}
   *
   * What a commit produces:
   *  - inserted rows ride the NORMAL append machinery (same file writers,
-  *    committer, partition registration, skip-stats and snapshot
-  *    maintenance as any `INSERT INTO`);
+  *    committer, partition registration, skip-stats and snapshot as
+  *    any `INSERT INTO`);
   *  - deleted keys land as parquet sidecars under
   *    `<location>/_graft_dv/<token>/` plus a `_manifest.json` naming the
   *    key column and the EXACT data files the batch applies to (the DML
   *    scan's read set) — scoping that keeps later re-inserts of a
   *    deleted key visible (new files are never in `appliesTo`);
   *  - one [[DvMeta]] entry registered in the descriptor ATOMICALLY with
-  *    the insert registrations (the commit's single `updateTable`).
+  *    the insert registrations and the `dml-mor` lineage head (the
+  *    commit's one publish).
   *
   * Reads apply the vectors via the plan-level anti-join
   * ([[graft.plans.ResolveDeletionVectors]]); compaction folds them.
@@ -223,7 +224,7 @@ private[write] class GraftDeltaWrite(
 
   // the INSERT half is a plain append through the stock machinery — its
   // batch write owns the permit, repairs, registration, skip-stats and
-  // snapshot maintenance; the delta wrapper adds the DV sidecar and the
+  // the snapshot; the delta wrapper adds the DV sidecar and the
   // intent record around it. Constructed eagerly so the delta
   // plan inherits the append's distribution/ordering verbatim (bucketed
   // MOR tables route their inserts exactly like any bucketed append).
@@ -355,8 +356,8 @@ private[write] class GraftDeltaBatchWrite(
       // (so an uncommitted crash can sweep the strays), the DV area, and
       // the DvMeta to (re-)register on roll-forward. The append commit
       // does the rest: record, FS publish, marker, partition registration
-      // + DvMeta in ONE atomic descriptor update, skip-stats, snapshot
-      // (kind dml-mor, dv list included), then the record retires — all
+      // + DvMeta + snapshot (kind dml-mor, dv list included) in ONE
+      // descriptor publish, skip-stats, then the record retires — all
       // under the permit
       val writeDirs: Seq[Path] =
         if (fresh.partitionColumns.isEmpty) Seq(new Path(fresh.location))
@@ -370,7 +371,7 @@ private[write] class GraftDeltaBatchWrite(
       dvMeta.foreach { dv =>
         gbw.metaExtra = m => m.copy(deleteVectors = m.deleteVectors :+ dv)
       }
-      gbw.kindOverride = Some("dml-mor")
+      gbw.kindOverride = Some(IntentLog.snapshotKind("mor"))
       gbw.commit(innerMsgs.toArray)
     } catch { case t: Throwable =>
       // pre-publish failures (conflict, finalize, record): clean the

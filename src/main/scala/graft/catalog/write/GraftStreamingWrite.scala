@@ -29,9 +29,9 @@ import graft.catalog.{GraftCatalog, MetaStore}
   * (queryId, epochId)". The committed-epoch watermark for this query
   * lives IN the table descriptor (`graft.stream.epoch.<queryId>`,
   * [[GraftCatalog.StreamEpochPropPrefix]]) and is stamped by
-  * [[GraftBatchWrite.metaExtra]] inside the commit's atomic
-  * `MetaStore.updateTable` call — the SAME descriptor write that
-  * registers the epoch's partitions and stats. A replayed APPEND epoch
+  * [[GraftBatchWrite.metaExtra]] inside the commit's one descriptor
+  * publish — the SAME write that registers the epoch's partitions and
+  * stats and records its snapshot. A replayed APPEND epoch
   * is therefore detected under the table's write permit and ABORTED
   * (staged files dropped by the commit protocol; the table keeps the
   * original epoch's data), never double-appended. A replayed

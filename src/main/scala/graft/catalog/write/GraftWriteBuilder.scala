@@ -582,9 +582,8 @@ class GraftBatchWrite(
   // FS-qualified key ('/data/x' and 'file:///data/x' must share one
   // permit), derived by the same helper the lease uses — the two
   // derivations must stay byte-identical or hasLease stops matching
-  /** Extra descriptor transform applied INSIDE the commit's atomic
-    * `updateTable` call (both the partitioned and unpartitioned
-    * branches) — the streaming path stamps its epoch-log property here
+  /** Extra descriptor transform applied INSIDE the commit's one publish
+    * ([[graft.catalog.Snapshots.publish]]) — the streaming path stamps its epoch-log property here
     * so "this epoch's data is registered" and "this epoch is marked
     * committed" are one atomic descriptor write. Batch writes leave it
     * as identity. */
@@ -594,7 +593,7 @@ class GraftBatchWrite(
     * write but are not plain appends — the merge-on-read DML commit
     * (q119) rides the Append machinery for its inserted files yet must
     * record kind `dml-mor`, e.g. so incremental append reads refuse
-    * ranges containing it. */
+    * ranges containing it. Recorded by the same publish. */
   @volatile private[write] var kindOverride: Option[String] = None
 
   /** The intent record of a wrapper that commits THROUGH this batch
@@ -804,7 +803,8 @@ class GraftBatchWrite(
     // the deletes, and the catalog registration. WritePathSpec drives
     // the two-phase-commit recovery contract through this point.
     GraftBatchWrite.crashAfterFsCommit.foreach(f => f())
-    // THE commit point: from here on a crash rolls the statement forward
+    // THE commit point: from here on a crash rolls the statement forward,
+    // and the repair's roll-forward publishes its lineage head
     record.foreach(IntentLog.commit(hadoopConf, _))
     // COW: replacements are live — removing the snapshot completes the
     // group rewrite. Managed tables RETIRE the old files (q116 — the
@@ -840,13 +840,23 @@ class GraftBatchWrite(
     // stable while this job holds the write permit, and a
     // thousand-partition listing pass (minutes of recursive-listing
     // RPCs) must not hold the metastore lock — ALTER, partition DDL and
-    // drops on the table would block on it for the duration. Only the
-    // stale-placeholder repair (rare, one-shot) and the merge itself run
-    // under the lock.
+    // drops on the table would block on it for the duration. The
+    // snapshot shards' listing of the touched dirs runs before it too
+    // (Snapshots.publish). Only the stale-placeholder repair (rare,
+    // one-shot), the merge and the small snapshot writes run under the
+    // lock.
     val snapshot = store.loadTableLocked(db, meta.name)
-    // directories whose skip-stats shard this commit must rebuild —
-    // the touched set only, never the table (the sharding contract)
-    var skipStatsDirs: Seq[String] = Nil
+    val writtenSpecs = GraftBatchWrite.writtenSpecs(snapshot, messages.toSeq)
+    // set-based membership: the passes inside the publish run in the
+    // per-table critical section, and Seq scans would be O(base ×
+    // written) on the thousand-partition backfill this code budgets for
+    val writtenSet = writtenSpecs.toSet
+    // directories whose live file list this commit changed — the
+    // skip-stats and snapshot shards are rebuilt for them only, never
+    // the table (the sharding contract) — and the registration and
+    // stats edit of the one publish below
+    var touched: Seq[String] = Nil
+    var register: TableMeta => TableMeta = identity
     if (snapshot.partitionColumns.isEmpty) {
       // autoSizeUpdate=false: invalidate-don't-recompute (reference
       // CatalogUtil.scala:31-48) — clear stats so the planner falls
@@ -855,18 +865,15 @@ class GraftBatchWrite(
       val tableStats =
         if (autoSizeUpdate) Some(TableStats(sizeOf(new Path(snapshot.location)), None))
         else None
-      store.updateTable(db, meta.name)(m =>
-        restoreSortTrust(metaExtra(m.copy(stats = tableStats))))
-      skipStatsDirs = Seq(snapshot.location)
+      register = _.copy(stats = tableStats)
+      touched = Seq(snapshot.location)
     } else {
-      val writtenSpecs = GraftBatchWrite.writtenSpecs(snapshot, messages.toSeq)
       // COW: a scanned partition that received no replacement files lost
       // every row to the rewrite — remove its now-empty dir and
       // deregister it below (partitions are never left registered over
       // empty dirs; DELETE/overwrite behave the same way).
       val cowEmptied: Set[Map[String, String]] = cowSnapshot match {
         case Some(cs) =>
-          val writtenSet = writtenSpecs.toSet
           cs.dirs.collect {
             case (s, d) if !writtenSet.contains(s) &&
               GraftBatchWrite.dataFiles(d, hadoopConf).isEmpty =>
@@ -922,12 +929,11 @@ class GraftBatchWrite(
       // take the union.
       val cowTouchedDirs: Seq[String] = cowSnapshot.toSeq.flatMap(cs =>
         cs.dirs.map(_._2.toString) ++ cs.writeDirs.map(_.toString))
-      skipStatsDirs = (written.map(GraftBatchWrite.dirOf(snapshot, _).toString) ++
+      touched = (written.map(GraftBatchWrite.dirOf(snapshot, _).toString) ++
         cowTouchedDirs).distinct
-
       // Atomic descriptor update: concurrent commits to different
       // partitions of the same table must both land their registrations.
-      store.updateTable(db, meta.name) { current =>
+      register = { current =>
         val base = mode match {
           case Truncate => Nil
           case StaticOverwrite(spec) =>
@@ -936,10 +942,6 @@ class GraftBatchWrite(
             current.partitions.filterNot(p => cowEmptied.contains(p.spec))
           case _ => current.partitions
         }
-        // set-based membership: these passes run inside the per-table
-        // critical section, and Seq scans would be O(base × written) on
-        // the thousand-partition backfill this code budgets for
-        val writtenSpecSet = writtenSpecs.toSet
         val curLocBySpec = current.partitions
           .collect { case p if p.location.isDefined => p.spec -> p.location }.toMap
         // Partition DDL between the pre-lock snapshot and this critical
@@ -969,7 +971,7 @@ class GraftBatchWrite(
         // under the lock — bounded by the one-shot property.
         val staleSpecs =
           if (autoSizeUpdate)
-            base.filter(p => !p.isSized && !writtenSpecSet.contains(p.spec))
+            base.filter(p => !p.isSized && !writtenSet.contains(p.spec))
               .map(_.spec)
           else Nil
         val repaired = try Await.result(
@@ -985,61 +987,92 @@ class GraftBatchWrite(
         val merged0 = writtenAdjusted ++ repaired
         val mergedSpecSet = merged0.map(_.spec).toSet
         val merged = base.filterNot(p => mergedSpecSet.contains(p.spec)) ++ merged0
-        restoreSortTrust(metaExtra(current.copy(
+        current.copy(
           partitions = merged,
           stats =
             if (autoSizeUpdate && merged.forall(_.isSized))
               Some(TableStats(merged.map(_.sizeInBytes).sum, None))
-            else None)))
+            else None)
       }
     }
+    val inert = inertDeleteVectors(snapshot, hadoopConf)
+    val kind = kindOverride.getOrElse(mode match {
+      case Append => "append"
+      case Truncate => "truncate"
+      case StaticOverwrite(_) => "overwrite"
+      case DynamicOverwrite => IntentLog.snapshotKind("dynamic-overwrite")
+      case _: CowReplace => IntentLog.snapshotKind("cow")
+    })
+    // THE publish: registration, stats, deletion vectors, the wrapper's
+    // edit and the lineage head (q116: fresh shards for the touched dirs,
+    // parent pointers for the rest) in one descriptor update
+    val published = graft.catalog.Snapshots.publish(hadoopConf, store, db, meta.name,
+      kind, retireToken, if (snapshot.external) Nil else touched) { current =>
+      restoreSortTrust(current, metaExtra(register(current)), writtenSet, inert)
+    }
+    // Test-only crash injection: die right after the publish
+    GraftBatchWrite.crashAfterPublish.foreach(f => f())
     // per-file skip-stats shards: each TOUCHED directory's shard is
     // rebuilt against its live files (new files read their footer once)
-    // inside the same permit as the descriptor update — advisory, never
-    // fails the commit; cost ∝ partitions written, never the table
-    graft.catalog.SkipStats.maintainDirs(spark, skipStatsDirs,
+    // under the same permit — advisory, never fails the commit
+    graft.catalog.SkipStats.maintainDirs(spark, touched,
       snapshot.schema, snapshot.properties, snapshot.provider)
-    // snapshot-per-commit lineage (q116): record the post-commit file
-    // manifest — fresh shards for the touched dirs only, parent
-    // pointers for the rest — under the same permit. Advisory: a
-    // failure clears the lineage, never the commit.
-    if (!snapshot.external) {
-      val kind = kindOverride.getOrElse(mode match {
-        case Append => "append"
-        case Truncate => "truncate"
-        case StaticOverwrite(_) => "overwrite"
-        case DynamicOverwrite => "overwrite-dynamic"
-        case _: CowReplace => "rewrite-dml"
-      })
-      graft.catalog.Snapshots.maintain(spark, store, db, meta.name,
-        kind, retireToken, skipStatsDirs)
-    }
+    if (!published.external) graft.catalog.Snapshots.gc(hadoopConf, published)
     // the statement is complete: its record retires (before its marker)
     record.foreach(IntentLog.finish(hadoopConf, _))
     FileStatusCache.getOrCreate(spark).invalidateAll()
   } finally releasePermit()
 
-  /** A TRUNCATE commit replaced every live file with freshly written
-    * (engine-sorted) ones — if the table declares cluster columns, the
-    * catalog's sort-trust marker can be restored here: from this commit
-    * on, per-file cluster-key sortedness holds table-wide again (the
-    * cure for an EXTERNAL create or an ALTER-changed declaration on an
-    * unpartitioned table, where in-place compaction is unavailable).
-    * Runs inside the same atomic descriptor update as the stats/
-    * partition registration, under the write permit. */
-  private def restoreSortTrust(m: TableMeta): TableMeta = {
-    // a truncate retired every file any live deletion vector applied to
-    // — the batches are inert; clearing keeps the read path rewrite-free
-    // (older snapshots keep their own dv lists for travel)
-    val cleared =
-      if (mode == Truncate && m.deleteVectors.nonEmpty)
-        m.copy(deleteVectors = Nil)
-      else m
-    if (mode == Truncate &&
-        graft.catalog.GraftCatalog.clusterColumns(cleared.properties).nonEmpty)
-      cleared.copy(properties = cleared.properties +
-        (graft.catalog.GraftCatalog.ClusterSortedProp -> "true"))
-    else cleared
+  /** The sort-trust and deletion-vector rules of a commit that replaced
+    * files, applied inside the publish to the edited descriptor `m`
+    * (`current` is the state it was derived from):
+    *  - a TRUNCATE, or a dynamic overwrite that rewrote every registered
+    *    partition (partitioned compaction), replaced every live file with
+    *    freshly written (engine-sorted) ones — if the table declares
+    *    cluster columns, the sort-trust marker restores: per-file
+    *    cluster-key sortedness holds table-wide again (the cure for an
+    *    EXTERNAL create or an ALTER-changed declaration);
+    *  - a truncate retired every file any live deletion vector applied
+    *    to, so every batch clears; otherwise the `inert` batches drop
+    *    ([[inertDeleteVectors]]). Older snapshots keep their own dv lists
+    *    for travel. */
+  private def restoreSortTrust(current: TableMeta, m: TableMeta,
+      written: Set[Map[String, String]], inert: Set[String]): TableMeta = {
+    val replacedAll = mode == Truncate || (mode == DynamicOverwrite &&
+      current.isPartitioned && current.partitions.forall(p => written.contains(p.spec)))
+    m.copy(
+      deleteVectors =
+        if (mode == Truncate) Nil else m.deleteVectors.filterNot(d => inert.contains(d.token)),
+      properties =
+        if (replacedAll && graft.catalog.GraftCatalog.clusterColumns(m.properties).nonEmpty)
+          m.properties + (graft.catalog.GraftCatalog.ClusterSortedProp -> "true")
+        else m.properties)
+  }
+
+  /** Tokens of the live deletion-vector batches none of whose
+    * `appliesTo` files is live after this commit's file moves — a
+    * rewrite that reads through the anti-join (compaction) has
+    * materialized their deletes. Runs here, before the publish, and only
+    * when the table has live batches and the mode retires files: an
+    * overwrite (a truncate clears every batch instead; a copy-on-write
+    * rewrite never runs over live batches). Lists only the registered
+    * dirs of `m` that hold some batch's `appliesTo` file, so the cost
+    * grows with the batches, never the table. Torn manifests are
+    * conservatively kept. */
+  private def inertDeleteVectors(
+      m: TableMeta, conf: org.apache.hadoop.conf.Configuration): Set[String] = mode match {
+    case StaticOverwrite(_) | DynamicOverwrite if m.deleteVectors.nonEmpty =>
+      def qualify(p: Path): String = p.getFileSystem(conf).makeQualified(p).toString
+      val applies = m.deleteVectors.flatMap(dv =>
+        DvManifest.read(conf, dv.manifest).map(r => dv.token -> r._2.map(a => qualify(new Path(a)))))
+      val registered =
+        (if (m.isPartitioned) m.partitions.map(GraftBatchWrite.dirOf(m, _))
+         else Seq(new Path(m.location))).map(qualify).toSet
+      val live = applies.flatMap(_._2).map(a => new Path(a).getParent.toString).distinct
+        .filter(registered)
+        .flatMap(d => GraftBatchWrite.dataFiles(new Path(d), conf)).map(qualify).toSet
+      applies.collect { case (token, files) if !files.exists(live) => token }.toSet
+    case _ => Set.empty
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit =
@@ -1057,6 +1090,13 @@ object GraftBatchWrite {
     * (the `inner.abort` that follows cannot un-publish committed files,
     * exactly like a real death). Never set outside tests. */
   @volatile private[graft] var crashAfterFsCommit: Option[() => Unit] = None
+
+  /** Test-only failpoint: fires right after a batch commit's one
+    * descriptor publish, before the skip-stats shards, the snapshot GC
+    * and the record's removal — throwing from it simulates a writer
+    * killed after its data and lineage went live. Never set outside
+    * tests. */
+  @volatile private[graft] var crashAfterPublish: Option[() => Unit] = None
 
   /** Test-only failpoint: fires between a dynamic overwrite's
     * retirement moves and the FS commit (OUTSIDE the in-JVM undo, like

@@ -10,7 +10,7 @@ import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
 
 import org.apache.spark.internal.Logging
 
-import graft.catalog.{DvMeta, GraftIO, MetaStore, TableMeta}
+import graft.catalog.{DvMeta, GraftIO, MetaStore, Snapshots, TableMeta}
 
 /** The crash protocol of every file-moving statement: one INTENT RECORD
   * under the table's `_graft_txn` dir, one commit marker, one repair.
@@ -39,8 +39,12 @@ import graft.catalog.{DvMeta, GraftIO, MetaStore, TableMeta}
   * [[repair]] runs under the table's write permit at every job start,
   * at read time and at every rollback start, and resolves each record:
   *
-  *  - marker present → roll FORWARD: delete `F`, register `DVMETA` if
-  *    the descriptor lacks it, drop `TMP`, remove the record;
+  *  - marker present → roll FORWARD: retire `F`, then ONE publish
+  *    registers `DVMETA` if the descriptor lacks it and records the
+  *    statement as the lineage head (its kind, its token) unless a
+  *    retained snapshot already carries the token; drop `TMP`, remove
+  *    the record. A crash anywhere after the marker so leaves the
+  *    statement at the lineage head, its retirements resolvable;
   *  - marker absent → roll BACK: delete every data file of `D`∪`W` that
   *    the record does not list (`F`, `K` or a move's `from` — the crashed
   *    statement's possibly partial output), delete `DV`, undo `M` in
@@ -91,6 +95,16 @@ private[graft] object IntentLog extends Logging {
       else if (dirs.nonEmpty || deletes.nonEmpty) "cow"
       else if (tmp.nonEmpty || dv.isDefined) "mor"
       else "empty"
+  }
+
+  /** The snapshot kind a statement of intent kind `intentKind` records —
+    * the one mapping that the statement's own publish
+    * ([[GraftBatchWrite]]'s commit) and the roll-forward both use. */
+  def snapshotKind(intentKind: String): String = intentKind match {
+    case "cow" => "rewrite-dml"
+    case "mor" => "dml-mor"
+    case "dynamic-overwrite" => "overwrite-dynamic"
+    case k => k
   }
 
   /** A persisted record, its marker and what it says. */
@@ -208,15 +222,27 @@ private[graft] object IntentLog extends Logging {
     finish(conf, r)
   }
 
-  private def forward(conf: Configuration, store: MetaStore, db: String, table: String,
-      i: Intent): Unit = {
-    i.deletes.foreach(f => f.getFileSystem(conf).delete(f, false))
-    i.dvMeta.foreach { dv =>
-      store.updateTable(db, table) { m =>
-        if (m.deleteVectors.exists(_.token == dv.token)) m
-        else m.copy(deleteVectors = m.deleteVectors :+ dv)
-      }
+  /** Roll a committed statement forward: its `F` files retire under its
+    * token (delete on external tables), and ONE publish registers its
+    * `DVMETA` and records it as the lineage head — kind from the intent,
+    * token from the record — so the crashed statement is the head a
+    * rollback undoes, and the files it retired stay resolvable. Records
+    * nothing when a retained snapshot already carries the token (the
+    * crash came after the statement's own publish). */
+  private def forward(conf: Configuration, store: MetaStore, db: String, meta: TableMeta,
+      token: String, i: Intent): Unit = {
+    i.deletes.foreach { f =>
+      if (meta.external || !Snapshots.retireFile(conf, meta.location, f, token))
+        f.getFileSystem(conf).delete(f, false)
     }
+    Snapshots.publish(conf, store, db, meta.name, snapshotKind(i.kind), token,
+        (i.dirs ++ i.writeDirs).distinct.map(_.toString)) { m =>
+      if (m.snapshots.exists(s => Snapshots.readSnap(conf, s.file).exists(_.token == token))) m
+      // a fresh copy even with nothing to register: the publish records
+      else m.copy(deleteVectors = m.deleteVectors ++
+        i.dvMeta.filterNot(dv => m.deleteVectors.exists(_.token == dv.token)))
+    }
+    ()
   }
 
   /** Data files of the record's dirs that it does not list. */
@@ -303,7 +329,7 @@ private[graft] object IntentLog extends Logging {
           if (name.endsWith(LegacyRetire)) { legacyRetire(conf, i); Some("legacy-retire") }
           else if (marker.exists(m => names.contains(m.getName)) ||
               (i.deletes.nonEmpty && missing == i.deletes.size)) {
-            forward(conf, store, db, meta.name, i); Some("forward")
+            forward(conf, store, db, meta, token, i); Some("forward")
           } else if (missing > 0) {
             if (quarantine(conf, dir, token, i)) {
               GraftIO.writeSmallFile(fs, new Path(dir, s"$token.ambiguous"),

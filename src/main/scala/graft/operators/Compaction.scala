@@ -30,6 +30,20 @@ import org.apache.spark.sql.SparkSession
   * concurrent writers either commit first (their files are listed and
   * rewritten) or queue behind the compaction.
   *
+  * One commit, one publish: the self-overwrite's own descriptor update
+  * carries everything compaction changes. Because the rewrite read the
+  * table through the deletion-vector anti-join, a batch none of whose
+  * `appliesTo` files is live after the overwrite is materialized, and
+  * the commit drops it (its dv dir is reclaimed by snapshot GC once no
+  * retained snapshot references it; batches still touching a partition
+  * the overwrite left alone stay). And when the overwrite rewrote every
+  * registered partition, every file is freshly written by the engine's
+  * sorted write path, so the commit restores the sort-trust marker of a
+  * table with declared cluster columns (the cure for an ALTER-changed
+  * declaration). A partition compaction wrote no rows to (every row
+  * deleted) keeps its files and its batches, and the marker then stays
+  * unset.
+  *
   * 100 TB posture: compaction is a per-partition rewrite — cost scales
   * with the data actually rewritten, the shuffle key is the partition
   * value, and running it per freshly-ingested partition (not the whole
@@ -74,38 +88,10 @@ object Compaction {
       spark, location, s"compaction of $table since ${java.time.Instant.now()}",
       timeoutSec)
     try {
+      // the overwrite's one commit also drops the deletion vectors it
+      // made inert and, when it rewrote every registered partition,
+      // restores the sort-trust marker — see the header
       spark.table(table).writeTo(table).overwritePartitions()
-      // compaction reads the WHOLE table and dynamically overwrites every
-      // live partition, so after the commit every file is freshly written
-      // by the engine's sorted write path — if cluster columns are
-      // declared, the catalog's sort-trust marker can be restored (the
-      // cure for an ALTER-changed declaration: one compact and sort-free
-      // merge joins are back). Still inside the lease, so no concurrent
-      // write can interleave between the rewrite and the marker.
-      cat match {
-        case g: graft.catalog.GraftCatalog
-            if graft.catalog.GraftCatalog.clusterColumns(
-              tbl.asInstanceOf[graft.catalog.GraftTable].meta.properties).nonEmpty =>
-          g.metaStore.updateTable(parts(1), parts.last)(m => m.copy(
-            properties = m.properties +
-              (graft.catalog.GraftCatalog.ClusterSortedProp -> "true")))
-          g.invalidateTable(ident)
-        case _ =>
-      }
-      // FOLD DELETION VECTORS (q119): compaction read the table through
-      // the anti-join rewrite, so every rewritten file already excludes
-      // the deleted keys — any batch whose appliesTo files are all gone
-      // from the live tree is materialized and its descriptor entry
-      // drops (the dv dir itself is reclaimed by snapshot GC once no
-      // retained snapshot references it). Batches still touching live
-      // files (a partition the overwrite left alone) stay. Still inside
-      // the lease, so no commit can interleave.
-      cat match {
-        case g: graft.catalog.GraftCatalog =>
-          foldInertDvs(spark, g, parts(1), parts.last)
-          g.invalidateTable(ident)
-        case _ =>
-      }
     } finally release()
   }
 
@@ -132,9 +118,9 @@ object Compaction {
       // bucket id == committer file name) — so the rewrite is a
       // self-TRUNCATE-overwrite: read through the catalog (deletion
       // vectors applied by the anti-join rewrite), replace every file
-      // hash-routed, then drop the now-inert DV batches. One file per
-      // bucket, sort-trust marker restored by the truncate commit
-      // itself, every SPJ assumption preserved.
+      // hash-routed; the truncate commit itself clears the now-inert DV
+      // batches and restores the sort-trust marker. One file per
+      // bucket, every SPJ assumption preserved.
       val release = graft.catalog.write.GraftBatchWrite.leaseWritePermit(
         spark, pre.location,
         s"bucketed compaction of $table since ${java.time.Instant.now()}",
@@ -159,9 +145,6 @@ object Compaction {
         try {
           snapshot.writeTo(table)
             .overwrite(org.apache.spark.sql.functions.lit(true))
-          foldInertDvs(spark, plugin, db, name)
-          plugin.invalidateTable(
-            org.apache.spark.sql.connector.catalog.Identifier.of(Array(db), name))
         } finally if (!aqeOn) { snapshot.unpersist(); () }
       } finally release()
       return
@@ -188,48 +171,6 @@ object Compaction {
         // restores with the rewrite
         m => m.copy(properties = m.properties +
           (graft.catalog.GraftCatalog.ClusterSortedProp -> "true")))
-    }
-  }
-
-  /** Drop descriptor entries of deletion-vector batches none of whose
-    * `appliesTo` files are still live. Shared by compaction (which makes
-    * batches inert by rewriting their files) and callable as its own
-    * maintenance step. Torn manifests are conservatively KEPT. */
-  private[graft] def foldInertDvs(
-      spark: SparkSession, g: graft.catalog.GraftCatalog,
-      db: String, name: String): Unit = {
-    val store = g.metaStore
-    val m = store.loadTable(db, name)
-    if (m.deleteVectors.isEmpty) return
-    val conf = spark.sessionState.newHadoopConf()
-    def qualify(p: org.apache.hadoop.fs.Path): String =
-      p.getFileSystem(conf).makeQualified(p).toString
-    val dirs: Seq[String] =
-      if (m.isPartitioned)
-        m.partitions.map(graft.catalog.write.GraftBatchWrite.dirOf(m, _).toString)
-      else Seq(m.location)
-    val live: Set[String] = dirs.flatMap { d =>
-      val dir = new org.apache.hadoop.fs.Path(d)
-      val fs = dir.getFileSystem(conf)
-      if (!fs.exists(dir)) Nil
-      else fs.listStatus(dir).toSeq.collect {
-        case s if s.isFile && !s.getPath.getName.startsWith("_") &&
-          !s.getPath.getName.startsWith(".") => qualify(s.getPath)
-      }
-    }.toSet
-    val inert = m.deleteVectors.filter { dv =>
-      graft.catalog.write.DvManifest.read(conf, dv.manifest).exists {
-        case (_, applies, _) =>
-          applies.forall(a => !live.contains(
-            qualify(new org.apache.hadoop.fs.Path(a))))
-      }
-    }
-    if (inert.nonEmpty) {
-      val inertTokens = inert.map(_.token).toSet
-      store.updateTable(db, name)(c => c.copy(
-        deleteVectors = c.deleteVectors.filterNot(d =>
-          inertTokens.contains(d.token))))
-      ()
     }
   }
 }

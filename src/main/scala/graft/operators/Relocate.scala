@@ -1,9 +1,6 @@
 package graft.operators
 
-import scala.util.control.NonFatal
-
 import org.apache.hadoop.fs.{FileStatus, FileSystem, Path}
-import org.apache.spark.internal.Logging
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.connector.catalog.Identifier
 
@@ -30,17 +27,18 @@ import graft.catalog.write.GraftBatchWrite
   *     columns), partitioned by the declared partition columns;
   *  3. register partitions from the staged hive layout and write the
   *     skip-stats manifests, so the first post-flip query already skips;
-  *  4. publish the flip and its snapshot in one `updateTable`.
+  *  4. publish the flip and its snapshot in one
+  *     [[graft.catalog.Snapshots.publish]], the one commit publish every
+  *     writer uses.
   *
   * Crash model: before step 4 the table is untouched and the staging
   * directory is unreferenced residue that [[Vacuum.vacuumNamespace]]
   * reclaims by its [[isStaging]] name; after step 4 the rewrite is
   * committed, lineage included. The retired generation stays on disk for
   * in-flight readers and `sys.rollback` until the namespace sweep's
-  * retention window passes. Snapshots stay advisory: if recording one
-  * fails, the flip publishes with the lineage cleared.
+  * retention window passes.
   */
-object Relocate extends Logging {
+object Relocate {
 
   /** How a rewrite writes its new generation: the shaped rows, the
     * provider they are written in, and any descriptor edit beyond the
@@ -122,26 +120,23 @@ object Relocate extends Logging {
     val release = GraftBatchWrite.leaseWritePermit(
       spark, pre.location, holder, plugin.writeLockTimeoutSec)
     try {
-      val edit = prepare(store.loadTable(db, pre.name))
+      val loaded = store.loadTable(db, pre.name)
+      val edit = prepare(loaded)
       crashBeforeFlip.foreach(_())
       val conf = spark.sessionState.newHadoopConf()
-      val published = store.updateTable(db, pre.name) { cur =>
-        val now = System.currentTimeMillis()
+      // every dir of the new generation is touched (the parent snapshot's
+      // shards are keyed by the old location): listed by the publish
+      // before its update, not under the metastore monitor
+      val target = edit(loaded)
+      val touched =
+        if (target.external) Nil
+        else if (target.isPartitioned)
+          target.partitions.map(GraftBatchWrite.dirOf(target, _).toString)
+        else Seq(target.location)
+      val published = Snapshots.publish(conf, store, db, pre.name, "rewrite", "", touched) { cur =>
         val edited = edit(cur)
-        val flipped = edited.copy(history =
-          (cur.asGeneration(now) +: edited.history).take(TableMeta.MaxHistory))
-        // recorded inside the update, so a retry over a moved version
-        // records afresh; stamped after the retirement, because the
-        // TIMESTAMP AS OF fallback serves only generations retired
-        // strictly before the oldest retained snapshot
-        try Snapshots.withHead(flipped,
-          Snapshots.record(conf, flipped, "rewrite", "", Nil, now + 1))
-        catch { case NonFatal(e) =>
-          logWarning(s"snapshot of the flip of $db.${pre.name} failed — " +
-            s"clearing the lineage (time travel refuses until commits " +
-            s"rebuild it): $e")
-          flipped.copy(snapshots = Nil)
-        }
+        edited.copy(history = (cur.asGeneration(System.currentTimeMillis()) +:
+          edited.history).take(TableMeta.MaxHistory))
       }
       plugin.invalidateTable(Identifier.of(Array(db), pre.name))
       crashAfterFlip.foreach(_())

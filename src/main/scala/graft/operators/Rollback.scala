@@ -105,8 +105,8 @@ object Rollback {
     * FAILURE-ATOMIC via an [[IntentLog]] record: every planned move
     * (`M`) plus the complete pre-rollback descriptor (`META`) persist
     * BEFORE the first rename; the record is never marked and is removed
-    * only after the descriptor update and the rollback's own snapshot
-    * record succeed. An in-JVM failure undoes eagerly; a crash is undone
+    * only after the one publish of the restored descriptor and the
+    * rollback's own snapshot succeeds. An in-JVM failure undoes eagerly; a crash is undone
     * by the next repair — so the rollback fully happened or never
     * happened, and the live table can never be left silently missing
     * rows mid-campaign. Files outside the table root (custom partition
@@ -270,7 +270,12 @@ object Rollback {
             PartitionMeta(rd.spec, loc, size)
           }
           else Nil
-        store.updateTable(db, name) { c =>
+        // the rollback IS a commit: its one publish records its snapshot,
+        // which (a) makes redo possible (versions_back 1 is now the state
+        // rolled away from) and (b) records `token` so the retired extras
+        // stay resolvable
+        val published = Snapshots.publish(conf, store, db, name, "rollback", token,
+            resolved.dirs.map(_.dir) ++ currentDirs) { c =>
           val flipped =
             if (genIdx < 0) c
             else c.copy(provider = base.provider, location = base.location,
@@ -298,17 +303,13 @@ object Rollback {
             // must drop its batch, rolling back TO one must keep it
             deleteVectors = resolved.dvs)
         }
-        // the rollback IS a commit: its snapshot (a) makes redo possible
-        // (versions_back 1 is now the state rolled away from) and (b)
-        // records `token` so the retired extras stay resolvable
-        Snapshots.maintain(spark, store, db, name, "rollback", token,
-          resolved.dirs.map(_.dir) ++ currentDirs)
         // COMMIT POINT: only now does the rollback "fully happen". (For
         // a flip-crossing restore, a crash between the descriptor update
         // and this delete orphans the record under the now-retired
         // location — the completed rollback stands; the orphan is
         // reclaimed with its generation.)
         IntentLog.finish(conf, record)
+        Snapshots.gc(conf, published)
       } catch { case scala.util.control.NonFatal(t) =>
         // eager in-JVM undo: reverse the executed moves and restore the
         // descriptor — the rollback never happened

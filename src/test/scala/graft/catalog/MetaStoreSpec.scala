@@ -119,6 +119,86 @@ class MetaStoreSpec extends AnyFunSuite {
       "no CAS markers may linger after publication")
   }
 
+  test("cross-driver CAS: a loser re-records its snapshot and never overwrites the winner's") {
+    val s = freshStore()
+    s.createNamespace("db", Map.empty)
+    val loc = Files.createTempDirectory("graft-metastore-cas-snap").toString
+    s.saveTable("db", meta("t", partCols = Seq("p")).copy(location = loc, external = false))
+    val s2 = new MetaStore(s.warehouse, new Configuration())
+    val conf = new Configuration()
+    // one commit: a data file in its own partition, registered and
+    // recorded by the one publish
+    def commit(store: MetaStore, part: String, token: String): TableMeta = {
+      val spec = Map("p" -> part)
+      val dir = write.GraftBatchWrite.partitionDir(store.loadTable("db", "t"), spec)
+      val out = dir.getFileSystem(conf).create(new Path(dir, s"$part.parquet"), false)
+      try out.write(Array[Byte](1, 2, 3)) finally out.close()
+      Snapshots.publish(conf, store, "db", "t", "append", token, Seq(dir.toString))(m =>
+        m.copy(partitions = m.partitions :+ PartitionMeta(spec, None, 3L)))
+    }
+    // driver B commits completely between driver A's load and A's claim
+    var fired = false
+    var winner: Option[TableMeta] = None
+    MetaStore.casTestHook = Some { attempts =>
+      if (attempts == 0 && !fired) {
+        fired = true
+        winner = Some(commit(s2, "b", "token-b"))
+      }
+    }
+    val a = try commit(s, "a", "token-a") finally MetaStore.casTestHook = None
+    val b = winner.get
+    val bHead = b.snapshots.head
+    assert(Snapshots.readSnap(conf, bHead.file).map(_.token).contains("token-b"),
+      "the winner's published head must still read back as the winner's")
+    assert(a.seq === b.seq + 1, "the loser re-derives over the winner's descriptor")
+    assert(a.snapshots.map(_.version) === Seq(bHead.version + 1, bHead.version),
+      "the loser's head is the next version, over the winner's")
+    val aSnap = Snapshots.readSnap(conf, a.snapshots.head.file).get
+    assert(aSnap.token === "token-a")
+    assert(aSnap.dirs.map(_.spec("p")).toSet === Set("a", "b"))
+    assert(aSnap.dirs.find(_.spec("p") == "b").map(_.shard) ===
+      Snapshots.readSnap(conf, bHead.file).get.dirs.find(_.spec("p") == "b").map(_.shard),
+      "the winner's partition keeps the winner's shard")
+    assert(s.loadTable("db", "t").partitions.map(_.spec("p")).toSet === Set("a", "b"))
+  }
+
+  test("cross-driver CAS: a claim published by another driver's roll-forward is applied once") {
+    val s = freshStore()
+    s.createNamespace("db", Map.empty)
+    s.saveTable("db", meta("t", partCols = Seq("p")))
+    val s2 = new MetaStore(s.warehouse, new Configuration())
+    def add(part: String)(m: TableMeta): TableMeta =
+      m.copy(partitions = m.partitions :+ PartitionMeta(Map("p" -> part), None, 1L))
+    // between store A's claim and its re-read, store B runs an update:
+    // its roll-forward publishes A's marker, then (when `alsoCommit`)
+    // B commits a partition of its own on top
+    def run(part: String, alsoCommit: Boolean): Unit = {
+      var fired = false
+      MetaStore.casClaimTestHook = Some { () =>
+        if (!fired) {
+          fired = true
+          if (alsoCommit) s2.updateTable("db", "t")(add(s"$part-b"))
+          else s2.updateTable("db", "t")(identity)
+        }
+      }
+      val before = s.loadTable("db", "t").seq
+      val a = try s.updateTable("db", "t")(add(part)) finally MetaStore.casClaimTestHook = None
+      assert(fired)
+      val after = s.loadTable("db", "t")
+      assert(a.seq === before + 1)
+      assert(after.seq === before + (if (alsoCommit) 2 else 1),
+        "A's update must land exactly once")
+      assert(after.partitions.count(_.spec("p") == part) === 1)
+    }
+    run("a", alsoCommit = false)
+    run("c", alsoCommit = true)
+    assert(s.loadTable("db", "t").partitions.map(_.spec("p")) === Seq("a", "c", "c-b"))
+    val fs = s.warehouse.getFileSystem(new Configuration())
+    assert(!fs.listStatus(new Path(s.warehouse, "db/_meta"))
+      .exists(_.getPath.getName.contains(".cas-")),
+      "no CAS markers may linger")
+  }
+
   test("CAS stress: 100 racing updates across 4 threads and 2 store instances all land") {
     val s = freshStore()
     s.createNamespace("db", Map.empty)
